@@ -52,177 +52,36 @@ object Dml {
   private def warnCeiling(touched: Int): Unit =
     plannedFilesWarning(touched.toLong).foreach(w => System.err.println(s"[graft.dml] $w"))
 
-  /** Conjunctive per-column range bounds extracted from a DML predicate's
-    * expression tree — the metadata-pruning hook for COW planning. Only
-    * top-level AND conjuncts comparing a bare column to a literal
-    * contribute; anything else (OR, NOT, computed expressions, null
-    * literals, null-safe equality — whose null matches no min/max range)
-    * contributes nothing, which is CONSERVATIVE: missing bounds mean more
-    * candidate files, never fewer. Literal values are Catalyst-internal
-    * (UTF8String, epoch-micros/days), which is exactly `planBetween`'s
-    * physical comparison domain.
-    */
-  private[dml] def predicateBounds(t: GraftTable, planned: Snapshot,
-      pred: Column): Map[String, (Option[Any], Option[Any])] = {
-    import org.apache.spark.sql.catalyst.expressions._
-    // Column no longer exposes its expression directly (Spark 4 split the
-    // Column API from Catalyst); analyzing a filter over an EMPTY relation
-    // with the table schema resolves the predicate without touching data.
-    val schema = org.apache.spark.sql.types.DataType.fromJson(planned.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val empty = t.spark.createDataFrame(
-      t.spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val resolved: Seq[Expression] = empty.filter(pred).queryExecution.analyzed.collect {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-    }
-    if (resolved.isEmpty) return Map.empty
-    // the analyzer wraps literals in implicit casts (110 → cast(110 as
-    // bigint)); any foldable subtree evaluates to its internal constant
-    def lit(e: Expression): Option[Any] = e match {
-      case e if e.foldable && !e.exists(_.isInstanceOf[AttributeReference]) =>
-        Option(e.eval(null)).map {
-          case s: org.apache.spark.unsafe.types.UTF8String => s.toString
-          case other => other
-        }
-      case _ => None
-    }
-    def attr(e: Expression): Option[String] = e match {
-      case a: AttributeReference => Some(a.name)
-      case Cast(a: AttributeReference, _, _, _) => None // cast changes the domain
-      case _ => None
-    }
-    def walk(e: Expression): Seq[(String, Option[Any], Option[Any])] = e match {
-      case And(l, r) => walk(l) ++ walk(r)
-      case EqualTo(a, v) => (for (n <- attr(a); x <- lit(v)) yield (n, Some(x), Some(x))).toSeq ++
-        (for (n <- attr(v); x <- lit(a)) yield (n, Some(x), Some(x))).toSeq
-      case GreaterThan(a, v) => (for (n <- attr(a); x <- lit(v)) yield (n, Some(x), None)).toSeq ++
-        (for (n <- attr(v); x <- lit(a)) yield (n, None, Some(x))).toSeq
-      case GreaterThanOrEqual(a, v) => (for (n <- attr(a); x <- lit(v)) yield (n, Some(x), None)).toSeq ++
-        (for (n <- attr(v); x <- lit(a)) yield (n, None, Some(x))).toSeq
-      case LessThan(a, v) => (for (n <- attr(a); x <- lit(v)) yield (n, None, Some(x))).toSeq ++
-        (for (n <- attr(v); x <- lit(a)) yield (n, Some(x), None)).toSeq
-      case LessThanOrEqual(a, v) => (for (n <- attr(a); x <- lit(v)) yield (n, None, Some(x))).toSeq ++
-        (for (n <- attr(v); x <- lit(a)) yield (n, Some(x), None)).toSeq
-      case _ => Nil
-    }
-    resolved.flatMap(walk).groupBy(_._1).map { case (c, bs) =>
-      // Any ONE conjunct bound per side is a sound superset range (all
-      // conjuncts hold simultaneously, so each alone keeps at least the
-      // matching files); picking the first avoids comparing Any-typed
-      // literals here. Multiple conjuncts on one column are rare enough
-      // that the lost tightness doesn't matter.
-      val los = bs.flatMap(_._2)
-      val his = bs.flatMap(_._3)
-      c -> (los.headOption, his.headOption)
-    }
-  }
-
-  /** IN-list ceiling for point-per-value file pruning: beyond this many
-    * literals the per-value metadata passes stop paying for themselves and
-    * the predicate plans conservatively (all candidate files kept).
-    */
-  private val InListPruneCeiling = 32
-
   /** Minimum target file count for MERGE's source key-range planning agg —
     * below it the extra source scan costs more than the pruning saves.
     */
   private[dml] val RangePruneMinFiles = 8
 
-  /** Conjunctive `col IN (v1, ..., vN)` lists from a DML predicate (each
-    * value a foldable literal; N ≤ `InListPruneCeiling`). A small key list —
-    * the CDC-style `DELETE WHERE k IN (...)` shape — prunes files per VALUE,
-    * which is far tighter than a [min, max] envelope when the keys are
-    * sparse over a clustered table.
-    */
-  private[dml] def predicateInLists(t: GraftTable, planned: Snapshot,
-      pred: Column): Map[String, Seq[Any]] = {
-    import org.apache.spark.sql.catalyst.expressions._
-    val schema = org.apache.spark.sql.types.DataType.fromJson(planned.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val empty = t.spark.createDataFrame(
-      t.spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val resolved: Seq[Expression] = empty.filter(pred).queryExecution.analyzed.collect {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-    }
-    def lit(e: Expression): Option[Any] = e match {
-      case e if e.foldable && !e.exists(_.isInstanceOf[AttributeReference]) =>
-        Option(e.eval(null)).map {
-          case s: org.apache.spark.unsafe.types.UTF8String => s.toString
-          case other => other
-        }
-      case _ => None
-    }
-    def walk(e: Expression): Seq[(String, Seq[Any])] = e match {
-      case And(l, r) => walk(l) ++ walk(r)
-      case In(a: AttributeReference, vs) if vs.size <= InListPruneCeiling =>
-        val lits = vs.map(lit)
-        if (lits.forall(_.isDefined)) Seq(a.name -> lits.flatten) else Nil
-      case _ => Nil
-    }
-    resolved.flatMap(walk).toMap
-  }
-
-  /** Conjunctive IS NULL / IS NOT NULL facts from a DML predicate — the
-    * null-count pruning hook (`GraftTable.planNullability`). Only top-level
-    * AND conjuncts over a bare column contribute; a contradiction (both
-    * polarities on one column) keeps one side, which is still a sound
-    * superset since the predicate then matches nothing.
-    */
-  private[dml] def predicateNullability(t: GraftTable, planned: Snapshot,
-      pred: Column): Map[String, Boolean] = {
-    import org.apache.spark.sql.catalyst.expressions._
-    val schema = org.apache.spark.sql.types.DataType.fromJson(planned.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val empty = t.spark.createDataFrame(
-      t.spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val resolved: Seq[Expression] = empty.filter(pred).queryExecution.analyzed.collect {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-    }
-    def walk(e: Expression): Seq[(String, Boolean)] = e match {
-      case And(l, r) => walk(l) ++ walk(r)
-      case IsNull(a: AttributeReference) => Seq(a.name -> true)
-      case IsNotNull(a: AttributeReference) => Seq(a.name -> false)
-      case _ => Nil
-    }
-    resolved.flatMap(walk).toMap
-  }
-
   /** The files a DML predicate could possibly touch, pre-shrunk by snapshot
-    * metadata (stats + partition-value + null-count pruning) BEFORE any
-    * data file is opened. At 100 TB this is the difference between a
-    * planning scan over every file and one over the handful whose bounds
-    * intersect the predicate. Always a superset of the truly-matching files.
+    * metadata (stats, partition values and transforms, null counts — the
+    * shared `SnapshotPlanner` rule) BEFORE any data file is opened. At 100 TB
+    * this is the difference between a planning scan over every file and
+    * one over the handful whose bounds intersect the predicate. Always a
+    * superset of the truly-matching files.
+    *
+    * `Column` no longer exposes its expression (Spark 4 split the Column API
+    * from Catalyst), so the predicate is analyzed ONCE as a filter over an
+    * empty relation with the snapshot's schema — no data is touched — and
+    * the analyzed condition's conjuncts become the planner's facts. A
+    * predicate that fails to analyze plans conservatively (every file).
     */
   private[dml] def planningCandidates(t: GraftTable, planned: Snapshot,
       pred: Column): (Seq[FileEntry], Int) = {
-    val total = planned.files.size
-    val bounds = scala.util.Try(predicateBounds(t, planned, pred))
-      .getOrElse(Map.empty[String, (Option[Any], Option[Any])])
-    val ranged = bounds.foldLeft(planned.files: Seq[FileEntry]) {
-      case (files, (c, (lo, hi))) =>
-        if (lo.isEmpty && hi.isEmpty) files
-        else scala.util.Try(
-          t.planBetween(planned.copy(files = files.toList), c, lo.orNull, hi.orNull)._1
-        ).getOrElse(files) // unknown column / unexpected literal: keep all
-    }
-    val nullability = scala.util.Try(predicateNullability(t, planned, pred))
-      .getOrElse(Map.empty[String, Boolean])
-    val nulled = nullability.foldLeft(ranged) {
-      case (files, (c, isNull)) => scala.util.Try(
-        t.planNullability(planned.copy(files = files.toList), c, isNull)._1
-      ).getOrElse(files)
-    }
-    // IN-lists prune per VALUE: a file survives iff at least one listed key
-    // could live in it — the union of the per-point planBetween passes,
-    // which is also where bucket-transform partition pruning composes in.
-    val inLists = scala.util.Try(predicateInLists(t, planned, pred))
-      .getOrElse(Map.empty[String, Seq[Any]])
-    val candidates = inLists.foldLeft(nulled) {
-      case (files, (c, vs)) => scala.util.Try(
-        t.planPoints(planned.copy(files = files.toList), c, vs)._1
-      ).getOrElse(files)
-    }
-    (candidates, total)
+    val facts = scala.util.Try {
+      val schema = org.apache.spark.sql.types.DataType.fromJson(planned.schemaJson)
+        .asInstanceOf[org.apache.spark.sql.types.StructType]
+      val empty = t.spark.createDataFrame(
+        t.spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      empty.filter(pred).queryExecution.analyzed.collect {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
+      }.flatMap(graft.table.Fact.of)
+    }.getOrElse(Nil)
+    (t.planner(planned).select(facts), planned.files.size)
   }
 
   /** Split a snapshot's files into (files containing rows matching pred,
@@ -266,13 +125,37 @@ object Dml {
     else keys
   }
 
+  /** UPDATE's row rewrite, shared by every update path: project `rows` onto
+    * `planned`'s columns with each assignment evaluated against the row's
+    * ORIGINAL values (SQL semantics — no assignment sees another's result)
+    * and cast to its column's declared type, so the written rows match the
+    * table schema whatever type the expression has (`SET amount = 1.25`
+    * into a DECIMAL(10,2) column). With `onlyWhere`, rows failing it keep
+    * their values — copy-on-write carries the unmatched rows of every file
+    * it rewrites.
+    */
+  private def assign(rows: DataFrame, planned: Snapshot,
+      assignments: Map[String, Column], onlyWhere: Option[Column] = None): DataFrame = {
+    val schema = org.apache.spark.sql.types.DataType.fromJson(planned.schemaJson)
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    // SET keys resolve like SQL identifiers (case-insensitively)
+    val byColumn = assignments.map { case (k, e) =>
+      schema.fieldNames.find(_.equalsIgnoreCase(k)).getOrElse(
+        throw new IllegalArgumentException(s"UPDATE sets unknown column $k")) -> e
+    }
+    rows.select(schema.fields.map { f =>
+      byColumn.get(f.name).fold(col(f.name)) { e =>
+        val v = e.cast(f.dataType)
+        onlyWhere.fold(v)(p => when(p, v).otherwise(col(f.name)))
+      }.as(f.name)
+    }.toIndexedSeq: _*)
+  }
+
   /** D1 — `UPDATE t SET ... WHERE pred` (ref update_sales_events.sql:3-5). */
   def update(t: GraftTable, pred: Column, assignments: Map[String, Column]): Snapshot = {
     val (matched, untouched, planned) = planFiles(t, pred)
     if (matched.isEmpty) return t.latest
-    val rewritten = assignments.foldLeft(t.readFiles(matched, planned)) { case (df, (c, e)) =>
-      df.withColumn(c, when(pred, e).otherwise(col(c)))
-    }
+    val rewritten = assign(t.readFiles(matched, planned), planned, assignments, Some(pred))
     t.commitRewrite(rewritten, untouched, "update", basedOn = Some(planned))
   }
 
@@ -396,17 +279,8 @@ object Dml {
       .select(element_at(split(col("_gf_uri"), "/"), -1).as(GraftTable.WrittenAtCol),
         col(GraftTable.PosCol))
     if (dv.limit(1).isEmpty) return planned
-    val updated0 = assignments.foldLeft(
-      tagged.drop("_gf_uri", GraftTable.PosCol)) { case (df, (c, e)) =>
-      df.withColumn(c, e)
-    }
-    // assigned expressions cast to the column's declared type (the same
-    // explicit coercion the COW path gets implicitly from when/otherwise)
-    val updated = updated0.select(t.schema.fields.map { f =>
-      if (assignments.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-      else col(f.name)
-    }.toIndexedSeq: _*)
-    t.commitDvDelta(dv, Some(updated), "update-dv", basedOn = Some(planned))
+    t.commitDvDelta(dv, Some(assign(tagged, planned, assignments)), "update-dv",
+      basedOn = Some(planned))
   }
 
   /** Merge-on-read UPSERT (the Flink-CDC / Iceberg upsert-mode write): ONE
@@ -452,10 +326,7 @@ object Dml {
       keyCols: Seq[String]): Snapshot = {
     val (matched, _, planned) = planFiles(t, pred)
     if (matched.isEmpty) return t.latest
-    val updated = assignments.foldLeft(
-      t.readFiles(matched, planned).filter(pred)) { case (df, (c, e)) =>
-      df.withColumn(c, e)
-    }
+    val updated = assign(t.readFiles(matched, planned).filter(pred), planned, assignments)
     upsertMor(t, updated, keyCols, "update-mor", basedOn = Some(planned))
   }
 

@@ -1,8 +1,8 @@
 package graft.plan
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
-import org.apache.spark.sql.catalyst.expressions.{And, Between, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, SubqueryAlias}
 
 /** One executed statement's captured output (H4; the reference's
@@ -31,8 +31,8 @@ class SparkSqlEngine(spark: SparkSession, maxResultRows: Int = 200) extends Engi
 
   /** Snapshot tables whose SQL reads get stats-based file pruning (the
     * readBetween path surfaced into the engine, VERDICT r7 #8): before each
-    * statement runs, a conjunctive range predicate over one of these views
-    * shrinks the scan's file list through `GraftTable.planBetween` — the
+    * statement runs, a conjunctive predicate over one of these views
+    * shrinks the scan's file list through the table's `SnapshotPlanner` — the
     * statement's own WHERE clause still applies the exact predicate over the
     * surviving files, so an unrecognized statement shape (joins, subqueries,
     * expressions over the column) just falls back to the full view: never
@@ -159,8 +159,8 @@ class SparkSqlEngine(spark: SparkSession, maxResultRows: Int = 200) extends Engi
     graftViews.foreach { case (n, t) => registerGraftTable(n, t) }
 
   /** Parse (never execute) `statement`; for each Filter sitting on a
-    * registered view, intersect the per-column range bounds into a pruned
-    * file list and swap the temp view before execution.
+    * registered view, plan its conjuncts into a pruned file list and swap
+    * the temp view before execution.
     */
   private def pruneGraftViews(statement: String): Unit = {
     if (graftViews.isEmpty) return
@@ -169,28 +169,23 @@ class SparkSqlEngine(spark: SparkSession, maxResultRows: Int = 200) extends Engi
     val parsed =
       try spark.sessionState.sqlParser.parsePlan(statement)
       catch { case _: Throwable => return }
+    // one temp view serves every reference to it: a view read more than
+    // once (self-union, subquery, CTE body) narrowed to one Filter's files
+    // would starve the other reads, so only singly-read views prune
+    // a qualified name costs catalog lookups: resolve each one once
+    val resolved = scala.collection.mutable.Map[Seq[String], Option[String]]()
+    val view = (r: UnresolvedRelation) =>
+      resolved.getOrElseUpdate(r.multipartIdentifier.toSeq, viewOf(r))
+    lazy val reads =
+      references(parsed, view).groupBy(identity).map { case (v, rs) => v -> rs.size }
     parsed.foreach {
       case f: Filter =>
-        for (viewName <- viewBelow(f.child); t <- graftViews.get(viewName)) {
+        for (viewName <- viewBelow(f.child, view) if reads.get(viewName).contains(1);
+             t <- graftViews.get(viewName)) {
           val snap = t.latest
-          val cols = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-            .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSet
-          var files: Seq[graft.table.FileEntry] = snap.files
-          boundsOf(f.condition).foreach { case (colName, (lo, hi)) =>
-            if (cols.contains(colName) && (lo.isDefined || hi.isDefined)) {
-              val (sel, _) = t.planBetween(snap.copy(files = files.toList),
-                colName, lo.orNull, hi.orNull)
-              files = sel
-            }
-          }
-          // IN-lists prune per VALUE (union of point passes — the shape
-          // where bucket-transform partition pruning bites in plain SQL)
-          inListsOf(f.condition).foreach { case (colName, vs) =>
-            if (cols.contains(colName)) {
-              val (sel, _) = t.planPoints(snap.copy(files = files.toList), colName, vs)
-              files = sel
-            }
-          }
+          // range, IN-list (per value — where bucket-transform pruning bites
+          // in plain SQL) and IS [NOT] NULL conjuncts, one shared rule
+          val files = t.planner(snap).select(graft.table.Fact.of(f.condition))
           lastPrune(viewName) = (files.size, snap.files.size)
           if (files.size < snap.files.size) {
             t.readSnapshot(snap.copy(files = files.toList)).createOrReplaceTempView(viewName)
@@ -209,94 +204,37 @@ class SparkSqlEngine(spark: SparkSession, maxResultRows: Int = 200) extends Engi
     * directory) so qualified reads prune exactly like bare ones — the read
     * rewrite later resolves the qualified name to that same (pruned) view.
     */
-  private def viewBelow(p: LogicalPlan): Option[String] = p match {
-    case r: UnresolvedRelation if r.multipartIdentifier.size == 1 =>
-      Some(r.multipartIdentifier.head.toLowerCase)
-    case r: UnresolvedRelation if r.multipartIdentifier.size == 2 =>
-      val Seq(ns, tn) = r.multipartIdentifier.toSeq
-      for {
-        cat <- catalogOpt
-        if cat.tableExists(ns, tn)
-        dir = cat.loadTable(ns, tn).tableDir
-        vn <- graftViews.collectFirst { case (n, t) if t.tableDir == dir => n }
-      } yield vn
-    case s: SubqueryAlias => viewBelow(s.child)
+  private def viewBelow(p: LogicalPlan,
+      view: UnresolvedRelation => Option[String]): Option[String] = p match {
+    case r: UnresolvedRelation => view(r)
+    case s: SubqueryAlias => viewBelow(s.child, view)
     case _ => None
   }
 
-  private def conjuncts(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => conjuncts(l) ++ conjuncts(r)
-    case other => Seq(other)
-  }
-
-  /** Conjunctive `col IN (literals)` lists (bounded — past 32 values the
-    * per-point passes stop paying for themselves, matching Dml's ceiling).
-    */
-  private def inListsOf(cond: Expression): Map[String, Seq[Any]] =
-    conjuncts(cond).collect {
-      case org.apache.spark.sql.catalyst.expressions.In(a, vs)
-          if attrName(a).isDefined && vs.nonEmpty && vs.size <= 32 &&
-            vs.forall(v => litValue(v).isDefined) =>
-        attrName(a).get -> vs.flatMap(litValue)
-    }.toMap
-
-  private def attrName(e: Expression): Option[String] = e match {
-    case a: UnresolvedAttribute if a.nameParts.size == 1 => Some(a.nameParts.head)
-    case _ => None
-  }
-
-  private def litValue(e: Expression): Option[Any] = e match {
-    case l: Literal => Option(l.value).map {
-      case u: org.apache.spark.unsafe.types.UTF8String => u.toString
-      case v => v
+  private def viewOf(r: UnresolvedRelation): Option[String] =
+    r.multipartIdentifier.toSeq match {
+      case Seq(vn) => Some(vn.toLowerCase)
+      case Seq(ns, tn) =>
+        for {
+          cat <- catalogOpt
+          if cat.tableExists(ns, tn)
+          dir = cat.loadTable(ns, tn).tableDir
+          vn <- graftViews.collectFirst { case (n, t) if t.tableDir == dir => n }
+        } yield vn
+      case _ => None
     }
-    case _ => None
-  }
 
-  /** column -> (lo, hi) from conjunctive attr-vs-literal comparisons, both
-    * operand orders. Strict bounds are widened to inclusive — sound for
-    * pruning (a superset of files survives); the statement's own predicate
-    * stays exact. Conflicting repeated bounds keep the later one — also
-    * sound: matching rows satisfy EVERY conjunct, so any single conjunct's
-    * bound over-approximates the matching set.
-    */
-  private def boundsOf(cond: Expression): Map[String, (Option[Any], Option[Any])] = {
-    val m = scala.collection.mutable.LinkedHashMap[String, (Option[Any], Option[Any])]()
-    def put(c: String, lo: Option[Any], hi: Option[Any]): Unit = {
-      val (l0, h0) = m.getOrElse(c, (None, None))
-      m(c) = (lo.orElse(l0), hi.orElse(h0))
+  /** The registered views a parsed statement reads, once per reference —
+    * subquery expressions and CTE definitions included. */
+  private def references(p: LogicalPlan,
+      view: UnresolvedRelation => Option[String]): Seq[String] = {
+    val own = p match {
+      case r: UnresolvedRelation => view(r).toSeq
+      case _ => Nil
     }
-    // attr-vs-lit applies `direct`; lit-vs-attr applies `flipped`
-    def sides(x: Expression, y: Expression)(direct: (String, Any) => Unit)(
-        flipped: (String, Any) => Unit): Unit =
-      (attrName(x), litValue(y), attrName(y), litValue(x)) match {
-        case (Some(c), Some(v), _, _) => direct(c, v)
-        case (_, _, Some(c), Some(v)) => flipped(c, v)
-        case _ =>
-      }
-    conjuncts(cond).foreach {
-      case GreaterThanOrEqual(x, y) =>
-        sides(x, y)((c, v) => put(c, Some(v), None))((c, v) => put(c, None, Some(v)))
-      case GreaterThan(x, y) =>
-        sides(x, y)((c, v) => put(c, Some(v), None))((c, v) => put(c, None, Some(v)))
-      case LessThanOrEqual(x, y) =>
-        sides(x, y)((c, v) => put(c, None, Some(v)))((c, v) => put(c, Some(v), None))
-      case LessThan(x, y) =>
-        sides(x, y)((c, v) => put(c, None, Some(v)))((c, v) => put(c, Some(v), None))
-      case EqualTo(x, y) =>
-        sides(x, y)((c, v) => put(c, Some(v), Some(v)))((c, v) => put(c, Some(v), Some(v)))
-      case b: Between => // resolved form
-        for (c <- attrName(b.input); lo <- litValue(b.lower); hi <- litValue(b.upper))
-          put(c, Some(lo), Some(hi))
-      // the parser leaves `x BETWEEN lo AND hi` as unresolved 'between(x,lo,hi)
-      case f: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
-          if f.nameParts.map(_.toLowerCase) == Seq("between") && f.arguments.size == 3 =>
-        for (c <- attrName(f.arguments(0)); lo <- litValue(f.arguments(1));
-             hi <- litValue(f.arguments(2)))
-          put(c, Some(lo), Some(hi))
-      case _ =>
-    }
-    m.toMap
+    val nested = p.children ++ p.innerChildren.collect { case c: LogicalPlan => c } ++
+      p.expressions.flatMap(_.collect { case s: SubqueryExpression => s.plan })
+    own ++ nested.flatMap(references(_, view))
   }
 }
 

@@ -777,7 +777,7 @@ private[sources] class GraftCowOperation(dir: String, info: RowLevelOperationInf
           requiredSchema.fieldNames.contains(f.name)) ++
           requiredSchema.fields.filter(_.name == GraftStreamSource.FileMetaCol))
       override def pushFilters(filters: Array[SFilter]): Array[SFilter] = {
-        pushed = filters.filter(GraftStreamSource.prunable(_, full))
+        pushed = GraftStreamSource.plannable(filters)
         filters // all residual: file pruning only — the rewrite plan needs
                 // every row of every scanned file
       }
@@ -867,8 +867,20 @@ private[sources] class GraftStagedTable(catalog: GraftCatalog,
   }
 
   override def abortStagedChanges(): Unit = {
-    scala.util.Try(fs.delete(stagingPath, true))
-    ()
+    // Spark kills a failed write job's other tasks asynchronously, and one
+    // still opening its output file recreates directories under the
+    // staging path after a delete: sweep until the path stays gone for a
+    // quiet period (bounded, so an abort never hangs).
+    val start = System.currentTimeMillis()
+    var quietSince = start
+    while (System.currentTimeMillis() - quietSince < 500L &&
+        System.currentTimeMillis() - start < 10000L) {
+      if (scala.util.Try(fs.exists(stagingPath)).getOrElse(false)) {
+        scala.util.Try(fs.delete(stagingPath, true))
+        quietSince = System.currentTimeMillis()
+      }
+      Thread.sleep(20)
+    }
   }
 }
 

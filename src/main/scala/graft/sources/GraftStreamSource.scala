@@ -5,6 +5,8 @@ import java.util.{Map => JMap}
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -13,14 +15,14 @@ import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggr
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics, SupportsRuntimeFiltering}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, InsertableRelation}
-import org.apache.spark.sql.sources.{And => SAnd, EqualTo => SEqualTo, Filter => SFilter, GreaterThan => SGt, GreaterThanOrEqual => SGte, In => SIn, LessThan => SLt, LessThanOrEqual => SLte}
+import org.apache.spark.sql.sources.{Filter => SFilter}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.table.SnapshotLog
+import graft.table.{Added, Fact, FileEntry, GraftTable, Snapshot, SnapshotLog, SnapshotPlanner, Stored}
 
 /** DataSource V2 STREAMING SOURCE over a snapshot table — the read half of
   * the streaming story (`StreamOps`' exactly-once sinks are the write half):
@@ -210,8 +212,10 @@ private[sources] class GraftStreamTable(dir: String, tableSchema: StructType)
     // readers project at the PARQUET level (the footer's filtered message
     // type rides ReadSupport.PARQUET_READ_SCHEMA), so unprojected columns
     // are never decoded — the same contract as the table's own scans.
-    // Filter pushdown: comparison predicates prune whole FILES against the
-    // snapshot's footer bounds and partition values at PLANNING time; every
+    // Filter pushdown: comparison, IN and null predicates prune whole FILES
+    // through the table's own metadata planner (footer bounds and null
+    // counts under write-time names, partition values and transforms) at
+    // PLANNING time; every
     // filter is also returned as residual, so Spark re-evaluates row-level —
     // pruning can only ever drop files proven out of range, never change
     // results.
@@ -238,7 +242,7 @@ private[sources] class GraftStreamTable(dir: String, tableSchema: StructType)
           requiredSchema.fieldNames.contains(f.name)) ++
           requiredSchema.fields.filter(_.name == GraftStreamSource.FileMetaCol))
       override def pushFilters(filters: Array[SFilter]): Array[SFilter] = {
-        pushed = filters.filter(GraftStreamSource.prunable(_, tableSchema))
+        pushed = GraftStreamSource.plannable(filters)
         filters // all residual: file-skipping only, rows re-checked above
       }
       override def pushedFilters(): Array[SFilter] = pushed
@@ -283,7 +287,7 @@ private[sources] class GraftScan(dir: String, fullSchema: StructType,
     pushedLimit: Option[Int] = None,
     incrementalFrom: Option[Long] = None,
     incrementalTo: Option[Long] = None,
-    onPlanned: Option[(graft.table.Snapshot, Seq[graft.table.FileEntry]) => Unit] = None)
+    onPlanned: Option[(Snapshot, Seq[FileEntry]) => Unit] = None)
     extends Scan
     with SupportsReportStatistics with SupportsRuntimeFiltering
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning {
@@ -293,7 +297,7 @@ private[sources] class GraftScan(dir: String, fullSchema: StructType,
     * each partition carries its absolute path as a constant value — the
     * reader serves it like a hive partition column, no file bytes touched.
     */
-  private def withFileCol(e: graft.table.FileEntry,
+  private def withFileCol(e: FileEntry,
       filePath: String): Map[String, String] =
     if (schema.fieldNames.contains(GraftStreamSource.FileMetaCol))
       e.partitionValues + (GraftStreamSource.FileMetaCol -> filePath)
@@ -320,7 +324,7 @@ private[sources] class GraftScan(dir: String, fullSchema: StructType,
       if (ok) cols else Nil
     }
   }
-  private[sources] def spjKeyFor(e: graft.table.FileEntry): Array[Any] =
+  private[sources] def spjKeyFor(e: FileEntry): Array[Any] =
     spjKeyCols.map(c => GraftStreamSource.partitionKeyValue(
       schema(schema.fieldIndex(c)).dataType, e.partitionValues(c)).get).toArray
   override def outputPartitioning(): org.apache.spark.sql.connector.read.partitioning.Partitioning =
@@ -338,7 +342,7 @@ private[sources] class GraftScan(dir: String, fullSchema: StructType,
 
   /** The snapshot this batch scan reads: the head, or the time-travel
     * target when `snapshot-id` / `as-of-timestamp` was set. */
-  private def resolve(snaps: Seq[graft.table.Snapshot]): Option[graft.table.Snapshot] =
+  private def resolve(snaps: Seq[Snapshot]): Option[Snapshot] =
     GraftStreamSource.resolveSnapshot(snaps, dir, asOfSnapshot, asOfTimestamp)
 
   /** Dynamic partition pruning / runtime filtering (the DSv2
@@ -360,15 +364,18 @@ private[sources] class GraftScan(dir: String, fullSchema: StructType,
     val snaps = SnapshotLog.load(new Configuration(), dir)
     val partCols = snaps.lastOption.toSeq.flatMap(_.files)
       .flatMap(_.partitionValues.keys).distinct
-    val boundCols = fullSchema.fields
-      .filter(f => GraftStreamSource.numericCol(f.name, fullSchema)).map(_.name)
+    val boundCols = fullSchema.fields.filter(_.dataType match {
+      case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType => true
+      case _ => false
+    }).map(_.name)
     (partCols ++ boundCols).distinct
       .filter(c => schema.exists(_.name == c))
       .map(Expressions.column).toArray
   }
   override def filter(filters: Array[SFilter]): Unit =
-    runtimeFilters = filters.filter(GraftStreamSource.prunable(_, fullSchema))
-  private def effectiveFilters: Array[SFilter] = pushedFilters ++ runtimeFilters
+    runtimeFilters = GraftStreamSource.plannable(filters)
+  private def facts: Seq[Fact] =
+    Fact.of((pushedFilters ++ runtimeFilters).toSeq)
 
   /** Exact table statistics from the snapshot's file inventory, AFTER the
     * pushed filters' file pruning — so Catalyst's join planning sees the
@@ -378,8 +385,8 @@ private[sources] class GraftScan(dir: String, fullSchema: StructType,
     */
   override def estimateStatistics(): Statistics = {
     val snaps = SnapshotLog.load(new Configuration(), dir)
-    val files = resolve(snaps).map(_.files).getOrElse(Nil)
-      .filter(e => GraftStreamSource.fileMayMatch(e, fullSchema, effectiveFilters))
+    val files = resolve(snaps).map(s => GraftStreamSource.planner(dir, s).select(facts))
+      .getOrElse(Nil)
     val bytes = files.map(_.sizeBytes).sum
     val rows = if (files.exists(_.rowCount < 0)) java.util.OptionalLong.empty()
       else java.util.OptionalLong.of(files.map(_.rowCount).sum)
@@ -420,7 +427,7 @@ private[sources] class GraftScan(dir: String, fullSchema: StructType,
     * files). O(range) metadata planning — the CDC-batch shape at 100 TB.
     */
   private def incrementalPartitions(from: Long,
-      snaps: Seq[graft.table.Snapshot]): Array[InputPartition] = {
+      snaps: Seq[Snapshot]): Array[InputPartition] = {
     val to = incrementalTo.getOrElse(snaps.last.snapshotId)
     require(from < to, s"need start-snapshot-id < end, got ($from, $to]")
     require(snaps.exists(_.snapshotId == to),
@@ -442,24 +449,16 @@ private[sources] class GraftScan(dir: String, fullSchema: StructType,
       s"incremental read over ($from, $to] crosses content-changing commit(s) " +
         bad.map(s => s"${s.snapshotId}:${s.operation}").mkString(", ") +
         s" in $dir — append-only incremental semantics cannot represent them")
-    val shape = (st: StructType) => st.fields.map(f => (f.name, f.dataType)).toSet
     val dataRoot = SnapshotLog.dataPath(dir).toString
-    range.filter(s => GraftStreamSource.RowAdding(s.operation)).flatMap { s =>
-      s.files.filter(e => e.writtenAt == s.snapshotId &&
-          GraftStreamSource.fileMayMatch(e, fullSchema, effectiveFilters)).map { e =>
-        val writeSchema = DataType.fromJson(s.schemas(e.writtenAt.toString))
-          .asInstanceOf[StructType]
-        val dataShape = shape(StructType(fullSchema.fields.filterNot(f =>
-          e.partitionValues.contains(f.name))))
-        require(shape(writeSchema) == dataShape ||
-            shape(writeSchema) == shape(fullSchema),
-          s"graft incremental read: ${e.path} in $dir was written under an " +
-            "evolved schema — use the table API (readIncremental) for " +
-            "evolution replay")
-        GraftInputPartition(s"$dataRoot/${e.path}",
-          withFileCol(e, s"$dataRoot/${e.path}"),
-          schema.json, e.rowCount, e.writtenAt)
-      }
+    val appended = range.filter(s => GraftStreamSource.RowAdding(s.operation))
+      .flatMap(s => s.files.filter(_.writtenAt == s.snapshotId).map(s -> _))
+    val plan = GraftStreamSource.appendOnlyPlanner(dir, snaps, fullSchema, appended,
+      (_, e) => s"graft incremental read: ${e.path} in $dir was written under an " +
+        "evolved schema — use the table API (readIncremental) for evolution replay")
+    plan.select(facts, appended.map(_._2)).map { e =>
+      GraftInputPartition(s"$dataRoot/${e.path}",
+        withFileCol(e, s"$dataRoot/${e.path}"),
+        schema.json, e.rowCount, e.writtenAt)
     }.toArray[InputPartition]
   }
 
@@ -472,7 +471,7 @@ private[sources] class GraftScan(dir: String, fullSchema: StructType,
         case None => ()
       }
       val head = resolve(snaps).get
-      val shape = (st: StructType) => st.fields.map(f => (f.name, f.dataType)).toSet
+      val plan = GraftStreamSource.planner(dir, head)
       val dataRoot = SnapshotLog.dataPath(dir).toString
       // MOR reconciliation preconditions: every delete key column must still
       // exist under its recorded name (a rename between the delete commit
@@ -491,8 +490,7 @@ private[sources] class GraftScan(dir: String, fullSchema: StructType,
       }
       val keySchemaJson =
         if (keyColTypes.isEmpty) "" else StructType(keyColTypes).json
-      val surviving = head.files.filter(e =>
-        GraftStreamSource.fileMayMatch(e, fullSchema, effectiveFilters))
+      val surviving = plan.select(facts)
       // pushed LIMIT: read the smallest file prefix whose exact metadata
       // row counts already cover it — only when no delete can shrink a
       // file's live count below its metadata count (Spark re-applies the
@@ -507,21 +505,17 @@ private[sources] class GraftScan(dir: String, fullSchema: StructType,
       // (post filter pruning) so the write side replaces those and ONLY
       // those; see GraftCowOperation in GraftCatalog.scala
       onPlanned.foreach(_(head, chosen))
+      // files of one commit share one write schema and one column mapping
+      val evolutions = scala.collection.mutable.Map[(Long, Set[String]), List[GraftColMap]]()
       chosen.map { e =>
-        // evolution replay: files written under an older schema carry a
-        // per-file column mapping (rename → physical name, widen → cast,
-        // add-with-default → constant) computed here from the snapshot's
-        // own evolution chain — the connector-level form of the table API's
-        // replay. Shape comparison runs against the FULL logical schema —
-        // the pruned read schema is a projection, not the table's shape.
-        val writeSchema = DataType.fromJson(head.schemas(e.writtenAt.toString))
-          .asInstanceOf[StructType]
-        val dataShape = shape(StructType(fullSchema.fields.filterNot(f =>
-          e.partitionValues.contains(f.name))))
-        val evolution: List[GraftColMap] =
-          if (shape(writeSchema) == dataShape ||
-              shape(writeSchema) == shape(fullSchema)) Nil
-          else GraftStreamSource.evolutionMapping(head, e, fullSchema, dir)
+        // evolution replay: every file gets the per-file column mapping
+        // (rename → physical name, widen → cast, added → constant) the
+        // table's own planner derives from the snapshot's evolution chain
+        // — the same provenance `readSnapshot` replays, over the FULL
+        // logical schema (the pruned read schema is only a projection)
+        val evolution = evolutions.getOrElseUpdate((e.writtenAt, e.partitionValues.keySet),
+          GraftStreamSource.columnMap(plan, e, DataType.fromJson(
+            head.schemas(e.writtenAt.toString)).asInstanceOf[StructType], fullSchema, dir))
         // a delete applies iff committed strictly after this file's write;
         // consolidated (per-row-bound) files can't be pruned at planning —
         // each tuple carries its own bound, checked in the reader
@@ -662,7 +656,8 @@ private[sources] class GraftMicroBatchStream(dir: String,
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val from = start.asInstanceOf[GraftOffset].snapshotId
     val to = end.asInstanceOf[GraftOffset].snapshotId
-    val range = snaps.filter(s => s.snapshotId > from && s.snapshotId <= to)
+    val log = snaps
+    val range = log.filter(s => s.snapshotId > from && s.snapshotId <= to)
     // Expiry safety (the table's changeRange contract): the range must be
     // an UNBROKEN parent chain anchored at the start offset — snapshot
     // expiry between runs can drop committed appends, and silently skipping
@@ -691,33 +686,21 @@ private[sources] class GraftMicroBatchStream(dir: String,
         bad.map(s => s"${s.snapshotId}:${s.operation}").mkString(", ") +
         s" in $dir — an append-only stream cannot represent a retraction")
     val dataRoot = SnapshotLog.dataPath(dir).toString
-    // zero-file appends (a streaming batch whose rows were all rejected
-    // upstream) record no write schema and carry nothing to read — skip
-    // them BEFORE the drift check would look their schema up
-    range.filter(s => GraftStreamSource.RowAdding(s.operation) &&
-        s.schemas.contains(s.snapshotId.toString)).flatMap { s =>
-      // refuse schema drift inside the unconsumed range: reading old files
-      // under a renamed/evolved schema would silently null columns
-      val writeSchema = DataType.fromJson(s.schemas(s.snapshotId.toString))
-        .asInstanceOf[StructType]
-      val shape = (st: StructType) => st.fields.map(f => (f.name, f.dataType)).toSet
-      // drift detection against the FULL logical schema (the read schema
-      // may be a pruned projection)
-      val dataShape = shape(StructType(fullSchema.fields.filterNot(f =>
-        s.files.exists(_.partitionValues.contains(f.name)))))
-      require(shape(writeSchema) == dataShape || shape(writeSchema) == shape(fullSchema),
-        s"graft streaming read: snapshot ${s.snapshotId} in $dir was written " +
-          s"under a different schema than the stream's — consume up to the " +
-          "evolution point with the old schema, then restart the query")
-      s.files.filter(e => e.writtenAt == s.snapshotId &&
-          GraftStreamSource.fileMayMatch(e, fullSchema, pushedFilters)).map { e =>
-        val pv =
-          if (schema.fieldNames.contains(GraftStreamSource.FileMetaCol))
-            e.partitionValues +
-              (GraftStreamSource.FileMetaCol -> s"$dataRoot/${e.path}")
-          else e.partitionValues
-        GraftInputPartition(s"$dataRoot/${e.path}", pv, schema.json, e.rowCount)
-      }
+    // refuse schema drift inside the unconsumed range: reading old files
+    // under a renamed/evolved schema would silently null (or alias) columns
+    val appended = range.filter(s => GraftStreamSource.RowAdding(s.operation))
+      .flatMap(s => s.files.filter(_.writtenAt == s.snapshotId).map(s -> _))
+    val plan = GraftStreamSource.appendOnlyPlanner(dir, log, fullSchema, appended,
+      (s, _) => s"graft streaming read: snapshot ${s.snapshotId} in $dir was written " +
+        s"under a different schema than the stream's — consume up to the " +
+        "evolution point with the old schema, then restart the query")
+    plan.select(Fact.of(pushedFilters.toSeq), appended.map(_._2)).map { e =>
+      val pv =
+        if (schema.fieldNames.contains(GraftStreamSource.FileMetaCol))
+          e.partitionValues +
+            (GraftStreamSource.FileMetaCol -> s"$dataRoot/${e.path}")
+        else e.partitionValues
+      GraftInputPartition(s"$dataRoot/${e.path}", pv, schema.json, e.rowCount)
     }.toArray[InputPartition]
   }
 
@@ -1390,61 +1373,73 @@ object GraftStreamSource {
         s"graft read: cannot widen $from to $to")
     }
 
-  /** The connector-level evolution replay plan for one data file written
-    * under an older schema: simulate the snapshot's evolution chain from the
-    * file's epoch forward (the SAME op log the table API's readSnapshot
-    * folds over a DataFrame — `GraftTable.applyEvolution`), tracking for
-    * every CURRENT column its physical source name and write-time type, or
-    * the declared default for columns the file predates. Columns whose
-    * replay this reader cannot express (non-numeric widen, a type the
-    * physical format never wrote) refuse loudly — never silently null.
+  /** The table's metadata planner over `snap` — the one evolution replay,
+    * pruning rule and metadata-aggregate rule the table API also uses.
+    * Partition transforms load from the table properties only if a range or
+    * point pass reaches them. */
+  private[sources] def planner(dir: String, snap: Snapshot): SnapshotPlanner =
+    new GraftTable(SparkSession.active, dir).planner(snap)
+
+  /** The filters the planner can turn into file-pruning facts. */
+  private[sources] def plannable(filters: Array[SFilter]): Array[SFilter] =
+    filters.filter(f => Fact.of(Seq(f)).nonEmpty)
+
+  /** The reader's column mapping for data file `e` (written under
+    * `writeSchema`) in `plan`'s snapshot: one [[GraftColMap]] per column of
+    * `fullSchema` that reads a differently named or typed stored column
+    * (rename, widen) or a constant (added after the file, dropped-and-re-
+    * added included); Nil when every column reads itself. Partition columns
+    * are served from directory values. A column this reader cannot replay
+    * (non-numeric widen, no provenance) refuses loudly — never silently
+    * null.
     */
-  private[sources] def evolutionMapping(snap: graft.table.Snapshot,
-      e: graft.table.FileEntry, fullSchema: StructType,
-      dir: String): List[GraftColMap] = {
-    implicit val fmts: org.json4s.Formats = SnapshotLog.formats
-    val writeSchema = DataType.fromJson(snap.schemas(e.writtenAt.toString))
-      .asInstanceOf[StructType]
-    val chainIds = snap.chain.map(_.snapshotId).sorted
-    val epoch = chainIds.foldLeft(0L)((acc, id) => if (id <= e.writtenAt) id else acc)
-    val ops = snap.chain
-      .filter(st => st.snapshotId > epoch && st.snapshotId <= snap.snapshotId)
-      .flatMap(_.ops)
-    // currentName → provenance, replayed op by op
-    case class Col(name: String, phys: Option[(String, DataType)],
-        default: Option[String])
-    var cols: Vector[Col] = writeSchema.fields.toVector
-      .map(f => Col(f.name, Some((f.name, f.dataType)), None))
-    ops.foreach { op =>
-      val m = org.json4s.jackson.JsonMethods.parse(op).extract[Map[String, String]]
-      m.getOrElse("op", "?") match {
-        case "add" =>
-          if (!cols.exists(_.name == m("name")))
-            cols :+= Col(m("name"), None, m.get("default"))
-        case "rename" =>
-          cols = cols.map(c => if (c.name == m("from")) c.copy(name = m("to")) else c)
-        case "widen" => () // the current type in fullSchema drives the cast
-        case "drop" => cols = cols.filterNot(_.name == m("name"))
-        case other => throw new IllegalArgumentException(
-          s"bad evolution op in $dir: $op")
-      }
-    }
-    fullSchema.fields.toList.flatMap { f =>
-      if (e.partitionValues.contains(f.name)) None
-      else cols.find(_.name == f.name) match {
-        case Some(Col(_, Some((pn, pt)), _)) =>
+  private[sources] def columnMap(plan: SnapshotPlanner, e: FileEntry,
+      writeSchema: StructType, fullSchema: StructType, dir: String): List[GraftColMap] = {
+    def noProvenance(c: String) = new IllegalStateException(
+      s"graft read: column $c of $dir has no provenance in ${e.path}'s " +
+        "evolution chain — use the table API (readLatest)")
+    fullSchema.fields.toList.filterNot(f => e.partitionValues.contains(f.name)).flatMap { f =>
+      plan.sourceOf(e, f.name) match {
+        case Some(Stored(pn, _)) =>
+          val pt = writeSchema.find(_.name == pn).map(_.dataType)
+            .getOrElse(throw noProvenance(f.name))
           require(widenOk(pt, f.dataType),
             s"graft read: ${e.path} in $dir stores ${f.name} as " +
               s"${pt.simpleString} which cannot replay to " +
               s"${f.dataType.simpleString} — use the table API (readLatest)")
           if (pn == f.name && pt == f.dataType) None
           else Some(GraftColMap(f.name, Some(pn), pt.json, None))
-        case Some(Col(_, None, d)) => Some(GraftColMap(f.name, None, "", d))
-        case None => throw new IllegalStateException(
-          s"graft read: column ${f.name} of $dir has no provenance in " +
-            s"${e.path}'s evolution chain — use the table API (readLatest)")
+        case Some(Added(d, _)) => Some(GraftColMap(f.name, None, "", d))
+        case None => throw noProvenance(f.name)
       }
     }
+  }
+
+  /** Append-only reads (incremental batch, micro-batch) never replay
+    * evolution: every appended file must store each column of the read
+    * schema under its own name and type. Provenance is judged against the
+    * latest retained snapshot carrying the read schema — a file written
+    * after it was written under a different schema — so a column dropped
+    * and re-added with the same type (same shape, different values) refuses
+    * too. Returns that snapshot's planner for pruning the range.
+    */
+  private[sources] def appendOnlyPlanner(dir: String, snaps: Seq[Snapshot],
+      fullSchema: StructType, appended: Seq[(Snapshot, FileEntry)],
+      refusal: (Snapshot, FileEntry) => String): SnapshotPlanner = {
+    val shape = (st: StructType) => st.fields.map(f => (f.name, f.dataType)).toSet
+    val plan = snaps.reverseIterator.find(s =>
+      shape(DataType.fromJson(s.schemaJson).asInstanceOf[StructType]) == shape(fullSchema))
+      .map(planner(dir, _))
+    // files of one commit share one verdict
+    val verdicts = scala.collection.mutable.Map[(Long, Set[String]), Boolean]()
+    appended.foreach { case (s, e) =>
+      require(verdicts.getOrElseUpdate((e.writtenAt, e.partitionValues.keySet),
+        plan.exists(p => e.writtenAt <= p.snap.snapshotId && scala.util.Try(
+          columnMap(p, e, DataType.fromJson(s.schemas(e.writtenAt.toString))
+            .asInstanceOf[StructType], fullSchema, dir)).toOption.contains(Nil))),
+        refusal(s, e))
+    }
+    plan.getOrElse(planner(dir, snaps.last))
   }
 
   private[sources] def tableSchema(dir: String): StructType = {
@@ -1467,102 +1462,12 @@ object GraftStreamSource {
     if (overwrite) t.overwrite(aligned) else t.append(aligned)
   }
 
-  /** A filter participates in file-level pruning when it is a comparison on
-    * a NUMERIC column (footer bounds for strings may be writer-truncated —
-    * the same exclusion as the table's own stats pruning) or an equality on
-    * a partition column, with a non-null literal. AND recurses.
-    */
-  private[sources] def prunable(f: SFilter, schema: StructType): Boolean = f match {
-    case SAnd(l, r) => prunable(l, schema) || prunable(r, schema)
-    case SEqualTo(c, v) => v != null && comparableCol(c, schema)
-    case SGt(c, v) => v != null && numericCol(c, schema)
-    case SGte(c, v) => v != null && numericCol(c, schema)
-    case SLt(c, v) => v != null && numericCol(c, schema)
-    case SLte(c, v) => v != null && numericCol(c, schema)
-    // IN-lists: static IN(...) pushdown and the shape Spark's dynamic
-    // partition pruning hands to SupportsRuntimeFiltering.filter — a file
-    // survives iff SOME value could live in it. `IN (NULL)` / an empty
-    // value list can never match a row (three-valued logic), so such a
-    // filter prunes EVERY file — the correct plan when the build side of a
-    // pruning join came up empty.
-    case SIn(c, vs) => vs != null && comparableCol(c, schema)
-    case _ => false
-  }
-
-  private[sources] def numericCol(c: String, schema: StructType): Boolean =
-    schema.find(_.name == c).exists(_.dataType match {
-      case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType => true
-      case _ => false
-    })
-
-  private def comparableCol(c: String, schema: StructType): Boolean =
-    numericCol(c, schema) || schema.exists(_.name == c) // partition equality
-
-  /** File-level verdict for the pushed filters: keep the file unless a
-    * filter PROVES no row can match — numeric comparisons against the
-    * file's footer [min, max], string/typed equality against partition
-    * values. Absent bounds keep the file (all-null or untracked columns).
-    */
-  private[sources] def fileMayMatch(e: graft.table.FileEntry,
-      schema: StructType, filters: Array[SFilter]): Boolean =
-    filters.forall(mayMatch(e, schema, _))
-
-  private def mayMatch(e: graft.table.FileEntry, schema: StructType,
-      f: SFilter): Boolean = f match {
-    case SAnd(l, r) => mayMatch(e, schema, l) && mayMatch(e, schema, r)
-    case SEqualTo(c, v) if e.partitionValues.contains(c) =>
-      v != null && e.partitionValues(c) == v.toString
-    case SEqualTo(c, v) => boundsAllow(e, schema, c, v, lowIncl = true, v, highIncl = true)
-    case SGt(c, v) => boundsAllow(e, schema, c, v, lowIncl = false, null, highIncl = true)
-    case SGte(c, v) => boundsAllow(e, schema, c, v, lowIncl = true, null, highIncl = true)
-    case SLt(c, v) => boundsAllow(e, schema, c, null, lowIncl = true, v, highIncl = false)
-    case SLte(c, v) => boundsAllow(e, schema, c, null, lowIncl = true, v, highIncl = true)
-    case SIn(c, vs) if e.partitionValues.contains(c) =>
-      vs.exists(v => v != null && e.partitionValues(c) == v.toString)
-    case SIn(c, vs) => vs.exists(v => v != null &&
-      boundsAllow(e, schema, c, v, lowIncl = true, v, highIncl = true))
-    case _ => true // unknown filter: never prune on it
-  }
-
-  /** True unless the file's numeric bounds prove [lo, hi] misses every row. */
-  private def boundsAllow(e: graft.table.FileEntry, schema: StructType,
-      c: String, lo: Any, lowIncl: Boolean, hi: Any, highIncl: Boolean): Boolean = {
-    if (!numericCol(c, schema)) return true
-    val st = e.stats.get(c).getOrElse(return true)
-    if (st.size < 2) return true // no bounds tracked (nulls-only entry)
-    val mn = scala.util.Try(new java.math.BigDecimal(st(0))).getOrElse(return true)
-    val mx = scala.util.Try(new java.math.BigDecimal(st(1))).getOrElse(return true)
-    def dec(v: Any): Option[java.math.BigDecimal] =
-      scala.util.Try(new java.math.BigDecimal(v.toString)).toOption
-    val loOk = lo == null || dec(lo).forall(l =>
-      if (lowIncl) mx.compareTo(l) >= 0 else mx.compareTo(l) > 0)
-    val hiOk = hi == null || dec(hi).forall(h =>
-      if (highIncl) mn.compareTo(h) <= 0 else mn.compareTo(h) < 0)
-    loOk && hiOk
-  }
-
-  /** Plan an ungrouped aggregation against snapshot metadata alone, or None
-    * when any condition makes metadata untrustworthy. Returns (result
-    * schema, the single result row's values, a plan-visible description).
-    *
-    * Soundness ledger (each `None` is a case where metadata could lie):
-    *  - any delete file: deleted rows still count in footer stats;
-    *  - grouping: per-group stats aren't tracked (Iceberg refuses too);
-    *  - COUNT: any file with an unreadable footer (rowCount < 0);
-    *  - COUNT(col): a file missing the column's null count (all-null files
-    *    carry `[nulls]`, stat-bearing files `[min,max,nulls]`);
-    *  - MIN/MAX(col): non-numeric col (parquet footers may truncate binary
-    *    bounds), or a non-empty file with neither exact bounds nor proof
-    *    it is all-null (`nulls == rowCount`); partition columns take the
-    *    exact partition value instead. Floats with NaN never get footer
-    *    bounds (parquet-mr drops them), so NaN can't corrupt a bound.
-    */
   /** Batch time-travel resolution shared by the scan, the metadata
     * aggregate, and schema inference: by retained snapshot id, by the last
     * snapshot at or before a millisecond timestamp, else the head. Unknown
     * targets raise — a typo'd snapshot id must never silently read head. */
-  private[sources] def resolveSnapshot(snaps: Seq[graft.table.Snapshot],
-      dir: String, id: Option[Long], ts: Option[Long]): Option[graft.table.Snapshot] =
+  private[sources] def resolveSnapshot(snaps: Seq[Snapshot],
+      dir: String, id: Option[Long], ts: Option[Long]): Option[Snapshot] =
     (id, ts) match {
       case (Some(i), _) =>
         val s = snaps.find(_.snapshotId == i)
@@ -1577,14 +1482,27 @@ object GraftStreamSource {
       case _ => snaps.lastOption
     }
 
+  /** Plan an aggregation against snapshot metadata alone, or None when any
+    * condition makes metadata untrustworthy. Returns (result schema, the
+    * result rows' values, a plan-visible description). Every value comes
+    * from the table's own metadata functions ([[SnapshotPlanner]]
+    * `countRows` / `countNonNull` / `minMax`, the same ones the table API
+    * and SQL front door answer with), so stats resolve under each file's
+    * write-time column name and a dropped-then-re-added column never reads
+    * the old column's bounds. Each `None` is a case where metadata could
+    * lie: a pending delete, an unknown row count, a column some file cannot
+    * trace, a missing null count or bound, a type whose footer bounds are
+    * not exact (strings), SUM/AVG/DISTINCT, or grouping by anything but
+    * identity-partition columns.
+    */
   private[sources] def planAggregation(dir: String, schema: StructType,
       agg: Aggregation, asOfSnapshot: Option[Long] = None,
       asOfTimestamp: Option[Long] = None): Option[(StructType, Array[Array[Any]], String)] = {
     val head = resolveSnapshot(SnapshotLog.load(new Configuration(), dir),
       dir, asOfSnapshot, asOfTimestamp).getOrElse(return None)
-    if (head.deletes.nonEmpty) return None
+    val plan = planner(dir, head)
     val files = head.files
-    if (files.exists(_.rowCount < 0)) return None
+    if (plan.countRows().isEmpty) return None // a pending delete or unknown count
 
     def colOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
       e match {
@@ -1592,90 +1510,29 @@ object GraftStreamSource {
           Some(nr.fieldNames()(0)).filter(c => schema.exists(_.name == c))
         case _ => None
       }
-    def nullsOf(f: graft.table.FileEntry, c: String): Option[Long] =
-      f.stats.get(c) match {
-        case Some(st) if st.size == 3 => st(2).toLongOption
-        case Some(st) if st.size == 1 => st(0).toLongOption
-        case None if f.rowCount == 0 => Some(0L)
-        case _ => None // bounds without null count, or untracked column
-      }
-    def parse(dt: DataType, s: String): Option[Any] = scala.util.Try[Any](dt match {
-      case ByteType => s.toByte
-      case ShortType => s.toShort
-      case IntegerType => s.toInt
-      case LongType => s.toLong
-      case FloatType => s.toFloat
-      case DoubleType => s.toDouble
-    }).toOption
-    def ord(dt: DataType): Ordering[Any] = (dt match {
-      case ByteType => Ordering.Byte
-      case ShortType => Ordering.Short
-      case IntegerType => Ordering.Int
-      case LongType => Ordering.Long
-      case FloatType => Ordering.Float.TotalOrdering
-      case DoubleType => Ordering.Double.TotalOrdering
-    }).asInstanceOf[Ordering[Any]]
-
-    /** Per-file contribution to MIN/MAX: Some(None) = provably nothing
-      * (empty or all-null file), Some(Some(v)) = exact bound, None = the
-      * file's bound is unknowable → refuse the pushdown. */
-    def bound(f: graft.table.FileEntry, c: String, dt: DataType,
-        wantMin: Boolean): Option[Option[Any]] =
-      if (f.rowCount == 0) Some(None)
-      else if (f.partitionValues.contains(c))
-        parse(dt, f.partitionValues(c)).map(Some(_))
-      else f.stats.get(c) match {
-        case Some(st) if st.size >= 2 =>
-          parse(dt, if (wantMin) st(0) else st(1)).map(Some(_))
-        case _ if nullsOf(f, c).contains(f.rowCount) => Some(None) // all-null
-        case _ => None
-      }
+    def typeOf(c: String): DataType = schema(schema.fieldIndex(c)).dataType
 
     /** Each aggregate becomes (result type, description, per-group
-      * evaluator); the evaluator returns None when THAT group's metadata
-      * can't answer exactly — which refuses the whole pushdown. */
-    type Eval = List[graft.table.FileEntry] => Option[Any]
-
-    def minMaxType(c: String): Option[DataType] = {
-      val dt = schema(schema.fieldIndex(c)).dataType
-      if (!numericCol(c, schema) && !files.forall(_.partitionValues.contains(c)))
-        return None
-      dt match {
-        case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType =>
-          Some(dt)
-        case _ => None
-      }
-    }
-    def minMax(fs: List[graft.table.FileEntry], c: String, dt: DataType,
-        wantMin: Boolean): Option[Any] = {
-      val perFile = fs.map(bound(_, c, dt, wantMin))
-      if (perFile.exists(_.isEmpty)) return None
-      val vs = perFile.flatten.flatten
-      Some(if (vs.isEmpty) null
-        else if (wantMin) vs.min(ord(dt)) else vs.max(ord(dt)))
-    }
-
+      * evaluator) over the table's own metadata functions; the evaluator
+      * returns None when THAT group's metadata can't answer exactly — which
+      * refuses the whole pushdown. */
+    type Eval = List[FileEntry] => Option[Any]
+    def extreme(c: String, pick: ((Any, Any)) => Any): Eval = fs =>
+      scala.util.Try(plan.minMax(c, fs)).toOption.flatten
+        .map(mm => CatalystTypeConverters.convertToCatalyst(pick(mm)))
     val planned: Seq[(DataType, String, Eval)] = agg.aggregateExpressions.toSeq.map {
       case _: CountStar =>
-        (LongType: DataType, "COUNT(*)",
-          ((fs: List[graft.table.FileEntry]) => Some(fs.map(_.rowCount).sum: Any)): Eval)
+        (LongType: DataType, "COUNT(*)", (fs: List[FileEntry]) => plan.countRows(fs))
       case cnt: Count if !cnt.isDistinct =>
         val c = colOf(cnt.column).getOrElse(return None)
-        (LongType: DataType, s"COUNT($c)", ((fs: List[graft.table.FileEntry]) => {
-          val perFile = fs.map(nullsOf(_, c))
-          if (perFile.exists(_.isEmpty)) None
-          else Some((fs.map(_.rowCount).sum - perFile.flatten.sum): Any)
-        }): Eval)
+        (LongType: DataType, s"COUNT($c)", (fs: List[FileEntry]) =>
+          scala.util.Try(plan.countNonNull(c, fs)).toOption.flatten)
       case m: Min =>
         val c = colOf(m.column).getOrElse(return None)
-        val dt = minMaxType(c).getOrElse(return None)
-        (dt, s"MIN($c)", ((fs: List[graft.table.FileEntry]) =>
-          minMax(fs, c, dt, wantMin = true)): Eval)
+        (typeOf(c), s"MIN($c)", extreme(c, _._1))
       case m: Max =>
         val c = colOf(m.column).getOrElse(return None)
-        val dt = minMaxType(c).getOrElse(return None)
-        (dt, s"MAX($c)", ((fs: List[graft.table.FileEntry]) =>
-          minMax(fs, c, dt, wantMin = false)): Eval)
+        (typeOf(c), s"MAX($c)", extreme(c, _._2))
       case _ => return None // SUM/AVG/distinct: not derivable from metadata
     }
 
@@ -1687,14 +1544,12 @@ object GraftStreamSource {
     val groupCols = agg.groupByExpressions.toSeq.map(colOf(_).getOrElse(return None))
     if (!groupCols.forall(c => files.forall(_.partitionValues.contains(c))))
       return None
-    def groupKey(c: String, raw: String): Option[Any] =
-      partitionKeyValue(schema(schema.fieldIndex(c)).dataType, raw)
-    val groups: Seq[(Array[Any], List[graft.table.FileEntry])] =
+    val groups: Seq[(Array[Any], List[FileEntry])] =
       if (groupCols.isEmpty) Seq((Array.empty[Any], files))
       else files.groupBy(f => groupCols.map(f.partitionValues)).toSeq
         .sortBy(_._1.mkString("\u0000")).map { case (raws, fs) =>
           (groupCols.zip(raws).map { case (c, raw) =>
-            groupKey(c, raw).getOrElse(return None)
+            partitionKeyValue(typeOf(c), raw).getOrElse(return None)
           }.toArray, fs)
         }
 

@@ -259,9 +259,7 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
         s"format (no write-time schema recorded for commit(s) ${missingSchemas.mkString(", ")}); " +
         "rewrite the table with this version before reading")
     val dataRoot = SnapshotLog.dataPath(tableDir).toString
-    val chainIds = snap.chain.map(_.snapshotId).sorted
-    def epochOf(writtenAt: Long): Long =
-      chainIds.foldLeft(0L)((e, id) => if (id <= writtenAt) id else e)
+    val plan = planner(snap)
     // Merge-on-read deletes need each row's file `writtenAt` (a delete
     // applies iff writtenAt < appliedAt). The filename→writtenAt map rides a
     // broadcast join keyed on the part-file NAME (globally unique — Spark
@@ -282,7 +280,7 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     // Schema json joins the key as a guard: same-epoch files must agree on
     // their physical schema to share a scan.
     val groups = snap.files.groupBy(f =>
-      (epochOf(f.writtenAt), snap.schemas(f.writtenAt.toString)))
+      (plan.epochOf(f.writtenAt), snap.schemas(f.writtenAt.toString)))
     val parts = groups.toSeq.sortBy(_._1).map { case ((epoch, schemaJson), entries) =>
       val physSchema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
       val paths = entries.map(e => s"$dataRoot/${e.path}")
@@ -301,13 +299,29 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
         raw2.withColumn(posName, col("_metadata.row_index"))
       else raw2
       // Replay evolution committed after this epoch — from the snapshot's own
-      // carried chain, never other (expirable) docs. No chain step lies in
-      // (epoch, writtenAt] by the definition of epoch, so filtering from the
-      // epoch boundary is exact for every file in the group.
-      val ops = snap.chain
-        .filter(st => st.snapshotId > epoch && st.snapshotId <= snap.snapshotId)
-        .flatMap(_.ops)
-      ops.foldLeft(raw)(applyEvolution)
+      // carried chain, never other (expirable) docs: each current column
+      // reads its write-time column (cast up when widened) or, when added
+      // later, its declared default. No chain step lies in (epoch, writtenAt]
+      // by the definition of epoch, so the replay is exact for every file in
+      // the group.
+      val replayed = logical.fields.map { f =>
+        plan.source(epoch, f.name) match {
+          case Some(Stored(n, _)) if n == f.name && physSchema.exists(
+              p => p.name == n && p.dataType == f.dataType) => None
+          case Some(Stored(n, _)) => Some(col(n).cast(f.dataType).as(f.name))
+          case Some(Added(d, t)) =>
+            Some(d.fold(lit(null))(lit(_)).cast(t).cast(f.dataType).as(f.name))
+          case None => throw new IllegalStateException(
+            s"column ${f.name} of $tableDir has no provenance in epoch $epoch")
+        }
+      }
+      // helper columns and discovered partition-only columns (transform
+      // partitions) ride along, so every group unions with the same columns
+      val carried = raw.columns.filterNot(c =>
+        physSchema.fieldNames.contains(c) || logical.fieldNames.contains(c))
+      if (replayed.forall(_.isEmpty) && physSchema.length == logical.length) raw
+      else raw.select((logical.fields.zip(replayed).map { case (f, r) =>
+        r.getOrElse(col(f.name)) } ++ carried.map(col)).toIndexedSeq: _*)
     }
     val unified = parts.reduce(_.unionByName(_))
     val live = if (needWrittenAt) applyDeletes(snap, unified, posName) else unified
@@ -393,7 +407,7 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
         // still resolve differently when a rename landed between their
         // commits), and cast the delete tuple to the column's current type.
         val resolvedByEntry = entries.map(d =>
-          d.appliedAt -> keyCols.map(k => GraftTable.currentName(snap, k, d.appliedAt)))
+          d.appliedAt -> keyCols.map(k => SnapshotPlanner.currentName(snap, k, d.appliedAt)))
         def antiJoin(data: DataFrame, del: DataFrame,
             delToCur: Seq[(String, String)]): DataFrame = {
           val cond = delToCur.map { case (delName, curName) =>
@@ -417,7 +431,7 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
             val one = if (d.perRowAppliedAt) raw
               else raw.withColumn("_gf_applied_at", lit(d.appliedAt))
             antiJoin(acc, one,
-              keyCols.map(k => k -> GraftTable.currentName(snap, k, d.appliedAt)))
+              keyCols.map(k => k -> SnapshotPlanner.currentName(snap, k, d.appliedAt)))
           }
       }
     filtered.drop(WrittenAtCol, "_gf_written_at")
@@ -477,143 +491,24 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     *    to string) are always kept.
     *  - PARTITION columns prune too: the hive layout strips them from data
     *    files (no footer stats), but each file's partition value is an exact
-    *    point `[v, v]` in the snapshot metadata. A null-partition or
-    *    unparseable value keeps the file — and dropping a null-partition
-    *    file would be sound anyway, since a range predicate never matches
-    *    null rows and every caller re-applies the exact predicate.
+    *    point `[v, v]` in the snapshot metadata. A null-partition file is
+    *    dropped (a range predicate never matches null rows); an unparseable
+    *    or hive-escaped value keeps the file. On a boolean or decimal
+    *    identity-partition column a point still prunes by partition value.
+    *
+    * The rule itself lives in [[SnapshotPlanner]], shared with every other
+    * read path.
     */
   def planBetween(snap: Snapshot, colName: String, lo: Any, hi: Any)
-      : (Seq[FileEntry], Int) = {
-    import org.apache.spark.sql.types._
-    val dt = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
-      .find(_.name == colName)
-      .getOrElse(throw new IllegalArgumentException(s"no column $colName"))
-      .dataType
-    val prunable = dt match {
-      case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType |
-           StringType | TimestampType | TimestampNTZType | DateType => true
-      case _ => false // decimal/binary/nested orderings are engine-specific
-    }
-    if (!prunable) return (snap.files, snap.files.size)
-    val floating = dt == FloatType || dt == DoubleType
-    // None = incomparable (unparseable or NaN bound) → treated as "keep".
-    def cmp(fileStat: String, queryBound: String): Option[Int] =
-      if (dt == StringType) Some(fileStat.compareTo(queryBound))
-      else if (floating) scala.util.Try {
-        val a = java.lang.Double.parseDouble(fileStat) // "Infinity"/"NaN" parse fine
-        val b = java.lang.Double.parseDouble(queryBound)
-        if (a.isNaN || b.isNaN) None else Some(java.lang.Double.compare(a, b))
-      }.toOption.flatten
-      else scala.util.Try(
-        new java.math.BigDecimal(fileStat).compareTo(new java.math.BigDecimal(queryBound))
-      ).toOption
-    val loS = Option(lo).map(v => GraftTable.toPhysicalBound(dt, v))
-    val hiS = Option(hi).map(v => GraftTable.toPhysicalBound(dt, v))
-    // Resolve the current name back to each epoch's write-time physical name
-    // (files between two evolution commits share one resolution).
-    val chainIds = snap.chain.map(_.snapshotId).sorted
-    def epochOf(writtenAt: Long): Long =
-      chainIds.foldLeft(0L)((e, id) => if (id <= writtenAt) id else e)
-    val nameAt: Map[Long, Option[String]] =
-      snap.files.map(f => epochOf(f.writtenAt)).distinct
-        .map(e => e -> GraftTable.writeTimeName(snap, colName, e, dt)).toMap
-    // A partition value is a single point in the column's domain; hive
-    // values with escape sequences (or non-literal sentinels) don't parse
-    // and conservatively keep the file.
-    def partPoint(f: FileEntry, phys: String): Option[String] =
-      f.partitionValues.get(phys).filterNot(_.contains('%'))
-        .flatMap(v => scala.util.Try(GraftTable.toPhysicalBound(dt, v)).toOption)
-    // Transform-partition pruning (the Iceberg partition-transform scan
-    // planning): when the queried column is the SOURCE of a recorded
-    // transform, each file's transform partition value constrains its rows —
-    // time granularities bound them to [start, next) in physical micros /
-    // epoch-days, truncate(N) prefixes bound strings to [prefix, next), and
-    // bucket(N) pins a POINT predicate's file set to the value's hash
-    // bucket (the min/max-proof lookup case: a hash-scattered key has
-    // near-useless footer bounds, but exactly one bucket). Whole files drop
-    // without a footer consult. Time derivation is UTC-pinned at write
-    // (`transformColumn`), so instant-domain comparison is sound under ANY
-    // read session timezone. Anything unparseable keeps the file.
-    val transformsOnCol: Seq[GraftTable.TransformDef] =
-      GraftTable.parseTransforms(scala.util.Try(properties).getOrElse(Map.empty))
-    // [start, end] overlap test against the query range, physical domain
-    def overlaps(min: Long, max: Long): Boolean =
-      loS.forall(l => cmp(max.toString, l).forall(_ >= 0)) &&
-        hiS.forall(h => cmp(min.toString, h).forall(_ <= 0))
-    val isPoint = loS.isDefined && loS == hiS
-    def keepFor(td: GraftTable.TransformDef, v: String): Boolean = td.fn match {
-      case "days" | "months" | "years" =>
-        scala.util.Try(java.time.LocalDate.parse(v)).toOption.forall { d =>
-          val end = td.fn match {
-            case "days" => d.plusDays(1)
-            case "months" => d.plusMonths(1)
-            case _ => d.plusYears(1)
-          }
-          dt match {
-            case DateType => overlaps(d.toEpochDay, end.toEpochDay - 1)
-            case TimestampType | TimestampNTZType =>
-              overlaps(d.toEpochDay * 86400000000L, end.toEpochDay * 86400000000L - 1)
-            case _ => true
-          }
-        }
-      case "hours" =>
-        scala.util.Try(v.toLong).toOption.forall { h =>
-          dt match {
-            case TimestampType | TimestampNTZType =>
-              overlaps(h * 3600000000L, (h + 1) * 3600000000L - 1)
-            case _ => true
-          }
-        }
-      case "bucket" if isPoint =>
-        (for (n <- td.arg; b <- GraftTable.bucketOf(dt, lo, n))
-          yield v == b.toString).getOrElse(true)
-      case "truncate" if dt == StringType =>
-        // rows in this file all carry prefix v: their domain is [v, next)
-        hiS.forall(h => cmp(v, h).forall(_ <= 0)) &&
-          GraftTable.nextPrefix(v).forall(np =>
-            loS.forall(l => cmp(np, l).forall(_ > 0)))
-      case "truncate"
-          if dt == ByteType || dt == ShortType || dt == IntegerType || dt == LongType =>
-        // integral truncate: value v bounds rows to [v, v + W)
-        (for (w <- td.arg; base <- scala.util.Try(v.toLong).toOption)
-          yield overlaps(base, base + w - 1)).getOrElse(true)
-      case _ => true
-    }
-    def transformKeep(f: FileEntry, phys: String): Boolean =
-      transformsOnCol.filter(_.src == phys).forall { td =>
-        f.partitionValues.get(td.pc) match {
-          case Some("__HIVE_DEFAULT_PARTITION__") =>
-            false // null-source rows never match a range predicate
-          case Some(v) if !v.contains('%') => keepFor(td, v)
-          case _ => true // absent or hive-escaped: keep
-        }
-      }
-    val selected = snap.files.filter { f =>
-      // a provably empty file (pre-empty-skip commits) matches nothing
-      if (f.rowCount == 0L) false
-      else nameAt(epochOf(f.writtenAt)) match {
-        case None => true
-        case Some(phys) =>
-          val partKeep = partPoint(f, phys).forall(v =>
-            loS.forall(l => cmp(v, l).forall(_ >= 0)) &&
-              hiS.forall(h => cmp(v, h).forall(_ <= 0)))
-          val statsKeep = f.stats.get(phys) match {
-            // a range predicate never matches null rows, so a provably
-            // all-null file holds nothing in [lo, hi]
-            case Some(entry) if GraftTable.StatEntry.allNull(entry, f.rowCount) => false
-            case Some(entry) => GraftTable.StatEntry.bounds(entry) match {
-              case Some((mn, mx)) =>
-                loS.forall(l => cmp(mx, l).forall(_ >= 0)) &&
-                  hiS.forall(h => cmp(mn, h).forall(_ <= 0))
-              case None => true
-            }
-            case None => true
-          }
-          partKeep && statsKeep && transformKeep(f, phys)
-      }
-    }
-    (selected, snap.files.size)
-  }
+      : (Seq[FileEntry], Int) =
+    (planner(snap).between(snap.files, colName, lo, hi), snap.files.size)
+
+  /** The metadata planner over `snap` (see [[SnapshotPlanner]]): partition
+    * transforms come from the table properties, read only if a range or
+    * point pass reaches them.
+    */
+  def planner(snap: Snapshot): SnapshotPlanner =
+    new SnapshotPlanner(snap, parseTransforms(scala.util.Try(properties).getOrElse(Map.empty)))
 
   /** Metadata-only `COUNT(*)` (the Iceberg aggregate-pushdown analog): the
     * snapshot's per-file row counts sum to the exact table count without
@@ -623,9 +518,7 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     * accounts for, and an unknown per-file count (-1) leaves the sum
     * undefined — callers fall back to a scan.
     */
-  def countRowsFromMetadata(snap: Snapshot): Option[Long] =
-    if (snap.deletes.nonEmpty || snap.files.exists(_.rowCount < 0)) None
-    else Some(snap.files.map(_.rowCount).sum)
+  def countRowsFromMetadata(snap: Snapshot): Option[Long] = planner(snap).countRows()
 
   def countRowsFromMetadata(): Option[Long] = countRowsFromMetadata(latest)
 
@@ -646,54 +539,8 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     * stored as raw micros/epoch-days and converted back). None = scan.
     */
   def minMaxFromMetadata(colName: String, snapArg: Option[Snapshot] = None)
-      : Option[(Any, Any)] = {
-    import org.apache.spark.sql.types._
-    val snap = snapArg.getOrElse(latest)
-    if (snap.deletes.nonEmpty || snap.files.isEmpty) return None
-    val dt = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
-      .find(_.name == colName)
-      .getOrElse(throw new IllegalArgumentException(s"no column $colName"))
-      .dataType
-    val exact = dt match {
-      case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType |
-           TimestampType | TimestampNTZType | DateType => true
-      case _ => false // string bounds may be writer-truncated; others untracked
-    }
-    if (!exact) return None
-    // Exact ordering keys: Double for float/double columns (doubles ARE the
-    // domain; NaN rejected), BigDecimal otherwise (int64 micros past 2^53
-    // must not round through a double).
-    val floating = dt == FloatType || dt == DoubleType
-    def parseable(s: String): Boolean =
-      if (floating) scala.util.Try(java.lang.Double.parseDouble(s))
-        .toOption.exists(!_.isNaN)
-      else scala.util.Try(new java.math.BigDecimal(s)).isSuccess
-    def lt(a: String, b: String): Boolean =
-      if (floating) java.lang.Double.parseDouble(a) < java.lang.Double.parseDouble(b)
-      else new java.math.BigDecimal(a).compareTo(new java.math.BigDecimal(b)) < 0
-    // Per file: None = unknown (bail to scan); Some(None) = provably
-    // all-null, contributes nothing to MIN/MAX (SQL null-skipping
-    // semantics); Some(Some(bounds)) = contributes.
-    val entries = resolveStats(snap, colName).getOrElse(return None)
-    val perFile: Seq[Option[Option[(String, String)]]] =
-      snap.files.zip(entries).map { case (f, entryOpt) =>
-        if (f.rowCount == 0L) Some(None) // empty file: contributes nothing
-        else entryOpt match {
-          case Some(entry) if GraftTable.StatEntry.allNull(entry, f.rowCount) => Some(None)
-          case Some(entry) => GraftTable.StatEntry.bounds(entry) match {
-            case Some((mn, mx)) if parseable(mn) && parseable(mx) => Some(Some((mn, mx)))
-            case _ => None
-          }
-          case None => None
-        }
-      }
-    if (perFile.exists(_.isEmpty)) return None
-    val bounds = perFile.flatten.flatten
-    if (bounds.isEmpty) return None // every row null: scan answers MIN=MAX=NULL
-    val mn = bounds.map(_._1).reduce((a, b) => if (lt(a, b)) a else b)
-    val mx = bounds.map(_._2).reduce((a, b) => if (lt(a, b)) b else a)
-    Some((GraftTable.fromPhysicalBound(dt, mn), GraftTable.fromPhysicalBound(dt, mx)))
-  }
+      : Option[(Any, Any)] =
+    planner(snapArg.getOrElse(latest)).minMax(colName)
 
   /** Metadata-only `COUNT(col)` (non-null count — the second half of
     * aggregate pushdown): per-file `rowCount - nullCount` sums exactly when
@@ -703,20 +550,8 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     * scan.
     */
   def countNonNullFromMetadata(colName: String, snapArg: Option[Snapshot] = None)
-      : Option[Long] = {
-    val snap = snapArg.getOrElse(latest)
-    if (snap.deletes.nonEmpty || snap.files.isEmpty) return None
-    resolveStats(snap, colName) match {
-      case None => None
-      case Some(perFile) =>
-        val counts = snap.files.zip(perFile).map { case (f, entry) =>
-          if (f.rowCount == 0) Some(0L) // empty file: zero non-null rows
-          else if (f.rowCount < 0) None
-          else entry.flatMap(GraftTable.StatEntry.nullCount).map(f.rowCount - _)
-        }
-        if (counts.exists(_.isEmpty)) None else Some(counts.flatten.sum)
-    }
-  }
+      : Option[Long] =
+    planner(snapArg.getOrElse(latest)).countNonNull(colName)
 
   /** Nullability-based file pruning (the Iceberg `null_value_counts` scan
     * planning): for `IS NULL`, a file whose recorded null count is zero
@@ -725,23 +560,8 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     * column existed are always kept. Returns (selected, total).
     */
   def planNullability(snap: Snapshot, colName: String, isNull: Boolean)
-      : (Seq[FileEntry], Int) = {
-    val total = snap.files.size
-    resolveStats(snap, colName) match {
-      case None => (snap.files, total)
-      case Some(perFile) =>
-        val selected = snap.files.zip(perFile).filter { case (f, entry) =>
-          entry match {
-            case None => true // no stats: keep
-            case Some(e) =>
-              val nc = GraftTable.StatEntry.nullCount(e)
-              if (isNull) !nc.contains(0L)
-              else !GraftTable.StatEntry.allNull(e, f.rowCount)
-          }
-        }.map(_._1)
-        (selected, total)
-    }
-  }
+      : (Seq[FileEntry], Int) =
+    (planner(snap).nullability(snap.files, colName, isNull), snap.files.size)
 
   /** Read rows where `colName` IS NULL / IS NOT NULL through null-count
     * pruning, with the exact residual predicate over the surviving files.
@@ -751,51 +571,6 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     val (selected, _) = planNullability(snap, colName, isNull)
     val base = readSnapshot(snap.copy(files = selected.toList))
     base.filter(if (isNull) col(colName).isNull else col(colName).isNotNull)
-  }
-
-  /** Resolve each live file's stats entry for `colName` through the
-    * evolution chain: None when the snapshot has files whose write-time name
-    * cannot be traced (column added later — stats under the same string
-    * would describe a different column); otherwise one Option[entry] per
-    * file, aligned with `snap.files`.
-    *
-    * A PARTITION column (hive layout strips it from data files, so no
-    * footer stats exist) synthesizes an exact entry from the file's
-    * partition value: the default-partition sentinel means every row is
-    * null (`[rowCount]`), any other parseable value is the exact point
-    * `[v, v, 0]` — so metadata MIN/MAX, COUNT(col), and nullability all
-    * answer for partition columns too.
-    *
-    * A None ELEMENT (file resolves but has no recorded stats for the
-    * column) is per-file "unknown" — callers must stay conservative for
-    * that file.
-    */
-  private def resolveStats(snap: Snapshot, colName: String)
-      : Option[Seq[Option[List[String]]]] = {
-    import org.apache.spark.sql.types._
-    val dt = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
-      .find(_.name == colName)
-      .getOrElse(throw new IllegalArgumentException(s"no column $colName"))
-      .dataType
-    val chainIds = snap.chain.map(_.snapshotId).sorted
-    def epochOf(writtenAt: Long): Long =
-      chainIds.foldLeft(0L)((e, id) => if (id <= writtenAt) id else e)
-    val nameAt: Map[Long, Option[String]] =
-      snap.files.map(f => epochOf(f.writtenAt)).distinct
-        .map(e => e -> GraftTable.writeTimeName(snap, colName, e, dt)).toMap
-    def partitionEntry(f: FileEntry, phys: String): Option[List[String]] =
-      f.partitionValues.get(phys).flatMap {
-        case "__HIVE_DEFAULT_PARTITION__" =>
-          if (f.rowCount >= 0) Some(List(f.rowCount.toString)) else None
-        case v if !v.contains('%') => // hive-escaped values don't round-trip
-          scala.util.Try(GraftTable.toPhysicalBound(dt, v)).toOption
-            .map(p => List(p, p, "0"))
-        case _ => None
-      }
-    if (snap.files.exists(f => nameAt(epochOf(f.writtenAt)).isEmpty)) None
-    else Some(snap.files.map(f =>
-      nameAt(epochOf(f.writtenAt)).flatMap(phys =>
-        f.stats.get(phys).orElse(partitionEntry(f, phys)))))
   }
 
   /** Read rows with `colName` in `[lo, hi]` through stats pruning: the file
@@ -827,9 +602,7 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     */
   def planPoints(snap: Snapshot, colName: String, values: Seq[Any])
       : (Seq[FileEntry], Int) = {
-    val keep = values.map(v => planBetween(snap, colName, v, v)._1.map(_.path).toSet)
-      .foldLeft(Set.empty[String])(_ ++ _)
-    (snap.files.filter(f => keep.contains(f.path)), snap.files.size)
+    (planner(snap).points(snap.files, colName, values), snap.files.size)
   }
 
   /** Read rows where `colName` is one of `values` through per-point file
@@ -982,7 +755,7 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
           val eqMatched = eqAdded.map { d =>
             val del = spark.read.parquet(s"$dataRoot/${d.path}")
             val cond = d.keyCols.map { k =>
-              val cur = GraftTable.currentName(to, k, d.appliedAt)
+              val cur = SnapshotPlanner.currentName(to, k, d.appliedAt)
               val curType = logical.find(_.name == cur).map(_.dataType)
                 .getOrElse(throw new IllegalStateException(
                   s"delete key column $cur no longer in schema of $tableDir"))
@@ -1451,8 +1224,8 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
   /** Drop a column (metadata-only, like the Iceberg `drop column`): old
     * files keep the physical data; reads replay the drop so the column never
     * surfaces, and a later re-`addColumn` of the same name starts a FRESH
-    * column (the replay order drop-then-add resurrects nothing, and
-    * `writeTimeName`'s add rule keeps old files' stats from aliasing in).
+    * column (`SnapshotPlanner.source` resolves the name to the add, so old
+    * files' values and stats never alias in — on every read path).
     * Refused for columns the table still depends on: partition columns
     * (identity or a transform's source) and live MOR delete keys — dropping
     * those would break scan planning / delete application, not just hide
@@ -1465,7 +1238,7 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     require(!GraftTable.parseTransforms(properties).exists(_.src == name),
       s"cannot drop $name: it is the source of a partition transform in $tableDir")
     val liveKeyCols = snap.deletes
-      .flatMap(d => d.keyCols.map(k => GraftTable.currentName(snap, k, d.appliedAt)))
+      .flatMap(d => d.keyCols.map(k => SnapshotPlanner.currentName(snap, k, d.appliedAt)))
     require(!liveKeyCols.contains(name),
       s"cannot drop $name: live merge-on-read delete files key on it in $tableDir")
     evolveSchema(GraftTable.dropColumnOp(name),
@@ -2035,7 +1808,7 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     // delete-time names differ but resolve identically merge; diverged
     // resolutions stay separate, exactly as they are separate read joins
     val groups = live.groupBy(d =>
-      d.keyCols.map(k => GraftTable.currentName(planned, k, d.appliedAt)))
+      d.keyCols.map(k => SnapshotPlanner.currentName(planned, k, d.appliedAt)))
     val (toMerge, singles) =
       if (consolidate) groups.partition(_._2.size > 1)
       else (Map.empty[List[String], List[DeleteEntry]], groups)
@@ -2609,7 +2382,7 @@ object GraftTable {
     }).getOrElse(Nil)
 
   /** The derivation expression for a transform partition column — the write
-    * side of the transform contract (the scan side is `planBetween`'s
+    * side of the transform contract (the scan side is `SnapshotPlanner`'s
     * transform pass, which MUST invert exactly what is derived here).
     *
     * Time granularities derive from the UTC instant for `TimestampType`
@@ -2714,26 +2487,6 @@ object GraftTable {
   private[table] def nextPrefix(s: String): Option[String] = {
     val i = s.lastIndexWhere(_ != Char.MaxValue)
     if (i < 0) None else Some(s.substring(0, i) + (s.charAt(i) + 1).toChar)
-  }
-
-  /** Forward-map a column name recorded at snapshot `since` to its name at
-    * `snap` by replaying renames committed in (since, snap] — the inverse
-    * direction of `writeTimeName` (which maps a CURRENT name back to
-    * write-time). Used to resolve equality-delete key columns recorded
-    * before a rename. An `add` op can never capture the tracked name: the
-    * name existed at `since`, so an add of the same string is only legal
-    * after a rename moved the tracked column away — which this replay
-    * follows first.
-    */
-  private[table] def currentName(snap: Snapshot, name: String, since: Long): String = {
-    implicit val fmts: org.json4s.Formats = SnapshotLog.formats
-    snap.chain
-      .filter(st => st.snapshotId > since && st.snapshotId <= snap.snapshotId)
-      .flatMap(_.ops)
-      .foldLeft(name) { (cur, op) =>
-        val m = org.json4s.jackson.JsonMethods.parse(op).extract[Map[String, String]]
-        if (m.getOrElse("op", "?") == "rename" && m("from") == cur) m("to") else cur
-      }
   }
 
   /** S5 — CREATE TABLE with partition columns (ref create_sales_events.sql:1-19).
@@ -3020,65 +2773,6 @@ object GraftTable {
       case FloatType => s.toFloat
       case DoubleType => s.toDouble
       case _ => s
-    }
-  }
-
-  /** Resolve the write-time physical name of `colName` for files written in
-    * evolution epoch `epoch` by REVERSE-applying the chain ops committed
-    * after it. Returns None when the column cannot be traced to a write-time
-    * column with compatibly-ordered stats:
-    *  - an `add` of this name means the column did not exist when the file
-    *    was written — any stats under the name belong to a previously
-    *    renamed-away column (the aliasing case that silently dropped rows);
-    *  - a `widen` to string re-orders numeric values lexicographically, so
-    *    pre-widen numeric bounds are not comparable.
-    */
-  private[table] def writeTimeName(snap: Snapshot, colName: String, epoch: Long,
-      dt: DataType): Option[String] = {
-    implicit val fmts: org.json4s.Formats = SnapshotLog.formats
-    val opsAfter = snap.chain
-      .filter(st => st.snapshotId > epoch && st.snapshotId <= snap.snapshotId)
-      .flatMap(_.ops)
-    opsAfter.reverseIterator.foldLeft(Option(colName)) { (nameOpt, op) =>
-      nameOpt.flatMap { name =>
-        val m = org.json4s.jackson.JsonMethods.parse(op).extract[Map[String, String]]
-        m.getOrElse("op", "?") match {
-          case "add" if m("name") == name => None
-          case "rename" if m("to") == name => Some(m("from"))
-          // a rename AWAY of the tracked name is unreachable (a later add or
-          // rename-to would have resolved first) — conservative None anyway
-          case "rename" if m("from") == name => None
-          case "widen" if m("name") == name &&
-            dt == org.apache.spark.sql.types.StringType => None
-          case _ => Some(name)
-        }
-      }
-    }
-  }
-
-  /** Replay one evolution op over a DataFrame read with an older schema. */
-  private[table] def applyEvolution(df: DataFrame, op: String): DataFrame = {
-    implicit val fmts: org.json4s.Formats = SnapshotLog.formats
-    val m = org.json4s.jackson.JsonMethods.parse(op).extract[Map[String, String]]
-    m.getOrElse("op", "?") match {
-      case "add" =>
-        if (df.columns.contains(m("name"))) df
-        else {
-          // key absent = no declared default (replay NULL); present = replay
-          // the declared literal, INCLUDING an explicit empty string
-          val d = m.get("default")
-          df.withColumn(m("name"), d.fold(lit(null))(lit(_)).cast(m("dataType")))
-        }
-      case "rename" =>
-        if (df.columns.contains(m("from"))) df.withColumnRenamed(m("from"), m("to")) else df
-      case "widen" =>
-        if (df.columns.contains(m("name"))) df.withColumn(m("name"), col(m("name")).cast(m("dataType")))
-        else df
-      case "drop" =>
-        // replay order makes drop-then-re-add sound: the old file's column
-        // vanishes here before the later add op re-creates it at its default
-        if (df.columns.contains(m("name"))) df.drop(m("name")) else df
-      case _ => throw new IllegalArgumentException(s"bad evolution op: $op")
     }
   }
 }

@@ -85,7 +85,7 @@ class DmlPlanningSpec extends SparkSpec {
       col("k").isin(5L, 7L, 305L))
     assert(total === 4 && c1.size === 2,
       s"per-value pruning must skip the middle files, got ${c1.size}")
-    // past the ceiling: conservative full set (33 values)
+    // a 33-value list whose values land in every file keeps all four
     val big = (0L until 33L).map(_ * 10L)
     val (c2, _) = Dml.planningCandidates(t, planned, col("k").isin(big: _*))
     assert(c2.size === 4)

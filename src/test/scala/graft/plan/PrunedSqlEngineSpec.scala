@@ -154,4 +154,42 @@ class PrunedSqlEngineSpec extends SparkSpec {
     assert(pruned.rows.map(_("k")) === Seq(100L))
     assert(eng.lastPrune("kv_fresh") === ((1, 5)))
   }
+
+  test("a view read more than once in one statement is never narrowed") {
+    val t = kvTable("sqlprune-multi-")
+    val eng = new SparkSqlEngine(spark)
+    eng.registerGraftTable("kv_multi", t)
+    def n(sql: String): Any = eng.execute(sql).rows.head("n")
+    // each branch's Filter would narrow the one shared view for the other
+    assert(n("SELECT COUNT(*) AS n FROM (SELECT k FROM kv_multi WHERE k >= 35 " +
+      "UNION ALL SELECT k FROM kv_multi WHERE k < 5)") === 10L)
+    assert(n("WITH lo AS (SELECT k FROM kv_multi WHERE k < 5) SELECT COUNT(*) AS n " +
+      "FROM (SELECT k FROM kv_multi WHERE k >= 35 UNION ALL SELECT k FROM lo)") === 10L)
+    assert(n("SELECT COUNT(*) AS n FROM kv_multi WHERE k >= 35 AND " +
+      "(SELECT COUNT(*) FROM kv_multi) = 40") === 5L)
+    assert(!eng.lastPrune.contains("kv_multi"))
+    // a single read still prunes
+    assert(n("SELECT COUNT(*) AS n FROM kv_multi WHERE k >= 35") === 5L)
+    assert(eng.lastPrune("kv_multi") === ((1, 4)))
+  }
+
+  test("a FLOAT column compared with a decimal literal keeps the files Spark matches") {
+    import spark.implicits._
+    // Spark compares `f < 0.7` as cast(f AS DOUBLE) < 0.7, and 0.7f widens
+    // to 0.69999998 while its footer bound renders as "0.7"
+    val dir = scratchDir("sqlprune-float-")
+    val base = Seq(0.1f, 0.7f, 2.0f).toDF("f")
+    val t = GraftTable.create(spark, dir, base.schema)
+    Seq(0.1f, 0.7f, 2.0f).foreach(v => t.append(base.filter(col("f") === v).coalesce(1)))
+    val eng = new SparkSqlEngine(spark)
+    eng.registerGraftTable("fl", t)
+    def fs(sql: String): Seq[Float] =
+      eng.execute(sql).rows.map(_("f").asInstanceOf[Float]).sorted
+    assert(fs("SELECT f FROM fl WHERE f < 0.7") === Seq(0.1f, 0.7f))
+    assert(eng.lastPrune("fl") === ((2, 3)))
+    assert(fs("SELECT f FROM fl WHERE f > 0.1") === Seq(0.1f, 0.7f, 2.0f))
+    // a FLOAT-typed value compares in the column's own domain: strict holds
+    assert(fs("SELECT f FROM fl WHERE f < CAST(0.7 AS FLOAT)") === Seq(0.1f))
+    assert(eng.lastPrune("fl") === ((1, 3)))
+  }
 }

@@ -107,6 +107,11 @@ class SqlDmlSpec extends SparkSpec {
       .groupBy("_change_type").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(ch == Map("insert" -> 2L, "delete" -> 2L))
+    // a DECIMAL literal assigned to a DOUBLE column casts to the column type
+    eng.execute("UPDATE sales SET price = 1.25 WHERE event_id = 8")
+    assert(t.latest.operation == "update-mor")
+    assert(t.readLatest().filter(col("event_id") === 8L).select("price")
+      .collect().map(_.getDouble(0)).toSeq == Seq(1.25))
     // a matched-nothing update commits nothing
     val snaps = t.snapshotsList.size
     eng.execute("UPDATE sales SET price = 0 WHERE channel = 'nope'")

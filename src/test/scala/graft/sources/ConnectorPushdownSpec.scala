@@ -286,4 +286,86 @@ class ConnectorPushdownSpec extends SparkSpec {
     val expect = (1 to 100).filter(_ % 4 == 1) // cat 'b' = i % 4 == 1
     assert(r.getLong(0) == expect.size && r.getLong(1) == expect.map(_.toLong).sum)
   }
+
+  test("differential pruning: connector partitions equal the table planner's files") {
+    import spark.implicits._
+    import org.apache.spark.sql.{sources => S}
+    def ts(d: Int, h: Int) =
+      java.sql.Timestamp.from(java.time.Instant.parse(f"2024-03-0$d%dT$h%02d:00:00Z"))
+    // identity (cat), days(ts) and bucket(4, id) partitions; the first
+    // append has no null v, the second nulls v above id 90
+    val df = (1 to 100).map(i => (i.toLong, if (i % 2 == 0) "a" else "b",
+      ts(1 + i % 3, i % 24), if (i > 90) None else Some(i + 100L))).toDF("id", "cat", "ts", "v")
+    val dir = scratchDir("diff-prune") + "/t"
+    val t = GraftTable.create(spark, dir, df.schema,
+      partitionCols = Seq("cat", "ts_day", "id_bucket"),
+      properties = Map(GraftTable.PartitionTransformsProp ->
+        "days(ts)=ts_day;bucket(4,id)=id_bucket"))
+    t.append(df.filter(col("id") <= 50))
+    t.append(df.filter(col("id") > 50))
+    val dataRoot = graft.table.SnapshotLog.dataPath(dir).toString
+
+    /** (table planner's files, connector's planned files) for one shape:
+      * the table side plans the ANALYZED Catalyst predicate, the connector
+      * side plans the sources.Filters Spark hands a scan. */
+    def both(pred: org.apache.spark.sql.Column,
+        filters: Array[S.Filter]): (Set[String], Set[String]) = {
+      val snap = t.latest
+      val empty = spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], t.schema)
+      val cond = empty.filter(pred).queryExecution.analyzed.collect {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
+      }
+      val tableFiles = t.planner(snap).select(cond.flatMap(graft.table.Fact.of))
+        .map(_.path).toSet
+      val sb = new GraftStreamTable(dir, t.schema)
+        .newScanBuilder(CaseInsensitiveStringMap.empty())
+      sb.asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownFilters]
+        .pushFilters(filters)
+      val connFiles = sb.build().toBatch().planInputPartitions()
+        .map(_.asInstanceOf[GraftInputPartition].filePath.stripPrefix(dataRoot + "/")).toSet
+      (tableFiles, connFiles)
+    }
+    def check(name: String, pred: org.apache.spark.sql.Column, filters: Array[S.Filter],
+        pruned: Boolean = true): Set[String] = {
+      val (tf, cf) = both(pred, filters)
+      assert(tf == cf, s"$name: table planned ${tf.size} files, connector ${cf.size}")
+      val total = t.latest.files.size
+      if (pruned) assert(cf.size < total, s"$name: nothing pruned of $total files")
+      // pruning never changes rows
+      assert(spark.read.format("graft").load(dir).filter(pred).count() ==
+        t.readLatest().filter(pred).count(), s"$name: row counts differ")
+      cf
+    }
+
+    val strict = check("strict range", col("id") > 50L, Array(S.GreaterThan("id", 50L)))
+    // the strict bound is tighter than the inclusive planBetween envelope
+    assert(strict.size < t.planBetween(t.latest, "id", 50L, null)._1.size)
+    // a point pins one hash bucket (bucket transform) within its stats range
+    check("point", col("id") === 17L, Array(S.EqualTo("id", 17L)))
+    val in3 = check("IN list", col("id").isin(3L, 17L, 42L), Array(S.In("id", Array(3L, 17L, 42L))))
+    // a long list still prunes per value, never to its [min, max] envelope
+    val far = Seq(3L, 17L, 42L) ++ (1000L until 51000L)
+    assert(check("long IN list", col("id").isin(far: _*),
+      Array(S.In("id", far.toArray[Any]))) == in3)
+    assert(check("IN (NULL)", col("id").isin(lit(null).cast("long")),
+      Array(S.In("id", Array(null)))).isEmpty)
+    check("IS NULL", col("v").isNull, Array(S.IsNull("v")))
+    check("partition equality", col("cat") === "b", Array(S.EqualTo("cat", "b")))
+    check("days transform", col("ts") >= ts(2, 0) && col("ts") < ts(3, 0),
+      Array(S.GreaterThanOrEqual("ts", ts(2, 0)), S.LessThan("ts", ts(3, 0))))
+
+    // after a rename, stats resolve under the write-time name on both sides
+    t.renameColumn("v", "w")
+    // a post-rename append: reads now union a replayed and a current epoch
+    t.append(df.filter(col("id") <= 10).withColumnRenamed("v", "w"))
+    check("renamed range", col("w") <= 120L, Array(S.LessThanOrEqual("w", 120L)))
+    check("renamed IS NULL", col("w").isNull, Array(S.IsNull("w")))
+    // drop it and re-add its original name: the old files' stats recorded
+    // under "v" describe the dropped column and must never prune the new one
+    t.dropColumn("w")
+    t.addColumn("v", "BIGINT", "5")
+    assert(check("re-added point", col("v") === 5L, Array(S.EqualTo("v", 5L)),
+      pruned = false).size == t.latest.files.size)
+  }
 }

@@ -76,4 +76,57 @@ class GraftConnectorEvolutionSpec extends SparkSpec {
     assert(groups == Set((1L to 5L).toSet, (6L to 10L).toSet))
     assert(byFile.forall(_._2.startsWith(dir)))
   }
+
+  /** 100 rows whose `v` (101..200) is dropped, then re-added with default 5. */
+  private def readdedTable(name: String): (String, GraftTable, Long, Long) = {
+    import spark.implicits._
+    val dir = scratchDir(name) + "/t"
+    val df = (1 to 100).map(i => (i.toLong, i + 100L)).toDF("id", "v")
+    val t = GraftTable.create(spark, dir, df.schema)
+    val created = t.latest.snapshotId
+    t.append(df)
+    val appended = t.latest.snapshotId
+    t.dropColumn("v")
+    t.addColumn("v", "BIGINT", "5")
+    (dir, t, created, appended)
+  }
+
+  private def messages(e: Throwable): String =
+    if (e == null) "" else Option(e.getMessage).getOrElse("") + "|" + messages(e.getCause)
+
+  test("drop then re-add with a default: reads, filters and pushed aggregates match readLatest") {
+    val (dir, t, _, _) = readdedTable("conn-readd")
+    val conn = spark.read.format("graft").load(dir)
+    val api = t.readLatest()
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("id").collect().map(_.toSeq).toSeq
+    assert(rows(conn) == rows(api))
+    assert(api.filter(col("v") === 5L).count() == 100)
+    assert(conn.filter(col("v") === 5L).count() == 100)
+    val aggs = Seq(min("v").as("mn"), max("v").as("mx"), count("v").as("n"))
+    val fromApi = api.agg(aggs.head, aggs.tail: _*).head.toSeq
+    val fromConn = conn.agg(aggs.head, aggs.tail: _*).head.toSeq
+    assert(fromApi == Seq(5L, 5L, 100L) && fromConn == fromApi)
+  }
+
+  test("append-only ranges over a dropped-then-re-added column refuse, never read old values") {
+    val (dir, _, created, appended) = readdedTable("conn-readd-range")
+    // (created, appended] holds only the append, whose file stores the
+    // DROPPED v under the re-added column's name and type
+    val e = intercept[Exception] {
+      spark.read.format("graft")
+        .option("start-snapshot-id", created.toString)
+        .option("end-snapshot-id", appended.toString).load(dir).collect()
+    }
+    assert(messages(e).contains("evolved schema"), messages(e))
+    // one commit per micro-batch: the append's batch is planned before the
+    // drop commit is ever reached, and must refuse on its own
+    val q = spark.readStream.format("graft").option("max-commits-per-trigger", "1")
+      .load(dir).writeStream.format("memory").queryName("readd_stream")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    val se = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      q.awaitTermination()
+    }
+    assert(messages(se).contains("different schema"), messages(se))
+    assert(spark.table("readd_stream").count() == 0, "dropped values were streamed")
+  }
 }
