@@ -21,8 +21,14 @@ import graft.table.GraftTable
   * existing entity or dropping a missing one raises; drops are ordered
   * tables/views-before-namespace (`:1059-1068` cleanup reordering).
   */
-class CatalogService(spark: SparkSession, rootDir: String) {
+class CatalogService(spark: SparkSession, rootUri: String) {
   private implicit val formats: Formats = DefaultFormats
+
+  // a `file:`-scheme root is a local path: java.nio would read the scheme
+  // as a relative directory named `file:` under the working directory
+  private val rootDir =
+    if (rootUri.startsWith("file:")) new org.apache.hadoop.fs.Path(rootUri).toUri.getPath
+    else rootUri
 
   private def nsDir(ns: String) = {
     require(ns.matches("[A-Za-z0-9_]+"), s"unsafe namespace: $ns")

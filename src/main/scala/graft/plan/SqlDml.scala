@@ -7,7 +7,10 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graftbridge.SqlInternals
 
+import org.apache.spark.sql.connector.catalog.TableCatalog
+
 import graft.dml.Dml
+import graft.sources.{GraftCatalog, GraftProcedures}
 import graft.table.GraftTable
 
 /** SQL-surface DML (the statement shapes the reference harness runs —
@@ -403,32 +406,28 @@ object SqlDml {
     *
     *  - `CREATE NAMESPACE [IF NOT EXISTS] ns`;
     *  - `CREATE TABLE [IF NOT EXISTS] ns.t (cols) ... PARTITIONED BY
-    *    (identity / days(col)) TBLPROPERTIES (...)` — the `days` transform
-    *    records a derived partition column the write path computes
-    *    (`GraftTable.PartitionTransformsProp`); the created table registers
+    *    (transforms) [LOCATION path] TBLPROPERTIES (...)` — created by the
+    *    catalog's shared `GraftCatalog.create`; the created table registers
     *    as a view so the rest of the script reads and writes it by name;
     *  - `ALTER TABLE ns.t WRITE ORDERED BY c1, c2` — Iceberg-extension
     *    syntax Spark's parser rejects, matched textually and routed to the
     *    sticky sort-order property.
     *
     * Schema evolution, lifecycle, and inspection statements route to the
-    * table layer's evolution API — the reference's
-    * `schema_evolution_sales_events.sql:3-12` runs verbatim:
+    * table layer — the reference's `schema_evolution_sales_events.sql:3-12`
+    * runs verbatim:
     *
-    *  - `ALTER TABLE t ADD COLUMN c TYPE [DEFAULT lit]` → `addColumn` (D4);
-    *  - `ALTER TABLE t RENAME COLUMN a TO b` → `renameColumn` (D5);
-    *  - `ALTER TABLE t ALTER COLUMN c TYPE T` → `widenColumn` (D6);
-    *  - `ALTER TABLE t DROP COLUMN c` → `dropColumn`;
-    *  - `ALTER TABLE t SET/UNSET TBLPROPERTIES` → `setProperties`;
-    *  - `DESCRIBE TABLE t` → the schema as rows (D7);
+    *  - `ALTER TABLE t ADD / RENAME / ALTER / DROP COLUMN`, `SET / UNSET
+    *    TBLPROPERTIES` → Spark's `TableChange`s, applied by
+    *    `GraftCatalog.alter` exactly as on the catalog route (D4–D6);
+    *  - `DESCRIBE TABLE t` → the schema as rows, with recorded comments (D7);
     *  - `DROP TABLE ns.t` → catalog drop + view unregistration (S7);
     *  - `SHOW TABLES IN ns` → catalog listing as rows;
     *  - `CREATE TABLE ns.t AS SELECT ...` → create + append (CTAS);
     *  - `TRUNCATE TABLE t` → metadata-only empty-overwrite commit;
-    *  - `CALL <cat>.system.<proc>(...)` → the Maintenance layer
-    *    (rewrite_data_files / rewrite_manifests / expire_snapshots /
-    *    remove_orphan_files / rollback_to_snapshot — the reference bench's
-    *    maintenance statements, blob-dfs_bench.py:141-155);
+    *  - `CALL <cat>.system.<proc>(...)` → the catalog's procedure registry,
+    *    `GraftProcedures` (the reference bench's maintenance statements,
+    *    blob-dfs_bench.py:141-155);
     *  - `USE CATALOG c` / `USE ns` → accepted no-ops (the engine has one
     *    implicit catalog; the reference scripts open with a context switch).
     *
@@ -650,7 +649,8 @@ object SqlDml {
     val parsed =
       try spark.sessionState.sqlParser.parsePlan(statement)
       catch { case _: Exception => return None }
-    import org.apache.spark.sql.catalyst.analysis.{FieldName, UnresolvedIdentifier, UnresolvedNamespace, UnresolvedTable, UnresolvedTableOrView}
+    import org.apache.spark.sql.catalyst.analysis.{FieldName, FieldPosition, ResolvedFieldName, ResolvedFieldPosition, UnresolvedFieldName, UnresolvedFieldPosition, UnresolvedIdentifier, UnresolvedNamespace, UnresolvedTable, UnresolvedTableOrView}
+    import org.apache.spark.sql.types.{NullType, StructField}
 
     // Same exact-name contract as DML's target(): one part → registered
     // view, two parts → the catalog's ns.table; anything else is someone
@@ -667,17 +667,6 @@ object SqlDml {
         catalog.filter(_.tableExists(ns, t)).map(_.loadTable(ns, t))
       case _ => None
     }
-    // A CALL's table ident arrives as a string literal; a leading catalog
-    // part (the reference's `opencatalog.system...` call passes
-    // `catalog.ns.t`) drops off before the same resolution rule applies.
-    def resolveIdent(ident: String): Option[GraftTable] = {
-      val parts = ident.split("\\.").toSeq
-      (if (parts.size == 3) parts.drop(1) else parts) match {
-        case Seq(one) => tables.get(one.toLowerCase)
-        case Seq(ns, t) => catalog.filter(_.tableExists(ns, t)).map(_.loadTable(ns, t))
-        case _ => None
-      }
-    }
     // After an evolution commit, re-register every view over the table so
     // the rest of the script reads the evolved schema.
     def evolved(t: GraftTable): StatementResult = {
@@ -686,71 +675,34 @@ object SqlDml {
       }
       StatementResult(statement, Nil, None)
     }
-    def singleField(f: FieldName): String = f.name match {
-      case Seq(one) => one
-      case parts => unsupported(s"nested column ${parts.mkString(".")}")
-    }
-    // None = no declared default (replay NULL); Some("") = an explicit
-    // empty-string default, honored as-is. DEFAULT NULL is a declared NULL,
-    // which replays identically to no-default.
-    def defaultString(d: Option[DefaultValueExpression]): Option[String] = d match {
-      case None => None
-      case Some(dv) => dv.child match {
-        case Literal(null, _) => None
-        case Literal(v, _) => Some(v.toString)
-        case other => unsupported(s"non-literal column DEFAULT ${other.sql}")
-      }
-    }
 
     parsed match {
-      case ac: AddColumns =>
-        resolve(ac.table).map { t =>
-          ac.columnsToAdd.foreach { qct =>
-            if (qct.path.nonEmpty) unsupported("ADD COLUMN with a nested path")
-            if (qct.position.nonEmpty) unsupported("ADD COLUMN ... FIRST/AFTER")
-            t.addColumn(qct.colName, qct.dataType.sql, defaultString(qct.default))
+      // ALTER TABLE schema, comment and property changes: Spark's own
+      // TableChange mapping (what the catalog route receives), applied by
+      // the catalog's shared `alter`. The field names need no analysis:
+      // `alter` resolves them against the table.
+      case cmd: AlterTableCommand =>
+        resolve(cmd.table).map { t =>
+          def name(f: FieldName): FieldName = f match {
+            case UnresolvedFieldName(parts) =>
+              ResolvedFieldName(parts.init, StructField(parts.last, NullType))
+            case other => other
           }
-          evolved(t)
-        }
-
-      case rc: RenameColumn =>
-        resolve(rc.table).map { t =>
-          t.renameColumn(singleField(rc.column), rc.newName)
-          evolved(t)
-        }
-
-      case alt: AlterColumns =>
-        resolve(alt.table).map { t =>
-          alt.specs.foreach { sp =>
-            val newType = sp.newDataType.getOrElse(
-              unsupported("ALTER COLUMN without a TYPE change"))
-            if (sp.newNullability.nonEmpty || sp.newComment.nonEmpty ||
-                sp.newPosition.nonEmpty || sp.newDefaultExpression.nonEmpty)
-              unsupported("ALTER COLUMN beyond TYPE")
-            t.widenColumn(singleField(sp.column), newType.sql)
+          def position(p: FieldPosition): FieldPosition = p match {
+            case UnresolvedFieldPosition(pos) => ResolvedFieldPosition(pos)
+            case other => other
           }
+          val changes = (cmd match {
+            // a new column's path and position are fields, not children
+            case ac: AddColumns => ac.copy(columnsToAdd = ac.columnsToAdd.map(c =>
+              c.copy(path = c.path.map(name), position = c.position.map(position))))
+            case other => other
+          }).transformExpressions {
+            case f: FieldName => name(f)
+            case p: FieldPosition => position(p)
+          }.asInstanceOf[AlterTableCommand].changes
+          GraftCatalog.alter(t, changes, nameParts(cmd.table).get.mkString("."))
           evolved(t)
-        }
-
-      case dc: DropColumns =>
-        resolve(dc.table).map { t =>
-          dc.columnsToDrop.map(singleField).foreach { name =>
-            if (!dc.ifExists || t.schema.fieldNames.contains(name))
-              t.dropColumn(name)
-          }
-          evolved(t)
-        }
-
-      case sp: SetTableProperties =>
-        resolve(sp.table).map { t =>
-          t.setProperties(sp.properties.map { case (k, v) => k -> Some(v) })
-          StatementResult(statement, Nil, None)
-        }
-
-      case up: UnsetTableProperties =>
-        resolve(up.table).map { t =>
-          t.setProperties(up.propertyKeys.map(_ -> None).toMap)
-          StatementResult(statement, Nil, None)
         }
 
       // ANALYZE TABLE t COMPUTE STATISTICS [FOR COLUMNS c,... | FOR ALL
@@ -799,10 +751,11 @@ object SqlDml {
 
       case dr: DescribeRelation =>
         resolve(dr.relation).map { t =>
+          val props = t.properties
           val rows = t.schema.fields.toSeq.map(f =>
             Map[String, Any]("col_name" -> f.name,
               "data_type" -> f.dataType.simpleString,
-              "comment" -> null))
+              "comment" -> props.get(GraftCatalog.ColumnCommentPrefix + f.name).orNull))
           StatementResult(statement, rows, None)
         }
 
@@ -918,321 +871,33 @@ object SqlDml {
       case cmd if cmd.getClass.getSimpleName == "SetCatalogCommand" =>
         Some(StatementResult(statement, Nil, None))
 
-      // Iceberg maintenance procedures as SQL (the reference's bench
-      // statements, blob-dfs_bench.py:141-155): `CALL <cat>.system.<proc>`
-      // routes to the Maintenance layer. Strict: unknown procedures and
-      // non-system namespaces fall through; recognized procedures with
-      // arguments the maintenance layer can't honor (strategy, sort_order,
-      // older_than, non-literal args) raise with the construct named.
+      // Iceberg procedures as SQL (the reference's bench statements,
+      // blob-dfs_bench.py:141-155): the catalog's procedure registry, bound
+      // by Spark's own CALL analysis (named and positional arguments,
+      // defaults, coercion), with `table` arguments resolved the engine's
+      // way. Unknown procedures and non-system namespaces fall through.
       case c: Call =>
-        import org.apache.spark.sql.catalyst.analysis.UnresolvedProcedure
-        import org.apache.spark.sql.catalyst.expressions.{CreateMap, NamedArgumentExpression}
-        val procParts = c.procedure match {
-          case up: UnresolvedProcedure => up.nameParts
-          case _ => return None
+        val touched = scala.collection.mutable.ArrayBuffer.empty[GraftTable]
+        val host = GraftProcedures.Host(
+          ident => {
+            // a leading catalog part (`catalog.ns.t`, as in the reference's
+            // calls) drops off before the DDL resolution rule applies
+            val parts = ident.split("\\.")
+            val t = resolveDdlIdent((if (parts.length == 3) parts.tail else parts).mkString("."))
+              .getOrElse(throw new IllegalArgumentException(
+                s"CALL: '$ident' is neither a registered view nor a catalog table"))
+            touched += t
+            t
+          },
+          () => catalog.getOrElse(unsupported("register_table without a registered catalog")))
+        GraftProcedures.bind(host, c).map { bound =>
+          val rows = SqlInternals.ofRows(spark, bound).collect().toSeq
+            .map(r => r.schema.fieldNames.zip(r.toSeq).toMap[String, Any])
+          // maintenance may have changed the live file set (or, for
+          // rollback, the data): re-register every view over the table
+          touched.foreach(evolved)
+          StatementResult(statement, rows, None)
         }
-        if (procParts.size > 1 && procParts(procParts.size - 2).toLowerCase != "system")
-          return None
-        val proc = procParts.last.toLowerCase
-        val known = Set("rewrite_data_files", "rewrite_manifests", "expire_snapshots",
-          "remove_orphan_files", "rollback_to_snapshot", "rollback_to_timestamp",
-          "rewrite_position_delete_files", "fast_forward", "add_files",
-          "compute_table_stats", "register_table", "create_changelog_view")
-        if (!known(proc)) return None
-        var positional = Vector.empty[Expression]
-        var named = Map.empty[String, Expression]
-        c.args.foreach {
-          case NamedArgumentExpression(k, v) => named += k.toLowerCase -> v
-          case e => positional :+= e
-        }
-        def litString(e: Expression): String = e match {
-          case Literal(v, _) if v != null => v.toString
-          case other => unsupported(s"CALL argument ${other.sql} (need a literal)")
-        }
-        def litLong(e: Expression): Long = e match {
-          case Literal(v: Int, _) => v.toLong
-          case Literal(v: Long, _) => v
-          case Literal(v: Short, _) => v.toLong
-          case other => unsupported(s"CALL argument ${other.sql} (need an integer literal)")
-        }
-        def argAt(name: String, pos: Int): Option[Expression] =
-          named.get(name).orElse(positional.lift(pos))
-        def strMap(e: Expression): Map[String, String] = e match {
-          // pre-analysis, `map('k','v',...)` is still an unresolved function
-          case f: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
-              if f.nameParts.map(_.toLowerCase) == Seq("map") =>
-            f.arguments.map(litString).grouped(2)
-              .collect { case Seq(k, v) => k -> v }.toMap
-          case cm: CreateMap =>
-            cm.children.map(litString).grouped(2).collect { case Seq(k, v) => k -> v }.toMap
-          case other => unsupported(s"CALL options ${other.sql} (need map('k','v',...))")
-        }
-        val identExpr = argAt("table", 0).getOrElse(
-          unsupported(s"CALL $proc without a table argument"))
-        def oneRow(m: (String, Any)*): StatementResult =
-          StatementResult(statement, Seq(m.toMap[String, Any]), None)
-        // register_table's target does not exist yet — it attaches an
-        // existing external table directory under a new catalog name, so it
-        // runs before name resolution (Iceberg's register_table procedure).
-        if (proc == "register_table") {
-          val loc = argAt("metadata_file", 1).orElse(named.get("location"))
-            .map(litString).getOrElse(
-              unsupported("register_table without a metadata_file argument"))
-          val parts = litString(identExpr).replace("`", "").split("\\.").toSeq
-          val (rns, rtn) = parts match {
-            case Seq(ns0, tn0) => (ns0, tn0)
-            case Seq(_, ns0, tn0) => (ns0, tn0) // leading catalog part drops
-            case _ => unsupported(
-              s"register_table target ${litString(identExpr)} (need ns.table)")
-          }
-          val cat = catalog.getOrElse(return None)
-          val rt = cat.registerTable(rns, rtn, loc)
-          return Some(oneRow(
-            "current_snapshot_id" -> rt.latest.snapshotId,
-            "total_records_count" -> rt.countRowsFromMetadata().getOrElse(-1L),
-            "total_data_files_count" -> rt.latest.files.size.toLong))
-        }
-        val t = resolveIdent(litString(identExpr)).getOrElse(return None)
-        val result = proc match {
-          case "rewrite_data_files" =>
-            // strategy 'binpack' (default) compacts small files in place;
-            // 'sort' re-clusters the whole table on sort_order — either a
-            // column list ('c1, c2') or 'zorder(c1, c2)' (Iceberg's two
-            // sort-rewrite spellings)
-            val strategy = named.get("strategy").map(litString(_).toLowerCase)
-              .getOrElse("binpack")
-            if (strategy == "sort") {
-              // a sort rewrite re-clusters the WHOLE table; silently
-              // ignoring a where-scope would claim a narrower rewrite than
-              // what ran
-              if (named.contains("where"))
-                unsupported("rewrite_data_files(strategy => 'sort') with where " +
-                  "(sort rewrites are whole-table)")
-              val so = named.get("sort_order").map(litString).getOrElse(
-                unsupported("rewrite_data_files(strategy => 'sort') without sort_order"))
-              val zRe = """(?i)\A\s*zorder\s*\(([^)]*)\)\s*\z""".r
-              val target = argAt("options", 4).map(strMap).getOrElse(Map.empty)
-                .get("target-file-size-bytes").map(_.toLong)
-                .orElse(t.properties.get(graft.table.GraftTable.TargetFileSizeProp)
-                  .flatMap(x => scala.util.Try(x.toLong).toOption))
-                .getOrElse(512L * 1024 * 1024)
-              val before = t.latest.files.map(_.path).toSet
-              val after = (so match {
-                case zRe(colsStr) =>
-                  val zcols = colsStr.split(",").map(_.trim.replace("`", ""))
-                    .filter(_.nonEmpty).toSeq
-                  graft.maintenance.Maintenance.zorderRewrite(t, zcols, target)
-                case _ =>
-                  val scols = so.split(",")
-                    .map(_.trim.replace("`", ""))
-                    .map(c => c.split("\\s+").head) // tolerate ASC/DESC NULLS ...
-                    .filter(_.nonEmpty).toSeq
-                  graft.maintenance.Maintenance.sortRewrite(t, scols, target)
-              }).map(_.files.map(_.path).toSet).getOrElse(before)
-              oneRow(
-                "rewritten_data_files_count" -> (before -- after).size.toLong,
-                "added_data_files_count" -> (after -- before).size.toLong)
-            } else {
-            if (strategy != "binpack")
-              unsupported(s"rewrite_data_files strategy '$strategy' (binpack or sort)")
-            if (named.contains("sort_order"))
-              unsupported("rewrite_data_files sort_order without strategy => 'sort'")
-            // `where => "<part> = '<v>' [AND ...]"` scopes the compaction to
-            // matching partitions (partition-equality conjunctions only —
-            // arbitrary predicates would need a row-level rewrite, which is
-            // not what a scoped binpack means)
-            val partFilter: Map[String, String] = named.get("where") match {
-              case None => Map.empty
-              case Some(w) =>
-                val text = litString(w)
-                val eqRe = """(?s)\A\s*([\w`]+)\s*=\s*(?:'([^']*)'|(\S+))\s*\z""".r
-                splitTopLevelAnd(text).map(_.trim).map {
-                  case eqRe(k, quoted, bare) =>
-                    k.replace("`", "") -> Option(quoted).getOrElse(bare)
-                  case other =>
-                    unsupported(s"rewrite_data_files where clause '$other' " +
-                      "(partition-equality conjunctions only)")
-                }.toMap
-            }
-            val opts = argAt("options", 4).map(strMap).getOrElse(Map.empty)
-            val badOpt = opts.keySet.diff(
-              Set("min-input-files", "max-file-size-bytes", "target-file-size-bytes"))
-            if (badOpt.nonEmpty) unsupported(s"rewrite_data_files options $badOpt")
-            // Iceberg's option resolution: an explicit procedure option wins;
-            // ABSENT the option, the table's own write.target-file-size-bytes
-            // applies before the engine default (Maintenance treats its
-            // argument as explicit, so the property is resolved HERE)
-            val target = opts.get("target-file-size-bytes")
-              .orElse(opts.get("max-file-size-bytes")).map(_.toLong)
-              .orElse(t.properties.get(graft.table.GraftTable.TargetFileSizeProp)
-                .flatMap(s => scala.util.Try(s.toLong).toOption))
-              .getOrElse(512L * 1024 * 1024)
-            val minIn = opts.get("min-input-files").map(_.toInt).getOrElse(2)
-            val before = t.latest.files.map(_.path).toSet
-            val after = graft.maintenance.Maintenance
-              .rewriteDataFiles(t, target, minIn, partFilter)
-              .map(_.files.map(_.path).toSet).getOrElse(before)
-            oneRow("rewritten_data_files_count" -> (before -- after).size.toLong,
-              "added_data_files_count" -> (after -- before).size.toLong)
-            }
-          case "rewrite_manifests" =>
-            oneRow("rewritten_manifests_count" ->
-              graft.maintenance.Maintenance.rewriteManifests(t).toLong)
-          case "create_changelog_view" =>
-            // Iceberg's CDC-view procedure: register a session view over the
-            // row-level changelog in (start, end] — default full history to
-            // head. The view is the SQL face of readChangelog; the O(delta)
-            // read itself happens when the view is queried.
-            val viewName = named.get("changelog_view").map(litString).getOrElse {
-              val base = litString(identExpr).replace("`", "").split("\\.").last
-              s"${base}_changes"
-            }
-            val opts = argAt("options", 2).map(strMap).getOrElse(Map.empty)
-            // Default = FULL history (from 0 includes the root commit's
-            // inserts). Only valid while the chain root is retained: after
-            // expiry the earliest retained snapshot is a data commit whose
-            // inserts a head-anchored default would silently omit — refuse
-            // and require an explicit start instead.
-            val from = opts.get("start-snapshot-id").map(_.toLong).getOrElse {
-              require(t.snapshotsList.head.parentId.isEmpty,
-                s"create_changelog_view on ${litString(identExpr)}: early history " +
-                  "was expired, so the default (full-history) changelog cannot be " +
-                  "built — pass options => map('start-snapshot-id', '<id>') with a " +
-                  "retained snapshot id")
-              0L
-            }
-            val toId = opts.get("end-snapshot-id").map(_.toLong)
-              .getOrElse(t.latest.snapshotId)
-            t.readChangelog(from, toId).createOrReplaceTempView(viewName)
-            oneRow("changelog_view" -> viewName)
-          case "add_files" =>
-            // Iceberg: add_files(table, source_table => '`parquet`.`/path`').
-            // Accept that quoted form or a bare directory path; the import
-            // itself is GraftTable.addFiles' zero-copy rename.
-            val rawSrc = argAt("source_table", 1)
-              .orElse(named.get("source_dir")).map(litString)
-              .getOrElse(unsupported("add_files without a source_table argument"))
-            val srcRe = """(?i)\A\s*`?parquet`?\s*\.\s*`([^`]+)`\s*\z""".r
-            val srcDir = rawSrc match {
-              case srcRe(p) => p
-              case p => p.replace("`", "")
-            }
-            val beforeParts = t.latest.files.map(_.partitionValues).toSet
-            val before = t.latest.files.map(_.path).toSet
-            t.addFiles(srcDir)
-            val addedEntries = t.latest.files.filterNot(f => before(f.path))
-            oneRow(
-              "added_files_count" -> addedEntries.size.toLong,
-              "changed_partition_count" ->
-                addedEntries.map(_.partitionValues).toSet.diff(beforeParts).size.toLong)
-          case "compute_table_stats" =>
-            // columns => array('a','b') scopes the pass; default is every
-            // column of the current schema
-            val colsArg: Seq[String] = named.get("columns").map {
-              case f: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
-                  if f.nameParts.map(_.toLowerCase) == Seq("array") =>
-                f.arguments.map(litString)
-              case ca: org.apache.spark.sql.catalyst.expressions.CreateArray =>
-                ca.children.map(litString)
-              case other => unsupported(s"columns ${other.sql} (need array('c',...))")
-            }.getOrElse(Nil)
-            val analyzed =
-              if (colsArg.nonEmpty) colsArg.size else t.schema.fields.length
-            val props = t.analyzeColumns(colsArg)
-            oneRow(
-              "statistics_file" -> s"properties:${graft.table.GraftTable.StatsColPrefix}*",
-              "analyzed_columns" -> analyzed.toLong,
-              "snapshot_id" ->
-                props(graft.table.GraftTable.StatsSnapshotProp).toLong)
-          case "expire_snapshots" =>
-            // older_than: a TIMESTAMP literal (or a string Spark's own cast
-            // accepts) — snapshots committed before the bound expire, with
-            // retain_last as a floor (Iceberg applies both; its default
-            // retain_last is 1, ours stays 2 unless older_than is given)
-            val olderThan: Option[Long] = named.get("older_than").map {
-              case l @ Literal(_, _) if l.foldable => foldTimestampMillis(spark, l)
-              case c: org.apache.spark.sql.catalyst.expressions.Cast if c.foldable =>
-                foldTimestampMillis(spark, c)
-              case other => unsupported(s"older_than ${other.sql} (need a literal timestamp)")
-            }
-            val retain = argAt("retain_last", 2).map(litLong(_).toInt)
-              .getOrElse(if (olderThan.isDefined) 1 else 2)
-            oneRow("deleted_snapshots_count" ->
-              graft.maintenance.Maintenance.expireSnapshots(t, retain, olderThan).toLong)
-          case "remove_orphan_files" =>
-            // default: Iceberg's 3-day in-flight grace window; an explicit
-            // older_than narrows or (in tests) disables it
-            val bound = named.get("older_than").map {
-              case e if e.foldable => foldTimestampMillis(spark, e)
-              case other => unsupported(s"older_than ${other.sql} (need a literal timestamp)")
-            }.getOrElse(System.currentTimeMillis() -
-              graft.maintenance.Maintenance.DefaultOrphanGraceMillis)
-            val removed = graft.maintenance.Maintenance.removeOrphanFiles(t, bound)
-            StatementResult(statement,
-              removed.sorted.map(p => Map[String, Any]("orphan_file_location" -> p)), None)
-          case "rewrite_position_delete_files" =>
-            // equality-delete analog: dangling entries dropped, survivors
-            // consolidated per key group with per-tuple bounds
-            val before = t.latest.deletes
-            val after = t.rewriteDeleteFiles()
-              .map(_.deletes).getOrElse(before)
-            val beforePaths = before.map(_.path).toSet
-            val afterPaths = after.map(_.path).toSet
-            oneRow("rewritten_delete_files_count" -> (beforePaths -- afterPaths).size.toLong,
-              "added_delete_files_count" -> (afterPaths -- beforePaths).size.toLong)
-          case "fast_forward" =>
-            // Iceberg's system.fast_forward(table, branch, to): move `branch`
-            // to `to`'s head iff it is a pure fast-forward. This engine's
-            // branches exist for WAP staging on main, so only branch='main'
-            // (publish the audited staged state) is meaningful; the staleness
-            // check lives in publishBranch (raises if main advanced past the
-            // branch base — no longer a fast-forward).
-            val branch = argAt("branch", 1).map(litString).getOrElse(
-              unsupported("fast_forward without a branch argument"))
-            val to = argAt("to", 2).map(litString).getOrElse(
-              unsupported("fast_forward without a to argument"))
-            if (branch.toLowerCase != "main")
-              unsupported(s"fast_forward branch '$branch' (only main can fast-forward)")
-            val prevHead = t.latest.snapshotId
-            val published = t.publishBranch(to)
-            oneRow("branch_updated" -> branch,
-              "previous_ref" -> prevHead,
-              "updated_ref" -> published.snapshotId)
-          case "rollback_to_snapshot" =>
-            val sid = argAt("snapshot_id", 1).map(litLong).getOrElse(
-              unsupported("rollback_to_snapshot without snapshot_id"))
-            val prev = t.latest.snapshotId
-            // rollbackTo commits a NEW snapshot mirroring the target —
-            // history stays linear — so "current" is the fresh head, with
-            // the restored content id alongside (Iceberg's pointer-move
-            // reports current == target; this engine's lineage differs)
-            val rolled = t.rollbackTo(sid)
-            oneRow("previous_snapshot_id" -> prev,
-              "current_snapshot_id" -> rolled.snapshotId,
-              "rolled_back_to" -> sid)
-          case "rollback_to_timestamp" =>
-            // Iceberg's rollback_to_timestamp(table, timestamp): restore the
-            // newest snapshot committed at or before the bound — the same
-            // resolution rule as timestamp travel, made durable as a commit
-            val bound = argAt("timestamp", 1).map {
-              case e if e.foldable => foldTimestampMillis(spark, e)
-              case other => unsupported(s"timestamp ${other.sql} (need a literal)")
-            }.getOrElse(unsupported("rollback_to_timestamp without a timestamp"))
-            val candidates = t.snapshotsList.filter(_.committedAt <= bound)
-            if (candidates.isEmpty) unsupported(
-              s"rollback_to_timestamp: no snapshot at or before $bound")
-            val prev = t.latest.snapshotId
-            val rolled = t.rollbackTo(candidates.last.snapshotId)
-            oneRow("previous_snapshot_id" -> prev,
-              "current_snapshot_id" -> rolled.snapshotId,
-              "rolled_back_to" -> candidates.last.snapshotId)
-        }
-        // maintenance may have changed the live file set (or, for rollback,
-        // the data): re-register every view over this table
-        tables.foreach { case (vn, vt) =>
-          if (vt.tableDir == t.tableDir) register(vn, t)
-        }
-        Some(result)
 
       case tt: TruncateTable =>
         resolve(tt.table).map { t =>
@@ -1311,14 +976,14 @@ object SqlDml {
         }
 
       case ct: CreateTable =>
-        routeCreateTable(statement, catalog, register, unregister, tables,
+        routeCreateTable(spark, statement, catalog, register, unregister, tables,
           defaultNamespace, ct.name, ct.columns, ct.partitioning, ct.tableSpec,
           ignoreIfExists = ct.ignoreIfExists, orReplace = false)
 
       // `CREATE OR REPLACE TABLE` (the Snowflake-dialect ICEBERG create
       // normalizes to this head): drop-if-exists, then the same create
       case rt: ReplaceTable =>
-        routeCreateTable(statement, catalog, register, unregister, tables,
+        routeCreateTable(spark, statement, catalog, register, unregister, tables,
           defaultNamespace, rt.name, rt.columns, rt.partitioning, rt.tableSpec,
           ignoreIfExists = false, orReplace = true)
 
@@ -1328,10 +993,11 @@ object SqlDml {
 
   /** Shared CREATE TABLE / CREATE OR REPLACE TABLE route: resolve the
     * ns.table name (or the USE-namespace default), honor IF NOT EXISTS /
-    * OR REPLACE occupancy, map partition transforms onto the derived-column
-    * matrix, create, record TBLPROPERTIES, register the view.
+    * OR REPLACE occupancy, create through the catalog's shared
+    * `GraftCatalog.create` (partition transforms, TBLPROPERTIES, LOCATION),
+    * register the view.
     */
-  private def routeCreateTable(statement: String,
+  private def routeCreateTable(spark: SparkSession, statement: String,
       catalog: Option[graft.catalogsvc.CatalogService],
       register: (String, GraftTable) => Unit,
       unregister: String => Unit,
@@ -1376,70 +1042,26 @@ object SqlDml {
     }
     val fields = columns.map(cd =>
       org.apache.spark.sql.types.StructField(cd.name, cd.dataType, cd.nullable))
-    var partCols = Vector.empty[String]
-    var transforms = Vector.empty[String]
-    // the concrete transform case classes are private[sql]; the public
-    // Transform interface (name + references) identifies them fine
-    partitioning.foreach { tr =>
-      val src = tr.references.headOption.map(_.fieldNames.mkString("."))
-        .getOrElse(unsupported(s"partition transform ${tr.describe}"))
-      // the numeric argument of bucket(N, col) / truncate(col, N)
-      // (either argument order), via the public v2 Literal interface
-      def numArg: Int = tr.arguments.collectFirst {
-        case l: org.apache.spark.sql.connector.expressions.Literal[_] =>
-          l.value.toString.toInt
-      }.getOrElse(unsupported(s"${tr.name} transform without a numeric argument"))
-      tr.name match {
-        case "identity" => partCols :+= src
-        case fn @ ("days" | "hours" | "months" | "years") =>
-          val pc = s"${src}_${fn.stripSuffix("s")}"
-          partCols :+= pc
-          transforms :+= s"$fn($src)=$pc"
-        case fn @ ("bucket" | "truncate") =>
-          val pc = s"${src}_${if (fn == "bucket") "bucket" else "trunc"}"
-          partCols :+= pc
-          transforms :+= s"$fn($numArg,$src)=$pc"
-        case other => unsupported(s"partition transform $other($src)")
-      }
-    }
-    val t = cat.createTable(ns, tname,
-      org.apache.spark.sql.types.StructType(fields.toArray), partCols)
-    val props = (tableSpec match {
-      case ts: TableSpec => ts.properties
-      case ts: UnresolvedTableSpec => ts.properties // the parse-time shape
+    val spec = tableSpec match {
+      case ts: TableSpec => ts.properties ++ ts.location.map(TableCatalog.PROP_LOCATION -> _)
+      case ts: UnresolvedTableSpec => // the parse-time shape
+        ts.properties ++ ts.location.map(TableCatalog.PROP_LOCATION -> _)
       case _ => Map.empty[String, String]
-    }) ++ (if (transforms.nonEmpty)
-      Map(GraftTable.PartitionTransformsProp -> transforms.mkString(";"))
-    else Map.empty)
-    if (props.nonEmpty) t.setProperties(props.map { case (k, v) => k -> Some(v) })
+    }
+    val t = GraftCatalog.create(spark, cat, ns, tname,
+      org.apache.spark.sql.types.StructType(fields.toArray), partitioning, spec)
     register(tname, t)
     Some(StatementResult(statement, Nil, None))
   }
 
-  /** Metadata-table relation suffixes (the Iceberg `t.snapshots`-style
-    * inspection tables): `ns.table.<suffix>` over a registered table reads
-    * the corresponding metadata DataFrame.
-    */
-  private val MetaTables: Map[String, GraftTable => DataFrame] = Map(
-    "snapshots" -> (_.snapshots()),
-    "files" -> (_.files()),
-    "delete_files" -> (_.deleteFiles()),
-    "partitions" -> (_.partitions()),
-    "refs" -> (_.refs()),
-    "history" -> (_.history()),
-    "all_files" -> (_.allFiles()),
-    "properties" -> (_.propertiesTable()),
-    "column_stats" -> (_.columnStatsTable()),
-    "metadata_log_entries" -> (_.metadataLogTable()))
-
-  /** Resolve a metadata-relation suffix: the static inspection tables above,
-    * plus Iceberg's dynamic `branch_<name>` / `tag_<name>` ref reads
+  /** Resolve a metadata-relation suffix: the catalog's inspection tables
+    * (`GraftCatalog.MetaFrames`), plus Iceberg's dynamic `branch_<name>` / `tag_<name>` ref reads
     * (`SELECT ... FROM t.branch_audit` is the audit step of a SQL WAP
     * cycle). Ref names keep the suffix's original case.
     */
   private def metaFrame(suffix: String): Option[GraftTable => DataFrame] = {
     val s = suffix.toLowerCase
-    MetaTables.get(s)
+    GraftCatalog.MetaFrames.get(s)
       .orElse(if (s.startsWith("branch_") && s.length > 7)
         Some((t: GraftTable) => t.readBranch(suffix.substring(7))) else None)
       .orElse(if (s.startsWith("tag_") && s.length > 4)
@@ -1724,30 +1346,6 @@ object SqlDml {
         s"${graft.table.GraftTable.DeleteRepresentationProp}='$other' " +
           "(equality or positional)")
     }
-
-  /** Split a predicate string on word-boundary `AND` OUTSIDE single-quoted
-    * literals, so a partition value containing the word (e.g.
-    * `city = 'a and b'`) survives intact. Quotes toggle; `''` inside a
-    * literal is the SQL escape for one quote and stays in-literal.
-    */
-  private[plan] def splitTopLevelAnd(s: String): Seq[String] = {
-    val parts = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var i = 0
-    var inQ = false
-    def wordChar(c: Char) = Character.isLetterOrDigit(c) || c == '_'
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\'') { inQ = !inQ; cur += c; i += 1 }
-      else if (!inQ && s.regionMatches(true, i, "AND", 0, 3) &&
-          (i == 0 || !wordChar(s.charAt(i - 1))) &&
-          (i + 3 >= s.length || !wordChar(s.charAt(i + 3)))) {
-        parts += cur.toString; cur.clear(); i += 3
-      } else { cur += c; i += 1 }
-    }
-    parts += cur.toString
-    parts.result()
-  }
 
   // ---------------------------------------------------------------------
   // Snowflake-dialect pre-parse rewrites (the reference's snowflake.sql

@@ -59,10 +59,12 @@ import graft.table.{FileEntry, GraftTable, Snapshot, SnapshotLog}
   * rather than losing it). Translatable DELETEs take Spark's
   * metadata-delete fast path into [[graft.dml.Dml.delete]] instead.
   *
-  * The catalog face only: the SQL statement surfaces stock Spark cannot
-  * parse (Snowflake dialect, CALL procedures, WAP branch DDL) remain on the
-  * engine's pre-router (`plan/SqlDml.scala`), exactly like the reference
-  * splits its Spark-SQL and Snowflake-SQL surfaces.
+  * Table commands have one implementation for both SQL routes: CALL runs
+  * [[GraftProcedures]], and CREATE TABLE / ALTER TABLE run the companion's
+  * `create` / `alter`, which the engine's pre-router (`plan/SqlDml.scala`)
+  * calls too. Only the statement surfaces stock Spark cannot parse
+  * (Snowflake dialect, WAP branch DDL, WRITE ORDERED BY, materialized views)
+  * live on the pre-router alone.
   */
 class GraftCatalog extends TableCatalog with SupportsNamespaces
     with StagingTableCatalog with ProcedureCatalog with FunctionCatalog {
@@ -73,12 +75,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   private def spark: SparkSession = SparkSession.active
   private def svc: CatalogService = new CatalogService(spark, warehouse)
 
-  private[sources] def service: CatalogService = svc
-
   /** Resolve a procedure's `table => 'ns.t'` argument (a leading catalog
     * part naming THIS catalog is tolerated, as in the reference's CALLs).
     */
-  private[sources] def loadGraftTable(identStr: String): GraftTable = {
+  private def loadGraftTable(identStr: String): GraftTable = {
     val parts = identStr.replace("`", "").split("\\.").toSeq
     val (ns, tn) = parts match {
       case Seq(n, t) => (n, t)
@@ -91,17 +91,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   // ---- procedures (CALL <cat>.system.<proc>) ----
 
-  override def loadProcedure(ident: Identifier): UnboundProcedure = {
-    require(ident.namespace().map(_.toLowerCase).sameElements(Array("system")),
-      s"graft procedures live in the system namespace, got " +
-        (ident.namespace() :+ ident.name()).mkString("."))
-    GraftProcedures.load(this, ident.name()).getOrElse(
-      throw new IllegalArgumentException(s"no such procedure: system.${ident.name()}"))
-  }
+  override def loadProcedure(ident: Identifier): UnboundProcedure =
+    GraftProcedures.load(GraftProcedures.Host(loadGraftTable, () => svc), ident)
 
   override def listProcedures(namespace: Array[String]): Array[Identifier] =
-    if (!namespace.map(_.toLowerCase).sameElements(Array("system"))) Array.empty
-    else GraftProcedures.names.map(Identifier.of(Array("system"), _)).toArray
+    GraftProcedures.list(namespace)
 
   // ---- functions (SELECT <cat>.system.<fn>(...)) ----
 
@@ -255,76 +249,15 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val ns = ns1(ident.namespace())
     if (!svc.namespaceExists(ns)) throw new NoSuchNamespaceException(ident.namespace())
     if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
-    val (partCols, transformsProp) = GraftCatalog.mapPartitioning(partitions)
-    // properties Spark itself attaches to the request (provider, owner,
-    // parser-surfaced options) are not table content
-    val reserved = Set(TableCatalog.PROP_PROVIDER, TableCatalog.PROP_OWNER,
-      TableCatalog.PROP_EXTERNAL, TableCatalog.PROP_LOCATION,
-      TableCatalog.PROP_IS_MANAGED_LOCATION, TableCatalog.PROP_TABLE_TYPE)
-    val props = properties.asScala.toMap.filterNot { case (k, _) =>
-      reserved.contains(k) || k.startsWith(TableCatalog.OPTION_PREFIX)
-    } ++ transformsProp.map(GraftTable.PartitionTransformsProp -> _)
-    val external = Option(properties.get(TableCatalog.PROP_LOCATION))
-    val t = external match {
-      case Some(location) =>
-        // CREATE TABLE ... LOCATION: the table lives at the external path,
-        // the catalog holds a pointer registration (the register_table shape)
-        val created = GraftTable.create(spark, location, schema, partCols, props)
-        svc.registerTable(ns, ident.name(), created.tableDir)
-      case None =>
-        val created = svc.createTable(ns, ident.name(), schema, partCols)
-        if (props.nonEmpty)
-          created.setProperties(props.map { case (k, v) => k -> Some(v) })
-        created
-    }
+    val t = GraftCatalog.create(spark, svc, ns, ident.name(), schema, partitions.toSeq,
+      properties.asScala.toMap)
     GraftCatalogTable(t.tableDir, identString(ident))
   }
 
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
-    val t = svc.loadTable(ns1(ident.namespace()), ident.name())
-    def top(fieldNames: Array[String]): String = {
-      require(fieldNames.length == 1,
-        s"graft ALTER TABLE supports top-level columns only, got " +
-          fieldNames.mkString("."))
-      fieldNames(0)
-    }
-    changes.foreach {
-      case sp: TableChange.SetProperty =>
-        t.setProperties(Map(sp.property -> Some(sp.value)))
-      case rp: TableChange.RemoveProperty =>
-        t.setProperties(Map(rp.property -> None))
-      case ac: TableChange.AddColumn =>
-        val default = Option(ac.defaultValue).map(_.getValue.value.toString)
-        t.addColumn(top(ac.fieldNames), ac.dataType.sql, default)
-      case rc: TableChange.RenameColumn =>
-        t.renameColumn(top(rc.fieldNames), rc.newName)
-      case ut: TableChange.UpdateColumnType =>
-        t.widenColumn(top(ut.fieldNames), ut.newDataType.sql)
-      case dc: TableChange.DeleteColumn =>
-        val name = top(dc.fieldNames)
-        if (t.schema.fieldNames.contains(name)) t.dropColumn(name)
-        else if (dc.ifExists == null || !dc.ifExists.booleanValue())
-          throw new IllegalArgumentException(s"no column $name in ${ident.name}")
-      case un: TableChange.UpdateColumnNullability =>
-        // every graft column is nullable: DROP NOT NULL is already
-        // satisfied; SET NOT NULL cannot be enforced by the format, so
-        // refuse loudly rather than let it silently mean nothing (Spark's
-        // own analysis also blocks it on the SQL route)
-        if (!un.nullable()) throw new UnsupportedOperationException(
-          s"graft ALTER TABLE: NOT NULL is not enforced by the table " +
-            s"format; cannot alter ${top(un.fieldNames)} on ${ident.name}")
-      case uc: TableChange.UpdateColumnComment =>
-        // durable as a table property — round-trips through
-        // SHOW TBLPROPERTIES and DESCRIBE (schema() re-attaches it)
-        val cn = top(uc.fieldNames)
-        require(t.schema.fieldNames.contains(cn),
-          s"no column $cn in ${ident.name}")
-        t.setProperties(Map(s"${GraftCatalog.ColumnCommentPrefix}$cn" ->
-          Option(uc.newComment).filter(_.nonEmpty)))
-      case other => throw new UnsupportedOperationException(
-        s"graft ALTER TABLE does not support ${other.getClass.getSimpleName}")
-    }
+    GraftCatalog.alter(svc.loadTable(ns1(ident.namespace()), ident.name()), changes,
+      ident.name)
     loadTable(ident)
   }
 
@@ -350,20 +283,12 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   private def stage(ident: Identifier, schema: StructType,
       partitions: Array[Transform], properties: JMap[String, String],
       mode: GraftStagedTable.Mode): StagedTable = {
-    val (partCols, transformsProp) = GraftCatalog.mapPartitioning(partitions)
-    val reserved = Set(TableCatalog.PROP_PROVIDER, TableCatalog.PROP_OWNER,
-      TableCatalog.PROP_EXTERNAL, TableCatalog.PROP_LOCATION,
-      TableCatalog.PROP_IS_MANAGED_LOCATION, TableCatalog.PROP_TABLE_TYPE)
     require(!properties.containsKey(TableCatalog.PROP_LOCATION),
       s"graft staged CREATE/REPLACE does not take LOCATION (stage-and-swap " +
         s"owns the table path); use plain CREATE TABLE ... LOCATION instead")
-    val props = properties.asScala.toMap.filterNot { case (k, _) =>
-      reserved.contains(k) || k.startsWith(TableCatalog.OPTION_PREFIX)
-    } ++ transformsProp.map(GraftTable.PartitionTransformsProp -> _)
     val stagingDir = s"$warehouse/_staging/${java.util.UUID.randomUUID()}"
-    val created = GraftTable.create(spark, stagingDir, schema, partCols)
-    if (props.nonEmpty)
-      created.setProperties(props.map { case (k, v) => k -> Some(v) })
+    val (partCols, props) = GraftCatalog.layout(partitions.toSeq, properties.asScala.toMap)
+    GraftTable.create(spark, stagingDir, schema, partCols, props)
     new GraftStagedTable(this, stagingDir, warehouse, ident,
       identString(ident), mode)
   }
@@ -483,10 +408,10 @@ object GraftCatalog {
       Option(c.comment()).map(f.withComment).getOrElse(f)
     })
 
-  /** The inspection suffixes `loadTable` resolves for `cat.ns.t.<suffix>`
-    * (the same set the SQL engine's `<view>.<suffix>` sugar serves).
+  /** The inspection suffixes `loadTable` resolves for `cat.ns.t.<suffix>`,
+    * and the SQL engine for `<view>.<suffix>` / `ns.t.<suffix>`.
     */
-  private[sources] val MetaFrames: Map[String, GraftTable => DataFrame] = Map(
+  private[graft] val MetaFrames: Map[String, GraftTable => DataFrame] = Map(
     "snapshots" -> (_.snapshots()),
     "files" -> (_.files()),
     "delete_files" -> (_.deleteFiles()),
@@ -497,21 +422,45 @@ object GraftCatalog {
     "properties" -> (_.propertiesTable()),
     "column_stats" -> (_.columnStatsTable()),
     "metadata_log_entries" -> (_.metadataLogTable()))
-  /** Map Spark's `Transform[]` partitioning onto the table layout: identity
-    * transforms are partition columns as-is; time/bucket/truncate transforms
-    * derive a partition column (named `src_<fn>`) recorded in the
-    * `write.partition-transforms` property, exactly the encoding the SQL
-    * pre-router and table API use — so a catalog-created table is
-    * indistinguishable from an engine-created one.
+
+  /** CREATE TABLE for both SQL routes (this catalog, and the SQL engine's
+    * pre-router): the partitioning and properties map through [[layout]];
+    * with a `location` property the table lives at that external path and
+    * the catalog holds a pointer registration (the register_table shape).
     */
-  private[sources] def mapPartitioning(
-      partitioning: Array[Transform]): (Seq[String], Option[String]) = {
+  private[graft] def create(spark: SparkSession, svc: CatalogService, ns: String,
+      name: String, schema: StructType, partitioning: Seq[Transform],
+      properties: Map[String, String]): GraftTable = {
+    val (partCols, props) = layout(partitioning, properties)
+    properties.get(TableCatalog.PROP_LOCATION) match {
+      case Some(location) =>
+        val created = GraftTable.create(spark, location, schema, partCols, props)
+        svc.registerTable(ns, name, created.tableDir)
+      case None =>
+        val created = svc.createTable(ns, name, schema, partCols)
+        if (props.nonEmpty) created.setProperties(props.map { case (k, v) => k -> Some(v) })
+        created
+    }
+  }
+
+  /** Map Spark's `Transform[]` partitioning and a create request's
+    * properties onto the table layout. Identity transforms are partition
+    * columns as-is; time/bucket/truncate transforms derive a partition
+    * column (named `src_<fn>`) recorded in the `write.partition-transforms`
+    * property, the encoding the table API uses. Properties Spark itself
+    * attaches to the request (provider, owner, location, parser-surfaced
+    * options) are not table content.
+    */
+  private def layout(partitioning: Seq[Transform],
+      properties: Map[String, String]): (Seq[String], Map[String, String]) = {
     var partCols = Vector.empty[String]
     var transforms = Vector.empty[String]
     partitioning.foreach { tr =>
       val src = tr.references.headOption.map(_.fieldNames.mkString("."))
         .getOrElse(throw new UnsupportedOperationException(
           s"partition transform ${tr.describe}"))
+      // the numeric argument of bucket(N, col) / truncate(col, N), either
+      // argument order, via the public v2 Literal interface
       def numArg: Int = tr.arguments.collectFirst {
         case l: org.apache.spark.sql.connector.expressions.Literal[_] =>
           l.value.toString.toInt
@@ -531,10 +480,72 @@ object GraftCatalog {
           s"partition transform $other($src)")
       }
     }
-    (partCols, if (transforms.isEmpty) None else Some(transforms.mkString(";")))
+    val reserved = Set(TableCatalog.PROP_PROVIDER, TableCatalog.PROP_OWNER,
+      TableCatalog.PROP_EXTERNAL, TableCatalog.PROP_LOCATION,
+      TableCatalog.PROP_IS_MANAGED_LOCATION, TableCatalog.PROP_TABLE_TYPE)
+    val props = properties.filterNot { case (k, _) =>
+      reserved.contains(k) || k.startsWith(TableCatalog.OPTION_PREFIX)
+    } ++ (if (transforms.isEmpty) None
+      else Some(GraftTable.PartitionTransformsProp -> transforms.mkString(";")))
+    (partCols, props)
   }
 
-  /** Inverse of [[mapPartitioning]] for `Table.partitioning()`: rebuild the
+  /** ALTER TABLE for both SQL routes: Spark's `TableChange`s applied to `t`
+    * in order, top-level columns only. Column and table comments and
+    * properties commit together, after the schema changes. What the table
+    * format cannot honor refuses loudly: column positions (FIRST / AFTER),
+    * NOT NULL, defaults changed after the fact, a new LOCATION.
+    */
+  private[graft] def alter(t: GraftTable, changes: Seq[TableChange], tableName: String): Unit = {
+    def refuse(what: String): Nothing = throw new UnsupportedOperationException(
+      s"ALTER TABLE $tableName: $what is not supported by the table layer")
+    def top(fieldNames: Array[String]): String = {
+      if (fieldNames.length != 1) refuse(s"nested column ${fieldNames.mkString(".")}")
+      fieldNames(0)
+    }
+    def commentKey(fieldNames: Array[String]): String = {
+      val cn = top(fieldNames)
+      require(t.schema.fieldNames.contains(cn), s"no column $cn in $tableName")
+      s"$ColumnCommentPrefix$cn"
+    }
+    var props = Map.empty[String, Option[String]]
+    changes.foreach {
+      case sp: TableChange.SetProperty if sp.property == TableCatalog.PROP_LOCATION =>
+        refuse("SET LOCATION")
+      case sp: TableChange.SetProperty => props += sp.property -> Some(sp.value)
+      case rp: TableChange.RemoveProperty => props += rp.property -> None
+      case ac: TableChange.AddColumn =>
+        if (ac.position != null) refuse(s"ADD COLUMN ... ${ac.position}")
+        // DEFAULT NULL replays like no default
+        val default = Option(ac.defaultValue).flatMap(d => Option(d.getValue))
+          .flatMap(l => Option(l.value)).map(_.toString)
+        t.addColumn(top(ac.fieldNames), ac.dataType.sql, default)
+        Option(ac.comment).foreach(c => props += commentKey(ac.fieldNames) -> Some(c))
+      case rc: TableChange.RenameColumn =>
+        t.renameColumn(top(rc.fieldNames), rc.newName)
+      case ut: TableChange.UpdateColumnType =>
+        t.widenColumn(top(ut.fieldNames), ut.newDataType.sql)
+      case dc: TableChange.DeleteColumn =>
+        val name = top(dc.fieldNames)
+        if (t.schema.fieldNames.contains(name)) t.dropColumn(name)
+        else if (dc.ifExists == null || !dc.ifExists.booleanValue())
+          throw new IllegalArgumentException(s"no column $name in $tableName")
+      case un: TableChange.UpdateColumnNullability =>
+        // every graft column is nullable: DROP NOT NULL is already
+        // satisfied; SET NOT NULL cannot be enforced by the format
+        if (!un.nullable()) throw new UnsupportedOperationException(
+          s"graft ALTER TABLE: NOT NULL is not enforced by the table " +
+            s"format; cannot alter ${top(un.fieldNames)} on $tableName")
+      case uc: TableChange.UpdateColumnComment =>
+        // durable as a table property: round-trips through SHOW
+        // TBLPROPERTIES and DESCRIBE on both routes
+        props += commentKey(uc.fieldNames) -> Option(uc.newComment).filter(_.nonEmpty)
+      case other => refuse(other.getClass.getSimpleName)
+    }
+    if (props.nonEmpty) t.setProperties(props)
+  }
+
+  /** Inverse of [[layout]]'s partitioning for `Table.partitioning()`: rebuild the
     * Transform[] from the snapshot's partition columns + recorded transform
     * property (derived columns report their transform over the SOURCE
     * column; plain partition columns report identity).

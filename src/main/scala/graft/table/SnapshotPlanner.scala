@@ -211,11 +211,11 @@ final class SnapshotPlanner(val snap: Snapshot,
 
   /** The files of `from` (default: the snapshot's) that may hold rows
     * satisfying every fact; facts on columns this snapshot does not have,
-    * or that fail to plan (an unparseable value), prune nothing. Order is
-    * kept. */
+    * that compare a STRING column with a non-string value, or that fail to
+    * plan (an unparseable value), prune nothing. Order is kept. */
   def select(facts: Seq[Fact], from: Seq[FileEntry] = snap.files): Seq[FileEntry] =
     facts.foldLeft(from) { (files, fact) =>
-      if (!schema.fieldNames.contains(fact.col)) files
+      if (!schema.fieldNames.contains(fact.col) || !sameDomain(fact)) files
       else scala.util.Try(fact match {
         case Fact.Range(c, lo, loStrict, hi, hiStrict) =>
           files.filter(rangeKeep(c, lo.orNull, loStrict, hi.orNull, hiStrict))
@@ -223,6 +223,15 @@ final class SnapshotPlanner(val snap: Snapshot,
         case Fact.Nullness(c, isNull) => nullability(files, c, isNull)
       }).getOrElse(files)
     }
+
+  /** False for a STRING column compared with a non-string value (`s > 5`):
+    * Spark compares in the value's type, where string bounds do not order
+    * (`'10' > 5`, yet `"10" < "5"`). */
+  private def sameDomain(fact: Fact): Boolean = typeOf(fact.col) != StringType || (fact match {
+    case Fact.Range(_, lo, _, hi, _) => (lo ++ hi).forall(_.isInstanceOf[String])
+    case Fact.Points(_, vs) => vs.forall(_.isInstanceOf[String])
+    case _: Fact.Nullness => true
+  })
 
   /** Range pruning — see `GraftTable.planBetween` for the contract. */
   def between(files: Seq[FileEntry], colName: String, lo: Any, hi: Any): Seq[FileEntry] =

@@ -192,4 +192,24 @@ class PrunedSqlEngineSpec extends SparkSpec {
     assert(fs("SELECT f FROM fl WHERE f < CAST(0.7 AS FLOAT)") === Seq(0.1f))
     assert(eng.lastPrune("fl") === ((1, 3)))
   }
+
+  test("a STRING column compared with a number prunes nothing, and stays exact") {
+    import spark.implicits._
+    // Spark compares `s > 5` as numbers, where '10' > 5; the string bounds
+    // order "10" < "5", so a string-domain prune would drop matching files
+    val dir = scratchDir("sqlprune-string-")
+    val base = Seq("10", "20", "3").toDF("s")
+    val t = GraftTable.create(spark, dir, base.schema)
+    Seq("10", "20", "3").foreach(v => t.append(base.filter(col("s") === v).coalesce(1)))
+    val eng = new SparkSqlEngine(spark)
+    eng.registerGraftTable("st", t)
+    def n(sql: String): Long = eng.execute(sql).rows.head("n").asInstanceOf[Long]
+    assert(n("SELECT COUNT(*) AS n FROM st WHERE s > 5") === 2L)
+    assert(eng.lastPrune("st") === ((3, 3)))
+    assert(n("SELECT COUNT(*) AS n FROM st WHERE s IN (3, 20)") === 2L)
+    assert(eng.lastPrune("st") === ((3, 3)))
+    // a string literal still prunes in the column's own domain
+    assert(n("SELECT COUNT(*) AS n FROM st WHERE s = '20'") === 1L)
+    assert(eng.lastPrune("st") === ((1, 3)))
+  }
 }

@@ -475,9 +475,10 @@ class SqlDmlSpec extends SparkSpec {
       eng.execute("ALTER TABLE otherdb.sales ADD COLUMN x INT")
     }
     assert(!t.schema.fieldNames.contains("x"))
-    // ALTER COLUMN beyond a TYPE change is refused, not approximated
+    // ALTER COLUMN beyond what the format records (a column position) is
+    // refused, not approximated
     val e = intercept[UnsupportedOperationException] {
-      eng.execute("ALTER TABLE sales ALTER COLUMN price COMMENT 'c'")
+      eng.execute("ALTER TABLE sales ALTER COLUMN price FIRST")
     }
     assert(e.getMessage.contains("not supported"))
     // dropping a column the table depends on refuses with the reason named
@@ -922,11 +923,14 @@ class SqlDmlSpec extends SparkSpec {
     assert(t.latest.files.count(_.partitionValues.get("ds").contains("plain")) === 2,
       "the other partition must be untouched")
     assert(t.readLatest().count() === 6L)
-    // and the splitter still honors a real conjunction around quoted values
-    assert(SqlDml.splitTopLevelAnd("a = 'x and y' AND b = 'z'").map(_.trim) ==
+    // and the splitter still honors a real conjunction around quoted values,
+    // with any whitespace around the keyword
+    val split = graft.sources.GraftProcedures.splitTopLevelAnd _
+    assert(split("a = 'x and y' AND b = 'z'").map(_.trim) ==
       Seq("a = 'x and y'", "b = 'z'"))
-    assert(SqlDml.splitTopLevelAnd("android = 'AND'").map(_.trim) ==
+    assert(split("android = 'AND'").map(_.trim) ==
       Seq("android = 'AND'"))
+    assert(split("k = 1\nAND v = 1").map(_.trim) == Seq("k = 1", "v = 1"))
   }
 
   test("expire_snapshots(older_than => ts) bounds by commit time with retain floor") {

@@ -209,6 +209,9 @@ class GraftCatalogSpec extends SparkSpec {
       assert(spark.sql("SELECT COUNT(*), SUM(v) FROM gcr.b.dst").head.getLong(0) == 8L)
       assert(spark.sql("SHOW TABLES IN gcr.a").collect().isEmpty)
       intercept[Exception](spark.table("gcr.a.src").collect())
+      // the file: root resolved to its local path: no `file:` directory
+      // appeared under the working directory
+      assert(!new java.io.File("file:").exists())
     } finally {
       spark.conf.unset("spark.sql.catalog.gcr")
       spark.conf.unset("spark.sql.catalog.gcr.warehouse")
