@@ -216,10 +216,11 @@ object Dml {
     * each tuple deletes every live row equal on all of them (null-safe).
     * Writes ONE small delete file + a metadata commit — no data file is
     * opened, read, or rewritten, so cost is O(batch) regardless of how many
-    * of the table's files hold matching rows. Reads reconcile via a
-    * broadcast anti-join until `Maintenance.materializeDeletes` folds the
-    * deletes in. Composes with concurrent appends (the delete is the later
-    * commit and applies to them).
+    * of the table's files hold matching rows. Reads reconcile with a per-row
+    * check on only the data files whose key bounds the delete's overlap
+    * (`SnapshotPlanner.applies`) until `Maintenance.materializeDeletes`
+    * folds the deletes in. Composes with concurrent appends (the delete is
+    * the later commit and applies to them).
     */
   def deleteMorKeys(t: GraftTable, keys: DataFrame): Snapshot =
     t.commitMorDelta(keys, None, "delete-mor")
@@ -245,9 +246,9 @@ object Dml {
     * the matched rows as (part-file name, row position) tuples, committed as
     * a delete VECTOR — zero data files rewritten, no identifier columns
     * trusted, and a non-unique key can never over-delete: the vector names
-    * exactly the rows the predicate matched. Reads reconcile with a single
-    * broadcast anti-join on the row address (cheaper than equality: no
-    * per-group key comparison, no applicability bound).
+    * exactly the rows the predicate matched. Reads reconcile with a per-row
+    * lookup of the row address on only the files the vector names (cheaper
+    * than equality: no key comparison, no key resolution).
     */
   def deleteMorPositional(t: GraftTable, pred: Column): Snapshot = {
     val planned = t.latest

@@ -29,7 +29,7 @@ import graft.table.{GraftTable, SnapshotLog}
   *                            compaction
   * @param maxDeleteFiles      materialize merge-on-read deletes once this
   *                            many delete files have accumulated (bounds
-  *                            read-side anti-join depth)
+  *                            the delete files reads reconcile)
   * @param maxSnapshotDocs     consolidate the log into a manifest once this
   *                            many per-snapshot docs exist
   * @param retainLast          snapshots to retain at expiry; 0 = never expire
@@ -250,21 +250,21 @@ object Maintenance {
 
   /** Materialize merge-on-read equality deletes back into data files (the
     * Iceberg `rewrite_data_files` + `rewrite_position_delete_files` pair in
-    * one procedure): rewrite exactly the data files some delete still
-    * applies to (`writtenAt < appliedAt`) reading them WITH deletes applied,
-    * keep every other file by reference, and drop the delete entries — no
-    * kept file is affected by construction. Physical delete files stay on
-    * disk for older snapshots (time travel) until expiry/orphan removal.
+    * one procedure): rewrite exactly the data files some delete can touch
+    * (the per-file rule, `SnapshotPlanner.applies`) reading them WITH
+    * deletes applied, keep every other file by reference, and drop the
+    * delete entries — no kept file has an applicable delete by
+    * construction. Physical delete files stay on disk for older snapshots
+    * (time travel) until expiry/orphan removal.
     *
-    * At 100 TB this bounds read-side anti-join depth: run it when the
-    * accumulated delete count starts to tax scans, same cadence as
+    * At 100 TB this bounds the delete files reads must reconcile: run it
+    * when the accumulated delete count starts to tax scans, same cadence as
     * compaction. Returns None when the table carries no deletes.
     */
   def materializeDeletes(t: GraftTable): Option[graft.table.Snapshot] = {
     val planned = t.latest
     if (planned.deletes.isEmpty) return None
-    val maxApplied = planned.deletes.map(_.appliedAt).max
-    val (affected, keep) = planned.files.partition(_.writtenAt < maxApplied)
+    val (affected, keep) = planned.files.partition(t.planner(planned).marked)
     if (affected.isEmpty) {
       // nothing the deletes can touch: commit a metadata-only drop
       return Some(t.commitRewrite(

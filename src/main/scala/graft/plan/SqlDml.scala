@@ -270,12 +270,14 @@ object SqlDml {
     * COUNT(*)` after every DML — `update_sales_events.sql:5-6`): when the
     * statement is exactly a projection of aliased COUNT(*) / COUNT(col) /
     * MIN(col) / MAX(col) calls over a registered snapshot table and the
-    * snapshot's metadata can answer EVERY one exactly (no pending MOR
-    * deletes, all row/null counts known, min/max types whose footer bounds
-    * are exact extremes — see `countRowsFromMetadata` /
+    * snapshot's metadata can answer EVERY one exactly (no live MOR delete
+    * touching a covered file, all row/null counts known, min/max types
+    * whose footer bounds are exact extremes — see `countRowsFromMetadata` /
     * `countNonNullFromMetadata` / `minMaxFromMetadata` for each form's
     * soundness conditions), the result comes from O(files) driver
-    * arithmetic with NO scan. Any other shape — filters, grouping,
+    * arithmetic with NO scan. COUNT(*) goes further (`countLive`): files a
+    * live delete can touch are counted by a reconciled scan of those files
+    * alone, the rest from metadata. Any other shape — filters, grouping,
     * expressions over the aggregate, a missing explicit alias, any
     * unanswerable column — returns None and the caller falls through to
     * spark.sql over the registered view.
@@ -298,10 +300,8 @@ object SqlDml {
           case _ => None
         }
       (fn.nameParts.map(_.toLowerCase), fn.arguments) match {
-        case (Seq("count"), Seq(_: UnresolvedStar)) =>
-          Some(t => t.countRowsFromMetadata())
-        case (Seq("count"), Seq(Literal(1, _))) =>
-          Some(t => t.countRowsFromMetadata())
+        case (Seq("count"), Seq(_: UnresolvedStar)) => Some(t => t.countLive())
+        case (Seq("count"), Seq(Literal(1, _))) => Some(t => t.countLive())
         case (Seq("count"), Seq(a)) => bare(a).map(c =>
           t => scala.util.Try(t.countNonNullFromMetadata(c)).toOption.flatten)
         case (Seq("min"), Seq(a)) => bare(a).map(c =>

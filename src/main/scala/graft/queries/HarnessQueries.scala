@@ -704,8 +704,8 @@ object HarnessQueries {
     // Merge-on-read DELETE as VERBATIM SQL (Iceberg's write.delete.mode):
     // after ALTER TABLE sets merge-on-read + identifier columns, DELETE
     // commits an equality-delete file and rewrites ZERO data files — proven
-    // in the oracle-checked output — while reads reconcile via the
-    // broadcast anti-join.
+    // in the oracle-checked output — while reads reconcile with a per-row
+    // check on the files the delete can touch.
     "h_sql_mor_delete" -> ((s, _) => {
       import s.implicits._
       val eng = new SparkSqlEngine(s)

@@ -617,8 +617,8 @@ object TableQueries {
     // Merge-on-read DELETE (the Iceberg v2 equality-delete path): the commit
     // writes a small delete file and rewrites ZERO data files — proven in the
     // oracle-checked output by `data_files_rewritten` (set difference of the
-    // file lists around the delete) — while the read-back reconciles via the
-    // broadcast anti-join.
+    // file lists around the delete) — while the read-back reconciles with a
+    // per-row check on the files the delete can touch.
     "t_mor_delete" -> ((s, dir) => {
       val base = Tables.orders(s, dir).filter(col("o_orderkey") < 200)
       val t = GraftTable.create(s, scratch("mor_delete"), base.schema)
@@ -654,8 +654,8 @@ object TableQueries {
     // predicate DELETE then predicate UPDATE each commit a delete VECTOR of
     // (part-file name, row position) tuples — data_files_rewritten pins zero
     // data files rewritten across BOTH, no identifier columns are declared
-    // (positions name rows, not key values), and the read reconciles with
-    // one broadcast anti-join on the row address.
+    // (positions name rows, not key values), and the read reconciles with a
+    // per-row lookup of the row address on the files the vector names.
     "t_mor_dv" -> ((s, dir) => {
       val base = Tables.orders(s, dir).filter(col("o_orderkey") < 200)
       val t = GraftTable.create(s, scratch("mor_dv"), base.schema)

@@ -22,7 +22,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.table.{Added, Fact, FileEntry, GraftTable, Snapshot, SnapshotLog, SnapshotPlanner, Stored}
+import graft.table.{Added, DeleteSpec, Fact, FileEntry, GraftTable, RowDeletes, Snapshot, SnapshotLog, SnapshotPlanner, Stored}
 
 /** DataSource V2 STREAMING SOURCE over a snapshot table — the read half of
   * the streaming story (`StreamOps`' exactly-once sinks are the write half):
@@ -221,8 +221,9 @@ private[sources] class GraftStreamTable(dir: String, tableSchema: StructType)
     // results.
     // Aggregate pushdown: ungrouped COUNT(*)/COUNT(col)/MIN/MAX answer from
     // SNAPSHOT METADATA alone (file row counts + footer stats harvested at
-    // write time) when no row can escape the stats' view — no deletes, no
-    // residual filters (Spark only attempts the pushdown when the scan has
+    // write time) when no row can escape the stats' view — no live delete
+    // that can touch a covered file, no residual filters (Spark only
+    // attempts the pushdown when the scan has
     // no post-scan filters, and this scan keeps every filter residual).
     // The 100 TB shape: a full-table COUNT(*) is a driver-side metadata
     // fold instead of a 100 TB scan — the same contract as Iceberg's
@@ -263,7 +264,8 @@ private[sources] class GraftStreamTable(dir: String, tableSchema: StructType)
       // Partial limit pushdown: Spark keeps its own Limit on top, so the
       // scan may over-deliver but must never under-deliver — planInput
       // Partitions keeps a file PREFIX only when exact metadata row counts
-      // prove it carries >= limit live rows (no deletes, no filters). A
+      // prove it carries >= limit live rows (no delete touches the prefix,
+      // no filters). A
       // `LIMIT 10` on a million-file table then opens one file.
       override def pushLimit(n: Int): Boolean = { limit = Some(n); true }
       override def build(): Scan = agg match {
@@ -408,10 +410,13 @@ private[sources] class GraftScan(dir: String, fullSchema: StructType,
 
   /** Batch read of the LATEST snapshot through the same per-file readers.
     * Merge-on-read deletes RECONCILE inside each reader (the Iceberg
-    * connector posture): every data file's partition carries the equality-
-    * delete files committed after it; the reader loads those key tuples into
-    * a hash map and skips matching rows — O(delete batch) extra read per
-    * task, no extra Spark stage. Unreplayed schema evolution still refuses
+    * connector posture): every data file's partition carries exactly the
+    * delete files the table's per-file rule keeps for it
+    * (`SnapshotPlanner.applies`: committed after the file, key bounds
+    * overlapping, renames followed), and the reader runs the table's own
+    * row check (`RowDeletes`) over parse-once tuple sets — no extra Spark
+    * stage, and files no delete can touch read with no check at all.
+    * Unreplayed schema evolution still refuses
     * (that read needs `GraftTable.readLatest`'s evolution replay); the
     * connector's batch face covers the append/import/compact/MOR-delete
     * lifecycle, which is what an external engine pointed at the directory
@@ -473,32 +478,23 @@ private[sources] class GraftScan(dir: String, fullSchema: StructType,
       val head = resolve(snaps).get
       val plan = GraftStreamSource.planner(dir, head)
       val dataRoot = SnapshotLog.dataPath(dir).toString
-      // MOR reconciliation preconditions: every delete key column must still
-      // exist under its recorded name (a rename between the delete commit
-      // and head would need the table API's rename-aware resolution) and be
-      // a readable primitive.
-      head.deletes.foreach { d =>
-        d.keyCols.foreach { k =>
-          require(fullSchema.fieldNames.contains(k),
-            s"graft batch read: delete file ${d.path} in $dir keys on renamed " +
-              s"column $k — use the table API (readLatest) for rename-aware " +
-              "delete resolution")
-        }
-      }
-      val keyColTypes = head.deletes.flatMap(_.keyCols).distinct.map { k =>
-        StructField(k, fullSchema(fullSchema.fieldIndex(k)).dataType)
-      }
-      val keySchemaJson =
-        if (keyColTypes.isEmpty) "" else StructType(keyColTypes).json
       val surviving = plan.select(facts)
+      // the deletes each file needs, by the table's per-file rule
+      val deletesOf: Map[String, List[DeleteSpec]] =
+        if (head.deletes.isEmpty) Map.empty
+        else surviving.map(e => e.path ->
+          plan.deletesFor(e).map(DeleteSpec.of(plan, _, dataRoot))).toMap
+      def specs(e: FileEntry) = deletesOf.getOrElse(e.path, Nil)
       // pushed LIMIT: read the smallest file prefix whose exact metadata
       // row counts already cover it — only when no delete can shrink a
-      // file's live count below its metadata count (Spark re-applies the
-      // limit on top, so over-delivery is fine; under-delivery never is)
+      // prefix file's live count below its metadata count (Spark re-applies
+      // the limit on top, so over-delivery is fine; under-delivery never is)
       val chosen = pushedLimit match {
-        case Some(n) if head.deletes.isEmpty && surviving.forall(_.rowCount >= 0) =>
+        case Some(n) if surviving.forall(_.rowCount >= 0) =>
           var acc = 0L
-          surviving.takeWhile { e => val need = acc < n; acc += e.rowCount; need }
+          val prefix =
+            surviving.takeWhile { e => val need = acc < n; acc += e.rowCount; need }
+          if (prefix.forall(specs(_).isEmpty)) prefix else surviving
         case _ => surviving
       }
       // COW row-level operations record exactly which files this scan chose
@@ -516,16 +512,9 @@ private[sources] class GraftScan(dir: String, fullSchema: StructType,
         val evolution = evolutions.getOrElseUpdate((e.writtenAt, e.partitionValues.keySet),
           GraftStreamSource.columnMap(plan, e, DataType.fromJson(
             head.schemas(e.writtenAt.toString)).asInstanceOf[StructType], fullSchema, dir))
-        // a delete applies iff committed strictly after this file's write;
-        // consolidated (per-row-bound) files can't be pruned at planning —
-        // each tuple carries its own bound, checked in the reader
-        val applicable = head.deletes.filter(d =>
-          d.perRowAppliedAt || d.appliedAt > e.writtenAt).map(d =>
-          GraftDeleteSpec(s"$dataRoot/${d.path}", d.keyCols, d.appliedAt,
-            d.perRowAppliedAt, d.positional))
         GraftInputPartition(s"$dataRoot/${e.path}",
           withFileCol(e, s"$dataRoot/${e.path}"),
-          schema.json, e.rowCount, e.writtenAt, applicable, keySchemaJson,
+          schema.json, e.rowCount, e.writtenAt, specs(e),
           if (spjKeyCols.isEmpty) Array.empty else spjKeyFor(e), evolution)
       }.toArray[InputPartition]
     }
@@ -843,18 +832,6 @@ private[sources] class GraftStreamingDataWriter(filePath: String, schemaJson: St
   override def close(): Unit = ()
 }
 
-/** One applicable equality-delete file for a batch-read data file:
-  * absolute path, key columns under their recorded names, the commit bound
-  * (`appliedAt`), and whether each tuple carries its OWN bound column
-  * (`_gf_applied_at`, written by delete consolidation).
-  */
-private[sources] case class GraftDeleteSpec(
-    path: String,
-    keyCols: List[String],
-    appliedAt: Long,
-    perRowAppliedAt: Boolean,
-    positional: Boolean = false)
-
 /** One current-schema column's resolution against an EVOLVED file:
   * `phys = Some(name)` reads the file column it was written as (with
   * `physTypeJson` its write-time type — a widen casts up to the current
@@ -873,171 +850,13 @@ private[sources] case class GraftInputPartition(
     schemaJson: String,
     rowCount: Long,
     writtenAt: Long = 0L,
-    deletes: List[GraftDeleteSpec] = Nil,
-    keySchemaJson: String = "",
+    deletes: List[DeleteSpec] = Nil,
     spjKey: Array[Any] = Array.empty,
     evolution: List[GraftColMap] = Nil) extends InputPartition
     with org.apache.spark.sql.connector.read.HasPartitionKey {
   // only consulted when the scan reported KeyGroupedPartitioning, which
   // fills spjKey for every partition it plans (same column order)
   override def partitionKey(): InternalRow = new GenericInternalRow(spjKey)
-}
-
-/** Executor-level parse-once cache for equality-delete files. Delete files
-  * are immutable once committed (content-addressed paths under the data dir
-  * are never rewritten in place), so (path, keyCols, bound spec) fully
-  * identifies the parsed tuple→bound map; without this, a scan re-reads
-  * every applicable delete file per input partition — O(data files × delete
-  * files) read amplification on a heavily-deleted table (Iceberg caches the
-  * parsed delete sets the same way).
-  *
-  * Concurrency: per-key SINGLE-FLIGHT (a CompletableFuture per in-progress
-  * parse) — exactly one task parses a given delete file while others wait on
-  * that future, and tasks on UNRELATED files never serialize (an object-wide
-  * lock here stalled every delete lookup executor-wide behind one fat
-  * parse). Eviction is bounded by total cached TUPLES, not entry count — 64
-  * fat maps can exhaust an executor while 64 is meaningless for small ones.
-  * `parses` counts actual file parses (cache misses) for tests.
-  */
-private[sources] object GraftDeleteCache {
-  /** ~4M cached delete tuples ≈ low hundreds of MB worst case — bounded
-    * regardless of how fat individual delete files are.
-    */
-  private val MaxTuples = 4L * 1000 * 1000
-  val parses = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  // access-ordered LRU of key → (parsed value, tuple count); guarded by its
-  // own monitor, held only for O(1) map ops — never across a parse
-  private val lru =
-    new java.util.LinkedHashMap[AnyRef, (AnyRef, Long)](16, 0.75f, true)
-  private var cachedTuples = 0L
-  private val inflight = new java.util.concurrent.ConcurrentHashMap[
-    AnyRef, java.util.concurrent.CompletableFuture[AnyRef]]()
-
-  private def cached(key: AnyRef): AnyRef =
-    lru.synchronized { val hit = lru.get(key); if (hit == null) null else hit._1 }
-
-  private def admit(key: AnyRef, value: AnyRef, tuples: Long): Unit =
-    lru.synchronized {
-      if (!lru.containsKey(key)) {
-        lru.put(key, (value, tuples))
-        cachedTuples += tuples
-        val it = lru.entrySet().iterator()
-        // evict eldest first; never the entry just admitted (it is in use)
-        while (cachedTuples > MaxTuples && it.hasNext) {
-          val e = it.next()
-          if (e.getKey != key) { cachedTuples -= e.getValue._2; it.remove() }
-        }
-      }
-    }
-
-  private def lookup[V <: AnyRef](key: AnyRef, doParse: () => (V, Long)): V = {
-    val hit = cached(key)
-    if (hit != null) return hit.asInstanceOf[V]
-    val fresh = new java.util.concurrent.CompletableFuture[AnyRef]()
-    val prior = inflight.putIfAbsent(key, fresh)
-    if (prior != null) return prior.join().asInstanceOf[V]
-    try {
-      val v = cached(key) match { // the race we lost may have completed
-        case null =>
-          val (parsed, tuples) = doParse()
-          admit(key, parsed, tuples)
-          parsed
-        case x => x.asInstanceOf[V]
-      }
-      fresh.complete(v)
-      v
-    } catch {
-      case t: Throwable => fresh.completeExceptionally(t); throw t
-    } finally inflight.remove(key, fresh)
-  }
-
-  def get(d: GraftDeleteSpec,
-      keySchema: StructType): java.util.HashMap[List[Any], java.lang.Long] =
-    lookup((d.path, d.keyCols, d.perRowAppliedAt, d.appliedAt), () => {
-      val m = parse(d, keySchema)
-      (m, m.size().toLong)
-    })
-
-  // Positional delete-vector half: (dv path) → per-file-name position sets.
-  // One parse serves every data-file partition the vector touches.
-  def getPositional(d: GraftDeleteSpec)
-      : java.util.HashMap[String, java.util.HashSet[java.lang.Long]] =
-    lookup(("pos", d.path), () => {
-      val m = parsePositional(d)
-      var n = 0L
-      val it = m.values().iterator()
-      while (it.hasNext) n += it.next().size()
-      (m, n)
-    })
-
-  private def parsePositional(d: GraftDeleteSpec)
-      : java.util.HashMap[String, java.util.HashSet[java.lang.Long]] = {
-    parses.incrementAndGet()
-    val m = new java.util.HashMap[String, java.util.HashSet[java.lang.Long]]()
-    val path = new org.apache.hadoop.fs.Path(d.path)
-    val r = org.apache.parquet.hadoop.ParquetReader
-      .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), path)
-      .withConf(new Configuration()).build()
-    try {
-      var g = r.read()
-      while (g != null) {
-        val fields = g.getType.getFields
-        var fileIdx = -1; var posIdx = -1; var i = 0
-        while (i < fields.size()) {
-          if (fields.get(i).getName == "_gf_file") fileIdx = i
-          if (fields.get(i).getName == "_gf_pos") posIdx = i
-          i += 1
-        }
-        require(fileIdx >= 0 && posIdx >= 0,
-          s"delete vector ${d.path} lacks (_gf_file, _gf_pos)")
-        val name = g.getString(fileIdx, 0)
-        var set = m.get(name)
-        if (set == null) { set = new java.util.HashSet[java.lang.Long](); m.put(name, set) }
-        set.add(g.getLong(posIdx, 0))
-        g = r.read()
-      }
-    } finally r.close()
-    m
-  }
-
-  private def parse(d: GraftDeleteSpec,
-      keySchema: StructType): java.util.HashMap[List[Any], java.lang.Long] = {
-    parses.incrementAndGet()
-    val m = new java.util.HashMap[List[Any], java.lang.Long]()
-    val path = new org.apache.hadoop.fs.Path(d.path)
-    val r = org.apache.parquet.hadoop.ParquetReader
-      .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), path)
-      .withConf(new Configuration()).build()
-    try {
-      var g = r.read()
-      while (g != null) {
-        val fields = g.getType.getFields
-        def idxOf(n: String): Int = {
-          var i = 0
-          while (i < fields.size() && fields.get(i).getName != n) i += 1
-          if (i < fields.size()) i else -1
-        }
-        val tuple = d.keyCols.map { k =>
-          val i = idxOf(k)
-          val dt = keySchema(keySchema.fieldIndex(k)).dataType
-          if (i < 0 || g.getFieldRepetitionCount(i) == 0) null
-          else GraftStreamSource.readValue(g, i, dt)
-        }
-        val bound: Long =
-          if (d.perRowAppliedAt) {
-            val i = idxOf("_gf_applied_at")
-            require(i >= 0 && g.getFieldRepetitionCount(i) > 0,
-              s"consolidated delete file ${d.path} lacks _gf_applied_at")
-            g.getLong(i, 0)
-          } else d.appliedAt
-        val prev = m.get(tuple)
-        if (prev == null || bound > prev) m.put(tuple, bound)
-        g = r.read()
-      }
-    } finally r.close()
-    m
-  }
 }
 
 private[sources] class GraftReaderFactory extends PartitionReaderFactory {
@@ -1064,28 +883,28 @@ private[sources] class GraftReaderFactory extends PartitionReaderFactory {
   * remains only as the fallback for empty-projection row reads and
   * encodings the vectorized reader refuses at initialize.
   *
-  * MOR reconciliation: applicable delete files load into per-key-set hash
-  * maps (key tuple → latest applied-at bound) at open; a data row is
-  * skipped iff some map holds its tuple with a bound after the data file's
-  * commit — the reader-level form of the table's broadcast anti-join,
-  * O(delete batch) memory per task.
+  * MOR reconciliation: the partition carries only the deletes the table's
+  * per-file rule keeps for this file, and each row goes through the table's
+  * own reconciler (`graft.table.RowDeletes`, the check the table scan runs
+  * as a filter) — a row is skipped iff an equality tuple with a bound after
+  * the file's commit, or a vector position, names it.
   */
 private[sources] class GraftPartitionReader(p: GraftInputPartition)
     extends PartitionReader[InternalRow] {
 
   private val schema = DataType.fromJson(p.schemaJson).asInstanceOf[StructType]
-  private val keySchema: StructType =
-    if (p.keySchemaJson.isEmpty) new StructType()
-    else DataType.fromJson(p.keySchemaJson).asInstanceOf[StructType]
+  // current key columns of the applicable equality deletes, in the order
+  // the reconciler receives their values
+  private val keyFields: IndexedSeq[StructField] = p.deletes.filterNot(_.positional)
+    .flatMap(d => d.keyNames.zip(d.keyTypes)).distinct
+    .map { case (n, t) => StructField(n, t) }.toIndexedSeq
   // delete key columns ride the parquet projection even when the scan
   // pruned them; `schema.length` stays the emitted width. Partition-valued
   // key columns stay in too — both backends serve them as constants from
   // partitionValues, and dropping them would leave the tuple check with no
   // position to read (commitMorDelta allows any column, including partition
   // columns, as a delete key).
-  private val extraKeyFields = keySchema.fields.filter(f =>
-    p.deletes.exists(_.keyCols.contains(f.name)) &&
-      !schema.fieldNames.contains(f.name))
+  private val extraKeyFields = keyFields.filterNot(f => schema.fieldNames.contains(f.name))
   private val readFields: Array[StructField] = schema.fields ++ extraKeyFields
 
   // Per-readField resolution, folding in the partition's evolution mapping
@@ -1126,25 +945,6 @@ private[sources] class GraftPartitionReader(p: GraftInputPartition)
     if (dataFields.isEmpty && p.rowCount >= 0 && p.deletes.isEmpty) p.rowCount
     else -1L
   private var emitted = 0L
-
-  // (key columns) → (tuple → latest applied-at bound). Per-FILE parses come
-  // from the JVM-wide [[GraftDeleteCache]], so a scan over many data files
-  // opens each delete file once per executor, not once per input partition;
-  // single-spec groups share the cached map directly (read-only after parse).
-  private lazy val deleteMaps: Seq[(List[String], java.util.HashMap[List[Any], java.lang.Long])] =
-    p.deletes.filterNot(_.positional)
-      .groupBy(_.keyCols).toSeq.sortBy(_._1.mkString(",")).map {
-      case (keyCols, Seq(d)) => keyCols -> GraftDeleteCache.get(d, keySchema)
-      case (keyCols, specs) =>
-        val m = new java.util.HashMap[List[Any], java.lang.Long]()
-        specs.foreach { d =>
-          GraftDeleteCache.get(d, keySchema).forEach { (tuple, bound) =>
-            val prev = m.get(tuple)
-            if (prev == null || bound > prev) m.put(tuple, bound)
-          }
-        }
-        keyCols -> m
-    }
 
   /** A positioned row cursor: `advance` to the next file row, `valueAt` a
     * readFields position of the CURRENT row (for the delete-tuple check),
@@ -1285,33 +1085,22 @@ private[sources] class GraftPartitionReader(p: GraftInputPartition)
       vectorized.getOrElse(new GroupBackend)
     }
 
-  // key-column positions resolved once per map, not per row
-  private lazy val deleteMapPos = deleteMaps.map { case (keyCols, m) =>
-    (keyCols.map(k => readFields.indexWhere(_.name == k)), m)
-  }
-
-  // Positional delete vectors addressing THIS file: the union of every
-  // applicable vector's position set under this file's part name. The reader
-  // reads the whole file in physical order (no row-group skipping), so a
-  // running row counter reproduces parquet's row_index exactly.
-  private lazy val deletedPositions: java.util.HashSet[java.lang.Long] = {
-    val name = p.filePath.substring(p.filePath.lastIndexOf('/') + 1)
-    val s = new java.util.HashSet[java.lang.Long]()
-    p.deletes.filter(_.positional).foreach { d =>
-      val set = GraftDeleteCache.getPositional(d).get(name)
-      if (set != null) s.addAll(set)
-    }
-    s
-  }
+  // The reader reads the whole file in physical order (no row-group
+  // skipping), so a running row counter reproduces parquet's row_index
+  // exactly — the position delete vectors record.
+  private lazy val rowDeletes = new RowDeletes(
+    p.filePath.substring(p.filePath.lastIndexOf('/') + 1), p.writtenAt, p.deletes,
+    keyFields.map(_.name))
+  private lazy val keyPos: Array[Int] =
+    keyFields.map(k => readFields.indexWhere(_.name == k.name)).toArray
+  private lazy val keyValues = new Array[Any](keyPos.length)
   private var rowPos = -1L
 
-  private def deleted: Boolean =
-    (!deletedPositions.isEmpty && deletedPositions.contains(rowPos)) ||
-      deleteMapPos.exists { case (positions, m) =>
-        val tuple = positions.map(backend.valueAt)
-        val bound = m.get(tuple)
-        bound != null && p.writtenAt < bound
-      }
+  private def deleted: Boolean = {
+    var i = 0
+    while (i < keyPos.length) { keyValues(i) = backend.valueAt(keyPos(i)); i += 1 }
+    rowDeletes.deleted(rowPos, keyValues)
+  }
 
   private def advanceCounted(): Boolean = {
     val more = backend.advance()
@@ -1490,7 +1279,8 @@ object GraftStreamSource {
     * and SQL front door answer with), so stats resolve under each file's
     * write-time column name and a dropped-then-re-added column never reads
     * the old column's bounds. Each `None` is a case where metadata could
-    * lie: a pending delete, an unknown row count, a column some file cannot
+    * lie: a live delete that can touch a covered file, an unknown row
+    * count, a column some file cannot
     * trace, a missing null count or bound, a type whose footer bounds are
     * not exact (strings), SUM/AVG/DISTINCT, or grouping by anything but
     * identity-partition columns.

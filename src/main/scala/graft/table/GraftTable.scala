@@ -3,6 +3,9 @@ package graft.table
 import java.util.concurrent.ThreadLocalRandom
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+import org.apache.spark.sql.graftbridge.SqlInternals
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -217,14 +220,19 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     * parquet scan no matter how many append commits produced its files
     * (per-commit grouping grew the plan — an N-way union of N scans — with
     * every append).
+    *
+    * Merge-on-read deletes split each epoch group in two: files the
+    * per-file rule marks (`SnapshotPlanner.applies`) read under a per-row
+    * filter running the shared reconciler (`LiveRows` over `RowDeletes`),
+    * keyed by `_metadata.file_name` and the current key columns, or by
+    * `_metadata.row_index` for vectors; every other file reads with no
+    * check. No join, no delete tuple in the plan.
     */
   def readSnapshot(snap: Snapshot): DataFrame = readSnapshotImpl(snap, None)
 
   /** Read with each row's originating file path attached as `fileCol`,
-    * evaluated AT THE SCAN — `input_file_name()` over the result would be
-    * ambiguous once merge-on-read deletes add their own file sources to the
-    * plan (Spark rejects multi-source `input_file_name`), so DML planning
-    * uses this instead.
+    * evaluated AT THE SCAN, where each row's file is known — DML planning
+    * addresses files through it.
     */
   private[graft] def readSnapshotTagged(snap: Snapshot, fileCol: String): DataFrame =
     readSnapshotImpl(snap, Some(fileCol), None)
@@ -260,18 +268,15 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
         "rewrite the table with this version before reading")
     val dataRoot = SnapshotLog.dataPath(tableDir).toString
     val plan = planner(snap)
-    // Merge-on-read deletes need each row's file `writtenAt` (a delete
-    // applies iff writtenAt < appliedAt). The filename→writtenAt map rides a
-    // broadcast join keyed on the part-file NAME (globally unique — Spark
-    // part names embed the write job's uuid; verified below), which
-    // sidesteps URI-escaping mismatches between `input_file_name()` and
-    // filesystem-qualified paths. Zero cost when no deletes exist.
-    val needWrittenAt = snap.deletes.nonEmpty
-    // row positions ride the scan when a caller asks for them (positional
-    // DML planning) or when positional delete vectors must reconcile
-    val posName = posCol.getOrElse(PosCol)
-    val needPos = posCol.isDefined || snap.deletes.exists(_.positional)
-    if (needWrittenAt) {
+    // Merge-on-read: the per-file rule picks the deletes each file needs;
+    // files with none read with no check at all
+    val marked: Map[String, List[DeleteEntry]] =
+      if (snap.deletes.isEmpty) Map.empty
+      else snap.files.iterator.map(f => f.path -> plan.deletesFor(f))
+        .filter(_._2.nonEmpty).toMap
+    if (marked.nonEmpty) {
+      // the reconciler keys rows to their file by part-file NAME (globally
+      // unique — published leaf names embed the commit id and a path hash)
       val names = snap.files.map(_.path.split('/').last)
       require(names.distinct.size == names.size,
         s"snapshot ${snap.snapshotId} in $tableDir has colliding part-file names; " +
@@ -280,8 +285,9 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     // Schema json joins the key as a guard: same-epoch files must agree on
     // their physical schema to share a scan.
     val groups = snap.files.groupBy(f =>
-      (plan.epochOf(f.writtenAt), snap.schemas(f.writtenAt.toString)))
-    val parts = groups.toSeq.sortBy(_._1).map { case ((epoch, schemaJson), entries) =>
+      (plan.epochOf(f.writtenAt), snap.schemas(f.writtenAt.toString), marked.contains(f.path)))
+    val parts = groups.toSeq.sortBy(g => (g._1._1, g._1._3)).map {
+        case ((epoch, schemaJson, reconcile), entries) =>
       val physSchema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
       val paths = entries.map(e => s"$dataRoot/${e.path}")
       val raw0 = spark.read
@@ -289,15 +295,21 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
         .schema(physSchema)
         .parquet(paths: _*)
       val raw1 = fileCol.fold(raw0)(c => raw0.withColumn(c, input_file_name()))
-      val raw2 = if (needWrittenAt)
-        raw1.withColumn(WrittenAtCol,
-          element_at(split(input_file_name(), "/"), -1))
+      // the group's delete files once, and the distinct sets of them that
+      // its files need
+      val sets = if (!reconcile) IndexedSeq.empty[List[DeleteEntry]]
+        else entries.map(e => marked(e.path)).distinct.toIndexedSeq
+      val deletes = sets.flatten.distinct
+      val specs = deletes.map(DeleteSpec.of(plan, _, dataRoot))
+      val vectors = specs.exists(_.positional)
+      // captured AT the scan: after a union/evolution the metadata columns
+      // are no longer addressable, and the index is only meaningful per file
+      val posName = posCol.getOrElse(PosCol)
+      val raw2 = if (posCol.isDefined || vectors)
+        raw1.withColumn(posName, col("_metadata.row_index"))
       else raw1
-      // captured AT the scan: after a union/evolution the metadata column is
-      // no longer addressable, and the index is only meaningful per file
-      val raw = if (needPos)
-        raw2.withColumn(posName, col("_metadata.row_index"))
-      else raw2
+      val raw = if (reconcile) raw2.withColumn(WrittenAtCol, col("_metadata.file_name"))
+        else raw2
       // Replay evolution committed after this epoch — from the snapshot's own
       // carried chain, never other (expirable) docs: each current column
       // reads its write-time column (cast up when widened) or, when added
@@ -319,122 +331,31 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
       // partitions) ride along, so every group unions with the same columns
       val carried = raw.columns.filterNot(c =>
         physSchema.fieldNames.contains(c) || logical.fieldNames.contains(c))
-      if (replayed.forall(_.isEmpty) && physSchema.length == logical.length) raw
-      else raw.select((logical.fields.zip(replayed).map { case (f, r) =>
-        r.getOrElse(col(f.name)) } ++ carried.map(col)).toIndexedSeq: _*)
+      val evolved =
+        if (replayed.forall(_.isEmpty) && physSchema.length == logical.length) raw
+        else raw.select((logical.fields.zip(replayed).map { case (f, r) =>
+          r.getOrElse(col(f.name)) } ++ carried.map(col)).toIndexedSeq: _*)
+      if (!reconcile) evolved
+      else {
+        // the one reconciler, as a per-row filter over the current-schema
+        // key columns of this group's (marked) files
+        val keyNames = specs.flatMap(_.keyNames).distinct
+        val deleteIdx = deletes.zipWithIndex.toMap
+        val setIdx = sets.zipWithIndex.toMap
+        val files = entries.map(e => e.path.split('/').last ->
+          (e.writtenAt, setIdx(marked(e.path)))).toMap
+        val attr = UnresolvedAttribute.quoted _
+        val pos = if (vectors) attr(posName) else Literal(-1L)
+        val live = SqlInternals.column(LiveRows(
+          Seq(attr(WrittenAtCol), pos) ++ keyNames.map(attr), specs,
+          sets.map(_.map(deleteIdx).toIndexedSeq), files, keyNames))
+        val helpers = WrittenAtCol +: (if (vectors && posCol.isEmpty) Seq(PosCol) else Nil)
+        evolved.filter(live).drop(helpers: _*)
+      }
     }
     val unified = parts.reduce(_.unionByName(_))
-    val live = if (needWrittenAt) applyDeletes(snap, unified, posName) else unified
     // Present columns in the target snapshot's declared order.
-    live.select((logical.fieldNames.toSeq ++ fileCol ++ posCol).map(col): _*)
-  }
-
-  /** Filter out rows matched by the snapshot's equality-delete files (the
-    * Iceberg v2 merge-on-read read path). Each group of delete files sharing
-    * a key-column set becomes ONE anti-join; the delete side is tiny relative
-    * to data (bounded by un-materialized delete commits), so Catalyst
-    * broadcasts it and the data side neither shuffles nor rewrites.
-    *
-    * Matching is null-safe (`<=>`) per key column — a null key value in a
-    * delete tuple deletes rows with null in that column, the Iceberg
-    * equality-delete semantic — plus the `writtenAt < appliedAt` applicability
-    * bound, so rows (re-)inserted at or after the delete commit survive.
-    *
-    * Key-column names are DELETE-TIME names: a rename committed after the
-    * delete is mapped forward through the evolution chain; the data-side
-    * column (already evolved by replay) is compared against the delete tuple
-    * cast to its current type (type widening).
-    */
-  private def applyDeletes(snap: Snapshot, data: DataFrame,
-      posName: String = GraftTable.PosCol): DataFrame = {
-    val logical = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
-    val dvRoot = SnapshotLog.dataPath(tableDir).toString
-    val (dvs, eqs) = snap.deletes.partition(_.positional)
-    // Positional delete vectors: ONE anti-join on (part-file name, row
-    // position) for ALL vectors. No applicability bound and no key
-    // resolution: a position addresses one immutable file's row forever, a
-    // row (re-)inserted after the delete lives in a file no vector can
-    // reference, and renames/widenings never touch a position. Vector rows
-    // naming files this snapshot no longer has simply match nothing.
-    // DV size is O(deleted rows) and UNBOUNDED — a single fat MOR DELETE at
-    // the 100 TB scale this path targets can dwarf executor memory — so the
-    // broadcast is forced only while the recorded vector bytes stay under a
-    // threshold; past it the anti-join shuffles (Catalyst/AQE still free to
-    // broadcast if runtime stats say the side is small after all).
-    val afterDv = if (dvs.isEmpty) data else {
-      val dvDf = dvs.map(d => spark.read.parquet(s"$dvRoot/${d.path}")
-          .select(col(WrittenAtCol), col(GraftTable.PosCol)))
-        .reduce(_.unionByName(_))
-      val dvBytes = dvs.map(_.sizeBytes.max(0L)).sum
-      val dvSide =
-        if (dvBytes <= GraftTable.DvBroadcastMaxBytes) broadcast(dvDf) else dvDf
-      data.alias("_gf_data").join(dvSide.alias("_gf_dv"),
-        col(s"_gf_data.$WrittenAtCol") === col(s"_gf_dv.$WrittenAtCol") &&
-          col(s"_gf_data.$posName") === col(s"_gf_dv.${GraftTable.PosCol}"),
-        "left_anti")
-    }
-    if (eqs.isEmpty) return afterDv
-    val writtenAtByName = snap.files
-      .map(f => (f.path.split('/').last, f.writtenAt)).toMap
-    // filename → writtenAt via a small literal map; O(files-in-snapshot)
-    // entries but evaluated per-row without a join. For very large file
-    // counts a broadcast-join map would win; at the 800k-file design point a
-    // map literal in the plan is too big, so: broadcast join below.
-    import spark.implicits._
-    val fileMap = writtenAtByName.toSeq.toDF(WrittenAtCol, "_gf_written_at")
-    val withW = afterDv
-      .join(broadcast(fileMap), Seq(WrittenAtCol), "left")
-      // a filename that fails to resolve would silently mis-apply deletes;
-      // fail loudly instead (cannot happen unless the layout contract broke)
-      .withColumn("_gf_written_at",
-        when(col("_gf_written_at").isNull,
-          raise_error(concat(lit("cannot resolve writtenAt for data file "),
-            col(WrittenAtCol))).cast("long"))
-          .otherwise(col("_gf_written_at")))
-    val dataRoot = SnapshotLog.dataPath(tableDir).toString
-    val byKeys = eqs.groupBy(_.keyCols)
-    val filtered = byKeys.toSeq.sortBy(_._1.mkString(","))
-      .foldLeft(withW) { case (df, (keyCols, entries)) =>
-        val delSide = entries.map { d =>
-          val raw = spark.read.parquet(s"$dataRoot/${d.path}")
-          // consolidated files carry each tuple's own bound; plain files
-          // apply their commit's bound to every tuple
-          if (d.perRowAppliedAt) raw
-          else raw.withColumn("_gf_applied_at", lit(d.appliedAt))
-        }.reduce(_.unionByName(_))
-        // Map each delete-time key name forward through renames committed
-        // after the delete, per entry (two deletes sharing key NAMES can
-        // still resolve differently when a rename landed between their
-        // commits), and cast the delete tuple to the column's current type.
-        val resolvedByEntry = entries.map(d =>
-          d.appliedAt -> keyCols.map(k => SnapshotPlanner.currentName(snap, k, d.appliedAt)))
-        def antiJoin(data: DataFrame, del: DataFrame,
-            delToCur: Seq[(String, String)]): DataFrame = {
-          val cond = delToCur.map { case (delName, curName) =>
-            val curType = logical.find(_.name == curName).map(_.dataType)
-              .getOrElse(throw new IllegalStateException(
-                s"delete key column $curName no longer in schema of $tableDir"))
-            col(s"_gf_data.$curName") <=> col(s"_gf_del.$delName").cast(curType)
-          }.reduce(_ && _) &&
-            (col("_gf_data._gf_written_at") < col("_gf_del._gf_applied_at"))
-          data.alias("_gf_data").join(del.alias("_gf_del"), cond, "left_anti")
-        }
-        // all entries in the group must resolve identically to share a join
-        val distinctRes = resolvedByEntry.map(_._2).distinct
-        if (distinctRes.size == 1)
-          antiJoin(df, delSide, keyCols.zip(distinctRes.head))
-        else
-          // renames diverged between delete commits in this group: apply each
-          // entry as its own anti-join (rare; correctness over plan width)
-          entries.foldLeft(df) { (acc, d) =>
-            val raw = spark.read.parquet(s"$dataRoot/${d.path}")
-            val one = if (d.perRowAppliedAt) raw
-              else raw.withColumn("_gf_applied_at", lit(d.appliedAt))
-            antiJoin(acc, one,
-              keyCols.map(k => k -> SnapshotPlanner.currentName(snap, k, d.appliedAt)))
-          }
-      }
-    filtered.drop(WrittenAtCol, "_gf_written_at")
+    unified.select((logical.fieldNames.toSeq ++ fileCol ++ posCol).map(col): _*)
   }
 
   /** Evolution-aware read of a subset of the latest snapshot's files
@@ -514,13 +435,26 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     * snapshot's per-file row counts sum to the exact table count without
     * opening any data file — at 100 TB the difference between a full scan
     * and O(files) driver arithmetic. None when metadata cannot answer
-    * exactly: a pending merge-on-read delete removes rows no file entry
+    * exactly: a live merge-on-read delete that can touch some file (the
+    * per-file rule, `SnapshotPlanner.applies`) removes rows no file entry
     * accounts for, and an unknown per-file count (-1) leaves the sum
     * undefined — callers fall back to a scan.
     */
   def countRowsFromMetadata(snap: Snapshot): Option[Long] = planner(snap).countRows()
 
   def countRowsFromMetadata(): Option[Long] = countRowsFromMetadata(latest)
+
+  /** `COUNT(*)` that opens only the files a live delete can touch: the
+    * metadata row counts of every other file plus a reconciled count over
+    * the marked ones. None when an unmarked file's count is unknown. */
+  def countLive(snap: Snapshot): Option[Long] = {
+    val plan = planner(snap)
+    val (marked, clean) = snap.files.partition(plan.marked)
+    plan.countRows(clean).map(_ +
+      (if (marked.isEmpty) 0L else readSnapshot(snap.copy(files = marked)).count()))
+  }
+
+  def countLive(): Option[Long] = countLive(latest)
 
   /** Metadata-only `MIN(col)`/`MAX(col)` from the per-file footer bounds.
     * Exact — not approximate — when every file answers for itself:
@@ -1616,12 +1550,15 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     * tuples and, when `appendDf` is given, appends its rows as new data
     * files — the Flink-CDC upsert shape. No existing data file is opened or
     * rewritten: at 100 TB a keyed delete or upsert batch costs O(batch), not
-    * O(matched files), with the reconciliation deferred to reads (broadcast
-    * anti-join) and ultimately to `Maintenance.materializeDeletes`.
+    * O(matched files), with the reconciliation deferred to reads (a per-row
+    * check on the files the delete can touch — `SnapshotPlanner.applies`)
+    * and ultimately to `Maintenance.materializeDeletes`.
     *
     * The delete applies to data files with `writtenAt < appliedAt` (this
     * commit's id): rows appended by THIS commit survive, so upsert = delete
-    * keys + insert rows atomically.
+    * keys + insert rows atomically. Each key column must widen to its table
+    * column's type (a narrowing could wrap onto another row's key); the
+    * keys are stored in the column's type.
     *
     * When `basedOn` is given the commit aborts if the table advanced past it
     * (serializable planning — the predicate-scan delete path uses this); when
@@ -1638,13 +1575,18 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     keyCols.foreach { k =>
       require(cur.fieldNames.contains(k),
         s"delete key column $k is not a column of $tableDir")
+      require(Cast.canUpCast(keys.schema(k).dataType, cur(k).dataType),
+        s"delete key column $k of type ${keys.schema(k).dataType.simpleString} " +
+          s"cannot widen to the column's ${cur(k).dataType.simpleString}")
     }
     appendDf.foreach { df =>
       require(shapeOf(df.schema) == shapeOf(cur),
         s"$operation append schema does not match table $tableDir")
     }
     val planned = basedOn.getOrElse(latest)
-    val delWritten = writeDeleteFile(keys)
+    // stored in the column's own type, so the footer bounds are the column's
+    val delWritten = writeDeleteFile(
+      keys.select(keyCols.map(k => col(k).cast(cur(k).dataType).as(k)): _*))
     val dataWritten = appendDf.map(writeDataFiles(_, planned.snapshotId + 1)).getOrElse(Nil)
     commitWithRetry { parent =>
       val p = parent.getOrElse(throw new IllegalStateException("MOR delta on empty table"))
@@ -1713,7 +1655,8 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
 
   /** Write `keys` as parquet under `data/_deletes/` (the underscore keeps
     * data-scan partition discovery blind to it) and return entries with
-    * placeholder keyCols/appliedAt (the commit loop fills them in).
+    * placeholder keyCols/appliedAt (the commit loop fills them in) and the
+    * footer stats — the bounds the per-file delete rule reads.
     */
   private def writeDeleteFile(keys: DataFrame): Seq[DeleteEntry] = {
     val dataRoot = SnapshotLog.dataPath(tableDir)
@@ -1722,8 +1665,8 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
       s".stage-del-${java.util.UUID.randomUUID().toString.take(8)}")
     // ONE delete file per commit by default: a delete batch is keys, not
     // data — small relative to the table by construction — and a single
-    // file keeps the read-side anti-join union exactly as wide as the
-    // number of un-materialized delete COMMITS. But a MOR UPDATE/MERGE
+    // file keeps the delete files a read parses exactly as many as the
+    // un-materialized delete COMMITS. But a MOR UPDATE/MERGE
     // matching a large fraction of the table produces an UNBOUNDED vector,
     // and funneling it through one task is the write-side ceiling at 100 TB
     // (Iceberg shards position deletes per partition for the same reason):
@@ -1758,14 +1701,15 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     hfs.mkdirs(delDir)
     val staged = listParquetFiles(stage)
     val entries = staged.flatMap { s =>
-      val (rows, _) = footerMeta(s)
+      val (rows, stats) = footerMeta(s)
       // a sharded write can leave empty hash shards — nothing to publish
       if (rows == 0L) None
       else {
         val dest = new org.apache.hadoop.fs.Path(delDir, s.getName)
         require(hfs.rename(s, dest), s"could not publish delete file $s to $dest")
         val st = hfs.getFileStatus(dest)
-        Some(DeleteEntry(s"$DeletesDir/${s.getName}", Nil, rows, st.getLen, 0L))
+        Some(DeleteEntry(s"$DeletesDir/${s.getName}", Nil, rows, st.getLen, 0L,
+          stats = stats))
       }
     }
     hfs.delete(stage, true)
@@ -1784,10 +1728,10 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     * metadata plus O(delete tuples), never O(table).
     *
     * At 100 TB this keeps merge-on-read flat: the upsert sink adds one small
-    * delete file per batch, and while the read path already folds each
-    * key-group into ONE anti-join, its delete side unions and re-broadcasts
-    * N files every scan. After consolidation both are 1 per group. Old
-    * delete files stay for time travel until expiry + orphan removal.
+    * delete file per batch, and every read of a marked data file looks its
+    * rows up in each of those N parsed files. After consolidation that is 1
+    * per group. Old delete files stay for time travel until expiry + orphan
+    * removal.
     * Returns None when nothing is dangling and every group is one file.
     *
     * `consolidate = false` runs only the dangling half — pure metadata,
@@ -1829,19 +1773,23 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
       writeDeleteFile(merged).map(_.copy(
         appliedAt = canon.appliedAt, positional = true))
     }
-    val written = toMerge.toSeq.sortBy(_._1.mkString(",")).flatMap { case (_, entries) =>
+    val plan = planner(planned)
+    val written = toMerge.toSeq.sortBy(_._1.mkString(",")).flatMap { case (curNames, entries) =>
       val canon = entries.maxBy(_.appliedAt)
+      val curTypes = curNames.map(n => plan.schema(n).dataType)
       val union = entries.map { d =>
         val raw = spark.read.parquet(s"$dataRoot/${d.path}")
         val bounded = if (d.perRowAppliedAt) raw
-          else raw.withColumn("_gf_applied_at", lit(d.appliedAt))
+          else raw.withColumn(SnapshotPlanner.AppliedAtCol, lit(d.appliedAt))
         // one atomic positional projection onto the canonical entry's
-        // delete-time names (alias-select, immune to rename collisions)
-        bounded.select(d.keyCols.zip(canon.keyCols).map { case (from, to) =>
-          col(from).as(to) } :+ col("_gf_applied_at"): _*)
+        // delete-time names (alias-select, immune to rename collisions), in
+        // the columns' current types
+        bounded.select(d.keyCols.zip(canon.keyCols).zip(curTypes).map {
+          case ((from, to), dt) => col(from).cast(dt).as(to) } :+
+          col(SnapshotPlanner.AppliedAtCol): _*)
       }.reduce(_.unionByName(_))
       val collapsed = union.groupBy(canon.keyCols.map(col): _*)
-        .agg(max(col("_gf_applied_at")).as("_gf_applied_at"))
+        .agg(max(col(SnapshotPlanner.AppliedAtCol)).as(SnapshotPlanner.AppliedAtCol))
       writeDeleteFile(collapsed).map(_.copy(
         keyCols = canon.keyCols, appliedAt = canon.appliedAt, perRowAppliedAt = true))
     }
@@ -2273,14 +2221,6 @@ object GraftTable {
     */
   private[graft] val PosCol = "_gf_pos"
 
-  /** Ceiling on the RECORDED bytes of positional delete vectors forced into
-    * a broadcast by the MOR read path; larger unions fall back to a shuffled
-    * anti-join (64 MB of snappy parquet ≈ a few hundred MB of in-memory
-    * (string, long) hash relation — near Spark's own 8 GB broadcast wall
-    * once driver+executor copies are counted).
-    */
-  private[table] val DvBroadcastMaxBytes = 64L * 1024 * 1024
-
   /** Directory under `data/` holding equality-delete files. */
   private[table] val DeletesDir = "_deletes"
 
@@ -2328,9 +2268,9 @@ object GraftTable {
     * v3 deletion-vector shape). Positional needs no identifier columns and
     * never over-deletes on a non-unique key: it names exactly the matched
     * rows, and a position can never match a later file (files are
-    * immutable, re-inserts land in new files), so reads skip the
-    * applicability bound entirely — one broadcast anti-join on
-    * (file, pos).
+    * immutable, re-inserts land in new files), so reads need no key
+    * resolution — a per-row lookup of (file, pos), on only the files the
+    * vector names.
     */
   val DeleteRepresentationProp = "write.delete.representation"
 

@@ -54,6 +54,14 @@ case class FileEntry(
   *                  rows — still the correct ceiling for affected-file
   *                  partitioning and evolution-name resolution (the entry's
   *                  keyCols are the names at that epoch)
+  * @param stats     footer bounds of the file, in `FileEntry.stats`' format
+  *                  and under the file's own column names: each key column
+  *                  (`[min, max, nullCount]`, stored in the column's type at
+  *                  the write), a consolidated file's `_gf_applied_at`, a
+  *                  vector's `_gf_file` and `_gf_pos`. They feed the
+  *                  per-file applicability rule (`SnapshotPlanner.applies`).
+  *                  Absent (docs written before the field) = applies to
+  *                  every file the commit bound allows.
   */
 case class DeleteEntry(
     path: String,
@@ -62,7 +70,8 @@ case class DeleteEntry(
     sizeBytes: Long,
     appliedAt: Long,
     perRowAppliedAt: Boolean = false,
-    positional: Boolean = false)
+    positional: Boolean = false,
+    stats: Map[String, List[String]] = Map.empty)
 
 /** One schema-evolution commit's ops, carried forward in every descendant
   * snapshot so evolution replay never needs another snapshot doc.
@@ -396,6 +405,13 @@ object SnapshotLog {
       }
     val upTo = if (base.isEmpty) -1L else base.map(_.snapshotId).max
     val ids = names.collect { case SnapRe(n) if n.toLong > upTo => n.toLong }.sorted
+    // Commit ids are claimed one after another, so the docs after the
+    // manifest run upTo+1, upTo+2, … without a hole. A hole (or, with no
+    // manifest listed, a first doc that is a delta) means the listing raced
+    // a consolidation: re-list rather than serve a lineage cut short.
+    val gap = ids.nonEmpty && ((base.nonEmpty && ids.head != upTo + 1) ||
+      ids.zip(ids.tail).exists { case (a, b) => b != a + 1 })
+    if (gap) return None
     // create-if-absent claims the id BEFORE the doc bytes land (HDFS path —
     // the local hard-link publish is all-or-nothing), so a reader racing a
     // committer can see an empty/partial doc: retry briefly, then treat a
@@ -407,6 +423,7 @@ object SnapshotLog {
     val resolved = ids.foldLeft(base.sortBy(_.snapshotId).toList) { (acc, id) =>
       if (inFlight || vanished) acc
       else readSnapDoc(f, new Path(dir, snapFileName(id))) match {
+        case SnapFound(doc) if acc.isEmpty && doc.files.isEmpty => vanished = true; acc
         case SnapFound(doc) => acc :+ resolveDoc(doc, acc.lastOption)
         case SnapInFlight => inFlight = true; acc
         case SnapVanished => vanished = true; acc
@@ -459,6 +476,13 @@ object SnapshotLog {
     * sorts STRICTLY BELOW ours — a concurrently published manifest covering
     * newer snapshots is never touched, and at load it wins over this one
     * (see ManifestRe). On publish failure nothing is deleted.
+    *
+    * The newest covered doc stays as a TOMBSTONE (load ignores it: it is at
+    * or below the coverage). A committer whose view ends one commit before
+    * the coverage claims exactly that id; with the doc gone its
+    * create-if-absent would succeed and the commit would land invisibly
+    * below the manifest. With the tombstone it fails and retries against a
+    * fresh load. The next consolidation removes the tombstone.
     */
   private[table] def publishManifest(f: FileSystem, dir: Path, snaps: Seq[Snapshot]): Boolean = {
     val maxId = snaps.map(_.snapshotId).max
@@ -476,7 +500,7 @@ object SnapshotLog {
     if (!published) return false
     f.listStatus(dir).map(_.getPath).foreach { p =>
       p.getName match {
-        case SnapRe(n) if n.toLong <= maxId => f.delete(p, false)
+        case SnapRe(n) if n.toLong < maxId => f.delete(p, false)
         case ManifestRe(m, s)
           if m.toLong < maxId || (m.toLong == maxId && s.toLong < seq) =>
           f.delete(p, false)

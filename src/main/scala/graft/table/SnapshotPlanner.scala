@@ -431,6 +431,90 @@ final class SnapshotPlanner(val snap: Snapshot,
       case _ => true
     }
 
+  // ---- merge-on-read delete applicability ----
+
+  private val curNames = scala.collection.mutable.Map[(String, Long), String]()
+
+  /** `name`, recorded by the delete committed at `appliedAt`, under its
+    * current name (renames followed forward). */
+  def currentKeyName(name: String, appliedAt: Long): String =
+    curNames.getOrElseUpdate((name, appliedAt),
+      SnapshotPlanner.currentName(snap, name, appliedAt))
+
+  /** The one per-file delete rule (Iceberg's `DeleteFileIndex` role): can
+    * delete entry `d` remove a row of data file `f`? Both must hold:
+    *  - `d` was committed after `f` was written: `writtenAt < appliedAt`,
+    *    or below a consolidated file's recorded `_gf_applied_at` max;
+    *  - for equality deletes, every key column's bounds overlap: the column
+    *    is resolved through renames (its current name, then `f`'s
+    *    write-time name), the bounds compare in the current type, and nulls
+    *    overlap nulls. For a vector, `f`'s part name lies inside the
+    *    recorded `_gf_file` bounds.
+    * Anything unknown (no stats on either side, a column added after the
+    * file, a type whose bounds do not order) means "applies". The table
+    * scan, the connector's per-partition delete lists, metadata aggregates,
+    * the COUNT(*) route and delete materialization all decide here. */
+  def applies(d: DeleteEntry, f: FileEntry): Boolean = {
+    val bound =
+      if (!d.perRowAppliedAt) d.appliedAt
+      else d.stats.get(SnapshotPlanner.AppliedAtCol).flatMap(StatEntry.bounds)
+        .flatMap(b => scala.util.Try(b._2.toLong).toOption)
+        .fold(d.appliedAt)(math.min(_, d.appliedAt))
+    f.writtenAt < bound && (
+      if (d.positional)
+        d.stats.get(GraftTable.WrittenAtCol).flatMap(StatEntry.bounds).forall {
+          case (lo, hi) =>
+            val name = f.path.substring(f.path.lastIndexOf('/') + 1)
+            lo.compareTo(name) <= 0 && name.compareTo(hi) <= 0
+        }
+      else d.keyCols.forall(k => keyMayMatch(d, k, f)))
+  }
+
+  /** The live deletes that can touch `f`. */
+  def deletesFor(f: FileEntry): List[DeleteEntry] = snap.deletes.filter(applies(_, f))
+
+  /** True when some live delete can touch `f`: the file needs reconciling. */
+  def marked(f: FileEntry): Boolean = snap.deletes.exists(applies(_, f))
+
+  private def keyMayMatch(d: DeleteEntry, k: String, f: FileEntry): Boolean = {
+    val cur = currentKeyName(k, d.appliedAt)
+    (schema.find(_.name == cur), d.stats.get(k)) match {
+      case (Some(field), Some(del)) =>
+        val dt = field.dataType
+        def widened(src: Option[ColumnSource]) = src match {
+          case Some(Stored(_, w)) => w
+          case _ => true
+        }
+        // a float bound widened to double (or any bound widened to a
+        // string) renders in the old type's domain: not comparable
+        val mixedDomain = (dt == DoubleType || dt == StringType) &&
+          (widened(source(epochOf(d.appliedAt), cur)) || widened(sourceOf(f, cur)))
+        statsName(f, cur, dt) match {
+          case Some(phys) if SnapshotPlanner.ordered(dt) && !mixedDomain =>
+            val partition = f.partitionValues.get(phys)
+            val entry = f.stats.get(phys)
+            val dataAllNull = partition.contains(SnapshotPlanner.NullPartition) ||
+              entry.exists(StatEntry.allNull(_, f.rowCount))
+            val dataMayBeNull = partition match {
+              case Some(v) => v == SnapshotPlanner.NullPartition
+              case None => entry.flatMap(StatEntry.nullCount).forall(_ > 0)
+            }
+            val delAllNull = StatEntry.allNull(del, d.rowCount)
+            val nullsMeet = StatEntry.nullCount(del).forall(_ > 0) && dataMayBeNull
+            val cmp = SnapshotPlanner.compare(dt)
+            val valuesMeet = !delAllNull && !dataAllNull &&
+              ((StatEntry.bounds(del), window(f, cur, dt)) match {
+                case (Some((dLo, dHi)), Some((fLo, fHi))) =>
+                  cmp(dLo, fHi).forall(_ <= 0) && cmp(fLo, dHi).forall(_ <= 0)
+                case _ => true
+              })
+            nullsMeet || valuesMeet
+          case _ => true
+        }
+      case _ => true
+    }
+  }
+
   // ---- metadata aggregates ----
 
   /** Each file's stats entry for `colName`, resolved through the evolution
@@ -459,14 +543,15 @@ final class SnapshotPlanner(val snap: Snapshot,
       f.stats.get(n.get).orElse(partitionEntry(f, n.get)) })
   }
 
-  /** Exact row count, or None when a delete is pending or a count unknown. */
+  /** Exact row count, or None when a live delete can touch one of `files`
+    * or a count is unknown. */
   def countRows(files: Seq[FileEntry] = snap.files): Option[Long] =
-    if (snap.deletes.nonEmpty || files.exists(_.rowCount < 0)) None
+    if (files.exists(f => f.rowCount < 0 || marked(f))) None
     else Some(files.map(_.rowCount).sum)
 
   /** Exact COUNT(col) — see `GraftTable.countNonNullFromMetadata`. */
   def countNonNull(colName: String, files: Seq[FileEntry] = snap.files): Option[Long] =
-    if (snap.deletes.nonEmpty || files.isEmpty) None
+    if (files.isEmpty || files.exists(marked)) None
     else statsEntries(files, colName).flatMap { perFile =>
       val counts = files.zip(perFile).map { case (f, entry) =>
         if (f.rowCount == 0) Some(0L) // empty file: zero non-null rows
@@ -479,7 +564,7 @@ final class SnapshotPlanner(val snap: Snapshot,
   /** Exact MIN/MAX(col) in the column's logical type — see
     * `GraftTable.minMaxFromMetadata`. */
   def minMax(colName: String, files: Seq[FileEntry] = snap.files): Option[(Any, Any)] = {
-    if (snap.deletes.nonEmpty || files.isEmpty) return None
+    if (files.isEmpty || files.exists(marked)) return None
     val dt = typeOf(colName)
     val exact = dt match {
       case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType |
@@ -522,6 +607,9 @@ object SnapshotPlanner {
   /** Hive's rendering of a null partition value. */
   private[table] val NullPartition = "__HIVE_DEFAULT_PARTITION__"
 
+  /** Per-tuple commit bound column of a consolidated delete file. */
+  private[graft] val AppliedAtCol = "_gf_applied_at"
+
   /** Types whose footer bounds and partition points order like the engine
     * (decimal/binary/nested orderings are engine-specific). */
   private[graft] def ordered(dt: DataType): Boolean = dt match {
@@ -531,15 +619,16 @@ object SnapshotPlanner {
   }
 
   /** Order of two rendered bounds of an ordered type — strings
-    * lexicographically, floats by IEEE order, the rest as exact decimals
-    * (int64 micros past 2^53 must not round through a double). None =
-    * incomparable (unparseable, or NaN). */
+    * lexicographically, floats numerically (-0.0 equals 0.0, as in Spark's
+    * comparisons), the rest as exact decimals (int64 micros past 2^53 must
+    * not round through a double). None = incomparable (unparseable, or
+    * NaN). */
   private[table] def compare(dt: DataType): (String, String) => Option[Int] =
     if (dt == StringType) (a, b) => Some(a.compareTo(b))
     else if (dt == FloatType || dt == DoubleType) (a, b) => scala.util.Try {
       val x = java.lang.Double.parseDouble(a) // "Infinity"/"NaN" parse fine
       val y = java.lang.Double.parseDouble(b)
-      if (x.isNaN || y.isNaN) None else Some(java.lang.Double.compare(x, y))
+      if (x.isNaN || y.isNaN) None else Some(if (x < y) -1 else if (x > y) 1 else 0)
     }.toOption.flatten
     else (a, b) => scala.util.Try(
       new java.math.BigDecimal(a).compareTo(new java.math.BigDecimal(b))).toOption

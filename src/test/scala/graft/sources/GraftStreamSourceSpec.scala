@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
-import graft.table.GraftTable
+import graft.table.{GraftDeleteCache, GraftTable}
 
 /** The DSv2 streaming source: `spark.readStream.format("graft").load(dir)`. */
 class GraftStreamSourceSpec extends SparkSpec {

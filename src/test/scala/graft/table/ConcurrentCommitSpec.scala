@@ -227,6 +227,25 @@ class ConcurrentCommitSpec extends SparkSpec {
     assertFilesOnDisk(t)
   }
 
+  test("a commit claiming the newest id a manifest consolidated is refused, not hidden") {
+    import spark.implicits._
+    val dir = scratchDir("manifest-tombstone")
+    val t = GraftTable.create(spark, dir, Seq((1L, 1L)).toDF("k", "v").schema)
+    (0 until 3).foreach(i => t.append(Seq((i.toLong, 0L)).toDF("k", "v")))
+    val conf = spark.sessionState.newHadoopConf()
+    val snaps = SnapshotLog.load(conf, dir)
+    val (stale, newest) = (snaps(snaps.size - 2), snaps.last)
+    assert(SnapshotLog.rewriteManifests(conf, dir) === snaps.size) // covers 1..N
+    // a committer whose view ended one commit before the coverage claims N
+    val extra = newest.files.head.copy(path = "never-written.parquet")
+    val racing = newest.copy(committedAt = newest.committedAt + 1,
+      files = stale.files :+ extra)
+    assert(!SnapshotLog.commit(conf, dir, racing, Some(stale)),
+      "the claim must fail so the committer retries against a fresh load")
+    assert(SnapshotLog.load(conf, dir).map(_.snapshotId) === snaps.map(_.snapshotId))
+    assert(t.readLatest().count() === 3)
+  }
+
   test("appends racing rewriteManifests consolidators lose nothing") {
     import spark.implicits._
     val dir = scratchDir("concurrent-manifest")

@@ -90,6 +90,22 @@ class MetadataAggSpec extends SparkSpec {
     assert(t.readWhereNull("day", isNull = false).count() == 3L)
   }
 
+  test("a delete whose keys miss every live file leaves metadata answering") {
+    import spark.implicits._
+    val dir = scratchDir("meta-agg-missed") + "/t"
+    val t = GraftTable.create(spark, dir,
+      org.apache.spark.sql.types.StructType.fromDDL("k bigint, v string"))
+    t.append((1L to 10L).map(i => (i, s"a$i")).toDF("k", "v").coalesce(1))
+    t.append((11L to 20L).map(i => (i, s"b$i")).toDF("k", "v").coalesce(1))
+    graft.dml.Dml.deleteMorKeys(t, Seq(500L).toDF("k"))
+    assert(t.latest.deletes.size == 1)
+    assert(t.countRowsFromMetadata().contains(20L))
+    val df = spark.read.format("graft").load(dir).agg(count(lit(1)).as("n"))
+    assert(df.collect().head.getLong(0) == 20L)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("PushedAggregation"), s"expected metadata aggregate in:\n$plan")
+  }
+
   test("all-null and NaN columns fall back to scan") {
     import spark.implicits._
     val dir = scratchDir("meta-agg-null")

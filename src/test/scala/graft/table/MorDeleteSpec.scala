@@ -9,7 +9,8 @@ import graft.maintenance.Maintenance
 
 /** Merge-on-read equality deletes (the Iceberg v2 delete-file design):
   * keyed deletes and upserts commit O(batch) delete/data files without
-  * touching existing data files; reads reconcile via anti-join;
+  * touching existing data files; reads reconcile with a per-row filter on
+  * the files a delete can touch;
   * `materializeDeletes` folds them back into data files.
   */
 class MorDeleteSpec extends SparkSpec {
@@ -173,14 +174,14 @@ class MorDeleteSpec extends SparkSpec {
     assert(t.readLatest().count() === 7) // still applied
   }
 
-  test("MOR read plans a broadcast anti-join, not a shuffle of the data side") {
+  test("MOR read plans no join and no exchange on the data side") {
     val t = newSalesTable()
     Dml.deleteMorKeys(t, Seq(1L).toDF("event_id"))
     val plan = t.readLatest().queryExecution.executedPlan.toString
-    assert(plan.contains("LeftAnti"))
-    // the delete side broadcasts; the data side must not hash-exchange
-    assert(plan.contains("BroadcastExchange") || plan.contains("BroadcastHashJoin"),
-      s"expected broadcast anti-join in:\n$plan")
+    // the delete is a per-row filter at the marked files' scan: no join of
+    // any kind, and nothing exchanges the data side
+    assert(!plan.contains("Join") && !plan.contains("Exchange"),
+      s"expected no join and no exchange in:\n$plan")
   }
 
   test("snapshot docs stay delta-sized across MOR commits (persistence)") {
@@ -205,7 +206,7 @@ class MorDeleteSpec extends SparkSpec {
     Dml.deleteMorKeys(t, (1L to 10L).toDF("k"))
     // file bounds predate the delete: the emptied file is conservatively
     // KEPT by planning (bounds only ever widen), and the read-side
-    // anti-join makes the result exact anyway
+    // reconciliation makes the result exact anyway
     val (sel, total) = t.planBetween(t.latest, "k", 1L, 5L)
     assert(total === 2 && sel.size === 1) // second file pruned by bounds
     assert(t.readBetween("k", 1L, 5L).count() === 0) // deletes win at read
@@ -217,6 +218,21 @@ class MorDeleteSpec extends SparkSpec {
     assert(t.readBetween("k", 1L, 5L).count() === 0)
     assert(sel2.forall(f => f.stats.get("k").forall(st =>
       new java.math.BigDecimal(st(1)).longValue >= 1L)))
+  }
+
+  test("materializeDeletes rewrites only the files a delete can touch") {
+    val t = GraftTable.create(spark, scratchDir("mor-materialize-"),
+      org.apache.spark.sql.types.StructType.fromDDL("k bigint, v string"))
+    Seq(1L, 11L, 21L).foreach(lo =>
+      t.append((lo until lo + 10).map(i => (i, s"v$i")).toDF("k", "v").coalesce(1)))
+    Dml.deleteMorKeys(t, Seq(15L).toDF("k"))
+    val before = t.latest.files.map(_.path).toSet
+    val rows = t.readLatest().orderBy("k").collect().toSeq
+    val after = Maintenance.materializeDeletes(t).get
+    assert((before -- after.files.map(_.path)).size === 1, "one file rewritten")
+    assert(after.files.size === 3)
+    assert(after.deletes.isEmpty)
+    assert(t.readLatest().orderBy("k").collect().toSeq === rows)
   }
 
   test("deleteFiles metadata table lists live delete files") {
