@@ -226,8 +226,9 @@ object Dml {
     t.commitMorDelta(keys, None, "delete-mor")
 
   /** Merge-on-read `DELETE FROM t WHERE pred`: enumerate the distinct
-    * `keyCols` tuples of matching rows (one pushed-down scan — read-only,
-    * unlike COW's rewrite), then commit them as an equality-delete file.
+    * `keyCols` tuples of matching rows (one pushed-down scan of the
+    * metadata-pruned candidate files — read-only, unlike COW's rewrite),
+    * then commit them as an equality-delete file.
     * `keyCols` must functionally identify the rows to delete: every live row
     * sharing a matching row's key tuple is deleted with it (choose a unique
     * key, or exactly the predicate columns). Serializable like COW delete:
@@ -235,7 +236,8 @@ object Dml {
     */
   def deleteMor(t: GraftTable, pred: Column, keyCols: Seq[String]): Snapshot = {
     val planned = t.latest
-    val keys = t.readSnapshot(planned).filter(pred)
+    val (candidates, _) = planningCandidates(t, planned, pred)
+    val keys = t.readSnapshot(planned.copy(files = candidates.toList)).filter(pred)
       .select(keyCols.map(col): _*).distinct()
     t.commitMorDelta(keys, None, "delete-mor", basedOn = Some(planned))
   }

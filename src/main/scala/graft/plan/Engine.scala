@@ -53,12 +53,13 @@ class SparkSqlEngine(spark: SparkSession, maxResultRows: Int = 200) extends Engi
   val lastPrune = scala.collection.mutable.Map[String, (Int, Int)]()
 
   /** The snapshot each registered view is currently bound to. A re-register
-    * whose table head is UNCHANGED skips the temp-view rebuild (DataFrame
-    * construction is ~25 ms — it dominated ms-scale metadata statements and
-    * was the long-carried "statement-routing constant"): the existing view
-    * already reads exactly this snapshot. Pruned registrations bind a
-    * file-SHRUNK view of the same snapshot id, so they must clear the entry
-    * (pruneGraftViews does) — head equality alone must never skip past one.
+    * whose table head is UNCHANGED skips the temp-view rebuild: the existing
+    * view already reads exactly this snapshot, and a rebuild would re-plan
+    * the scan and re-register the view (the scan plans from the snapshot's
+    * file list, so the rebuild makes no filesystem call and starts no job).
+    * Pruned registrations bind a file-SHRUNK view of the same snapshot id,
+    * so they must clear the entry (pruneGraftViews does) — head equality
+    * alone must never skip past one.
     * Equality is eq-then-== : the snapshot-log load cache returns the same
     * parsed instance for an unchanged log, so the hot path is a pointer
     * compare.

@@ -8,6 +8,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform}
@@ -922,7 +923,10 @@ private[sources] class GraftPartitionReader(p: GraftInputPartition)
     p.partitionValues.get(f.name) match {
       case Some(v) =>
         constFlag(i) = true
-        constValue(i) = GraftStreamSource.castPartitionValue(v, f.dataType)
+        // directory names are hive-escaped (`a%2Fb`); the table scan's file
+        // index decodes them with Spark's own rule, and so does this reader
+        constValue(i) = GraftStreamSource.castPartitionValue(
+          ExternalCatalogUtils.unescapePathName(v), f.dataType)
       case None => evolByName.get(f.name) match {
         case Some(c) if c.phys.isEmpty =>
           constFlag(i) = true
@@ -1356,23 +1360,28 @@ object GraftStreamSource {
   }
 
   /** A recorded partition value as the CATALYST value of the column's type
-    * (UTF8String for strings, boxed numerics, days-int for dates) — the
-    * currency of grouped metadata aggregates and storage-partitioned join
-    * keys. None = the type (or this raw string) can't round-trip exactly,
+    * (UTF8String for strings, boxed numerics, days-int for dates), decoded
+    * from its hive-escaped directory name — the currency of grouped
+    * metadata aggregates and storage-partitioned join keys. None = the null
+    * partition, or a type (or raw string) that can't round-trip exactly,
     * which refuses whatever optimization asked.
     */
   private[sources] def partitionKeyValue(dt: DataType, raw: String): Option[Any] =
-    scala.util.Try[Any](dt match {
-      case StringType => UTF8String.fromString(raw)
-      case ByteType => raw.toByte
-      case ShortType => raw.toShort
-      case IntegerType => raw.toInt
-      case LongType => raw.toLong
-      case FloatType => raw.toFloat
-      case DoubleType => raw.toDouble
-      case DateType => java.time.LocalDate.parse(raw).toEpochDay.toInt
-      case BooleanType => raw.toBoolean
-    }).toOption
+    if (raw == "__HIVE_DEFAULT_PARTITION__") None
+    else scala.util.Try[Any] {
+      val v = ExternalCatalogUtils.unescapePathName(raw)
+      dt match {
+        case StringType => UTF8String.fromString(v)
+        case ByteType => v.toByte
+        case ShortType => v.toShort
+        case IntegerType => v.toInt
+        case LongType => v.toLong
+        case FloatType => v.toFloat
+        case DoubleType => v.toDouble
+        case DateType => java.time.LocalDate.parse(v).toEpochDay.toInt
+        case BooleanType => v.toBoolean
+      }
+    }.toOption
 
   /** Same classification as the table's incremental readers. */
   private[sources] val RowAdding = Set("append", "add-files")
@@ -1491,13 +1500,11 @@ object GraftStreamSource {
       case DoubleType => v.toDouble
       case StringType => UTF8String.fromString(v)
       case BooleanType => v.toBoolean
-      // hive directory renderings: dates plain (`ds=2025-05-06`), timestamps
-      // URL-escaped (`ts=2025-05-06 12%3A00%3A00`); InternalRow wants
-      // epoch days / epoch micros
+      // unescaped renderings (`2025-05-06`, `2025-05-06 12:00:00`);
+      // InternalRow wants epoch days / epoch micros
       case DateType => java.time.LocalDate.parse(v).toEpochDay.toInt
       case TimestampType | TimestampNTZType =>
-        val un = java.net.URLDecoder.decode(v, "UTF-8")
-        val ldt = java.time.LocalDateTime.parse(un.replace(' ', 'T'))
+        val ldt = java.time.LocalDateTime.parse(v.replace(' ', 'T'))
         ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L +
           ldt.getNano / 1000L
       case other => throw new IllegalArgumentException(

@@ -26,9 +26,11 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * Scale design:
   *  - commits are metadata-only for untouched files (append = parent list +
   *    new entries; DML rewrites only files that contain matching rows);
-  *  - reads hand Spark the resolved file list under a `basePath`, so
-  *    partition values come from directory structure and Catalyst prunes
-  *    partitions statically before any file is opened;
+  *  - reads plan from the snapshot's own file list (`SnapshotFileIndex`),
+  *    never from a directory listing: building a scan makes no filesystem
+  *    call and starts no job, partition values come from the directory
+  *    names, and Catalyst prunes partitions statically before any file is
+  *    opened;
   *  - per-file rowCount/size feed maintenance policies (compaction picks
   *    small files without opening them).
   *
@@ -266,7 +268,8 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
       s"snapshot ${snap.snapshotId} in $tableDir predates the self-contained snapshot " +
         s"format (no write-time schema recorded for commit(s) ${missingSchemas.mkString(", ")}); " +
         "rewrite the table with this version before reading")
-    val dataRoot = SnapshotLog.dataPath(tableDir).toString
+    val dataRoot = SnapshotLog.dataPath(tableDir)
+    val fs = hfs
     val plan = planner(snap)
     // Merge-on-read: the per-file rule picks the deletes each file needs;
     // files with none read with no check at all
@@ -289,18 +292,14 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     val parts = groups.toSeq.sortBy(g => (g._1._1, g._1._3)).map {
         case ((epoch, schemaJson, reconcile), entries) =>
       val physSchema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-      val paths = entries.map(e => s"$dataRoot/${e.path}")
-      val raw0 = spark.read
-        .option("basePath", dataRoot)
-        .schema(physSchema)
-        .parquet(paths: _*)
+      val raw0 = SnapshotFileIndex.scan(spark, fs, dataRoot, entries, physSchema)
       val raw1 = fileCol.fold(raw0)(c => raw0.withColumn(c, input_file_name()))
       // the group's delete files once, and the distinct sets of them that
       // its files need
       val sets = if (!reconcile) IndexedSeq.empty[List[DeleteEntry]]
         else entries.map(e => marked(e.path)).distinct.toIndexedSeq
       val deletes = sets.flatten.distinct
-      val specs = deletes.map(DeleteSpec.of(plan, _, dataRoot))
+      val specs = deletes.map(DeleteSpec.of(plan, _, dataRoot.toString))
       val vectors = specs.exists(_.positional)
       // captured AT the scan: after a union/evolution the metadata columns
       // are no longer addressable, and the index is only meaningful per file
@@ -1717,10 +1716,11 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
   }
 
   /** M-step — the Iceberg `rewrite_position_delete_files` analog for
-    * equality deletes: drop DANGLING entries (no data file with
-    * `writtenAt < appliedAt` remains — the state compaction leaves behind)
-    * and CONSOLIDATE the survivors into one file per resolved key-column
-    * group, carrying each tuple's own applicability bound in a
+    * equality deletes: drop DANGLING entries (the per-file rule,
+    * `SnapshotPlanner.applies`, holds for no live data file — the state
+    * compaction leaves behind, or a delete whose keys miss every live
+    * file's bounds) and CONSOLIDATE the survivors into one file per
+    * resolved key-column group, carrying each tuple's own applicability bound in a
     * `_gf_applied_at` column. A key repeated across delete commits collapses
     * to its MAX bound — a row dies iff ANY merged delete applies iff
     * `writtenAt < max`, exactly the union semantics — so hot streaming-
@@ -1740,13 +1740,13 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
   def rewriteDeleteFiles(consolidate: Boolean = true): Option[Snapshot] = {
     val planned = latest
     if (planned.deletes.isEmpty) return None
-    // The writtenAt-based liveness test is SOUND for positional vectors too
-    // (every file a vector references satisfies writtenAt < appliedAt, so
-    // "no such file remains" implies every referenced file is gone), just
-    // conservative — exact per-tuple pruning happens in the consolidation
-    // merge below, which drops tuples naming dead files.
+    // the reads' own rule: a delete no live file needs is dangling. For
+    // vectors it is conservative (file-name bounds, not names) — exact
+    // per-tuple pruning happens in the consolidation merge below, which
+    // drops tuples naming dead files.
+    val plan = planner(planned)
     val (live0, dangling) = planned.deletes.partition(d =>
-      planned.files.exists(_.writtenAt < d.appliedAt))
+      planned.files.exists(plan.applies(d, _)))
     val (dvLive, live) = live0.partition(_.positional)
     // group by RESOLVED current key names (order-sensitive): entries whose
     // delete-time names differ but resolve identically merge; diverged
@@ -1773,7 +1773,6 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
       writeDeleteFile(merged).map(_.copy(
         appliedAt = canon.appliedAt, positional = true))
     }
-    val plan = planner(planned)
     val written = toMerge.toSeq.sortBy(_._1.mkString(",")).flatMap { case (curNames, entries) =>
       val canon = entries.maxBy(_.appliedAt)
       val curTypes = curNames.map(n => plan.schema(n).dataType)

@@ -4,20 +4,25 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
+import org.apache.spark.sql.types.StructType
 
-/** Bridge to two `private[sql]` seams the SQL-DML router needs (the same
+/** Bridge to three `private[sql]`/`private[spark]` seams (the same
   * integration points Delta Lake and Iceberg's Spark runtime use from their
   * own `org.apache.spark.sql.*` packages):
   *
-  *  - `Dataset.ofRows`: turn a PARSED (unresolved) logical plan — e.g. the
-  *    `USING (...)` subquery of a MERGE statement — into a DataFrame,
-  *    letting the session's analyzer resolve temp views, VALUES lists, and
-  *    functions exactly as `spark.sql` would;
+  *  - `Dataset.ofRows`: turn a logical plan into a DataFrame — a PARSED
+  *    (unresolved) one such as the `USING (...)` subquery of a MERGE
+  *    statement, which the session's analyzer resolves (temp views, VALUES
+  *    lists, functions) exactly as `spark.sql` would, or the file relation
+  *    a table scan builds from its snapshot (`graft.table.SnapshotFileIndex`);
   *  - `ExpressionUtils.column`: wrap a catalyst `Expression` back into a
   *    public `Column` after qualifier rewriting (Spark 4 removed the public
-  *    `Column(expr)` constructor).
+  *    `Column(expr)` constructor);
+  *  - `StructType.asNullable`: the data schema of a file relation the table
+  *    scan builds itself, nullable as `spark.read` makes it (a file may hold
+  *    nulls in a column the table declares NOT NULL).
   *
-  * Kept to these two one-liners so the engine's dependency on non-public
+  * Kept to these three one-liners so the engine's dependency on non-public
   * API stays auditable in one place.
   */
 object SqlInternals {
@@ -25,4 +30,6 @@ object SqlInternals {
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
+
+  def asNullable(s: StructType): StructType = s.asNullable
 }

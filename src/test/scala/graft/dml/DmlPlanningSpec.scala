@@ -40,6 +40,27 @@ class DmlPlanningSpec extends SparkSpec {
     }.isEmpty)
   }
 
+  test("equality merge-on-read DELETE scans only its candidate files for keys") {
+    import spark.implicits._
+    val t = graft.table.GraftTable.create(spark, scratchDir("dml-mor-keys-"),
+      Seq((1L, "a")).toDF("k", "v").schema)
+    (0 until 6).foreach { i =>
+      t.append((i * 100 until i * 100 + 100).map(j => (j.toLong, s"v$j"))
+        .toDF("k", "v").coalesce(1))
+    }
+    val (_, seen) = graft.SparkProbe.observe(spark)(
+      Dml.deleteMor(t, col("k") >= 210 && col("k") < 260, Seq("k")))
+    val tableScans = seen.scans.filter(
+      _.relation.location.rootPaths.exists(_.toString.contains(t.tableDir)))
+    assert(tableScans.nonEmpty)
+    // one of the six files can hold k in [210, 260)
+    assert(graft.SparkProbe.filesRead(tableScans).forall(_ == 1L),
+      graft.SparkProbe.filesRead(tableScans))
+    assert(t.latest.deletes.size === 1)
+    assert(t.readLatest().select("k").as[Long].collect().sorted ===
+      (0L until 600L).filterNot(k => k >= 210 && k < 260).toArray)
+  }
+
   test("DML planning pre-prunes candidate files from predicate bounds") {
     import spark.implicits._
     val t = graft.table.GraftTable.create(spark, scratchDir("dml-prune-"),

@@ -368,4 +368,31 @@ class ConnectorPushdownSpec extends SparkSpec {
     assert(check("re-added point", col("v") === 5L, Array(S.EqualTo("v", 5L)),
       pruned = false).size == t.latest.files.size)
   }
+
+  test("hive-escaped partition values read decoded, as the table scan reads them") {
+    import spark.implicits._
+    val df = Seq((1L, "a/b"), (2L, "x%y"), (3L, "sp ace"), (4L, null), (5L, "k=v:1"))
+      .toDF("id", "region")
+    val dir = scratchDir("conn-escaped") + "/t"
+    val t = GraftTable.create(spark, dir, df.schema, partitionCols = Seq("region"))
+    t.append(df)
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.select("id", "region").as[(Long, Option[String])].collect().sortBy(_._1).toSeq
+    val conn = spark.read.format("graft").load(dir)
+    assert(rows(conn) === rows(df))
+    assert(rows(conn) === rows(t.readLatest()))
+    assert(conn.filter(col("region") === "a/b").count() === 1L)
+    assert(conn.filter(col("region") === "x%y").count() === 1L)
+    assert(conn.filter(col("region").isNull).count() === 1L)
+    // grouped metadata aggregates key their groups by the decoded value
+    val grouped = conn.groupBy("region").agg(count(lit(1)).as("n"))
+      .as[(Option[String], Long)].collect().toSet
+    assert(grouped === Set((Some("a/b"), 1L), (Some("x%y"), 1L), (Some("sp ace"), 1L),
+      (None, 1L), (Some("k=v:1"), 1L)))
+    // timestamps render with an escaped ':' in their directory names
+    val ts = Seq((1L, java.sql.Timestamp.valueOf("2025-05-06 12:30:00"))).toDF("id", "ts")
+    val tsDir = scratchDir("conn-escaped-ts") + "/t"
+    GraftTable.create(spark, tsDir, ts.schema, partitionCols = Seq("ts")).append(ts)
+    assert(spark.read.format("graft").load(tsDir).collect().toSeq === ts.collect().toSeq)
+  }
 }

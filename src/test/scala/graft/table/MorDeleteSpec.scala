@@ -45,6 +45,23 @@ class MorDeleteSpec extends SparkSpec {
     assert(t.readLatest().filter(col("qty") >= 8).count() === 0)
   }
 
+  test("rewriteDeleteFiles drops a delete whose keys miss every live file") {
+    val t = GraftTable.create(spark, scratchDir("mor-dangling-"),
+      org.apache.spark.sql.types.StructType.fromDDL("k bigint, v string"))
+    t.append((1L to 10L).map(i => (i, s"a$i")).toDF("k", "v").coalesce(1))
+    t.append((11L to 20L).map(i => (i, s"b$i")).toDF("k", "v").coalesce(1))
+    Dml.deleteMorKeys(t, Seq(100L, 101L).toDF("k"))
+    val before = t.latest
+    // both files predate the delete, but neither can hold its keys
+    assert(before.files.forall(_.writtenAt < before.deletes.head.appliedAt))
+    assert(before.files.forall(!t.planner(before).applies(before.deletes.head, _)))
+    assert(t.rewriteDeleteFiles(consolidate = false).isDefined)
+    assert(t.latest.deletes.isEmpty)
+    assert(t.latest.summary("dangling-delete-files") === "1")
+    assert(t.latest.files === before.files)
+    assert(t.readLatest().select("k").as[Long].collect().sorted === (1L to 20L).toArray)
+  }
+
   test("rows appended AFTER a delete with the same key survive (re-insert)") {
     val t = newSalesTable()
     Dml.deleteMorKeys(t, Seq(1L).toDF("event_id"))
