@@ -3,8 +3,9 @@ package graft.dml
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-import graft.table.{FileEntry, GraftTable, Snapshot, SnapshotLog}
+import graft.table.{Fact, FileEntry, GraftTable, Snapshot, SnapshotLog}
 
 /** Row-level DML over `GraftTable`, copy-on-write at file granularity
   * (SURVEY.md §2.8, D1-D3/J1-J2).
@@ -52,8 +53,9 @@ object Dml {
   private def warnCeiling(touched: Int): Unit =
     plannedFilesWarning(touched.toLong).foreach(w => System.err.println(s"[graft.dml] $w"))
 
-  /** Minimum target file count for MERGE's source key-range planning agg —
-    * below it the extra source scan costs more than the pruning saves.
+  /** Minimum target file count for MERGE's source-key candidate planning —
+    * below it the extra source job costs more than the pruning saves (it
+    * showed up as bench drift on a single-file MERGE target).
     */
   private[dml] val RangePruneMinFiles = 8
 
@@ -125,6 +127,54 @@ object Dml {
     else keys
   }
 
+  /** The files of `planned` whose bounds can hold one of `source`'s `key`
+    * values: the candidate rule of both MERGEs, which never open another
+    * file. A source under the broadcast gate [[planKeys]] uses collects its
+    * keys and prunes per value (IN facts through [[SnapshotPlanner]]); a
+    * larger one prunes by its [min, max]. A CDC batch scattered over a
+    * key-ordered table thus plans the few files holding its keys, where
+    * its envelope would span nearly all of them. Only a key type that
+    * widens to the column's prunes: the join then compares in the column's
+    * type, so the keys are cast to it first. Any other pair (an INT key
+    * against a STRING column, where Spark compares in the number's type and
+    * '01' joins 1) keeps every file, as does a table below
+    * [[RangePruneMinFiles]] or a planning failure.
+    *
+    * Also returns whether the collected keys are known distinct — only for
+    * types whose JVM equality is the join's (not floats: -0.0 joins 0.0;
+    * not binary: arrays compare by reference) — so MERGE can skip its
+    * per-key count.
+    */
+  private[dml] def sourceKeyCandidates(t: GraftTable, planned: Snapshot,
+      source: DataFrame, key: String): (Seq[FileEntry], Boolean) =
+    if (planned.files.size < RangePruneMinFiles) (planned.files, false)
+    else scala.util.Try {
+      val dt = t.schema(key).dataType
+      val keys = source.select(col(key).cast(dt).as(key))
+      require(widens(source.select(col(key)).schema.head.dataType, dt))
+      val gate = source.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+      val (fact, distinct) =
+        if (gate > 0 && keys.queryExecution.optimizedPlan.stats.sizeInBytes <= gate) {
+          val vs = keys.collect().map(_.get(0)).filter(_ != null)
+          val exact = dt match {
+            case ByteType | ShortType | IntegerType | LongType | StringType | DateType |
+                TimestampType | TimestampNTZType => true
+            case _ => false
+          }
+          val uniq = vs.distinct
+          (Fact.Points(key, uniq.toSeq), exact && uniq.length == vs.length)
+        } else {
+          val r = keys.agg(min(col(key)), max(col(key))).head()
+          (Fact.Range(key, Option(r.get(0)), false, Option(r.get(1)), false), false)
+        }
+      (t.planner(planned).select(Seq(fact)), distinct)
+    }.getOrElse((planned.files, false))
+
+  /** Does a `from` key compare with a `to` column in the column's type? */
+  private def widens(from: DataType, to: DataType): Boolean =
+    from == to ||
+      (to != StringType && org.apache.spark.sql.catalyst.expressions.Cast.canUpCast(from, to))
+
   /** UPDATE's row rewrite, shared by every update path: project `rows` onto
     * `planned`'s columns with each assignment evaluated against the row's
     * ORIGINAL values (SQL semantics — no assignment sees another's result)
@@ -135,7 +185,8 @@ object Dml {
     * it rewrites.
     */
   private def assign(rows: DataFrame, planned: Snapshot,
-      assignments: Map[String, Column], onlyWhere: Option[Column] = None): DataFrame = {
+      assignments: Map[String, Column], onlyWhere: Option[Column] = None,
+      carry: Seq[Column] = Nil): DataFrame = {
     val schema = org.apache.spark.sql.types.DataType.fromJson(planned.schemaJson)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
     // SET keys resolve like SQL identifiers (case-insensitively)
@@ -143,12 +194,12 @@ object Dml {
       schema.fieldNames.find(_.equalsIgnoreCase(k)).getOrElse(
         throw new IllegalArgumentException(s"UPDATE sets unknown column $k")) -> e
     }
-    rows.select(schema.fields.map { f =>
+    rows.select(carry ++ schema.fields.map { f =>
       byColumn.get(f.name).fold(col(f.name)) { e =>
         val v = e.cast(f.dataType)
         onlyWhere.fold(v)(p => when(p, v).otherwise(col(f.name)))
       }.as(f.name)
-    }.toIndexedSeq: _*)
+    }: _*)
   }
 
   /** D1 — `UPDATE t SET ... WHERE pred` (ref update_sales_events.sql:3-5). */
@@ -223,7 +274,7 @@ object Dml {
     * the later commit and applies to them).
     */
   def deleteMorKeys(t: GraftTable, keys: DataFrame): Snapshot =
-    t.commitMorDelta(keys, None, "delete-mor")
+    t.commitMorDelta(keys, "delete-mor")
 
   /** Merge-on-read `DELETE FROM t WHERE pred`: enumerate the distinct
     * `keyCols` tuples of matching rows (one pushed-down scan of the
@@ -239,7 +290,7 @@ object Dml {
     val (candidates, _) = planningCandidates(t, planned, pred)
     val keys = t.readSnapshot(planned.copy(files = candidates.toList)).filter(pred)
       .select(keyCols.map(col): _*).distinct()
-    t.commitMorDelta(keys, None, "delete-mor", basedOn = Some(planned))
+    t.commitMorDelta(keys, "delete-mor", basedOn = Some(planned))
   }
 
   /** Positional merge-on-read `DELETE FROM t WHERE pred` (the Iceberg v3
@@ -259,11 +310,14 @@ object Dml {
     val dv = t.readSnapshotTagged(planned.copy(files = candidates.toList),
         "_gf_uri", GraftTable.PosCol)
       .filter(pred)
-      .select(element_at(split(col("_gf_uri"), "/"), -1).as(GraftTable.WrittenAtCol),
-        col(GraftTable.PosCol))
-    if (dv.limit(1).isEmpty) return planned
-    t.commitDvDelta(dv, None, "delete-dv", basedOn = Some(planned))
+      .select(rowAddress: _*)
+    t.commitDvDelta(dv, "delete-dv", basedOn = Some(planned), skipEmpty = true)
   }
+
+  /** A tagged read row's address: the vector payload. */
+  private val rowAddress = Seq(
+    element_at(split(col("_gf_uri"), "/"), -1).as(GraftTable.WrittenAtCol),
+    col(GraftTable.PosCol))
 
   /** Positional merge-on-read `UPDATE t SET ... WHERE pred`: ONE delete
     * vector + append commit — the matched rows' addresses delete, their
@@ -278,12 +332,9 @@ object Dml {
     if (candidates.isEmpty) return planned
     val tagged = t.readSnapshotTagged(planned.copy(files = candidates.toList),
       "_gf_uri", GraftTable.PosCol).filter(pred)
-    val dv = tagged
-      .select(element_at(split(col("_gf_uri"), "/"), -1).as(GraftTable.WrittenAtCol),
-        col(GraftTable.PosCol))
-    if (dv.limit(1).isEmpty) return planned
-    t.commitDvDelta(dv, Some(assign(tagged, planned, assignments)), "update-dv",
-      basedOn = Some(planned))
+    val change = assign(tagged, planned, assignments, carry = rowAddress :+
+      lit(true).as(GraftTable.DeleteFlag) :+ lit(true).as(GraftTable.AppendFlag))
+    t.commitDelta(change, Nil, "update-dv", basedOn = Some(planned), skipEmpty = true)
   }
 
   /** Merge-on-read UPSERT (the Flink-CDC / Iceberg upsert-mode write): ONE
@@ -293,10 +344,11 @@ object Dml {
     * MERGE semantics at O(batch) write cost, deferring reconciliation to
     * reads. A duplicated source key raises (the MERGE cardinality guard:
     * two versions of the same key in one batch have no defined winner).
+    * With `skipEmpty`, an empty source commits nothing.
     */
   def upsertMor(t: GraftTable, source: DataFrame, keyCols: Seq[String],
       operation: String = "upsert-mor",
-      basedOn: Option[Snapshot] = None): Snapshot = {
+      basedOn: Option[Snapshot] = None, skipEmpty: Boolean = false): Snapshot = {
     require(keyCols.nonEmpty, "upsert needs at least one key column")
     val w = org.apache.spark.sql.expressions.Window.partitionBy(keyCols.map(col): _*)
     val guarded = source.withColumn("_src_cnt", count(lit(1)).over(w))
@@ -309,8 +361,7 @@ object Dml {
             col(c).cast("string")))).as(c)
         else col(c)
       }.toSeq: _*)
-    t.commitMorDelta(guarded.select(keyCols.map(col): _*), Some(guarded), operation,
-      basedOn = basedOn)
+    t.commitUpsert(guarded, keyCols, operation, basedOn = basedOn, skipEmpty = skipEmpty)
   }
 
   /** Merge-on-read `UPDATE t SET ... WHERE pred` (Iceberg's
@@ -327,10 +378,12 @@ object Dml {
     */
   def updateMor(t: GraftTable, pred: Column, assignments: Map[String, Column],
       keyCols: Seq[String]): Snapshot = {
-    val (matched, _, planned) = planFiles(t, pred)
-    if (matched.isEmpty) return t.latest
-    val updated = assign(t.readFiles(matched, planned).filter(pred), planned, assignments)
-    upsertMor(t, updated, keyCols, "update-mor", basedOn = Some(planned))
+    val planned = t.latest
+    val (candidates, _) = planningCandidates(t, planned, pred)
+    if (candidates.isEmpty) return planned
+    val updated = assign(t.readSnapshot(planned.copy(files = candidates.toList)).filter(pred),
+      planned, assignments)
+    upsertMor(t, updated, keyCols, "update-mor", basedOn = Some(planned), skipEmpty = true)
   }
 
   /** Merge-on-read MERGE (Iceberg's `write.merge.mode=merge-on-read`): the
@@ -339,119 +392,73 @@ object Dml {
     * not-matched inserts append, ZERO data files rewrite. Safe without an
     * identifier-column declaration: the delete key IS the merge key, and
     * every live row holding a matched key is by definition matched (joined),
-    * so delete-by-key is exactly "delete the matched rows". The matched scan
-    * is an inner join of live rows to the source — read-only, O(matched)
-    * moved rows. The COW cardinality guard carries over (a duplicated source
-    * key raises, including when all duplicates are delete-marked).
+    * so delete-by-key is exactly "delete the matched rows". See
+    * [[mergeDelta]].
     */
   def mergeMor(t: GraftTable, source: DataFrame, key: String,
       updateSet: Map[String, Column], insertNotMatched: Boolean,
-      deleteWhen: Option[Column] = None): Snapshot = {
-    val planned = t.latest
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col(key))
-    val src = source.withColumn("_src_cnt", count(lit(1)).over(w)).alias("src")
-    val tgt = t.readSnapshot(planned).alias("tgt")
-    val joined = tgt.join(src, col(s"tgt.$key") === col(s"src.$key"), "inner")
-    val cardinalityOk = col("src._src_cnt") <= 1
-    val cardErr = raise_error(concat(
-      lit("MERGE cardinality violation: source has multiple rows for key "),
-      col(s"src.$key").cast("string")))
-    // guard INSIDE the delete filter, like merge: dup-key sources whose
-    // duplicates are all delete-marked must raise, not silently delete
-    val survivors = deleteWhen match {
-      case Some(d) => joined.filter(
-        when(!cardinalityOk, cardErr.cast("boolean"))
-          .otherwise(!coalesce(d, lit(false))))
-      case None => joined
-    }
-    // explicit cast to the table field type: the COW path's
-    // when(hasMatch, e).otherwise(tgt.c) coerces source-typed expressions
-    // implicitly (e.g. a VALUES INT source into a BIGINT column); without
-    // the otherwise-branch the cast must be spelled
-    val updatedCols = t.schema.fields.map { f =>
-      val base = updateSet.get(f.name) match {
-        case Some(e) => e.cast(f.dataType)
-        case None => col(s"tgt.${f.name}")
-      }
-      if (f.name == key) when(cardinalityOk, base).otherwise(cardErr).as(f.name)
-      else base.as(f.name)
-    }
-    val updated = survivors.select(updatedCols.toSeq: _*)
-    // every matched key equality-deletes (updated AND delete-marked rows);
-    // matchedKeys is also exactly "source keys present in the target", so
-    // the insert anti-join probes this small set, not the table
-    val matchedKeys = joined.select(col(s"tgt.$key").as(key)).distinct()
-    val appended =
-      if (!insertNotMatched) updated
-      else {
-        val srcInsertable = deleteWhen match {
-          case Some(d) => src.filter(!coalesce(d, lit(false)))
-          case None => src
-        }
-        val inserts = srcInsertable.join(matchedKeys, Seq(key), "left_anti")
-          .select(t.schema.fields.map(f =>
-            col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
-        updated.unionByName(inserts)
-      }
-    t.commitMorDelta(matchedKeys, Some(appended), "merge-mor",
-      basedOn = Some(planned))
-  }
+      deleteWhen: Option[Column] = None): Snapshot =
+    mergeDelta(t, source, key, updateSet, insertNotMatched, deleteWhen, positional = false)
 
-  /** Positional merge-on-read MERGE: the same matched/not-matched semantics
-    * as [[mergeMor]] committed as ONE delete VECTOR + append — every matched
-    * target row's (file, position) address deletes (updated and delete-
-    * marked alike), updated versions and not-matched inserts append, ZERO
-    * data files rewrite. Unlike the equality path this also composes with
-    * live rows that merely SHARE a matched key value in pathological data:
-    * the vector names the joined rows themselves. The COW cardinality guard
-    * rides the vector's file column, so a duplicated source key raises
-    * before anything commits.
+  /** Positional merge-on-read MERGE: [[mergeMor]]'s semantics committed as
+    * ONE delete VECTOR + append — every matched target row's (file,
+    * position) address deletes. Unlike the equality path this also composes
+    * with live rows that merely SHARE a matched key value in pathological
+    * data: the vector names the joined rows themselves.
     */
   def mergeMorPositional(t: GraftTable, source: DataFrame, key: String,
       updateSet: Map[String, Column], insertNotMatched: Boolean,
-      deleteWhen: Option[Column] = None): Snapshot = {
+      deleteWhen: Option[Column] = None): Snapshot =
+    mergeDelta(t, source, key, updateSet, insertNotMatched, deleteWhen, positional = true)
+
+  /** Both merge-on-read MERGEs: ONE change set from ONE join of the source
+    * against only the target files that can hold a source key
+    * ([[sourceKeyCandidates]]), read-only. Each source row left-joins its
+    * matched target rows: a matched row deletes (its key, or its row
+    * address when `positional` — the only difference between the two) and,
+    * unless `deleteWhen` selects it, appends its updated version; an
+    * unmatched row appends as an insert when `insertNotMatched` and not
+    * delete-marked. The COW cardinality guard carries over: a duplicated
+    * source key that matches raises — also when all duplicates are
+    * delete-marked — while the commit evaluates the change set, before any
+    * file is written. Not-matched duplicates insert once each.
+    */
+  private def mergeDelta(t: GraftTable, source: DataFrame, key: String,
+      updateSet: Map[String, Column], insertNotMatched: Boolean,
+      deleteWhen: Option[Column], positional: Boolean): Snapshot = {
     val planned = t.latest
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col(key))
-    val src = source.withColumn("_src_cnt", count(lit(1)).over(w)).alias("src")
-    val tgt = t.readSnapshotTagged(planned, "_gf_uri", GraftTable.PosCol).alias("tgt")
-    val joined = tgt.join(src, col(s"tgt.$key") === col(s"src.$key"), "inner")
-    val cardinalityOk = col("src._src_cnt") <= 1
+    val (candidates, distinctKeys) = sourceKeyCandidates(t, planned, source, key)
+    val scanned = planned.copy(files = candidates.toList)
+    // per-key source count for the cardinality guard; keys already known
+    // distinct need no count (and no shuffle of the source)
+    val count1 = if (distinctKeys) lit(1L)
+      else count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy(col(key)))
+    val src = source.withColumn("_src_cnt", count1).alias("src")
+    val tgt = (if (positional) t.readSnapshotTagged(scanned, "_gf_uri", GraftTable.PosCol)
+      else t.readSnapshotTagged(scanned, "_gf_uri")).alias("tgt")
+    val joined = src.join(tgt, col(s"src.$key") === col(s"tgt.$key"), "left")
+    val matched = col("_gf_uri").isNotNull
     val cardErr = raise_error(concat(
       lit("MERGE cardinality violation: source has multiple rows for key "),
       col(s"src.$key").cast("string")))
-    val dv = joined.select(
-      when(cardinalityOk, element_at(split(col("tgt._gf_uri"), "/"), -1))
-        .otherwise(cardErr).as(GraftTable.WrittenAtCol),
-      col(s"tgt.${GraftTable.PosCol}").as(GraftTable.PosCol))
-    val survivors = deleteWhen match {
-      case Some(d) => joined.filter(
-        when(!cardinalityOk, cardErr.cast("boolean"))
-          .otherwise(!coalesce(d, lit(false))))
-      case None => joined
+    val deleted = deleteWhen.fold(lit(false))(d => coalesce(d, lit(false)))
+    // explicit cast to the table field type: the COW path's
+    // when(hasMatch, e).otherwise(tgt.c) coerces source-typed expressions
+    // implicitly (e.g. a VALUES INT source into a BIGINT column)
+    val values = t.schema.fields.map { f =>
+      val updated = updateSet.get(f.name).fold(col(s"tgt.${f.name}"))(_.cast(f.dataType))
+      (if (!insertNotMatched) updated
+        else when(matched, updated).otherwise(col(s"src.${f.name}").cast(f.dataType))).as(f.name)
     }
-    val updatedCols = t.schema.fields.map { f =>
-      val base = updateSet.get(f.name) match {
-        case Some(e) => e.cast(f.dataType)
-        case None => col(s"tgt.${f.name}")
-      }
-      if (f.name == key) when(cardinalityOk, base).otherwise(cardErr).as(f.name)
-      else base.as(f.name)
-    }
-    val updated = survivors.select(updatedCols.toSeq: _*)
-    val matchedKeys = joined.select(col(s"tgt.$key").as(key)).distinct()
-    val appended =
-      if (!insertNotMatched) updated
-      else {
-        val srcInsertable = deleteWhen match {
-          case Some(d) => src.filter(!coalesce(d, lit(false)))
-          case None => src
-        }
-        val inserts = srcInsertable.join(matchedKeys, Seq(key), "left_anti")
-          .select(t.schema.fields.map(f =>
-            col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
-        updated.unionByName(inserts)
-      }
-    t.commitDvDelta(dv, Some(appended), "merge-dv", basedOn = Some(planned))
+    val payload =
+      if (positional) rowAddress else Seq(col(s"tgt.$key").as(GraftTable.deleteKeyCol(key)))
+    val change = joined.select(payload ++ values :+
+        when(matched && col("src._src_cnt") > 1, cardErr.cast("boolean"))
+          .otherwise(matched).as(GraftTable.DeleteFlag) :+
+        ((matched || lit(insertNotMatched)) && !deleted).as(GraftTable.AppendFlag): _*)
+      .filter(col(GraftTable.DeleteFlag) || col(GraftTable.AppendFlag))
+    t.commitDelta(change, if (positional) Nil else Seq(key),
+      if (positional) "merge-dv" else "merge-mor", basedOn = Some(planned))
   }
 
   /** D3/J1/J2 — `MERGE INTO t USING source ON t.key = source.key`
@@ -490,28 +497,11 @@ object Dml {
     // size-gated hint; a large source shuffles its key column only).
     val planned = t.latest
     val srcKeys = planKeys(source, key, broadcastKeyThresholdBytes)
-    // Metadata-prune the matched-file planning scan by the SOURCE's key
-    // range: files whose key bounds miss [min(src), max(src)] cannot hold a
-    // matched row and go straight to untouched without being opened. One
-    // tiny 2-value agg over the source buys O(candidate files) planning for
-    // clustered targets (e.g. a CDC batch of recent keys against a
-    // key-ordered table). Sound: pruning only narrows the MATCHED side.
-    // Gated on target FILE COUNT: below the gate the candidate scan is
-    // already a handful of files and the agg is a whole extra source scan
-    // that cannot pay for itself (it showed up as the r8 bench drift on
-    // t_merge_large_source's single-file target); at the 100 TB design
-    // point file counts dwarf the gate and the agg always runs.
-    val keyRange =
-      if (planned.files.size < RangePruneMinFiles) (None, None)
-      else scala.util.Try {
-        val r = source.agg(min(col(key)), max(col(key))).collect()(0)
-        (Option(r.get(0)), Option(r.get(1)))
-      }.getOrElse((None, None))
-    val candidates = keyRange match {
-      case (Some(lo), Some(hi)) =>
-        scala.util.Try(t.planBetween(planned, key, lo, hi)._1).getOrElse(planned.files)
-      case _ => planned.files
-    }
+    // Metadata-prune the matched-file planning scan by the SOURCE's keys:
+    // files whose key bounds hold none of them cannot hold a matched row and
+    // go straight to untouched without being opened (the candidate rule both
+    // MERGEs share). Sound: pruning only narrows the MATCHED side.
+    val (candidates, _) = sourceKeyCandidates(t, planned, source, key)
     val withFile = t.readSnapshotTagged(planned.copy(files = candidates.toList), "_file")
     val touched = toRelative(t,
       withFile.join(srcKeys, Seq(key), "left_semi")
@@ -563,8 +553,10 @@ object Dml {
           case None => src
         }
         val matchedKeys = t.readFiles(matched, planned).select(key)
+        // cast to the table field types, as the merge-on-read path does: a
+        // union with a source-typed column would widen the rewritten rows
         val inserts = srcInsertable.join(matchedKeys, Seq(key), "left_anti")
-          .select(t.schema.fieldNames.map(col).toSeq: _*)
+          .select(t.schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
         rewritten.unionByName(inserts)
       }
     t.commitRewrite(result, untouched, "merge", basedOn = Some(planned))

@@ -125,7 +125,7 @@ object StreamOps {
     * built on merge-on-read): each micro-batch is reduced to its LAST
     * version per key (`orderCols` descending — (key, orderCols) must be
     * unique for a deterministic winner), then committed as ONE equality-
-    * delete + append via `commitMorDelta` — O(batch) regardless of table
+    * delete + append via `commitUpsert` — O(batch) regardless of table
     * size, no data-file rewrite, with the batch id durable in the same
     * commit for the same at-least-once → exactly-once upgrade as
     * `ingestBatch`. Cross-batch ordering is the stream's: a later batch
@@ -137,14 +137,10 @@ object StreamOps {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(keyCols.map(col): _*)
         .orderBy(orderCols.map(c => col(c).desc): _*)
-      // checkpoint the reduced batch ONCE: commitMorDelta executes it twice
-      // (delete-key file + data file), which re-read and re-windowed the
-      // micro-batch per reference; the reduced form is O(batch keys)
       val lastPerKey = batch.withColumn("_rn", row_number().over(w))
         .filter(col("_rn") === 1).drop("_rn")
-        .localCheckpoint(eager = true)
-      t.commitMorDelta(lastPerKey.select(keyCols.map(col): _*), Some(lastPerKey),
-        "upsert-mor", extraSummary = Map("stream-batch-id" -> batchId.toString))
+      t.commitUpsert(lastPerKey, keyCols, "upsert-mor",
+        extraSummary = Map("stream-batch-id" -> batchId.toString))
     }
 
   /** Exactly-once streaming INCREMENTAL-INGESTION sink — the full

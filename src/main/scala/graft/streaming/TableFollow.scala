@@ -110,10 +110,9 @@ object TableFollow {
       val dec = col(valueCol).cast(org.apache.spark.sql.types.DecimalType(18, 2))
       // The delta table is O(groups touched in range) — tiny relative to the
       // changelog. Checkpoint it eagerly: it feeds the affected-groups
-      // semi-join AND the full-outer merge (and commitMorDelta executes the
-      // merged plan twice — delete keys + survivors), so an unmaterialized
-      // delta would re-aggregate the cached changelog once per reference
-      // (each pass schedules one task per changelog partition).
+      // semi-join AND the full-outer merge, so an unmaterialized delta would
+      // re-aggregate the cached changelog once per reference (each pass
+      // schedules one task per changelog partition).
       val delta = chg.groupBy(keyC: _*).agg(
         sum(when(col("_change_type") === "insert", 1L).otherwise(-1L)).as("d_n"),
         sum(when(col("_change_type") === "insert", dec).otherwise(-dec)).as("d_sum"))
@@ -131,23 +130,16 @@ object TableFollow {
       // view's sum convention is therefore SUM(COALESCE(value, 0)): NULL
       // values count rows but add nothing, and an all-NULL group reads 0.
       val zero = lit(0).cast(org.apache.spark.sql.types.DecimalType(18, 2))
-      // merged is also O(affected groups) and commitMorDelta executes it
-      // twice (delete-key file + survivor file) — materialize once so the
-      // view's MOR read and the two delta joins run a single time
+      // every affected group deletes its view row; the groups still holding
+      // rows append their new count and sum
       val merged = current.join(dAlias, joinCond, "full_outer")
         .select(groupCols.zipWithIndex.map { case (g, i) =>
           coalesce(col(g), col(s"_gf_k$i")).as(g) } :+
-          (coalesce(col(countCol), lit(0L)) + col("d_n")).as("n_new") :+
-          (coalesce(col(sumCol), zero) +
-            coalesce(col("d_sum"), zero)).as("s_new"): _*)
-        .localCheckpoint(eager = true)
-      val survivors = merged.filter(col("n_new") > 0)
-        .select(keyC :+ col("n_new").as(countCol) :+
-          col("s_new").cast(org.apache.spark.sql.types.DecimalType(18, 2))
-            .as(sumCol): _*)
-      dst.commitMorDelta(merged.select(keyC: _*).distinct(), Some(survivors),
-        "follow-agg", basedOn = Some(dstHead),
-        extraSummary = Map(OffsetKey -> to.toString))
+          (coalesce(col(countCol), lit(0L)) + col("d_n")).as(countCol) :+
+          (coalesce(col(sumCol), zero) + coalesce(col("d_sum"), zero))
+            .cast(org.apache.spark.sql.types.DecimalType(18, 2)).as(sumCol): _*)
+      dst.commitUpsert(merged, groupCols, "follow-agg", keep = col(countCol) > 0,
+        basedOn = Some(dstHead), extraSummary = Map(OffsetKey -> to.toString))
       Some(to)
     } finally chg.unpersist()
   }
@@ -202,17 +194,21 @@ object TableFollow {
       // three cheap block reads instead.
       val marked = chg.withColumn("_last_del", lastDel)
         .localCheckpoint(eager = true)
-      val finalRows = marked.filter(col("_change_type") === "insert" &&
-          (col("_last_del").isNull || col("_commit_snapshot_id") >= col("_last_del")))
+      val survives = col("_change_type") === "insert" &&
+        (col("_last_del").isNull || col("_commit_snapshot_id") >= col("_last_del"))
+      val finalRows = marked.filter(survives)
         .drop("_change_type", "_commit_snapshot_id", "_last_del")
       // Only keys a delete touched are cleared on the target; append-only
       // keys stay out of the delete file so their existing mirror rows live.
-      val deleteKeys = marked.filter(col("_last_del").isNotNull)
-        .select(keyC: _*).distinct()
-      val hasDeletes = !deleteKeys.isEmpty
+      val hasDeletes = !marked.filter(col("_last_del").isNotNull).isEmpty
       if (hasDeletes) {
-        dst.commitMorDelta(deleteKeys, Some(finalRows), "follow-cdc",
-          basedOn = Some(dstHead),
+        // one change set, read from the checkpoint: the key's last
+        // delete-bearing commit's delete rows clear it, survivors append
+        dst.commitDelta(marked.select(keyCols.map(k => col(k).as(GraftTable.deleteKeyCol(k))) ++
+            dst.schema.fieldNames.map(col) :+
+            (col("_change_type") === "delete" && col("_commit_snapshot_id") === col("_last_del"))
+              .as(GraftTable.DeleteFlag) :+ survives.as(GraftTable.AppendFlag): _*),
+          keyCols, "follow-cdc", basedOn = Some(dstHead),
           extraSummary = Map(OffsetKey -> toId.toString))
       } else if (!finalRows.isEmpty) {
         // append-only range: mirror it as a plain append (no delete file),

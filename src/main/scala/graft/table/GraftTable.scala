@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.graftbridge.SqlInternals
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{BinaryType, DataType, StringType, StructType}
 
 /** A snapshot-versioned parquet table: immutable data files + the
   * `SnapshotLog` metadata log. This is the engine's analog of an Iceberg v2
@@ -1546,109 +1546,166 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
 
   /** Merge-on-read commit primitive (the Iceberg v2 equality-delete write
     * path): ONE commit that adds an equality-delete file holding `keys`'
-    * tuples and, when `appendDf` is given, appends its rows as new data
-    * files — the Flink-CDC upsert shape. No existing data file is opened or
-    * rewritten: at 100 TB a keyed delete or upsert batch costs O(batch), not
-    * O(matched files), with the reconciliation deferred to reads (a per-row
-    * check on the files the delete can touch — `SnapshotPlanner.applies`)
-    * and ultimately to `Maintenance.materializeDeletes`.
-    *
-    * The delete applies to data files with `writtenAt < appliedAt` (this
-    * commit's id): rows appended by THIS commit survive, so upsert = delete
-    * keys + insert rows atomically. Each key column must widen to its table
-    * column's type (a narrowing could wrap onto another row's key); the
-    * keys are stored in the column's type.
-    *
-    * When `basedOn` is given the commit aborts if the table advanced past it
-    * (serializable planning — the predicate-scan delete path uses this); when
-    * None the commit retries against the current parent (blind keyed deletes
-    * and upserts compose with concurrent appends: the delete is simply the
-    * later commit and applies to them).
+    * tuples. No existing data file is opened or rewritten: at 100 TB a
+    * keyed delete batch costs O(batch), not O(matched files), with the
+    * reconciliation deferred to reads (a per-row check on the files the
+    * delete can touch — `SnapshotPlanner.applies`) and ultimately to
+    * `Maintenance.materializeDeletes`. The delete applies to data files with
+    * `writtenAt < appliedAt` (this commit's id). The Flink-CDC upsert shape
+    * (delete keys + insert rows atomically) is [[commitUpsert]]; key types
+    * and `basedOn` are as in [[commitDelta]].
     */
-  def commitMorDelta(keys: DataFrame, appendDf: Option[DataFrame], operation: String,
+  def commitMorDelta(keys: DataFrame, operation: String,
       basedOn: Option[Snapshot] = None,
       extraSummary: Map[String, String] = Map.empty): Snapshot = {
-    val keyCols = keys.schema.fieldNames.toList
-    require(keyCols.nonEmpty, "merge-on-read delete needs at least one key column")
-    val cur = schema
-    keyCols.foreach { k =>
-      require(cur.fieldNames.contains(k),
-        s"delete key column $k is not a column of $tableDir")
-      require(Cast.canUpCast(keys.schema(k).dataType, cur(k).dataType),
-        s"delete key column $k of type ${keys.schema(k).dataType.simpleString} " +
-          s"cannot widen to the column's ${cur(k).dataType.simpleString}")
-    }
-    appendDf.foreach { df =>
-      require(shapeOf(df.schema) == shapeOf(cur),
-        s"$operation append schema does not match table $tableDir")
-    }
-    val planned = basedOn.getOrElse(latest)
-    // stored in the column's own type, so the footer bounds are the column's
-    val delWritten = writeDeleteFile(
-      keys.select(keyCols.map(k => col(k).cast(cur(k).dataType).as(k)): _*))
-    val dataWritten = appendDf.map(writeDataFiles(_, planned.snapshotId + 1)).getOrElse(Nil)
-    commitWithRetry { parent =>
-      val p = parent.getOrElse(throw new IllegalStateException("MOR delta on empty table"))
-      if (basedOn.isDefined && p.snapshotId != planned.snapshotId)
-        throw new java.util.ConcurrentModificationException(
-          s"table advanced to ${p.snapshotId} since MOR delete planned at ${planned.snapshotId}")
-      val id = p.snapshotId + 1
-      val files = (p.files ++ dataWritten.map(_.copy(writtenAt = id))).toList
-      val delEntries = delWritten.map(_.copy(keyCols = keyCols, appliedAt = id))
-      Snapshot(id, Some(p.snapshotId), clock(), operation, p.schemaJson,
-        p.partitionCols, files,
-        extraSummary ++ Map("added-delete-files" -> delEntries.size.toString,
-          "added-files" -> dataWritten.size.toString), Nil,
-        schemasFor(files, p.schemas + (id.toString -> p.schemaJson)),
-        p.chain, (p.deletes ++ delEntries).toList)
-    }
+    require(keys.columns.nonEmpty, "merge-on-read delete needs at least one key column")
+    commitDelta(keys.select(keys.columns.map(k => col(k).as(deleteKeyCol(k))) :+
+      lit(true).as(DeleteFlag): _*), keys.columns.toSeq, operation, basedOn, extraSummary)
   }
 
   /** Positional merge-on-read commit primitive (the Iceberg v3
     * deletion-vector shape): ONE commit that adds a delete VECTOR —
     * (part-file name, row position) tuples addressing exactly the rows to
-    * drop — and, when `appendDf` is given, appends its rows as new data
-    * files. Same O(batch) cost shape as [[commitMorDelta]], but no
+    * drop. Same O(batch) cost shape as [[commitMorDelta]], but no
     * identifier columns are trusted and a non-unique key can never
     * over-delete: the vector names rows, not values. `dv` must have exactly
     * the columns (`_gf_file` string, `_gf_pos` long) as produced by
-    * [[readSnapshotTagged]]'s file/pos tagging.
+    * [[readSnapshotTagged]]'s file/pos tagging. With `skipEmpty`, an empty
+    * vector commits nothing.
     */
-  def commitDvDelta(dv: DataFrame, appendDf: Option[DataFrame], operation: String,
-      basedOn: Option[Snapshot] = None,
-      extraSummary: Map[String, String] = Map.empty): Snapshot = {
+  def commitDvDelta(dv: DataFrame, operation: String,
+      basedOn: Option[Snapshot] = None, extraSummary: Map[String, String] = Map.empty,
+      skipEmpty: Boolean = false): Snapshot = {
     val dvCols = dv.schema.fieldNames.toSeq
     require(dvCols == Seq(GraftTable.WrittenAtCol, GraftTable.PosCol),
       s"delete vector must have columns (${GraftTable.WrittenAtCol}, " +
         s"${GraftTable.PosCol}); got ${dvCols.mkString(", ")}")
+    commitDelta(dv.withColumn(DeleteFlag, lit(true)), Nil, operation, basedOn, extraSummary,
+      skipEmpty)
+  }
+
+  /** Upsert as one change set: every row of `rows` (table-shaped) deletes
+    * its `keyCols` tuple; the rows where `keep` holds append. */
+  def commitUpsert(rows: DataFrame, keyCols: Seq[String], operation: String,
+      keep: Column = lit(true), basedOn: Option[Snapshot] = None,
+      extraSummary: Map[String, String] = Map.empty, skipEmpty: Boolean = false): Snapshot =
+    commitDelta(rows.select(keyCols.map(k => col(k).as(deleteKeyCol(k))) ++
+      schema.fieldNames.map(col) :+ lit(true).as(DeleteFlag) :+ keep.as(AppendFlag): _*),
+      keyCols, operation, basedOn, extraSummary, skipEmpty)
+
+  /** The one merge-on-read delta commit. `change` holds per row a delete
+    * payload — the [[deleteKeyCol]] columns of `keyCols` (equality; each key
+    * must widen to its column's type, as a narrowing could wrap onto another
+    * row's key, and is stored in it), or `(_gf_file, _gf_pos)` when
+    * `keyCols` is empty (a vector) — the table's columns, and the
+    * [[DeleteFlag]] / [[AppendFlag]] booleans. A change set with no
+    * [[AppendFlag]] column only deletes: its one consumer, the delete write,
+    * evaluates it once, and sizes it by Catalyst's estimate.
+    *
+    * Otherwise `change` is evaluated ONCE: locally checkpointed (keeping the
+    * partitions adaptive execution settled on; a persisted plan would keep
+    * every shuffle partition) and measured by the one job that computes it
+    * (bytes to delete, bytes to append); both writes then read the
+    * checkpoint. A change set that only projects and filters an already
+    * materialized frame is read as it is. An error raised while evaluating
+    * it (a MERGE cardinality violation) surfaces before any file is
+    * written. Delete shards and append write tasks are sized by the
+    * measured bytes. The checkpoint is released in a `finally`. With
+    * `skipEmpty`, deleting nothing commits nothing.
+    *
+    * A vector addresses the PLANNED file set, which a commit landing in
+    * between (compaction, COW DML) could move rows out of, so it always
+    * aborts when the table advanced past its plan. An equality commit
+    * aborts only when `basedOn` is given (serializable planning); otherwise
+    * it retries against the current parent, composing with concurrent
+    * appends (the delete is the later commit and applies to them).
+    */
+  private[graft] def commitDelta(change: DataFrame, keyCols: Seq[String], operation: String,
+      basedOn: Option[Snapshot] = None, extraSummary: Map[String, String] = Map.empty,
+      skipEmpty: Boolean = false): Snapshot = {
+    val positional = keyCols.isEmpty
     val cur = schema
-    appendDf.foreach { df =>
-      require(shapeOf(df.schema) == shapeOf(cur),
-        s"$operation append schema does not match table $tableDir")
-    }
-    // Serializable by construction: positions address the PLANNED file set,
-    // and a commit (compaction, COW DML) landing in between could move the
-    // addressed rows into files the vector cannot name — so unlike the
-    // compose-with-appends equality path, a DV commit always aborts when the
-    // table advanced past its plan.
+    val payloadCols = if (positional) Seq(WrittenAtCol, PosCol) else keyCols.map(deleteKeyCol)
+    val payload =
+      if (positional) payloadCols.map(col)
+      else keyCols.map { k =>
+        require(cur.fieldNames.contains(k), s"delete key column $k is not a column of $tableDir")
+        val dt = change.schema(deleteKeyCol(k)).dataType
+        require(Cast.canUpCast(dt, cur(k).dataType),
+          s"delete key column $k of type ${dt.simpleString} " +
+            s"cannot widen to the column's ${cur(k).dataType.simpleString}")
+        // stored in the column's own type, so the footer bounds are the column's
+        col(deleteKeyCol(k)).cast(cur(k).dataType).as(k)
+      }
     val planned = basedOn.getOrElse(latest)
-    val delWritten = writeDeleteFile(dv)
-    val dataWritten = appendDf.map(writeDataFiles(_, planned.snapshotId + 1)).getOrElse(Nil)
-    commitWithRetry { parent =>
-      val p = parent.getOrElse(throw new IllegalStateException("DV delta on empty table"))
-      if (p.snapshotId != planned.snapshotId)
-        throw new java.util.ConcurrentModificationException(
-          s"table advanced to ${p.snapshotId} since positional delete planned at ${planned.snapshotId}")
-      val id = p.snapshotId + 1
-      val files = (p.files ++ dataWritten.map(_.copy(writtenAt = id))).toList
-      val delEntries = delWritten.map(_.copy(appliedAt = id, positional = true))
-      Snapshot(id, Some(p.snapshotId), clock(), operation, p.schemaJson,
-        p.partitionCols, files,
-        extraSummary ++ Map("added-delete-files" -> delEntries.size.toString,
-          "added-files" -> dataWritten.size.toString,
-          "delete-representation" -> "positional"), Nil,
-        schemasFor(files, p.schemas + (id.toString -> p.schemaJson)),
-        p.chain, (p.deletes ++ delEntries).toList)
+    def publish(delWritten: Seq[DeleteEntry], dataWritten: Seq[FileEntry]): Snapshot =
+      commitWithRetry { parent =>
+        val p = parent.getOrElse(throw new IllegalStateException(s"$operation on empty table"))
+        if ((positional || basedOn.isDefined) && p.snapshotId != planned.snapshotId)
+          throw new java.util.ConcurrentModificationException(
+            s"table advanced to ${p.snapshotId} since $operation planned at ${planned.snapshotId}")
+        val id = p.snapshotId + 1
+        val files = (p.files ++ dataWritten.map(_.copy(writtenAt = id))).toList
+        val delEntries = delWritten.map(_.copy(keyCols = keyCols.toList, appliedAt = id,
+          positional = positional))
+        Snapshot(id, Some(p.snapshotId), clock(), operation, p.schemaJson,
+          p.partitionCols, files,
+          extraSummary ++ Map("added-delete-files" -> delEntries.size.toString,
+            "added-files" -> dataWritten.size.toString) ++
+            (if (positional) Map("delete-representation" -> "positional") else Map.empty),
+          Nil, schemasFor(files, p.schemas + (id.toString -> p.schemaJson)),
+          p.chain, (p.deletes ++ delEntries).toList)
+      }
+    if (!change.columns.contains(AppendFlag)) {
+      val written = writeDeleteFile(change.filter(col(DeleteFlag)).select(payload: _*))
+      return if (skipEmpty && written.isEmpty) planned else publish(written, Nil)
+    }
+    require(cur.fields.forall(f => change.schema.exists(c =>
+      c.name == f.name && c.dataType == f.dataType)),
+      s"$operation append schema does not match table $tableDir")
+    // a row's bytes as a shuffle would carry them
+    def bytesOf(cols: Seq[String]): Column = cols.map(c => change.schema(c).dataType match {
+      case StringType | BinaryType => coalesce(octet_length(col(c)), lit(0))
+      case dt => lit(dt.defaultSize)
+    }).foldLeft(lit(8))(_ + _)
+    val deletes = coalesce(col(DeleteFlag), lit(false))
+    val appends = coalesce(col(AppendFlag), lit(false))
+    // replacing rows are written apart from new ones, so a data file's key
+    // bounds span one of the two key sets, not both
+    val groups = Seq(appends && deletes, appends && !deletes)
+    val sizes = (deletes -> payloadCols) +: groups.map(_ -> cur.fieldNames.toSeq)
+    val materialized = change.queryExecution.optimizedPlan.find {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.getStorageLevel == org.apache.spark.storage.StorageLevel.NONE
+      case _: org.apache.spark.sql.catalyst.plans.logical.Project |
+          _: org.apache.spark.sql.catalyst.plans.logical.Filter => false
+      case _ => true
+    }.isEmpty
+    val cached = if (materialized) change else change.localCheckpoint(eager = false)
+    try {
+      // one job, no shuffle: computes the checkpoint and measures it
+      val n = sizes.size
+      val Seq(delBytes, groupBytes @ _*) = cached.select(sizes.map { case (p, cs) =>
+          when(p, bytesOf(cs)).otherwise(lit(0)).cast("long") }: _*)
+        .queryExecution.toRdd.map(r => Seq.tabulate(n)(r.getLong))
+        .fold(Seq.fill(n)(0L))((a, b) => a.zip(b).map { case (x, y) => x + y })
+      if (skipEmpty && delBytes == 0) return planned
+      val delWritten =
+        if (delBytes == 0) Nil
+        else writeDeleteFile(cached.filter(deletes).select(payload: _*), Some(BigInt(delBytes)))
+      // one write task per advisory size, as a rebalance would split them
+      val advisory = writeAdvisory(properties).getOrElse(spark.sessionState.conf.getConf(
+        org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+      val parts = groups.zip(groupBytes).collect { case (g, b) if b > 0 =>
+        cached.filter(g).select(cur.fieldNames.map(col): _*)
+          .coalesce(math.min((b + advisory - 1) / advisory, Int.MaxValue).toInt)
+      }
+      val dataWritten =
+        if (parts.isEmpty) Nil else writeDataFiles(parts.reduce(_ union _), planned.snapshotId + 1)
+      publish(delWritten, dataWritten)
+    } finally if (!materialized) cached.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
     }
   }
 
@@ -1657,7 +1714,8 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     * placeholder keyCols/appliedAt (the commit loop fills them in) and the
     * footer stats — the bounds the per-file delete rule reads.
     */
-  private def writeDeleteFile(keys: DataFrame): Seq[DeleteEntry] = {
+  private def writeDeleteFile(keys: DataFrame,
+      measuredBytes: Option[BigInt] = None): Seq[DeleteEntry] = {
     val dataRoot = SnapshotLog.dataPath(tableDir)
     val delDir = new org.apache.hadoop.fs.Path(dataRoot, DeletesDir)
     val stage = new org.apache.hadoop.fs.Path(dataRoot,
@@ -1669,19 +1727,22 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     // matching a large fraction of the table produces an UNBOUNDED vector,
     // and funneling it through one task is the write-side ceiling at 100 TB
     // (Iceberg shards position deletes per partition for the same reason):
-    // above an estimated-size threshold, shard the write — positional
-    // vectors cluster by their target file name (each shard's tuples stay
+    // above a size threshold, shard the write by RANGE — positional
+    // vectors on their target file name (each shard's tuples stay
     // file-coherent for the reader's per-file position sets), key batches
-    // by their own hash. The read side already unions per-commit files, so
+    // on their first key column — so shards have disjoint bounds and the
+    // per-file rule marks a data file only with the shards its keys can
+    // fall in. The read side already unions per-commit files, so
     // a multi-file delete commit costs nothing extra to apply.
-    // Catalyst's sizeInBytes is a BigInt and join-heavy plans can estimate
+    // The size is the delta commit's measured payload; without one it is
+    // Catalyst's sizeInBytes, a BigInt that join-heavy plans can estimate
     // absurdly high (1e20 observed on the consolidation merge) — anything
     // past ~1 PB is an estimate artifact, never a real delete batch (a DV
     // is bounded by table row count: even an all-rows vector on a 100 TB
     // table is ~5e13 bytes). Untrusted estimates keep the single-file
     // shape; NEVER narrow the BigInt before the comparison (a wrapped
     // toLong/toInt here once produced a 2-billion-partition shuffle).
-    val estBytes = keys.queryExecution.optimizedPlan.stats.sizeInBytes
+    val estBytes = measuredBytes.getOrElse(keys.queryExecution.optimizedPlan.stats.sizeInBytes)
     val saneCeiling = BigInt("1000000000000000") // 1e15
     val staged0 =
       if (estBytes <= GraftTable.DeleteShardBytes || estBytes > saneCeiling)
@@ -1694,14 +1755,14 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
         val shardKey =
           if (keys.columns.contains(GraftTable.WrittenAtCol)) GraftTable.WrittenAtCol
           else keys.columns.head
-        keys.repartition(shards, col(shardKey))
+        keys.repartitionByRange(shards, col(shardKey))
       }
     staged0.write.mode("errorifexists").parquet(stage.toString)
     hfs.mkdirs(delDir)
     val staged = listParquetFiles(stage)
     val entries = staged.flatMap { s =>
       val (rows, stats) = footerMeta(s)
-      // a sharded write can leave empty hash shards — nothing to publish
+      // a sharded write can leave empty range shards — nothing to publish
       if (rows == 0L) None
       else {
         val dest = new org.apache.hadoop.fs.Path(delDir, s.getName)
@@ -1934,6 +1995,18 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     }
   }
 
+  /** The advisory partition size a table write splits at: the table's
+    * `write.target-file-size-bytes` times its shuffle-to-parquet ratio (see
+    * [[writeDataFiles]]); None when the table sets no target. */
+  private def writeAdvisory(props: Map[String, String]): Option[Long] =
+    props.get(TargetFileSizeProp)
+      .flatMap(s => scala.util.Try(s.toLong).toOption)
+      .map { target =>
+        val factor = props.get(ShuffleCompressionFactorProp)
+          .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(2.0)
+        math.max(1L, (target * factor).toLong)
+      }
+
   /** Write df under data/<uuid>/ (hive-partitioned if the table is), return
     * the new file entries with per-file row counts from the parquet footers.
     */
@@ -2015,14 +2088,7 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     val advisoryKey = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     // explicit caller override (a maintenance procedure's target argument)
     // WINS over the table property — Iceberg's procedure-option precedence
-    val targetAdvisory = advisoryOverride.orElse(
-      props.get(TargetFileSizeProp)
-        .flatMap(s => scala.util.Try(s.toLong).toOption)
-        .map { target =>
-          val factor = props.get(ShuffleCompressionFactorProp)
-            .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(2.0)
-          math.max(1L, (target * factor).toLong)
-        })
+    val targetAdvisory = advisoryOverride.orElse(writeAdvisory(props))
     val prevAdvisory = targetAdvisory.map(_ => spark.conf.getOption(advisoryKey))
     targetAdvisory.foreach(v => spark.conf.set(advisoryKey, v.toString))
     try {
@@ -2220,6 +2286,13 @@ object GraftTable {
     */
   private[graft] val PosCol = "_gf_pos"
 
+  /** [[GraftTable.commitDelta]] change-set columns: does the row delete,
+    * does it append, and the name a delete key travels under (apart from
+    * the appended value of its column). */
+  private[graft] val DeleteFlag = "_gf_delete"
+  private[graft] val AppendFlag = "_gf_append"
+  private[graft] def deleteKeyCol(k: String): String = s"_gf_key_$k"
+
   /** Directory under `data/` holding equality-delete files. */
   private[table] val DeletesDir = "_deletes"
 
@@ -2285,8 +2358,8 @@ object GraftTable {
     */
   val TargetFileSizeProp = "write.target-file-size-bytes"
 
-  /** Estimated-size ceiling for a single-file delete-vector write; above
-    * it, [[GraftTable.writeDeleteFile]] shards the vector across tasks
+  /** Size ceiling for a single-file delete write; above it,
+    * [[GraftTable.writeDeleteFile]] range-shards the batch across tasks
     * (one file per shard) instead of funneling through `coalesce(1)`.
     * Overridable via system property only so a spec can exercise the
     * sharded path without materializing 64 MB of keys.

@@ -246,4 +246,89 @@ class DmlPlanningSpec extends SparkSpec {
     assert(Dml.plannedFilesWarning(1000001L).nonEmpty)
     assert(Dml.plannedFilesWarning(10L, ceiling = 5L).exists(_.contains("10 files")))
   }
+
+  /** A 40-file table whose file i holds keys [100 i, 100 i + 100). */
+  private def keyOrdered(prefix: String): graft.table.GraftTable = {
+    import spark.implicits._
+    val t = graft.table.GraftTable.create(spark, scratchDir(prefix),
+      Seq((1L, "a")).toDF("k", "v").schema)
+    (0 until 40).foreach { i =>
+      t.append((i * 100L until i * 100L + 100L).map(j => (j, s"v$j")).toDF("k", "v").coalesce(1))
+    }
+    t
+  }
+
+  test("source-key candidates: a scattered small source plans only the files holding its keys") {
+    import spark.implicits._
+    val t = keyOrdered("merge-points-")
+    // 100 keys in three files (0, 17, 39): their envelope spans all 40
+    val keys = (0L until 40L) ++ (1700L until 1730L) ++ (3970L until 4000L)
+    val src = keys.map(k => (k, s"s$k")).toDF("k", "v")
+    val planned = t.latest
+    val (candidates, distinct) = Dml.sourceKeyCandidates(t, planned, src, "k")
+    assert(candidates.size === 3, candidates.map(_.path))
+    assert(distinct)
+    assert(t.planBetween(planned, "k", keys.min, keys.max)._1.size === 40)
+    // the COW MERGE plans from the same rule and stays exact
+    Dml.merge(t, src, "k", Map("v" -> col("src.v")), insertNotMatched = true)
+    assert(t.readLatest().count() === 4000)
+    assert(t.readLatest().filter(col("v").startsWith("s")).count() === 100)
+    assert(t.latest.files.map(_.path).toSet.intersect(planned.files.map(_.path).toSet).size === 37)
+  }
+
+  test("merge-on-read MERGE scans each candidate file once; UPDATE runs no file-name collect") {
+    import spark.implicits._
+    val t = keyOrdered("merge-mor-scan-")
+    val src = ((1710L until 1720L) ++ (9000L until 9005L)).map(k => (k, s"s$k")).toDF("k", "v")
+    val candidates = Dml.sourceKeyCandidates(t, t.latest, src, "k")._1
+      .map(_.path.split('/').last).toSet
+    assert(candidates.size === 1)
+    def tableScans(seen: graft.SparkProbe.Observed) =
+      seen.scans.filter(_.relation.location.rootPaths.exists(_.toString.contains(t.tableDir)))
+    val (_, merged) = graft.SparkProbe.observe(spark)(
+      Dml.mergeMor(t, src, "k", Map("v" -> col("src.v")), insertNotMatched = true))
+    val scans = tableScans(merged)
+    assert(graft.SparkProbe.filesRead(scans).sum === candidates.size)
+    assert(scans.flatMap(_.relation.location.inputFiles).map(_.split('/').last).toSet ===
+      candidates)
+    assert(t.readLatest().count() === 4005)
+    assert(t.readLatest().filter(col("k") === 1715).select("v").as[String].head === "s1715")
+    // UPDATE: one read of its candidate files (file 20 and the MERGE's
+    // appended file), no separate file-name planning scan
+    val updateCandidates = Dml.planningCandidates(t, t.latest, col("k") === 2050L)._1
+    assert(updateCandidates.size === 2)
+    val (_, updated) = graft.SparkProbe.observe(spark)(
+      Dml.updateMor(t, col("k") === 2050L, Map("v" -> lit("u")), Seq("k")))
+    assert(graft.SparkProbe.filesRead(tableScans(updated)).sum === updateCandidates.size)
+    assert(updated.jobs <= 4, updated.jobs)
+    assert(t.readLatest().filter(col("v") === "u").count() === 1)
+  }
+
+  test("source-key candidates keep every file when the join compares in the key's type") {
+    import spark.implicits._
+    // STRING keys "00".."99", ten per file: '01' sits in a file whose string
+    // bounds ["00", "09"] exclude "1", yet Spark joins '01' to an INT 1
+    def stringKeyed(prefix: String) = {
+      val t = graft.table.GraftTable.create(spark, scratchDir(prefix),
+        Seq(("a", "b")).toDF("k", "v").schema)
+      (0 until 10).foreach { i =>
+        t.append((0 until 10).map(j => (s"$i$j", "old")).toDF("k", "v").coalesce(1))
+      }
+      t
+    }
+    val src = Seq((1, "new")).toDF("k", "v")
+    val probe = stringKeyed("merge-str-probe-")
+    assert(Dml.sourceKeyCandidates(probe, probe.latest, src, "k")._1.size === 10)
+    def check(t: graft.table.GraftTable): Unit = {
+      assert(t.readLatest().count() === 100)
+      assert(t.readLatest().filter(col("v") === "new").select("k").as[String].collect().toSeq ===
+        Seq("01"))
+    }
+    val mor = stringKeyed("merge-str-mor-")
+    Dml.mergeMor(mor, src, "k", Map("v" -> col("src.v")), insertNotMatched = true)
+    check(mor)
+    val cow = stringKeyed("merge-str-cow-")
+    Dml.merge(cow, src, "k", Map("v" -> col("src.v")), insertNotMatched = true)
+    check(cow)
+  }
 }

@@ -250,7 +250,7 @@ class GraftStreamSourceSpec extends SparkSpec {
     assert(spark.read.format("graft").load(dir).count() == 80)
     // merge-on-read deletes apply inside the readers — the connector serves
     // the same reconciled rows as the table API's scan
-    t.commitMorDelta(Seq(1L, 7L, 80L).toDF("id"), None, "delete-mor")
+    t.commitMorDelta(Seq(1L, 7L, 80L).toDF("id"), "delete-mor")
     val got = spark.read.format("graft").load(dir)
     assert(got.count() == 77)
     assert(got.agg(sum("id")).head.getLong(0) == 80L * 81L / 2 - 1 - 7 - 80)
@@ -380,7 +380,7 @@ class GraftStreamSourceSpec extends SparkSpec {
     val dir = scratchDir("conn-write-mor") + "/t"
     val t = GraftTable.create(spark, dir, df.schema)
     t.append(df)
-    t.commitMorDelta(Seq(3L, 9L).toDF("id"), None, "delete-mor")
+    t.commitMorDelta(Seq(3L, 9L).toDF("id"), "delete-mor")
     Seq((31L, "u1", 31.0)).toDF("id", "user", "v")
       .write.format("graft").mode("append").save(dir)
     val got = spark.read.format("graft").load(dir)
@@ -399,7 +399,7 @@ class GraftStreamSourceSpec extends SparkSpec {
     t.append(df)
     // delete key = the partition column itself: the tuple check must read it
     // from the partition constants (it is absent from the file bytes)
-    t.commitMorDelta(Seq("2024-06-02").toDF("ds"), None, "delete-mor")
+    t.commitMorDelta(Seq("2024-06-02").toDF("ds"), "delete-mor")
     val got = spark.read.format("graft").load(dir)
     assert(got.count() == 40)
     assert(got.filter(col("ds") === "2024-06-02").count() == 0)
@@ -418,7 +418,7 @@ class GraftStreamSourceSpec extends SparkSpec {
     val t = GraftTable.create(spark, dir, df.schema)
     // four separate appends → four data files, each carrying the delete
     (0 until 4).foreach(k => t.append(df.filter(col("id") % 4 === k)))
-    t.commitMorDelta(Seq(8L, 16L, 24L).toDF("id"), None, "delete-mor")
+    t.commitMorDelta(Seq(8L, 16L, 24L).toDF("id"), "delete-mor")
     val scan = spark.read.format("graft").load(dir)
     assert(scan.rdd.getNumPartitions >= 4)
     val before = GraftDeleteCache.parses.get()

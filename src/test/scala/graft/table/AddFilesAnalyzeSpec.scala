@@ -238,7 +238,7 @@ class AddFilesAnalyzeSpec extends SparkSpec {
 
     // MOR deletes make footer bounds unsafe → re-analyze must DROP bounds
     // while refreshing ndv (stale bounds would be silently wrong)
-    t.commitMorDelta(Seq(1L).toDF("k"), None, "delete")
+    t.commitMorDelta(Seq(1L).toDF("k"), "delete")
     t.analyzeColumns(Seq("k"))
     val props2 = t.properties
     assert(props2(s"${GraftTable.StatsColPrefix}k.ndv") == "3")

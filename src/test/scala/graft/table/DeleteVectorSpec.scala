@@ -186,7 +186,7 @@ class DeleteVectorSpec extends SparkSpec {
     val dv = Seq(("nonexistent.parquet", 0L))
       .toDF(GraftTable.WrittenAtCol, GraftTable.PosCol)
     intercept[java.util.ConcurrentModificationException] {
-      t.commitDvDelta(dv, None, "delete-dv", basedOn = Some(planned))
+      t.commitDvDelta(dv, "delete-dv", basedOn = Some(planned))
     }
   }
 
@@ -238,5 +238,55 @@ class DeleteVectorSpec extends SparkSpec {
     val viaConnector = spark.read.format("graft").load(dir)
       .select("id").as[Long].collect().sorted
     assert(viaConnector === t.readLatest().select("id").as[Long].collect().sorted)
+  }
+
+  /** Every path under the table's data directory. */
+  private def dataListing(t: GraftTable): Set[String] = {
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(t.tableDir, "data"))
+    try { import scala.jdk.CollectionConverters._; walk.iterator.asScala.map(_.toString).toSet }
+    finally walk.close()
+  }
+
+  test("a MERGE cardinality violation leaves no file behind (equality and positional)") {
+    Seq(false, true).foreach { positional =>
+      val t = newPrimitiveTable("merge-dup-clean-")
+      val (before, head) = (dataListing(t), t.latest)
+      val src = Seq((2L, 200L, "a"), (2L, 201L, "b"), (9L, 90L, "i")).toDF("id", "v", "s")
+      val e = intercept[Exception] {
+        if (positional) Dml.mergeMorPositional(t, src, "id", Map("v" -> col("src.v")), true)
+        else Dml.mergeMor(t, src, "id", Map("v" -> col("src.v")), insertNotMatched = true)
+      }
+      assert(e.toString.contains("cardinality violation") ||
+        Option(e.getCause).exists(_.toString.contains("cardinality violation")), e)
+      assert(dataListing(t) === before, s"positional=$positional")
+      assert(t.latest === head)
+    }
+  }
+
+  test("merge-on-read DML leaves no persisted RDD or cached relation, on success or raise") {
+    val t = newPrimitiveTable("mor-release-")
+    t.setProperties(Map(GraftTable.IdentifierColumnsProp -> Some("id")))
+    val dup = Seq((3L, 1L, "a"), (3L, 2L, "b")).toDF("id", "v", "s")
+    val statements: Seq[() => Any] = Seq(
+      () => Dml.mergeMor(t, Seq((2L, 5L, "m")).toDF("id", "v", "s"), "id",
+        Map("v" -> col("src.v")), insertNotMatched = true),
+      () => Dml.mergeMor(t, dup, "id", Map("v" -> col("src.v")), insertNotMatched = true),
+      () => Dml.mergeMorPositional(t, dup, "id", Map("v" -> col("src.v")), true),
+      () => Dml.mergeMorPositional(t, Seq((4L, 6L, "p")).toDF("id", "v", "s"), "id",
+        Map("v" -> col("src.v")), insertNotMatched = false),
+      () => Dml.updateMor(t, col("id") === 5L, Map("v" -> lit(7L)), Seq("id")),
+      () => Dml.updateMorPositional(t, col("id") === 6L, Map("v" -> lit(8L))),
+      () => Dml.deleteMor(t, col("id") === 7L, Seq("id")),
+      () => Dml.deleteMorPositional(t, col("id") === 8L),
+      () => Dml.upsertMor(t, dup, Seq("id")))
+    val cache = spark.sharedState.cacheManager
+    statements.zipWithIndex.foreach { case (run, i) =>
+      val (rdds, cached) = (spark.sparkContext.getPersistentRDDs.keySet, cache.isEmpty)
+      scala.util.Try(run())
+      assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(rdds), s"statement $i")
+      assert(cache.isEmpty === cached, s"statement $i")
+    }
+    assert(t.readLatest().select("id", "v").as[(Long, Long)].collect().sortBy(_._1) ===
+      Array((1L, 10L), (2L, 5L), (3L, 30L), (4L, 6L), (5L, 7L), (6L, 8L)))
   }
 }
