@@ -389,10 +389,11 @@ object Maintenance {
     */
   /** Default orphan grace window (Iceberg's remove_orphan_files default):
     * an unreferenced file younger than this is treated as a possible
-    * IN-FLIGHT write, not an orphan — writeDataFiles publishes part-files
-    * into the shared data/ layout BEFORE the snapshot doc commits, so a
-    * graceless sweep racing a writer would delete files the imminent
-    * commit references (silent table corruption, not a spurious failure).
+    * IN-FLIGHT write, not an orphan — write tasks write every data and
+    * delete file at its final name in the shared data/ layout BEFORE the
+    * snapshot doc commits, so a graceless sweep racing a writer would
+    * delete files the imminent commit references (silent table corruption,
+    * not a spurious failure).
     */
   val DefaultOrphanGraceMillis: Long = 3L * 24 * 60 * 60 * 1000
 

@@ -13,7 +13,7 @@ import org.apache.spark.sql.connector.catalog.functions.UnboundFunction
 import org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
 import org.apache.spark.sql.connector.read.ScanBuilder
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsOverwrite, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, Write, WriteBuilder}
 import org.apache.spark.sql.sources.{AlwaysTrue, And => SAnd, EqualNullSafe => SEqualNullSafe, EqualTo => SEqualTo, Filter => SFilter, GreaterThan => SGt, GreaterThanOrEqual => SGte, In => SIn, IsNotNull => SIsNotNull, IsNull => SIsNull, LessThan => SLt, LessThanOrEqual => SLte, Not => SNot, Or => SOr, StringContains => SContains, StringEndsWith => SEndsWith, StringStartsWith => SStartsWith}
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -99,8 +99,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   // ---- functions (SELECT <cat>.system.<fn>(...)) ----
 
+  /** `system.<fn>` from SQL; a bare `<fn>` is how Spark resolves the
+    * partition transforms a write declares as its distribution. */
   override def loadFunction(ident: Identifier): UnboundFunction = {
-    if (!ident.namespace().map(_.toLowerCase).sameElements(Array("system")))
+    if (!ident.namespace().map(_.toLowerCase).sameElements(Array("system")) &&
+        ident.namespace().nonEmpty)
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchFunctionException(ident)
     GraftFunctions.load(ident.name()).getOrElse(
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchFunctionException(ident))
@@ -609,15 +612,11 @@ object GraftCatalog {
 /** A catalog-resolved graft table: the connector table
   * ([[GraftStreamTable]]: scans with the full pushdown surface, streaming
   * read/write) plus the catalog-only faces — partitioning/properties
-  * reporting, a NATIVE DSv2 batch write (staged part files published
-  * through the table API's append/overwrite, so one code path owns
-  * distribution and commit), metadata-delete (`SupportsDelete`), and
-  * group-based copy-on-write row-level operations
-  * (`SupportsRowLevelOperations` — SQL UPDATE/MERGE/DELETE).
-  *
-  * Complex-typed tables keep the V1 write bridge (the native writer stages
-  * through the primitive-physical parquet writer) — every SQL surface still
-  * works, writes just route through the table API DataFrame path.
+  * reporting, the native DSv2 batch write ([[GraftWrite]]: tasks write every
+  * file once, at its final name, before the driver's one commit; every
+  * column type), metadata-delete (`SupportsDelete`), and group-based
+  * copy-on-write row-level operations (`SupportsRowLevelOperations` — SQL
+  * UPDATE/MERGE/DELETE).
   */
 private[sources] case class GraftCatalogTable(dir: String, identName: String,
     pinnedSnapshot: Option[Long] = None, pinnedTimestamp: Option[Long] = None)
@@ -626,8 +625,6 @@ private[sources] case class GraftCatalogTable(dir: String, identName: String,
     with SupportsRowLevelOperations with SupportsDelete {
 
   private def pinned = pinnedSnapshot.isDefined || pinnedTimestamp.isDefined
-  private def allPrimitive: Boolean =
-    schema().fields.forall(f => GraftStreamSource.readable(f.dataType))
 
   override def name(): String = identName
 
@@ -643,11 +640,8 @@ private[sources] case class GraftCatalogTable(dir: String, identName: String,
 
   override def capabilities(): java.util.Set[TableCapability] = {
     val caps = java.util.EnumSet.copyOf(super.capabilities())
-    if (allPrimitive) {
-      caps.add(TableCapability.BATCH_WRITE)
-      caps.add(TableCapability.OVERWRITE_BY_FILTER)
-      caps.remove(TableCapability.V1_BATCH_WRITE)
-    }
+    caps.add(TableCapability.BATCH_WRITE)
+    caps.add(TableCapability.OVERWRITE_BY_FILTER)
     caps
   }
 
@@ -665,37 +659,7 @@ private[sources] case class GraftCatalogTable(dir: String, identName: String,
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     require(!pinned, s"cannot write into a time-travel read of $identName")
-    if (!allPrimitive) super.newWriteBuilder(info)
-    else new WriteBuilder with SupportsTruncate with SupportsOverwrite {
-      // append by default; truncate()/overwrite(AlwaysTrue) = full-table
-      // overwrite (the INSERT OVERWRITE static default); a non-trivial
-      // filter = atomic filter-overwrite
-      private var overwriteAll = false
-      private var overwriteCond: Option[Column] = None
-      override def truncate(): WriteBuilder = { overwriteAll = true; this }
-      override def canOverwrite(filters: Array[SFilter]): Boolean =
-        GraftCatalog.filtersToColumn(filters).isDefined
-      override def overwrite(filters: Array[SFilter]): WriteBuilder = {
-        if (filters.forall(_.isInstanceOf[AlwaysTrue])) overwriteAll = true
-        else overwriteCond = Some(GraftCatalog.filtersToColumn(filters).getOrElse(
-          throw new UnsupportedOperationException(
-            s"graft overwrite: untranslatable filters ${filters.mkString(", ")}")))
-        this
-      }
-      override def build(): Write = new Write {
-        override def toBatch: BatchWrite =
-          new GraftBatchWrite(dir, info.schema(), overwriteAll, overwriteCond)
-        override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
-          require(!overwriteAll && overwriteCond.isEmpty,
-            "graft streaming sink is append-only: use outputMode('append')")
-          val shape = (st: StructType) => st.fields.map(f => (f.name, f.dataType)).toSet
-          require(shape(info.schema()) == shape(schema()),
-            s"graft streaming sink: stream schema ${info.schema().simpleString} " +
-              s"does not match table $dir ${schema().simpleString}")
-          new GraftStreamingWrite(dir, info.schema(), info.queryId())
-        }
-      }
-    }
+    new GraftWriteBuilder(dir, info, viaCatalog = true)
   }
 
   // ---- metadata delete (Spark's fast path for translatable DELETE) ----
@@ -747,7 +711,7 @@ private[sources] object GraftCatalogTable {
   * into a `ReplaceData` plan over this operation's scan; the scan records
   * exactly which files survived static filter pruning (the "groups"), the
   * rewrite query produces those files' full replacement rows, and the write
-  * commits `commitRewrite(staged, keep = everything not scanned)` against
+  * commits the written replacement files with `keep = everything not scanned` against
   * the snapshot the scan planned — a concurrent commit in between aborts the
   * DML (serializable), never silently drops it.
   *
@@ -805,11 +769,8 @@ private[sources] class GraftCowOperation(dir: String, info: RowLevelOperationInf
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
-      override def build(): Write = new Write {
-        override def toBatch: BatchWrite =
-          new GraftCowReplaceWrite(dir, info.schema(), () => planned,
-            command().toString.toLowerCase)
-      }
+      override def build(): Write = new GraftWrite(dir, info.schema(), viaCatalog = true,
+        GraftWrite.Replace(() => planned, command().toString.toLowerCase))
     }
 
   override def description(): String = s"GraftCowOperation($dir, ${command()})"
@@ -900,102 +861,4 @@ private[sources] object GraftStagedTable {
   case object Create extends Mode
   case object Replace extends Mode
   case object CreateOrReplace extends Mode
-}
-
-/** Shared staging machinery for native DSv2 batch writes: every task stages
-  * one parquet part file (the table's physical conventions, via the same
-  * writer as the streaming sink) under `data/_batchwrite/<uuid>/`; the
-  * driver-side commit reads the staged files back and publishes through the
-  * table API in ONE snapshot commit, so hash distribution, partition
-  * transforms, WRITE ORDERED BY, and CAS retry are identical to every other
-  * write route. Underscore-prefixed staging is invisible to table scans and
-  * ages out through orphan cleanup if a driver dies mid-write.
-  */
-private[sources] abstract class GraftStagedBatchWrite(dir: String,
-    writeSchema: StructType) extends BatchWrite {
-
-  protected val stagingRoot: String =
-    s"${SnapshotLog.dataPath(dir)}/_batchwrite/${java.util.UUID.randomUUID()}"
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    GraftBatchWriterFactory(stagingRoot, writeSchema.json)
-
-  /** The staged rows as ONE DataFrame in the table's column order (columns
-    * the write schema lacks stay absent — the table API refuses shape
-    * drift, same as any append).
-    */
-  protected def stagedFrame(messages: Array[WriterCommitMessage]): DataFrame = {
-    val spark = SparkSession.active
-    val staged = messages.toSeq.collect {
-      case GraftStagedFile(path, rows) if rows > 0L => path
-    }
-    if (staged.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        writeSchema)
-    else {
-      val df = spark.read.schema(writeSchema).parquet(staged: _*)
-      val order = GraftStreamSource.tableSchema(dir).fieldNames
-        .filter(df.columns.contains)
-      df.select(order.map(col).toIndexedSeq: _*)
-    }
-  }
-
-  protected def cleanup(): Unit = {
-    val p = new org.apache.hadoop.fs.Path(stagingRoot)
-    scala.util.Try(p.getFileSystem(new Configuration()).delete(p, true))
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = cleanup()
-}
-
-/** Native batch write: append, or atomic (filter-)overwrite. */
-private[sources] class GraftBatchWrite(dir: String, writeSchema: StructType,
-    overwriteAll: Boolean, overwriteCond: Option[Column])
-    extends GraftStagedBatchWrite(dir, writeSchema) {
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val t = GraftTable.load(SparkSession.active, dir)
-    val df = stagedFrame(messages)
-    try {
-      if (overwriteAll) t.overwrite(df)
-      else overwriteCond match {
-        case None => t.append(df)
-        case Some(cond) =>
-          // atomic filter-overwrite (INSERT OVERWRITE over a static
-          // partition predicate): rewrite matched files minus matching
-          // rows, union the staged rows, keep everything untouched — ONE
-          // commit
-          val (matched, untouched, planned) = graft.dml.Dml.planFiles(t, cond)
-          val survivors = t.readFiles(matched, planned).filter(!cond)
-          t.commitRewrite(survivors.unionByName(df), untouched, "overwrite",
-            basedOn = Some(planned))
-      }
-    } finally cleanup()
-  }
-}
-
-/** The `ReplaceData` write of a COW row-level operation: swap the scan's
-  * planned files for the staged replacement rows in one serializable commit.
-  */
-private[sources] class GraftCowReplaceWrite(dir: String, writeSchema: StructType,
-    plannedRef: () => Option[(Snapshot, Seq[FileEntry])], operation: String)
-    extends GraftStagedBatchWrite(dir, writeSchema) {
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val t = GraftTable.load(SparkSession.active, dir)
-    val df = stagedFrame(messages)
-    try {
-      val (plannedSnap, scanned) = plannedRef().getOrElse((t.latest, Nil))
-      val scannedPaths = scanned.map(_.path).toSet
-      val keep = plannedSnap.files.filterNot(e => scannedPaths.contains(e.path))
-      t.commitRewrite(df, keep, operation, basedOn = Some(plannedSnap))
-    } finally cleanup()
-  }
-}
-
-private[sources] case class GraftBatchWriterFactory(stagingRoot: String,
-    schemaJson: String) extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new GraftStreamingDataWriter(
-      s"$stagingRoot/part-$partitionId-$taskId.parquet", schemaJson)
 }

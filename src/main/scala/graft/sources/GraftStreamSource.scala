@@ -14,8 +14,8 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Tabl
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, Count, CountStar, Max, Min}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics, SupportsRuntimeFiltering}
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
-import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, InsertableRelation}
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
+import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider}
 import org.apache.spark.sql.sources.{Filter => SFilter}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.sources.DataSourceRegister
@@ -65,12 +65,9 @@ class GraftStreamSource extends TableProvider with DataSourceRegister
   /** Path-based batch write (`df.write.format("graft").mode(...).save(dir)`).
     *
     * `DataFrameWriter.save` only takes the native DSv2 write path when the
-    * table advertises `BATCH_WRITE`; a `V1_BATCH_WRITE` table drops to
-    * Spark's V1 source command (`DataSource.planForWriting`), which requires
-    * the provider to implement THIS interface — the `V1Write` →
-    * `InsertableRelation` hook below only serves catalog-table INSERTs. Both
-    * routes share one body ([[GraftStreamSource.writeInto]]): align columns
-    * to the table layout, then the table API's own distributed
+    * table advertises `BATCH_WRITE`; the path table does not, so Spark's V1
+    * source command (`DataSource.planForWriting`) calls THIS interface:
+    * align columns to the table layout, then the table API's own distributed
     * append/overwrite (partition transforms, CAS commit retry, schema-shape
     * refusal, WRITE ORDERED BY all ride free).
     */
@@ -143,47 +140,16 @@ private[sources] class GraftStreamTable(dir: String, tableSchema: StructType)
     })
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.MICRO_BATCH_READ, TableCapability.BATCH_READ,
-      TableCapability.V1_BATCH_WRITE, TableCapability.STREAMING_WRITE,
-      TableCapability.TRUNCATE)
+      TableCapability.STREAMING_WRITE, TableCapability.TRUNCATE)
 
-  /** Batch WRITE through the connector (`df.write.format("graft")
-    * .mode("append"|"overwrite").save(dir)`) — the V1 write bridge
-    * delegating to the table's OWN append/overwrite: the write stays fully
-    * distributed (the table API's hash-distributed partitioned write, file
-    * targeting, footer-stats harvest) and every table semantic rides free —
-    * partition transforms, CAS commit retry, schema-shape refusal,
-    * WRITE ORDERED BY properties, MOR delete retention on append. A
-    * native DSv2 DataWriter would have to re-implement exactly those
-    * driver-coordinated semantics executor-side for no added parallelism
-    * (the underlying write already fans out). Streaming writes go through
-    * the `StreamOps` foreachBatch sinks, which add the batch-id
-    * exactly-once fence no blind epoch commit could.
+  /** `df.writeStream.format("graft").start(dir)` — the native DSv2
+    * streaming sink, exactly-once through the table's stream-batch-id fence
+    * ([[GraftWrite]]). Path-based BATCH writes (`df.write.format("graft")
+    * .save(dir)`) take [[GraftStreamSource.createRelation]], the V1 bridge
+    * into the table's own append/overwrite.
     */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new WriteBuilder with SupportsTruncate {
-      private var replace = false
-      override def truncate(): WriteBuilder = { replace = true; this }
-      override def build(): Write = new V1Write {
-        override def toInsertableRelation: InsertableRelation =
-          new InsertableRelation {
-            override def insert(data: org.apache.spark.sql.DataFrame,
-                overwrite: Boolean): Unit =
-              GraftStreamSource.writeInto(dir, data, replace || overwrite)
-          }
-        // `df.writeStream.format("graft").start(dir)` — the native DSv2
-        // streaming sink (exactly-once through the table's stream-batch-id
-        // fence; see [[GraftStreamingWrite]])
-        override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
-          require(!replace,
-            "graft streaming sink is append-only: use outputMode('append')")
-          val shape = (st: StructType) => st.fields.map(f => (f.name, f.dataType)).toSet
-          require(shape(info.schema()) == shape(tableSchema),
-            s"graft streaming sink: stream schema ${info.schema().simpleString} " +
-              s"does not match table $dir ${tableSchema.simpleString}")
-          new GraftStreamingWrite(dir, info.schema(), info.queryId())
-        }
-      }
-    }
+    new GraftWriteBuilder(dir, info, viaCatalog = false)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     tableSchema.fields.foreach { f =>
       require(GraftStreamSource.readableComplex(f.dataType),
@@ -696,141 +662,6 @@ private[sources] class GraftMicroBatchStream(dir: String,
 
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftReaderFactory
-}
-
-/** The DSv2 STREAMING SINK (`df.writeStream.format("graft").start(dir)`) —
-  * the native-connector half of the streaming write story (the foreachBatch
-  * `StreamOps` sinks remain the route for upsert/WAP/dedup semantics).
-  *
-  * Shape: each epoch's tasks stage parquet part files (logical rows, the
-  * table's column types) under `data/_streaming/<queryId>/<epochId>/` —
-  * underscore-prefixed, so table scans' partition discovery never sees
-  * them; a crashed query's leftovers age out through orphan cleanup. The
-  * driver's `commit(epochId)` then publishes the epoch through
-  * [[graft.table.GraftTable.commitStreamingEpoch]], which fences on the
-  * `stream-batch-id` summary key durable in the SAME snapshot as the data —
-  * Spark's at-least-once epoch replay after restart upgrades to
-  * exactly-once, identical to the foreachBatch ingest contract.
-  *
-  * Scale: staging is one parquet write per task (no shuffle); unpartitioned
-  * tables publish by RENAME + footer harvest (zero data rewrite);
-  * partitioned tables re-enter the table's distributed append so transforms
-  * and hash distribution apply. Task-attempt isolation rides on Spark's
-  * output commit coordinator: only the winning attempt's `commit` keeps its
-  * staged file — `abort` deletes.
-  */
-private[sources] class GraftStreamingWrite(dir: String, schema: StructType,
-    queryId: String)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-  import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, WriterCommitMessage}
-  import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
-
-  private def stagingRoot: String =
-    s"${SnapshotLog.dataPath(dir)}/_streaming/$queryId"
-
-  override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    GraftStreamingWriterFactory(stagingRoot, schema.json)
-
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val t = graft.table.GraftTable.load(spark, dir)
-    // Publish ONLY the files the output commit coordinator's winning
-    // attempts named in their commit messages. The staging dir may hold
-    // zombie-attempt leftovers whose abort never ran — commitStreamingEpoch
-    // deletes the whole epoch dir after the fence-checked commit, so those
-    // never reach the table.
-    val staged = messages.toSeq.collect {
-      case GraftStagedFile(path, rows) if rows > 0L => path
-    }
-    t.commitStreamingEpoch(s"$stagingRoot/$epochId", epochId, staged)
-  }
-
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$stagingRoot/$epochId")
-    scala.util.Try(p.getFileSystem(new Configuration()).delete(p, true))
-  }
-}
-
-private[sources] case class GraftStreamingWriterFactory(stagingRoot: String,
-    schemaJson: String)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new GraftStreamingDataWriter(
-      s"$stagingRoot/$epochId/part-$partitionId-$taskId.parquet", schemaJson)
-}
-
-private[sources] case class GraftStagedFile(path: String, rows: Long)
-    extends org.apache.spark.sql.connector.write.WriterCommitMessage
-
-/** One staged parquet file per task attempt, written with the parquet Group
-  * API under the table's physical conventions (TIMESTAMP_MICROS int64, date
-  * int32, UTF8 binary) so published files are indistinguishable from
-  * batch-append output to every reader and to the footer-stats harvest.
-  */
-private[sources] class GraftStreamingDataWriter(filePath: String, schemaJson: String)
-    extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
-
-  private val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-  schema.fields.foreach { f =>
-    require(GraftStreamSource.readable(f.dataType),
-      s"graft streaming sink: column ${f.name} has unsupported type " +
-        s"${f.dataType.simpleString} (primitive columns only)")
-  }
-  private val path = new org.apache.hadoop.fs.Path(filePath)
-  private val msgType = GraftStreamSource.toMessageType(schema)
-  private val writer = {
-    val conf = new Configuration()
-    org.apache.parquet.hadoop.example.GroupWriteSupport.setSchema(msgType, conf)
-    org.apache.parquet.hadoop.example.ExampleParquetWriter.builder(path)
-      .withConf(conf)
-      .withCompressionCodec(
-        org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-      .build()
-  }
-  private val factory =
-    new org.apache.parquet.example.data.simple.SimpleGroupFactory(msgType)
-  private var rows = 0L
-
-  /** Row-level plans (`DataAndMetadataWritingSparkTask`) hand the metadata
-    * projection separately — this writer has no use for it.
-    */
-  override def write(metadata: InternalRow, record: InternalRow): Unit =
-    write(record)
-
-  override def write(r: InternalRow): Unit = {
-    val g = factory.newGroup()
-    var i = 0
-    while (i < schema.length) {
-      if (!r.isNullAt(i)) schema(i).dataType match {
-        case LongType | TimestampType | TimestampNTZType => g.add(i, r.getLong(i))
-        case IntegerType | DateType => g.add(i, r.getInt(i))
-        case DoubleType => g.add(i, r.getDouble(i))
-        case FloatType => g.add(i, r.getFloat(i))
-        case BooleanType => g.add(i, r.getBoolean(i))
-        case StringType => g.add(i,
-          org.apache.parquet.io.api.Binary.fromString(r.getUTF8String(i).toString))
-        case other => throw new IllegalStateException(s"unwritable type $other")
-      }
-      i += 1
-    }
-    writer.write(g)
-    rows += 1
-  }
-
-  override def commit(): org.apache.spark.sql.connector.write.WriterCommitMessage = {
-    writer.close()
-    if (rows == 0L) // empty attempt: nothing to publish
-      scala.util.Try(path.getFileSystem(new Configuration()).delete(path, false))
-    GraftStagedFile(filePath, rows)
-  }
-
-  override def abort(): Unit = {
-    scala.util.Try(writer.close())
-    scala.util.Try(path.getFileSystem(new Configuration()).delete(path, false))
-  }
-
-  override def close(): Unit = ()
 }
 
 /** One current-schema column's resolution against an EVOLVED file:
@@ -1406,36 +1237,6 @@ object GraftStreamSource {
     case ArrayType(e, _) => readableComplex(e)
     case st: StructType => st.fields.forall(f => readableComplex(f.dataType))
     case other => readable(other)
-  }
-
-  /** Parquet message type for the streaming sink's staged files — the same
-    * physical conventions the table's batch writes pin (TIMESTAMP_MICROS
-    * int64, date int32, UTF8 binary), so stats harvest and every reader
-    * treat published stream files exactly like append output.
-    */
-  private[sources] def toMessageType(s: StructType): org.apache.parquet.schema.MessageType = {
-    import org.apache.parquet.schema.{LogicalTypeAnnotation => LTA, Types}
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val b = Types.buildMessage()
-    s.fields.foreach { f =>
-      val fb = f.dataType match {
-        case LongType => Types.optional(INT64)
-        case IntegerType => Types.optional(INT32)
-        case DoubleType => Types.optional(DOUBLE)
-        case FloatType => Types.optional(FLOAT)
-        case BooleanType => Types.optional(BOOLEAN)
-        case StringType => Types.optional(BINARY).as(LTA.stringType())
-        case TimestampType =>
-          Types.optional(INT64).as(LTA.timestampType(true, LTA.TimeUnit.MICROS))
-        case TimestampNTZType =>
-          Types.optional(INT64).as(LTA.timestampType(false, LTA.TimeUnit.MICROS))
-        case DateType => Types.optional(INT32).as(LTA.dateType())
-        case other => throw new IllegalArgumentException(
-          s"graft streaming sink: column ${f.name} type $other unsupported")
-      }
-      b.addField(fb.named(f.name))
-    }
-    b.named("spark_schema")
   }
 
   private[sources] def readValue(g: org.apache.parquet.example.data.Group,

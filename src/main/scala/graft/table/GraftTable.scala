@@ -17,11 +17,11 @@ import org.apache.spark.sql.types.{BinaryType, DataType, StringType, StructType}
   * list and never see in-flight writers.
   *
   * Layout: parquet part-files under `<dir>/data/` in ONE shared hive layout
-  * (partition dirs common to every commit; part-file names are unique per
-  * write job, and each commit stages under a temp dir then renames into
-  * place), JSON snapshot docs under `<dir>/_graft_log/`. A shared layout is
-  * what lets a read spanning many commits be a single partition-discovery-
-  * clean parquet scan.
+  * (partition dirs common to every commit; each file is written once, by
+  * its write task, at its final name — unique per write — before the
+  * commit references it; see [[DataFileWriter]]), JSON snapshot docs under
+  * `<dir>/_graft_log/`. A shared layout is what lets a read spanning many
+  * commits be a single partition-discovery-clean parquet scan.
   *
   * Scale design:
   *  - commits are metadata-only for untouched files (append = parent list +
@@ -1014,7 +1014,7 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
   }
 
   /** Current table properties (the Iceberg table-properties analog; e.g.
-    * `write.parquet.bloom-filter-columns` — see `writeDataFiles`). Empty for
+    * `write.parquet.bloom-filter-columns` — see `writerFactory`). Empty for
     * tables that never set any.
     */
   def properties: Map[String, String] =
@@ -1204,114 +1204,60 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     commitData(df, "append", parentFiles = true, sortWithinPartitionsCols,
       extraSummary, basedOn, preCommit)
 
-  /** Publish one DSv2 STREAMING epoch's staged part files as an exactly-once
-    * append — the driver half of `df.writeStream.format("graft")`
-    * (graft.sources.GraftStreamingWrite): executors stage parquet under
-    * `data/_streaming/<query>/<epoch>/`, and this commit fences on the same
-    * `stream-batch-id` summary key as the foreachBatch sinks
-    * (StreamOps.ingestBatch), so Spark's at-least-once epoch replay after a
-    * restart upgrades to exactly-once. Returns None when the epoch was
-    * already committed (staging is discarded).
+  /** Commit one DSv2 STREAMING epoch as an exactly-once append — the
+    * driver half of `df.writeStream.format("graft")`
+    * (graft.sources.GraftWrite): the epoch's tasks already wrote their files
+    * at their final names, and `written` holds the entries their commit
+    * messages named. The commit fences on the same `stream-batch-id`
+    * summary key as the foreachBatch sinks (StreamOps.ingestBatch), checked
+    * again INSIDE the CAS retry so two racing replays of one epoch cannot
+    * both land; Spark's at-least-once epoch replay after a restart upgrades
+    * to exactly-once. Returns None when the epoch was already committed
+    * (the replay's files are deleted).
     *
-    * Two publication shapes:
-    *  - UNPARTITIONED table: staged files are already final form — rename
-    *    into the shared data layout + footer-stats harvest, zero data
-    *    rewrite (the Iceberg streaming-append shape). The fence re-checks
-    *    INSIDE the CAS retry so two racing replays cannot both land.
-    *  - PARTITIONED table (identity or transform): the staged logical rows
-    *    re-enter [[append]] as a distributed read — hash distribution,
-    *    derived transform columns, per-partition file targeting and WRITE
-    *    ORDERED BY all apply exactly as for a batch append, at the cost of
-    *    one extra materialization of the epoch (not the table).
+    * Only message-named files are committed — never a listing — so a
+    * zombie attempt's file stays unreferenced (an orphan for
+    * `remove_orphan_files`). A named file that is MISSING means the
+    * coordinator accepted a task whose output vanished: refuse loudly
+    * rather than silently drop its rows.
     */
-  def commitStreamingEpoch(stagingDir: String, epochId: Long,
-      stagedPaths: Seq[String]): Option[Snapshot] = {
+  def commitStreamingEpoch(epochId: Long, written: Seq[FileEntry]): Option[Snapshot] = {
     final case class EpochDone() extends RuntimeException
-    val staging = new org.apache.hadoop.fs.Path(stagingDir)
     def fence: Option[Long] = snapshotsList.flatMap(s =>
       s.summary.get("stream-batch-id") ++
         s.summary.get(GraftTable.CarriedFencePrefix + "stream-batch-id"))
       .map(_.toLong).maxOption
-    def cleanup(): Unit = scala.util.Try(hfs.delete(staging, true))
-    if (fence.exists(_ >= epochId)) { cleanup(); return None }
-    val parentSnap = latest
-    // Publish ONLY the files named by the winning task attempts' commit
-    // messages — never a directory listing. The epoch dir may also hold
-    // files from zombie attempts whose abort never ran (executor crash
-    // after the parquet close, before the commit coordinator answered):
-    // listing would publish those alongside the retry's file (duplicated
-    // rows), and a footer-less torn leftover would fail the footer harvest
-    // on every replay and wedge the stream. cleanup() removes the whole
-    // epoch dir afterwards, zombies included. A message-named file that is
-    // MISSING means the coordinator accepted a task whose output vanished —
-    // refuse loudly rather than silently drop its rows.
-    val staged = stagedPaths.map(new org.apache.hadoop.fs.Path(_))
-    staged.foreach(f => require(hfs.exists(f),
-      s"streaming epoch $epochId: committed task file $f is missing from staging"))
-    if (parentSnap.partitionCols.nonEmpty && staged.nonEmpty) {
-      val df = spark.read.parquet(staged.map(_.toString): _*)
-      val aligned = df.select(DataType.fromJson(parentSnap.schemaJson)
-        .asInstanceOf[StructType].fieldNames.filter(df.columns.contains)
-        .map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
-      // The fence re-check must sit INSIDE the CAS retry (as on the rename
-      // path below): two racing replays of the same epoch — e.g. a zombie
-      // driver beside its restarted successor — would otherwise BOTH pass
-      // the entry check and both commit, duplicating the epoch.
-      try {
-        val snap = append(aligned,
-          extraSummary = Map("stream-batch-id" -> epochId.toString),
-          preCommit = _ => if (fence.exists(_ >= epochId)) throw EpochDone())
-        cleanup()
-        return Some(snap)
-      } catch { case _: EpochDone => cleanup(); return None }
-    }
-    // direct publish: harvest footers at the staging site (a corrupt file
-    // refuses before any move), drop provably-empty part files
-    val withMeta = staged.map { f =>
-      val (rows, st) = footerMeta(f)
-      require(rows >= 0,
-        s"streaming epoch $epochId: unreadable parquet footer for $f")
-      (f, rows, st)
-    }.filter(_._2 != 0L)
     val dataRoot = SnapshotLog.dataPath(tableDir)
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val moved = withMeta.zipWithIndex.map { case ((f, rows, st), i) =>
-      val name = f"stream-$epochId%08d-$token-$i-${f.getName}"
-      val dest = new org.apache.hadoop.fs.Path(dataRoot, name)
-      require(hfs.rename(f, dest), s"could not publish $f to $dest")
-      hfs.setTimes(dest, System.currentTimeMillis(), -1)
-      FileEntry(name, Map.empty, rows, hfs.getFileStatus(dest).getLen, 0L, st)
-    }
-    try {
-      val snap = commitWithRetry { p0 =>
-        val p = p0.getOrElse(throw new IllegalStateException(
-          s"streaming write into $tableDir: table has no snapshots"))
-        if (fence.exists(_ >= epochId)) throw EpochDone()
-        if (shapeOf(DataType.fromJson(p.schemaJson).asInstanceOf[StructType]) !=
-            shapeOf(DataType.fromJson(parentSnap.schemaJson).asInstanceOf[StructType]))
-          throw new java.util.ConcurrentModificationException(
-            s"schema of $tableDir evolved concurrently with the streaming epoch")
-        val id = p.snapshotId + 1
-        val files = (p.files ++ moved.map(_.copy(writtenAt = id))).toList
-        // a zero-file epoch still advances the fence (no write schema
-        // recorded — the streaming source skips it like any empty append)
-        val schemas =
-          if (moved.isEmpty) schemasFor(files, p.schemas)
-          else schemasFor(files, p.schemas + (id.toString -> p.schemaJson))
-        Snapshot(id, Some(p.snapshotId), clock(), "append", p.schemaJson,
-          p.partitionCols, files,
-          Map("stream-batch-id" -> epochId.toString,
-            "added-files" -> moved.size.toString),
-          Nil, schemas, p.chain, p.deletes)
-      }
-      cleanup()
-      Some(snap)
-    } catch {
-      case _: EpochDone =>
-        moved.foreach(e => scala.util.Try(
-          hfs.delete(new org.apache.hadoop.fs.Path(dataRoot, e.path), false)))
-        cleanup()
-        None
+    def drop(): Unit = written.foreach(e => scala.util.Try(
+      hfs.delete(new org.apache.hadoop.fs.Path(dataRoot, e.path), false)))
+    if (fence.exists(_ >= epochId)) { drop(); return None }
+    written.foreach(e => require(hfs.exists(new org.apache.hadoop.fs.Path(dataRoot, e.path)),
+      s"streaming epoch $epochId: committed task file ${e.path} is missing"))
+    val parentSnap = latest
+    try Some(commitWithRetry { p0 =>
+      val p = p0.getOrElse(throw new IllegalStateException(
+        s"streaming write into $tableDir: table has no snapshots"))
+      if (fence.exists(_ >= epochId)) throw EpochDone()
+      if (shapeOf(DataType.fromJson(p.schemaJson).asInstanceOf[StructType]) !=
+          shapeOf(DataType.fromJson(parentSnap.schemaJson).asInstanceOf[StructType]) ||
+          p.partitionCols != parentSnap.partitionCols)
+        throw new java.util.ConcurrentModificationException(
+          s"schema or partitioning of $tableDir evolved concurrently with the streaming epoch")
+      val id = p.snapshotId + 1
+      val files = (p.files ++ written.map(_.copy(writtenAt = id))).toList
+      // a zero-file epoch still advances the fence (no write schema
+      // recorded — the streaming source skips it like any empty append)
+      val schemas =
+        if (written.isEmpty) schemasFor(files, p.schemas)
+        else schemasFor(files, p.schemas + (id.toString -> p.schemaJson))
+      Snapshot(id, Some(p.snapshotId), clock(), "append", p.schemaJson,
+        p.partitionCols, files,
+        Map("stream-batch-id" -> epochId.toString,
+          "added-files" -> written.size.toString),
+        Nil, schemas, p.chain, p.deletes)
+    }) catch {
+      case _: EpochDone => drop(); None
+      case e: Throwable => drop(); throw e
     }
   }
 
@@ -1386,9 +1332,9 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
         s"match table $tableDir ${minusParts(logical).simpleString}")
     // Footers are read at the SOURCE, so a corrupt file refuses the import
     // while everything still sits untouched where the caller put it.
-    // 16-way parallel like the write path's stats harvest — a large import
-    // is O(files) driver metadata work either way (PlanningScaleSpec bounds
-    // the class), but serial footer I/O would dominate wall-clock.
+    // 16-way parallel — a large import is O(files) driver metadata work
+    // either way (PlanningScaleSpec bounds the class), but serial footer
+    // I/O would dominate wall-clock.
     val withStats = {
       import scala.collection.parallel.CollectionConverters._
       val par = parsed.par
@@ -1521,15 +1467,22 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
       basedOn: Option[Snapshot] = None, clearDeletes: Boolean = false,
       advisoryBytesOverride: Option[Long] = None): Snapshot = {
     val planned = basedOn.getOrElse(latest)
+    commitReplace(writeDataFiles(df, planned.snapshotId + 1,
+      advisoryOverride = advisoryBytesOverride), keepFiles, operation, planned, clearDeletes)
+  }
+
+  /** [[commitRewrite]]'s commit, for files already written (the connector's
+    * copy-on-write and filter-overwrite writes). A commit that fails deletes
+    * them. */
+  private[graft] def commitReplace(written: Seq[FileEntry], keepFiles: Seq[FileEntry],
+      operation: String, planned: Snapshot, clearDeletes: Boolean = false): Snapshot = {
     val fences = carriedFences()
-    val written = writeDataFiles(df, planned.snapshotId + 1,
-      advisoryOverride = advisoryBytesOverride)
-    commitWithRetry { parent =>
+    onFailureDrop(written) { commitWithRetry { parent =>
       val p = parent.getOrElse(throw new IllegalStateException("rewrite on empty table"))
       if (p.snapshotId != planned.snapshotId)
         throw new java.util.ConcurrentModificationException(
           s"table advanced to ${p.snapshotId} since rewrite planned at ${planned.snapshotId}")
-      val files = (keepFiles ++ written).toList
+      val files = (keepFiles ++ written.map(_.copy(writtenAt = p.snapshotId + 1))).toList
       // Equality deletes ride along: rewritten output was read with deletes
       // APPLIED and carries writtenAt = the new id ≥ every appliedAt, so the
       // carried deletes no longer touch it; kept files still need them.
@@ -1541,8 +1494,18 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
         fences ++ Map("added-files" -> written.size.toString), Nil,
         schemasFor(files, p.schemas + ((p.snapshotId + 1).toString -> p.schemaJson)),
         p.chain, deletes)
-    }
+    } }
   }
+
+  /** Delete `written` when `commit` throws: a failed write leaves nothing
+    * behind. */
+  private def onFailureDrop[A](written: Seq[FileEntry])(commit: => A): A =
+    try commit catch { case e: Throwable =>
+      val dataRoot = SnapshotLog.dataPath(tableDir)
+      written.foreach(f => scala.util.Try(
+        hfs.delete(new org.apache.hadoop.fs.Path(dataRoot, f.path), false)))
+      throw e
+    }
 
   /** Merge-on-read commit primitive (the Iceberg v2 equality-delete write
     * path): ONE commit that adds an equality-delete file holding `keys`'
@@ -1716,10 +1679,6 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     */
   private def writeDeleteFile(keys: DataFrame,
       measuredBytes: Option[BigInt] = None): Seq[DeleteEntry] = {
-    val dataRoot = SnapshotLog.dataPath(tableDir)
-    val delDir = new org.apache.hadoop.fs.Path(dataRoot, DeletesDir)
-    val stage = new org.apache.hadoop.fs.Path(dataRoot,
-      s".stage-del-${java.util.UUID.randomUUID().toString.take(8)}")
     // ONE delete file per commit by default: a delete batch is keys, not
     // data — small relative to the table by construction — and a single
     // file keeps the delete files a read parses exactly as many as the
@@ -1757,23 +1716,9 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
           else keys.columns.head
         keys.repartitionByRange(shards, col(shardKey))
       }
-    staged0.write.mode("errorifexists").parquet(stage.toString)
-    hfs.mkdirs(delDir)
-    val staged = listParquetFiles(stage)
-    val entries = staged.flatMap { s =>
-      val (rows, stats) = footerMeta(s)
-      // a sharded write can leave empty range shards — nothing to publish
-      if (rows == 0L) None
-      else {
-        val dest = new org.apache.hadoop.fs.Path(delDir, s.getName)
-        require(hfs.rename(s, dest), s"could not publish delete file $s to $dest")
-        val st = hfs.getFileStatus(dest)
-        Some(DeleteEntry(s"$DeletesDir/${s.getName}", Nil, rows, st.getLen, 0L,
-          stats = stats))
-      }
-    }
-    hfs.delete(stage, true)
-    entries
+    // a sharded write's empty range shards write no file
+    DataFileWriter.run(staged0, writerFactory(keys.schema, Nil, "del", deletes = true))
+      .map(e => DeleteEntry(e.path, Nil, e.rowCount, e.sizeBytes, 0L, stats = e.stats))
   }
 
   /** M-step — the Iceberg `rewrite_position_delete_files` analog for
@@ -1921,18 +1866,23 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
           s"writing ${writeShape.toSeq.sortBy(_._1).mkString(", ")} " +
           s"into ${cur.toSeq.sortBy(_._1).mkString(", ")}")
     }
-    val written = writeDataFiles(df,
-      snapshotsList.lastOption.map(_.snapshotId + 1).getOrElse(1L), sortCols)
+    commitWritten(writeDataFiles(df,
+      snapshotsList.lastOption.map(_.snapshotId + 1).getOrElse(1L), sortCols),
+      operation, parentFiles, df.schema, extraSummary, basedOn, preCommit)
+  }
+
+  /** [[commitData]]'s commit, for files already written (the connector's
+    * batch writes): ONE snapshot that adds `written` — keeping the parent's
+    * files for an append, replacing them for an overwrite. On ANY abort
+    * (preCommit fence, basedOn pin, evolution race) the files are deleted
+    * instead of left for the grace-period GC to find days later. */
+  private[graft] def commitWritten(written: Seq[FileEntry], operation: String,
+      parentFiles: Boolean, writeSchema: StructType,
+      extraSummary: Map[String, String] = Map.empty, basedOn: Option[Snapshot] = None,
+      preCommit: Option[Snapshot] => Unit = _ => ()): Snapshot = {
+    val writeShape = shapeOf(writeSchema)
     val commitT0 = System.nanoTime()
-    // On ANY commit abort (preCommit fence, basedOn pin, evolution race) the
-    // staged files were never published — delete them instead of leaving
-    // orphans for the grace-period GC to find days later.
-    def dropWritten(): Unit = {
-      val dataRoot = SnapshotLog.dataPath(tableDir)
-      written.foreach(e => scala.util.Try(
-        hfs.delete(new org.apache.hadoop.fs.Path(dataRoot, e.path), false)))
-    }
-    try commitWithRetry { parent =>
+    try onFailureDrop(written) { commitWithRetry { parent =>
       preCommit(parent)
       basedOn.foreach { pinned =>
         if (parent.map(_.snapshotId).getOrElse(0L) != pinned.snapshotId)
@@ -1942,7 +1892,7 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
       }
       val id = parent.map(_.snapshotId + 1).getOrElse(1L)
       val keep = if (parentFiles) parent.map(_.files).getOrElse(Nil) else Nil
-      val schemaJson = parent.map(_.schemaJson).getOrElse(df.schema.json)
+      val schemaJson = parent.map(_.schemaJson).getOrElse(writeSchema.json)
       // If a concurrent evolveSchema won the race between writeDataFiles and
       // this commit attempt, the parent schema no longer matches the bytes we
       // physically wrote — registering the files under the NEW schema would
@@ -1970,9 +1920,7 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
         schemasFor(files,
           parent.map(_.schemas).getOrElse(Map.empty) + (id.toString -> schemaJson)),
         parent.map(_.chain).getOrElse(Nil), deletes)
-    } catch {
-      case e: Throwable => dropWritten(); throw e
-    } finally lastCommitNanos = System.nanoTime() - commitT0
+    } } finally lastCommitNanos = System.nanoTime() - commitT0
   }
 
   /** D8 — partition evolution (spec ICEBERG-Interoperability-Test-Spec.md:79):
@@ -1983,7 +1931,7 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     val planned = latest
     val written = writeDataFiles(readLatest(), planned.snapshotId + 1,
       partColsOverride = Some(newPartitionCols))
-    commitWithRetry { parent =>
+    onFailureDrop(written) { commitWithRetry { parent =>
       val p = parent.getOrElse(throw new IllegalStateException("evolve on empty table"))
       if (p.snapshotId != planned.snapshotId)
         throw new java.util.ConcurrentModificationException(
@@ -1992,13 +1940,18 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
         p.schemaJson, newPartitionCols.toList, written.toList,
         Map("added-files" -> written.size.toString), Nil,
         Map((p.snapshotId + 1).toString -> p.schemaJson), p.chain)
-    }
+    } }
   }
 
   /** The advisory partition size a table write splits at: the table's
-    * `write.target-file-size-bytes` times its shuffle-to-parquet ratio (see
-    * [[writeDataFiles]]); None when the table sets no target. */
-  private def writeAdvisory(props: Map[String, String]): Option[Long] =
+    * `write.target-file-size-bytes` (the Iceberg write knob the reference
+    * configures, blob-dfs_bench.py / framework.yaml) times its
+    * shuffle-to-parquet ratio. The rebalance splits on SHUFFLE bytes, but
+    * parquet encodes several-fold smaller — without compensation a 64 MB
+    * advisory lands ~8-15 MB files. `write.shuffle-compression-factor`
+    * defaults to 2.0: oversizing a split is corrected by the next
+    * compaction, undersizing never is. None when the table sets no target. */
+  private[graft] def writeAdvisory(props: Map[String, String]): Option[Long] =
     props.get(TargetFileSizeProp)
       .flatMap(s => scala.util.Try(s.toLong).toOption)
       .map { target =>
@@ -2007,180 +1960,121 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
         math.max(1L, (target * factor).toLong)
       }
 
-  /** Write df under data/<uuid>/ (hive-partitioned if the table is), return
-    * the new file entries with per-file row counts from the parquet footers.
+  /** Write `df` as data files of the next commit (`snapshotId`) through
+    * the one writer ([[DataFileWriter]]) and return their entries.
+    *
+    * write.distribution-mode=hash (ref framework.yaml:139): a partitioned
+    * write clusters rows by partition value first, else every task emits a
+    * file per partition value — task-count × partition-count tiny files.
+    * REBALANCE, not plain repartition, is the target-file-size half of the
+    * story: hash repartitioning maps every partition VALUE to exactly one
+    * task — one file per value per commit regardless of size, so a hot
+    * partition at 100 TB becomes one multi-GB single-task file. The AQE
+    * rebalance keeps the same single shuffle and the same value clustering,
+    * but splits shuffle partitions past the advisory size and coalesces tiny
+    * ones — bounded file sizes AND write parallelism on skewed partitions
+    * (the Iceberg `write.target-file-size-bytes` + hash-distribution pair).
+    * The advisory size rides in the rebalance itself, so no session conf is
+    * touched and concurrent writes into different tables never see each
+    * other's settings.
+    *
+    * Within each task the rows sort by partition value, then by the per-call
+    * sort or the sticky `write.sort-order` property (the Iceberg WRITE
+    * ORDERED BY table setting): the writer closes a file when the partition
+    * changes, and within-file ordering is what narrows per-file min/max
+    * bounds and makes stats pruning bite.
     */
-  private def writeDataFiles(df: DataFrame, snapshotId: Long,
+  private[graft] def writeDataFiles(df: DataFrame, snapshotId: Long,
       sortCols: Seq[String] = Nil,
       partColsOverride: Option[Seq[String]] = None,
       advisoryOverride: Option[Long] = None): Seq[FileEntry] = {
-    val parent = snapshotsList.lastOption
-    val partCols = partColsOverride.map(_.toList)
-      .getOrElse(parent.map(_.partitionCols).getOrElse(Nil))
-    val commitDirName = f"c$snapshotId%08d-${java.util.UUID.randomUUID().toString.take(8)}"
-    val dataRoot = SnapshotLog.dataPath(tableDir)
-    val commitDir = new org.apache.hadoop.fs.Path(dataRoot, commitDirName)
-    // write.distribution-mode=hash (ref framework.yaml:139): cluster rows by
-    // partition columns before a partitioned write, else every task emits a
-    // file per partition value — task-count × partition-count tiny files.
-    // REBALANCE, not plain repartition, is the target-file-size half of the
-    // story: hash repartitioning maps every partition VALUE to exactly one
-    // task — one file per value per commit regardless of size, so a hot
-    // partition at 100 TB becomes one multi-GB single-task file. The AQE
-    // rebalance keeps the same single shuffle and the same value clustering,
-    // but splits shuffle partitions past
-    // `spark.sql.adaptive.advisoryPartitionSizeInBytes` and coalesces tiny
-    // ones — bounded file sizes AND write parallelism on skewed partitions
-    // (the Iceberg `write.target-file-size-bytes` + hash-distribution pair).
+    val partCols = partColsOverride.getOrElse(
+      snapshotsList.lastOption.map(_.partitionCols).getOrElse(Nil))
     val props = properties
-    // Transform partitioning (the Iceberg `days(ts)`-style partition spec,
-    // recorded by the SQL CREATE TABLE bridge): a partition column missing
-    // from the frame derives from its source column here, so writers hand in
-    // LOGICAL rows and the layout stays transform-partitioned. Reads drop
-    // the derived column automatically (it is not in the logical schema).
-    val transformDefs: Map[String, GraftTable.TransformDef] =
-      GraftTable.parseTransforms(props).map(td => td.pc -> td).toMap
-    val withDerived = partCols.filterNot(df.columns.contains).foldLeft(df) { (d, pc) =>
-      transformDefs.get(pc) match {
-        case Some(td) => d.withColumn(pc, GraftTable.transformColumn(td, d.schema))
-        case None => throw new IllegalArgumentException(
-          s"partition column $pc is not in the data and has no derivable transform")
-      }
-    }
+    val parts = partitionValues(df.schema, partCols, props)
     val distributed =
-      if (partCols.nonEmpty) withDerived.hint("rebalance", partCols: _*) else df
-    // Per-call sort wins; otherwise the sticky `write.sort-order` property
-    // (the Iceberg WRITE ORDERED BY table setting) applies to every append,
-    // so a clustered table stays clustered without each writer remembering —
-    // within-file ordering is what narrows per-file min/max bounds and makes
-    // stats pruning bite.
+      if (parts.isEmpty) df
+      // an explicit caller override (a maintenance procedure's target
+      // argument) WINS over the table property — Iceberg's procedure-option
+      // precedence
+      else SqlInternals.rebalance(df, parts, advisoryOverride.orElse(writeAdvisory(props)))
     val effectiveSort =
       if (sortCols.nonEmpty) sortCols
       else props.get(SortOrderProp)
         .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-    // For a PARTITIONED write the sort must lead with the partition columns:
-    // FileFormatWriter requires partition-column ordering for dynamic
-    // partition writes and would otherwise insert its own NON-STABLE sort by
-    // them above this one, scrambling the requested order inside each file
-    // (WriteDistributionSpec pins this). With the prefix, the task ordering
-    // (p..., sort...) satisfies the writer's requirement as-is, and every
-    // emitted file — one per (task, partition value) — is sorted as asked.
-    val sorted =
-      if (effectiveSort.nonEmpty)
-        distributed.sortWithinPartitions(
-          (partCols.filterNot(effectiveSort.contains) ++ effectiveSort).map(col): _*)
-      else distributed
-    // Table data files pin TIMESTAMP_MICROS for the write: INT96 (Spark's
-    // session default) carries no parquet min/max statistics, which would
-    // silently exempt timestamp columns from stats pruning. Scoped to table
-    // writes — the session default stays untouched for other writers.
-    val tsConfKey = "spark.sql.parquet.outputTimestampType"
-    val prevTsType = spark.conf.get(tsConfKey)
-    spark.conf.set(tsConfKey, "TIMESTAMP_MICROS")
-    // `write.target-file-size-bytes` (the Iceberg write knob the reference
-    // configures, blob-dfs_bench.py / framework.yaml): the rebalance splits
-    // on SHUFFLE bytes, but parquet encodes several-fold smaller — without
-    // compensation a 64 MB advisory lands ~8-15 MB files, which at 100 TB
-    // is millions of undersized files. Advisory = target x the estimated
-    // shuffle-to-parquet ratio (`write.shuffle-compression-factor`,
-    // default 2.0 — conservative; oversizing a split is corrected by the
-    // next compaction, undersizing never is).
-    val advisoryKey = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    // explicit caller override (a maintenance procedure's target argument)
-    // WINS over the table property — Iceberg's procedure-option precedence
-    val targetAdvisory = advisoryOverride.orElse(writeAdvisory(props))
-    val prevAdvisory = targetAdvisory.map(_ => spark.conf.getOption(advisoryKey))
-    targetAdvisory.foreach(v => spark.conf.set(advisoryKey, v.toString))
-    try {
-      var writer = sorted.write.mode("errorifexists")
-      // Bloom filters on configured key columns (table property; the Iceberg
-      // write.parquet.bloom-filter-enabled analog): row-group-level point-
-      // lookup skipping that min/max bounds cannot provide for
-      // uniformly-spread keys. Write-side only — Spark's vectorized parquet
-      // reader consults the filters automatically on pushed-down equality.
-      val bloomCols = props.get(BloomFilterColumnsProp)
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-      bloomCols.foreach { c =>
-        writer = writer.option(s"parquet.bloom.filter.enabled#$c", "true")
-        props.get(BloomFilterNdvProp).foreach(ndv =>
-          writer = writer.option(s"parquet.bloom.filter.expected.ndv#$c", ndv))
-      }
-      (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)
-        .parquet(commitDir.toString)
-    } finally {
-      spark.conf.set(tsConfKey, prevTsType)
-      prevAdvisory.foreach {
-        case Some(v) => spark.conf.set(advisoryKey, v)
-        case None => spark.conf.unset(advisoryKey)
-      }
+    val order = parts ++ effectiveSort.map(col)
+    val sorted = if (order.isEmpty) distributed else distributed.sortWithinPartitions(order: _*)
+    DataFileWriter.run(sorted, writerFactory(df.schema, partCols, f"c$snapshotId%08d", props))
+      .map(_.copy(writtenAt = snapshotId))
+  }
+
+  /** Each partition column's value for rows of `input`: the column itself
+    * (identity), or — for a transform partition column (the Iceberg
+    * `days(ts)`-style spec, recorded by CREATE TABLE) — its derivation from
+    * the source column, so writers hand in LOGICAL rows and the layout stays
+    * transform-partitioned. Reads drop the derived column (it is not in the
+    * logical schema). */
+  private def partitionValues(input: StructType, partCols: Seq[String],
+      props: Map[String, String]): Seq[Column] = {
+    val transforms = GraftTable.parseTransforms(props).map(td => td.pc -> td).toMap
+    partCols.map { pc =>
+      if (input.fieldNames.contains(pc)) col(pc)
+      else transforms.get(pc).map(GraftTable.transformColumn(_, input)).getOrElse(
+        throw new IllegalArgumentException(
+          s"partition column $pc is not in the data and has no derivable transform"))
     }
-    // Publish the staged files into the SHARED hive layout directly under
-    // data/ (partition dirs common to all commits, part-file names unique per
-    // write job). One layout for every commit means a read over files from
-    // any number of commits is a single discovery-clean scan — per-commit
-    // subdirectories broke Spark's partition discovery (conflicting
-    // directory structures) as soon as one scan spanned two commits.
-    val commitStr = hfs.makeQualified(commitDir).toString
-    val staged = listParquetFiles(commitDir)
-    // Stats collection site (VERDICT r8 ask #5): at or past the threshold,
-    // publication + footer stats run as a SPARK JOB — each task renames its
-    // file and reads its own footer, returning one FileEntry (the Iceberg
-    // writer design: per-file metrics ride the tasks; the driver only
-    // collects O(files) bounded metadata). Below it, a 16-way driver loop —
-    // cheaper than a job for a handful of local files. Both sites produce
-    // IDENTICAL entries (TaskStatsSpec proves it), so the choice is pure
-    // cost, and the old 100k-file driver ceiling is retired on the task
-    // path: commit cost now scales with cluster width.
-    val threshold = props.get(GraftTable.TaskStatsThresholdProp)
-      .flatMap(s => scala.util.Try(s.toInt).toOption)
-      .getOrElse(GraftTable.TaskStatsThresholdDefault)
-    val entries: Seq[FileEntry] =
-      if (staged.size >= threshold) {
-        val confEntries = {
-          import scala.jdk.CollectionConverters._
-          conf.iterator().asScala.map(e => e.getKey -> e.getValue).toArray
-        }
-        val dataRootStr = dataRoot.toString
-        val sc = spark.sparkContext
-        val stagedStrs = staged.map(_.toString)
-        val snapId = snapshotId
-        sc.parallelize(stagedStrs, math.max(1, math.min(stagedStrs.size, sc.defaultParallelism)))
-          .map(s => GraftTable.publishAndStat(confEntries, dataRootStr, commitStr, s, snapId))
-          .collect().toSeq.sortBy(_.path)
-      } else {
-        GraftTable.footerStatsWarning(staged.size.toLong)
-          .foreach(w => System.err.println(s"[graft.table] $w"))
-        import scala.collection.parallel.CollectionConverters._
-        val par = staged.par
-        par.tasksupport = new scala.collection.parallel.ForkJoinTaskSupport(
-          new java.util.concurrent.ForkJoinPool(16))
-        try {
-          par.map { staged =>
-            val rel = GraftTable.uniqueLeafName(
-              hfs.makeQualified(staged).toString.stripPrefix(commitStr).stripPrefix("/"),
-              snapshotId)
-            val dest = new org.apache.hadoop.fs.Path(dataRoot, rel)
-            hfs.mkdirs(dest.getParent)
-            require(hfs.rename(staged, dest), s"could not publish $staged to $dest")
-            val partVals = rel.split("/").dropRight(1).filter(_.contains("="))
-              .map { seg => val Array(k, v) = seg.split("=", 2); k -> v }.toMap
-            val status = hfs.getFileStatus(dest)
-            val (rows, stats) = footerMeta(dest)
-            FileEntry(rel, partVals, rows, status.getLen, snapshotId, stats)
-          }.seq.sortBy(_.path)
-        } finally par.tasksupport.asInstanceOf[scala.collection.parallel.ForkJoinTaskSupport]
-          .forkJoinPool.shutdown()
+  }
+
+  /** The one writer's factory for rows of `input`: files land under `data/`
+    * (or `data/_deletes/` with `deletes`) in the hive layout of `partCols`,
+    * every partition value derived in the task ([[partitionValues]], cast to
+    * its directory string as Spark's file writer renders it).
+    *
+    * The Hadoop conf is this write's own: Spark's parquet `prepareWrite`
+    * fills it from the session, then table data files pin TIMESTAMP_MICROS
+    * (INT96, Spark's session default, carries no parquet min/max statistics
+    * and would silently exempt timestamp columns from stats pruning) and
+    * get bloom filters on the configured key columns (table property; the
+    * Iceberg write.parquet.bloom-filter-enabled analog — row-group-level
+    * point-lookup skipping that min/max bounds cannot provide for
+    * uniformly-spread keys; Spark's vectorized reader consults them on
+    * pushed-down equality). The session conf is never set.
+    */
+  private[graft] def writerFactory(input: StructType, partCols: Seq[String], stem: String,
+      props: Map[String, String] = properties, deletes: Boolean = false): DataFileWriterFactory = {
+    val probe = spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), input)
+    val (bound, keep) = org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions(
+        probe.select(partitionValues(input, partCols, props).map(_.cast(StringType)): _*)
+          .queryExecution.analyzed) match {
+      case org.apache.spark.sql.catalyst.plans.logical.Project(list, child) =>
+        (partCols.zip(org.apache.spark.sql.catalyst.expressions.BindReferences
+          .bindReferences(list.map {
+            case a: org.apache.spark.sql.catalyst.expressions.Alias => a.child
+            case e => e
+          }, child.output)),
+          input.fieldNames.indices.filterNot(i => partCols.contains(input(i).name)))
+      case other => throw new IllegalStateException(s"unexpected partition plan $other")
+    }
+    // the rows' own nullability, as Spark's file writer keeps it: a column
+    // the plan proves non-null is written `required` and decodes without
+    // definition levels
+    val fileSchema = StructType(keep.map(input(_)))
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(conf)
+    val outputs = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+      .prepareWrite(spark, job, Map.empty, fileSchema)
+    val c = job.getConfiguration
+    c.set(org.apache.spark.sql.internal.SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key, "TIMESTAMP_MICROS")
+    props.get(BloomFilterColumnsProp).toSeq.flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
+      .foreach { bc =>
+        c.set(s"parquet.bloom.filter.enabled#$bc", "true")
+        props.get(BloomFilterNdvProp).foreach(ndv => c.set(s"parquet.bloom.filter.expected.ndv#$bc", ndv))
       }
-    hfs.delete(commitDir, true)
-    // A provably EMPTY part-file (a task whose split held no rows — e.g. a
-    // filtered write's empty partition) never enters the snapshot: it holds
-    // no data, carries no stats, and a statless entry would block every
-    // all-files metadata answer (min/max, non-null counts) for the whole
-    // table. Unknown counts (-1) are NOT empty and stay.
-    val (kept, empty) = entries.partition(_.rowCount != 0L)
-    empty.foreach(e =>
-      hfs.delete(new org.apache.hadoop.fs.Path(dataRoot, e.path), false))
-    kept
+    val dataRoot = SnapshotLog.dataPath(tableDir)
+    val root = hfs.makeQualified(
+      if (deletes) new org.apache.hadoop.fs.Path(dataRoot, DeletesDir) else dataRoot)
+    DataFileWriterFactory(root.toString, if (deletes) s"$DeletesDir/" else "", bound, keep,
+      input.length, fileSchema, s"$stem-${java.util.UUID.randomUUID().toString.take(8)}",
+      outputs, new ConfBox(c))
   }
 
   private def listParquetFiles(dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] = {
@@ -2373,7 +2267,7 @@ object GraftTable {
     * `fn(srcCol)=partCol` or `fn(N,srcCol)=partCol` each (e.g.
     * `days(event_ts)=event_ts_day`, `bucket(16,tenant_id)=tenant_bucket`,
     * `truncate(8,sku)=sku_prefix`) — the Iceberg transform-partition-spec
-    * analog. `writeDataFiles` derives the partition column from the source
+    * analog. The writer derives the partition column from the source
     * column when the frame lacks it; `planBetween` prunes files from the
     * recorded transform values (time granularities bound, prefixes bound,
     * buckets pin point lookups).
@@ -2570,8 +2464,8 @@ object GraftTable {
     * columns are tracked — nested paths (`a.b`) and logical types beyond
     * int/float/string have engine-specific orderings and are skipped.
     *
-    * Static (conf passed in) so the WRITE TASKS can harvest stats for the
-    * files they publish (`publishAndStat`) — the Iceberg writer design,
+    * Static (conf passed in) so each WRITE TASK reads the footers of the
+    * files it just closed ([[DataFileWriter]]) — the Iceberg writer design,
     * where per-file metrics ride the task result instead of a driver-side
     * footer sweep.
     */
@@ -2643,79 +2537,6 @@ object GraftTable {
     case b: org.apache.parquet.io.api.Binary => b.toStringUsingUTF8
     case other => other.toString
   }
-
-  /** Task-side file publication + stats harvest (the ask-#5 path): rename
-    * one staged file into the shared layout and read its footer, ON AN
-    * EXECUTOR. The driver ships (conf entries, roots, staged path) and gets
-    * back one `FileEntry` — it never opens a footer itself, so commit cost
-    * scales with cluster width instead of driver round-trips. Idempotent
-    * under task retry: a rename that fails because a previous attempt
-    * already published (staged gone, dest present) is success.
-    */
-  /** Published leaf names must be GLOBALLY unique across partition dirs:
-    * Spark's dynamic-partition write emits the SAME `part-<task>-<jobUuid>`
-    * basename into every partition dir a task touches, and merge-on-read
-    * delete applicability keys rows to their file by BASENAME
-    * (`input_file_name()` is URI-escaped, so full paths don't join
-    * reliably against partition dirs holding escaped characters). Prefix
-    * the leaf with the commit id and a short hash of the commit-relative
-    * path — deterministic on the task publish path, unique within a commit
-    * (relative paths are), while the job uuid keeps names unique across
-    * commits. Same rule `addFiles` already applies to imports.
-    */
-  private[table] def uniqueLeafName(rel: String, snapshotId: Long): String = {
-    val segs = rel.split('/')
-    val h = Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(rel))
-    (segs.dropRight(1) :+ f"c$snapshotId%x-$h-${segs.last}").mkString("/")
-  }
-
-  private[table] def publishAndStat(confEntries: Array[(String, String)],
-      dataRoot: String, commitDir: String, stagedPath: String,
-      snapshotId: Long): FileEntry = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    confEntries.foreach { case (k, v) => conf.set(k, v) }
-    val root = new org.apache.hadoop.fs.Path(dataRoot)
-    val fs = root.getFileSystem(conf)
-    val staged = new org.apache.hadoop.fs.Path(stagedPath)
-    val commitStr = fs.makeQualified(new org.apache.hadoop.fs.Path(commitDir)).toString
-    val rel = uniqueLeafName(
-      fs.makeQualified(staged).toString.stripPrefix(commitStr).stripPrefix("/"),
-      snapshotId)
-    val dest = new org.apache.hadoop.fs.Path(root, rel)
-    fs.mkdirs(dest.getParent)
-    if (!fs.rename(staged, dest))
-      require(!fs.exists(staged) && fs.exists(dest),
-        s"could not publish $staged to $dest")
-    val partVals = rel.split("/").dropRight(1).filter(_.contains("="))
-      .map { seg => val Array(k, v) = seg.split("=", 2); k -> v }.toMap
-    val status = fs.getFileStatus(dest)
-    val (rows, stats) = footerMeta(conf, dest)
-    FileEntry(rel, partVals, rows, status.getLen, snapshotId, stats)
-  }
-
-  /** Property: commit-file count at or above which publication + footer
-    * stats collection runs as a SPARK JOB in the write tasks' executors
-    * instead of a driver-side parallel loop (`publishAndStat`). Small
-    * commits stay on the driver — a job's scheduling overhead exceeds a
-    * handful of local footer reads.
-    */
-  val TaskStatsThresholdProp = "write.stats.task-collect-threshold"
-  private[table] val TaskStatsThresholdDefault = 512
-
-  /** 100 TB guard (the commit-path analog of `Dml.plannedFilesWarning`),
-    * now scoped to the DRIVER stats site only: by default commits at or past
-    * `TaskStatsThresholdProp` (512 files) publish + harvest in the write
-    * tasks (`publishAndStat`), where this ceiling is irrelevant — the
-    * warning can fire only when the threshold property was raised past the
-    * ceiling, pinning a huge commit to the driver loop. Returns the warning
-    * it logs so the bound is unit-testable.
-    */
-  private[table] def footerStatsWarning(newFiles: Long, ceiling: Long = 100000L): Option[String] =
-    if (newFiles > ceiling)
-      Some(s"commit is harvesting footer stats for $newFiles new files (ceiling $ceiling): " +
-        "driver-side footer reads at this count dominate commit time — raise the target " +
-        "file size (fewer, larger files) or collect stats in the write tasks")
-    else None
 
   /** Convert a user-facing range bound into the file-stats comparison domain.
     * Footer stats are RAW PHYSICAL values: Spark writes TimestampType as

@@ -271,15 +271,34 @@ final class SnapshotPlanner(val snap: Snapshot,
     files.filter(f => loose.exists(_.keep(f)) || inWindow(f).exists(_.keep(f)))
   }
 
+  /** `f`'s value of partition column `c`, decoded from its hive directory
+    * form (`a%2Fb` → `a/b`, `00%3A00` → `00:00`) — the one place a
+    * partition value is unescaped, so escaped values prune like any other. */
+  private def partitionValue(f: FileEntry, c: String): Option[String] =
+    f.partitionValues.get(c).map(v =>
+      if (v.indexOf('%') < 0) v
+      else org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(v))
+
+  /** A decoded identity partition value as a point of the physical bound
+    * domain. The writer rendered a TIMESTAMP in the session time zone
+    * (Spark's cast to string), so it parses back in that zone. */
+  private def partitionPoint(dt: DataType, v: String): Option[String] = scala.util.Try {
+    if (dt != TimestampType) toPhysicalBound(dt, v)
+    else {
+      val i = java.time.LocalDateTime.parse(v.replace(' ', 'T')).atZone(java.time.ZoneId.of(
+        org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone)).toInstant
+      (i.getEpochSecond * 1000000L + i.getNano / 1000L).toString
+    }
+  }.toOption
+
   /** The stretch of the physical domain `f`'s values of `colName` occupy:
     * its identity partition point, else its footer bounds; None when
     * neither is known and comparable. */
   private def window(f: FileEntry, colName: String, dt: DataType): Option[(String, String)] = {
     val cmp = SnapshotPlanner.compare(dt)
     statsName(f, colName, dt).flatMap { phys =>
-      f.partitionValues.get(phys)
-        .filter(v => v != SnapshotPlanner.NullPartition && !v.contains('%'))
-        .flatMap(v => scala.util.Try(toPhysicalBound(dt, v)).toOption).map(p => (p, p))
+      partitionValue(f, phys).filter(_ != SnapshotPlanner.NullPartition)
+        .flatMap(partitionPoint(dt, _)).map(p => (p, p))
         .orElse(f.stats.get(phys).flatMap(StatEntry.bounds))
     }.filter { case (mn, mx) => cmp(mn, mn).isDefined && cmp(mx, mx).isDefined }
   }
@@ -364,10 +383,10 @@ final class SnapshotPlanner(val snap: Snapshot,
     }
     def transformKeep(f: FileEntry, phys: String): Boolean =
       transformDefs.filter(_.src == phys).forall { td =>
-        f.partitionValues.get(td.pc) match {
+        partitionValue(f, td.pc) match {
           case Some(SnapshotPlanner.NullPartition) => false // null source never matches
-          case Some(v) if !v.contains('%') => keepFor(td, v)
-          case _ => true // absent or hive-escaped: keep
+          case Some(v) => keepFor(td, v)
+          case None => true // absent: keep
         }
       }
     f => {
@@ -377,12 +396,11 @@ final class SnapshotPlanner(val snap: Snapshot,
         case None => true
         case Some(phys) =>
           // an identity partition value is an exact point [v, v]; the null
-          // partition never satisfies a range; hive-escaped values keep
-          val partKeep = f.partitionValues.get(phys) match {
+          // partition never satisfies a range
+          val partKeep = partitionValue(f, phys) match {
             case Some(SnapshotPlanner.NullPartition) => false
-            case Some(v) if !v.contains('%') =>
-              scala.util.Try(toPhysicalBound(dt, v)).toOption.forall(p => reaches(p, p, strict = true))
-            case _ => true
+            case Some(v) => partitionPoint(dt, v).forall(p => reaches(p, p, strict = true))
+            case None => true
           }
           val statsKeep = f.stats.get(phys) match {
             // a range predicate never matches null rows, so a provably
@@ -420,9 +438,9 @@ final class SnapshotPlanner(val snap: Snapshot,
   /** Point equality on a column type without an engine-neutral order
     * (boolean, decimal): only an identity partition value can decide it. */
   private def partitionEquals(colName: String, dt: DataType, v: Any): FileEntry => Boolean =
-    f => statsName(f, colName, dt).flatMap(f.partitionValues.get) match {
+    f => statsName(f, colName, dt).flatMap(partitionValue(f, _)) match {
       case Some(SnapshotPlanner.NullPartition) => false
-      case Some(raw) if !raw.contains('%') => dt match {
+      case Some(raw) => dt match {
         case BooleanType => scala.util.Try(raw.toBoolean == v.toString.toBoolean).getOrElse(true)
         case _: DecimalType => scala.util.Try(new java.math.BigDecimal(raw)
           .compareTo(new java.math.BigDecimal(v.toString)) == 0).getOrElse(true)
@@ -530,12 +548,10 @@ final class SnapshotPlanner(val snap: Snapshot,
       : Option[Seq[Option[List[String]]]] = {
     val dt = typeOf(colName)
     def partitionEntry(f: FileEntry, phys: String): Option[List[String]] =
-      f.partitionValues.get(phys).flatMap {
+      partitionValue(f, phys).flatMap {
         case SnapshotPlanner.NullPartition =>
           if (f.rowCount >= 0) Some(List(f.rowCount.toString)) else None
-        case v if !v.contains('%') => // hive-escaped values don't round-trip
-          scala.util.Try(toPhysicalBound(dt, v)).toOption.map(p => List(p, p, "0"))
-        case _ => None
+        case v => partitionPoint(dt, v).map(p => List(p, p, "0"))
       }
     val names = files.map(f => statsName(f, colName, dt))
     if (names.exists(_.isEmpty)) None

@@ -2,11 +2,11 @@ package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, RebalancePartitions}
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.types.StructType
 
-/** Bridge to three `private[sql]`/`private[spark]` seams (the same
+/** Bridge to four `private[sql]`/`private[spark]` seams (the same
   * integration points Delta Lake and Iceberg's Spark runtime use from their
   * own `org.apache.spark.sql.*` packages):
   *
@@ -20,9 +20,11 @@ import org.apache.spark.sql.types.StructType
   *    `Column(expr)` constructor);
   *  - `StructType.asNullable`: the data schema of a file relation the table
   *    scan builds itself, nullable as `spark.read` makes it (a file may hold
-  *    nulls in a column the table declares NOT NULL).
+  *    nulls in a column the table declares NOT NULL);
+  *  - `RebalancePartitions`' advisory size: a table write's target split
+  *    rides in its own rebalance, never in the session conf.
   *
-  * Kept to these three one-liners so the engine's dependency on non-public
+  * Kept to these one-liners so the engine's dependency on non-public
   * API stays auditable in one place.
   */
 object SqlInternals {
@@ -32,4 +34,9 @@ object SqlInternals {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 
   def asNullable(s: StructType): StructType = s.asNullable
+
+  def rebalance(df: DataFrame, by: Seq[Column], advisoryBytes: Option[Long]): DataFrame =
+    ofRows(df.sparkSession, RebalancePartitions(
+      by.map(df.sparkSession.asInstanceOf[classic.SparkSession].expression),
+      df.queryExecution.analyzed, None, advisoryBytes))
 }

@@ -1,40 +1,43 @@
 package graft
 
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** What Spark did while a block ran: the jobs it started and the file scans
-  * of the queries it executed. Listener events arrive asynchronously, so a
+/** What Spark did while a block ran: the jobs it started, the bytes its
+  * tasks read from storage and the file scans of the queries it executed. Listener events arrive asynchronously, so a
   * marker job runs before and after the block; both listeners sit on the
   * shared listener queue, which delivers in order, so once the closing
   * marker is seen every event of the block has been seen too.
   */
 object SparkProbe {
-  final case class Observed(jobs: Int, scans: Seq[FileSourceScanExec])
+  final case class Observed(jobs: Int, scans: Seq[FileSourceScanExec], inputBytes: Long = 0L)
 
   private val MarkerProp = "graft.probe.marker"
 
   def observe[T](spark: SparkSession)(body: => T): (T, Observed) = {
     val sc = spark.sparkContext
     val started = new AtomicInteger()
+    val read = new AtomicLong()
     val plans = new ConcurrentLinkedQueue[SparkPlan]()
     val closed = new CountDownLatch(1)
     val opened = new CountDownLatch(1)
     val jobs = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         Option(j.properties).flatMap(p => Option(p.getProperty(MarkerProp))) match {
-          case Some("open") => started.set(0); plans.clear(); opened.countDown()
+          case Some("open") => started.set(0); read.set(0); plans.clear(); opened.countDown()
           case Some("close") => closed.countDown()
           case _ => started.incrementAndGet()
         }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        Option(t.taskMetrics).foreach(m => read.addAndGet(m.inputMetrics.bytesRead))
     }
     val queries = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
@@ -54,7 +57,7 @@ object SparkProbe {
       marker("open", opened)
       val out = body
       marker("close", closed)
-      (out, Observed(started.get, plans.asScala.toSeq.flatMap(scansOf)))
+      (out, Observed(started.get, plans.asScala.toSeq.flatMap(scansOf), read.get))
     } finally {
       spark.listenerManager.unregister(queries)
       sc.removeSparkListener(jobs)

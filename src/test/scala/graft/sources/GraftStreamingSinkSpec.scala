@@ -43,21 +43,20 @@ class GraftStreamingSinkSpec extends SparkSpec {
     assert(t.readLatest().agg(sum("id")).head.getLong(0) == 5050L)
     val streamCommits = t.snapshotsList.count(_.summary.contains("stream-batch-id"))
     assert(streamCommits == 4, s"expected 4 epoch commits, saw $streamCommits")
-    // unpartitioned: staged files publish by RENAME — every data file is a
-    // stream-published file, no rewrite pass
+    // every data file was written once, by the epoch's own tasks
     assert(t.latest.files.nonEmpty)
     assert(t.latest.files.forall(_.path.startsWith("stream-")))
     // fresh checkpoint -> Spark replays every epoch -> the fence skips all
     runSink(root, dir, "cp2")
     assert(t.readLatest().count() == 100)
     assert(t.snapshotsList.count(_.summary.contains("stream-batch-id")) == 4)
-    // no staging residue under data/_streaming
-    val stagingRoot = new java.io.File(s"$dir/data/_streaming")
+    // the replayed epochs' files were deleted: every parquet file under
+    // data/ is a committed one
     def parquets(f: java.io.File): Seq[java.io.File] =
       if (!f.exists()) Nil
       else if (f.isDirectory) f.listFiles().toSeq.flatMap(parquets)
       else if (f.getName.endsWith(".parquet")) Seq(f) else Nil
-    assert(parquets(stagingRoot).isEmpty)
+    assert(parquets(new java.io.File(s"$dir/data")).size == t.latest.files.size)
     // published rows read back identically through the connector
     assert(spark.read.format("graft").load(dir).orderBy("id").collect().toSeq ==
       t.readLatest().orderBy("id").collect().toSeq)
@@ -92,28 +91,24 @@ class GraftStreamingSinkSpec extends SparkSpec {
     val dir = s"$root/t"
     val winner = Seq((1L, "a", 1.0), (2L, "b", 2.0)).toDF("id", "user", "v")
     val t = GraftTable.create(spark, dir, winner.schema)
-    val epochDir = s"$dir/data/_streaming/q1/0"
-    winner.coalesce(1).write.parquet(s"$root/stage")
-    val staged = new java.io.File(s"$root/stage").listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    new java.io.File(epochDir).mkdirs()
-    val winnerPath = s"$epochDir/part-0-1.parquet"
-    java.nio.file.Files.copy(staged.toPath, java.nio.file.Paths.get(winnerPath))
-    // zombie attempt's duplicate: closed parquet, same rows, abort never ran
-    java.nio.file.Files.copy(staged.toPath,
-      java.nio.file.Paths.get(s"$epochDir/part-0-0.parquet"))
-    // torn leftover: an unclosed write — no parquet footer at all
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$epochDir/part-1-2.parquet"),
+    // tasks write at final names: the winning attempt's file, a zombie
+    // attempt's duplicate (closed parquet, same rows, abort never ran) and
+    // a torn leftover (an unclosed write — no parquet footer at all)
+    val named = t.writeDataFiles(winner.coalesce(1), 2L)
+    val zombie = t.writeDataFiles(winner.coalesce(1), 2L)
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/data/stream-torn.parquet"),
       Array[Byte](0x50, 0x41, 0x52, 0x31, 0x00))
     // a directory listing would double rows (zombie) then wedge on the torn
-    // footer; message-named publish lands exactly the winner's rows
-    val snap = t.commitStreamingEpoch(epochDir, 0L, Seq(winnerPath))
+    // footer; the message-named commit lands exactly the winner's rows
+    val snap = t.commitStreamingEpoch(0L, named)
     assert(snap.nonEmpty)
+    assert(t.latest.files.map(_.path) === named.map(_.path))
     assert(t.readLatest().count() == 2)
     assert(t.readLatest().agg(sum("id")).head.getLong(0) == 3L)
-    // the whole epoch dir is gone afterwards, zombies included
-    assert(!new java.io.File(epochDir).exists())
+    // the leftovers are unreferenced: the orphan sweep reclaims exactly them
+    assert(graft.maintenance.Maintenance.removeOrphanFiles(t, Long.MaxValue).toSet ===
+      (zombie.map(_.path) :+ "stream-torn.parquet").toSet)
+    assert(t.readLatest().count() == 2)
   }
 
   test("epoch commit refuses when a message-named file is missing") {
@@ -122,12 +117,11 @@ class GraftStreamingSinkSpec extends SparkSpec {
     val dir = s"$root/t"
     val df = Seq((1L, "a", 1.0)).toDF("id", "user", "v")
     val t = GraftTable.create(spark, dir, df.schema)
-    val epochDir = s"$dir/data/_streaming/q1/0"
-    new java.io.File(epochDir).mkdirs()
     val ex = intercept[IllegalArgumentException] {
-      t.commitStreamingEpoch(epochDir, 0L, Seq(s"$epochDir/part-0-9.parquet"))
+      t.commitStreamingEpoch(0L, Seq(graft.table.FileEntry("stream-gone.parquet", Map.empty, 1L, 10L)))
     }
-    assert(ex.getMessage.contains("missing from staging"))
+    assert(ex.getMessage.contains("is missing"))
+    assert(t.snapshotsList.size == 1)
   }
 
   test("partitioned epoch commit reads only message-named files and fences in-commit") {
@@ -137,23 +131,21 @@ class GraftStreamingSinkSpec extends SparkSpec {
     val df = Seq((1L, "2024-06-01", 1.0), (2L, "2024-06-02", 2.0))
       .toDF("id", "ds", "v")
     val t = GraftTable.create(spark, dir, df.schema, partitionCols = Seq("ds"))
-    val epochDir = s"$dir/data/_streaming/q2/0"
-    df.coalesce(1).write.parquet(s"$root/stage")
-    val staged = new java.io.File(s"$root/stage").listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    new java.io.File(epochDir).mkdirs()
-    val winnerPath = s"$epochDir/part-0-1.parquet"
-    java.nio.file.Files.copy(staged.toPath, java.nio.file.Paths.get(winnerPath))
-    java.nio.file.Files.copy(staged.toPath,
-      java.nio.file.Paths.get(s"$epochDir/part-0-0.parquet"))
-    assert(t.commitStreamingEpoch(epochDir, 0L, Seq(winnerPath)).nonEmpty)
+    val named = t.writeDataFiles(df.coalesce(1), 2L)
+    val zombie = t.writeDataFiles(df.coalesce(1), 2L)
+    assert(t.commitStreamingEpoch(0L, named).nonEmpty)
+    assert(t.latest.files.map(_.path).toSet === named.map(_.path).toSet)
+    assert(t.latest.files.forall(_.partitionValues.contains("ds")))
     assert(t.readLatest().count() == 2)
-    // replay of the SAME epoch (fence already advanced): skipped, no commit
-    new java.io.File(epochDir).mkdirs()
-    java.nio.file.Files.copy(staged.toPath, java.nio.file.Paths.get(winnerPath))
-    assert(t.commitStreamingEpoch(epochDir, 0L, Seq(winnerPath)).isEmpty)
+    // replay of the SAME epoch (fence already advanced): skipped, no
+    // commit, and the replay's own files are deleted
+    val replay = t.writeDataFiles(df.coalesce(1), 3L)
+    assert(t.commitStreamingEpoch(0L, replay).isEmpty)
+    assert(replay.forall(e => !new java.io.File(s"$dir/data/${e.path}").exists()))
     assert(t.readLatest().count() == 2)
     assert(t.snapshotsList.count(_.summary.contains("stream-batch-id")) == 1)
+    assert(graft.maintenance.Maintenance.removeOrphanFiles(t, Long.MaxValue).toSet ===
+      zombie.map(_.path).toSet)
   }
 
   test("streaming sink refuses a schema that does not match the table") {

@@ -445,12 +445,6 @@ class StatsPruneSpec extends SparkSpec {
     }
   }
 
-  test("commit-time footer-read ceiling warns past the per-commit file bound") {
-    assert(GraftTable.footerStatsWarning(100000L).isEmpty)
-    assert(GraftTable.footerStatsWarning(100001L).nonEmpty)
-    assert(GraftTable.footerStatsWarning(10L, ceiling = 5L).exists(_.contains("10 new files")))
-  }
-
   test("pruning never drops rows: readBetween equals brute-force filter on random ranges") {
     val t = kvTable("statsprune-rand-")
     val rnd = new scala.util.Random(7)
