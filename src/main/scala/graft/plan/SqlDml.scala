@@ -423,7 +423,8 @@ object SqlDml {
     *  - `DESCRIBE TABLE t` → the schema as rows, with recorded comments (D7);
     *  - `DROP TABLE ns.t` → catalog drop + view unregistration (S7);
     *  - `SHOW TABLES IN ns` → catalog listing as rows;
-    *  - `CREATE TABLE ns.t AS SELECT ...` → create + append (CTAS);
+    *  - `CREATE TABLE ns.t [PARTITIONED BY (transforms)] AS SELECT ...` →
+    *    `GraftCatalog.create` + append (CTAS);
     *  - `TRUNCATE TABLE t` → metadata-only empty-overwrite commit;
     *  - `CALL <cat>.system.<proc>(...)` → the catalog's procedure registry,
     *    `GraftProcedures` (the reference bench's maintenance statements,
@@ -929,15 +930,15 @@ object SqlDml {
           }
           throw new IllegalStateException(s"table exists: $ns.$tname")
         }
-        if (ctas.partitioning.nonEmpty) unsupported("CTAS with PARTITIONED BY")
-        // CTAS READS data: a prior statement's file-pruned registration must
-        // not leak into the source query (the DML routes refresh the same
-        // way; metadata-only DDL branches stay refresh-free so they keep
-        // answering when data files are gone)
+        // CTAS READS data: its source views must read their tables' latest
+        // snapshots (the DML routes refresh the same way; metadata-only DDL
+        // branches stay refresh-free so they keep answering when data files
+        // are gone)
         refreshViews()
         val src = SqlInternals.ofRows(spark,
           resolveCatalogRelations(spark, ctas.query, tables, catalog))
-        val t = cat.createTable(ns, tname, src.schema, Nil)
+        val t = GraftCatalog.create(spark, cat, ns, tname, src.schema, ctas.partitioning,
+          specOf(ctas.tableSpec))
         t.append(src)
         register(tname, t)
         Some(StatementResult(statement, Nil, None))
@@ -1042,16 +1043,19 @@ object SqlDml {
     }
     val fields = columns.map(cd =>
       org.apache.spark.sql.types.StructField(cd.name, cd.dataType, cd.nullable))
-    val spec = tableSpec match {
-      case ts: TableSpec => ts.properties ++ ts.location.map(TableCatalog.PROP_LOCATION -> _)
-      case ts: UnresolvedTableSpec => // the parse-time shape
-        ts.properties ++ ts.location.map(TableCatalog.PROP_LOCATION -> _)
-      case _ => Map.empty[String, String]
-    }
     val t = GraftCatalog.create(spark, cat, ns, tname,
-      org.apache.spark.sql.types.StructType(fields.toArray), partitioning, spec)
+      org.apache.spark.sql.types.StructType(fields.toArray), partitioning, specOf(tableSpec))
     register(tname, t)
     Some(StatementResult(statement, Nil, None))
+  }
+
+  /** A create statement's TBLPROPERTIES and LOCATION, as the properties
+    * `GraftCatalog.create` takes. */
+  private def specOf(tableSpec: Any): Map[String, String] = tableSpec match {
+    case ts: TableSpec => ts.properties ++ ts.location.map(TableCatalog.PROP_LOCATION -> _)
+    case ts: UnresolvedTableSpec => // the parse-time shape
+      ts.properties ++ ts.location.map(TableCatalog.PROP_LOCATION -> _)
+    case _ => Map.empty[String, String]
   }
 
   /** Resolve a metadata-relation suffix: the catalog's inspection tables

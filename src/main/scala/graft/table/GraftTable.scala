@@ -292,7 +292,11 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     val parts = groups.toSeq.sortBy(g => (g._1._1, g._1._3)).map {
         case ((epoch, schemaJson, reconcile), entries) =>
       val physSchema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-      val raw0 = SnapshotFileIndex.scan(spark, fs, dataRoot, entries, physSchema)
+      val sources = logical.fields.map(f => f -> plan.source(epoch, f.name))
+      // the scan prunes its own files: each stored column it filters on
+      // names the current column it replays as
+      val current = sources.collect { case (f, Some(Stored(n, _))) => n -> f.name }.toMap
+      val raw0 = SnapshotFileIndex.scan(spark, fs, tableDir, entries, physSchema, plan, current)
       val raw1 = fileCol.fold(raw0)(c => raw0.withColumn(c, input_file_name()))
       // the group's delete files once, and the distinct sets of them that
       // its files need
@@ -315,16 +319,14 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
       // later, its declared default. No chain step lies in (epoch, writtenAt]
       // by the definition of epoch, so the replay is exact for every file in
       // the group.
-      val replayed = logical.fields.map { f =>
-        plan.source(epoch, f.name) match {
-          case Some(Stored(n, _)) if n == f.name && physSchema.exists(
-              p => p.name == n && p.dataType == f.dataType) => None
-          case Some(Stored(n, _)) => Some(col(n).cast(f.dataType).as(f.name))
-          case Some(Added(d, t)) =>
-            Some(d.fold(lit(null))(lit(_)).cast(t).cast(f.dataType).as(f.name))
-          case None => throw new IllegalStateException(
-            s"column ${f.name} of $tableDir has no provenance in epoch $epoch")
-        }
+      val replayed = sources.map {
+        case (f, Some(Stored(n, _))) if n == f.name && physSchema.exists(
+            p => p.name == n && p.dataType == f.dataType) => None
+        case (f, Some(Stored(n, _))) => Some(col(n).cast(f.dataType).as(f.name))
+        case (f, Some(Added(d, t))) =>
+          Some(d.fold(lit(null))(lit(_)).cast(t).cast(f.dataType).as(f.name))
+        case (f, None) => throw new IllegalStateException(
+          s"column ${f.name} of $tableDir has no provenance in epoch $epoch")
       }
       // helper columns and discovered partition-only columns (transform
       // partitions) ride along, so every group unions with the same columns
@@ -496,33 +498,20 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
       : (Seq[FileEntry], Int) =
     (planner(snap).nullability(snap.files, colName, isNull), snap.files.size)
 
-  /** Read rows where `colName` IS NULL / IS NOT NULL through null-count
-    * pruning, with the exact residual predicate over the surviving files.
+  /** Read rows where `colName` IS NULL / IS NOT NULL; the scan keeps only
+    * the files whose null counts allow a match (`SnapshotFileIndex`).
     */
-  def readWhereNull(colName: String, isNull: Boolean): DataFrame = {
-    val snap = latest
-    val (selected, _) = planNullability(snap, colName, isNull)
-    val base = readSnapshot(snap.copy(files = selected.toList))
-    base.filter(if (isNull) col(colName).isNull else col(colName).isNotNull)
-  }
+  def readWhereNull(colName: String, isNull: Boolean): DataFrame =
+    readLatest().filter(if (isNull) col(colName).isNull else col(colName).isNotNull)
 
-  /** Read rows with `colName` in `[lo, hi]` through stats pruning: the file
-    * list shrinks to possibly-matching files, then the exact predicate runs as
-    * a normal pushed-down filter over the survivors (file bounds are not
-    * exact, so the residual filter is required for correctness). Pass null for
-    * an open bound.
+  /** Read rows with `colName` in `[lo, hi]`; the scan keeps only the files
+    * whose bounds reach the range (`SnapshotFileIndex`). Pass null for an
+    * open bound.
     */
   def readBetween(colName: String, lo: Any, hi: Any): DataFrame = {
-    val snap = latest
-    val (selected, _) = planBetween(snap, colName, lo, hi)
-    val base = readSnapshot(snap.copy(files = selected.toList))
     val c = col(colName)
-    (Option(lo), Option(hi)) match {
-      case (Some(l), Some(h)) => base.filter(c >= lit(l) && c <= lit(h))
-      case (Some(l), None)    => base.filter(c >= lit(l))
-      case (None, Some(h))    => base.filter(c <= lit(h))
-      case _                  => base
-    }
+    Seq(Option(lo).map(c >= lit(_)), Option(hi).map(c <= lit(_))).flatten
+      .reduceOption(_ && _).fold(readLatest())(readLatest().filter)
   }
 
   /** Per-value point planning for IN-list lookups: the union of each
@@ -538,16 +527,12 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     (planner(snap).points(snap.files, colName, values), snap.files.size)
   }
 
-  /** Read rows where `colName` is one of `values` through per-point file
-    * pruning (stats, partition values, bucket transform), with the exact
-    * IN predicate over the surviving files.
+  /** Read rows where `colName` is one of `values`; the scan keeps only the
+    * files a value's point pass keeps (stats, partition values, bucket
+    * transform — `SnapshotFileIndex`).
     */
-  def readIn(colName: String, values: Seq[Any]): DataFrame = {
-    val snap = latest
-    val (selected, _) = planPoints(snap, colName, values)
-    readSnapshot(snap.copy(files = selected.toList))
-      .filter(col(colName).isin(values: _*))
-  }
+  def readIn(colName: String, values: Seq[Any]): DataFrame =
+    readLatest().filter(col(colName).isin(values: _*))
 
   /** Incremental append scan (the Iceberg incremental-read analog:
     * `option("start-snapshot-id", …).option("end-snapshot-id", …)`): rows
@@ -1839,11 +1824,12 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
         p.chain :+ EvolutionStep(p.snapshotId + 1, List(op)), p.deletes)
     }
 
-  /** Column shape (names + types, order- and nullability-insensitive) used to
-    * detect a schema change between writing data files and committing them.
+  /** Column shape (names + types, order-insensitive, nullability erased at
+    * every nesting level) used to detect a schema change between writing
+    * data files and committing them.
     */
   private def shapeOf(s: StructType): Set[(String, DataType)] =
-    s.fields.map(f => (f.name, f.dataType)).toSet
+    SqlInternals.asNullable(s).fields.map(f => (f.name, f.dataType)).toSet
 
   /** Driver-side metadata time of the LAST data commit on this instance:
     * everything after the executor write returns — snapshot build, delta

@@ -1,7 +1,6 @@
 package graft.table
 
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, Between, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual}
-import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, Between, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, IsNotNull, IsNull, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.types._
 
@@ -57,11 +56,11 @@ private[graft] object Fact {
 
   private def point(c: String, v: Any): Fact = Range(c, Some(v), false, Some(v), false)
 
-  /** The conjunct extractor for a Catalyst condition, parsed (unresolved
-    * single-part attributes) or analyzed (attribute references, literals
-    * under implicit casts). Only top-level AND conjuncts comparing a bare
-    * column to a foldable, non-null value contribute; anything else (OR,
-    * NOT, expressions over the column, casts of the column) contributes
+  /** The conjunct extractor for an analyzed or optimized Catalyst condition
+    * (attribute references, literals under implicit casts, the optimizer's
+    * `InSet`). Only top-level AND conjuncts comparing a bare column to a
+    * foldable, non-null value contribute; anything else (OR, NOT,
+    * expressions over the column, casts of the column) contributes
     * nothing, which keeps every caller's file set a superset of the
     * matching files. Values come out in their external form (strings, not
     * UTF8String; Catalyst-internal days/micros for dates/timestamps, which
@@ -69,17 +68,17 @@ private[graft] object Fact {
     */
   def of(cond: Expression): Seq[Fact] = {
     def attr(e: Expression): Option[String] = e match {
-      case a: UnresolvedAttribute if a.nameParts.size == 1 => Some(a.nameParts.head)
       case a: AttributeReference => Some(a.name)
       case _ => None
+    }
+    def external(v: Any): Any = v match {
+      case s: org.apache.spark.unsafe.types.UTF8String => s.toString
+      case v => v
     }
     // None = not a constant (or not evaluable here); Some(None) = NULL
     def constant(e: Expression): Option[Option[Any]] = scala.util.Try {
       if (!e.foldable || e.exists(_.isInstanceOf[Attribute])) None
-      else Some(Option(e.eval(null)).map {
-        case s: org.apache.spark.unsafe.types.UTF8String => s.toString
-        case v => v
-      })
+      else Some(Option(e.eval(null)).map(external))
     }.toOption.flatten
     def value(e: Expression): Option[Any] = constant(e).flatten
     // attr-vs-value applies `direct`, value-vs-attr applies `flipped`
@@ -102,16 +101,15 @@ private[graft] object Fact {
       case LessThan(x, y) => compare(x, y)(upper(true))(lower(true))
       case LessThanOrEqual(x, y) => compare(x, y)(upper(false))(lower(false))
       case b: Between => between(attr(b.input), value(b.lower), value(b.upper))
-      // the parser leaves `x BETWEEN lo AND hi` as an unresolved function
-      case f: UnresolvedFunction
-          if f.nameParts.map(_.toLowerCase) == Seq("between") && f.arguments.size == 3 =>
-        between(attr(f.arguments(0)), value(f.arguments(1)), value(f.arguments(2)))
       case In(a, vs) if attr(a).isDefined =>
         // a null element never matches (three-valued logic); any
         // non-constant element leaves the list undecidable
         val consts = vs.map(constant)
         if (consts.forall(_.isDefined)) Seq(Points(attr(a).get, consts.flatten.flatten))
         else Nil
+      // the optimizer's form of a long IN list: Catalyst-internal values
+      case InSet(a, vs) if attr(a).isDefined =>
+        Seq(Points(attr(a).get, vs.toSeq.filter(_ != null).map(external)))
       case IsNull(a) => attr(a).map(Nullness(_, isNull = true)).toSeq
       case IsNotNull(a) => attr(a).map(Nullness(_, isNull = false)).toSeq
       case _ => Nil
@@ -135,17 +133,19 @@ private[graft] object Fact {
   }
 }
 
-/** Snapshot-metadata planning for every read path (the table API's
-  * `readSnapshot` / `planBetween` / `planPoints` / `planNullability` /
-  * metadata aggregates, the SQL engine's view pruning, DML planning, and the
-  * DSv2 connector's scans, stream planning and pushed aggregates) — one
+/** Snapshot-metadata planning for every read path (the table scan's file
+  * index, the table API's `planBetween` / `planPoints` / `planNullability` /
+  * metadata aggregates, DML planning, and the DSv2 connector's scans,
+  * stream planning and pushed aggregates) — one
   * evolution replay, one file-pruning rule, one metadata-aggregate rule, so
   * two engines reading one snapshot cannot disagree about it.
   *
   * Per-snapshot state (schema, chain epochs, per-epoch column provenance,
   * partition transforms) resolves once per planner, however many values or
   * facts a call applies. `transforms` is by-name: table properties are read
-  * only when a range or point actually reaches the transform pass.
+  * only when a range or point actually reaches the transform pass. A table
+  * scan's file indexes share one planner and may list from several threads
+  * at once (a broadcast side, a subquery), so the caches are concurrent.
   */
 final class SnapshotPlanner(val snap: Snapshot,
     transforms: => Seq[GraftTable.TransformDef]) {
@@ -161,8 +161,8 @@ final class SnapshotPlanner(val snap: Snapshot,
   def epochOf(writtenAt: Long): Long =
     chainIds.foldLeft(0L)((e, id) => if (id <= writtenAt) id else e)
 
-  private val sourceCache = scala.collection.mutable.Map[(Long, String), Option[ColumnSource]]()
-  private val opsCache = scala.collection.mutable.Map[Long, Seq[EvolutionOp]]()
+  private val sourceCache = scala.collection.concurrent.TrieMap[(Long, String), Option[ColumnSource]]()
+  private val opsCache = scala.collection.concurrent.TrieMap[Long, Seq[EvolutionOp]]()
 
   /** Column provenance for files of `epoch`: where current column `name`
     * lives in such a file, found by walking the ops committed in
@@ -451,7 +451,7 @@ final class SnapshotPlanner(val snap: Snapshot,
 
   // ---- merge-on-read delete applicability ----
 
-  private val curNames = scala.collection.mutable.Map[(String, Long), String]()
+  private val curNames = scala.collection.concurrent.TrieMap[(String, Long), String]()
 
   /** `name`, recorded by the delete committed at `appliedAt`, under its
     * current name (renames followed forward). */

@@ -20,7 +20,8 @@ import org.apache.spark.sql.types.StructType
   *    `Column(expr)` constructor);
   *  - `StructType.asNullable`: the data schema of a file relation the table
   *    scan builds itself, nullable as `spark.read` makes it (a file may hold
-  *    nulls in a column the table declares NOT NULL);
+  *    nulls in a column the table declares NOT NULL), and the table's
+  *    nullability-blind schema shape;
   *  - `RebalancePartitions`' advisory size: a table write's target split
   *    rides in its own rebalance, never in the session conf.
   *

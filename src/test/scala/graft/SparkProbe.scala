@@ -11,6 +11,8 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, Spark
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.util.QueryExecutionListener
 
+import graft.table.{GraftTable, SnapshotFileIndex}
+
 /** What Spark did while a block ran: the jobs it started, the bytes its
   * tasks read from storage and the file scans of the queries it executed. Listener events arrive asynchronously, so a
   * marker job runs before and after the block; both listeners sit on the
@@ -70,12 +72,26 @@ object SparkProbe {
     case f: FileSourceScanExec => Seq(f)
     case a: AdaptiveSparkPlanExec => scansOf(a.executedPlan)
     case q: QueryStageExec => scansOf(q.plan)
+    // inner children are a plan's subqueries, or a command's inner plan
     case other =>
-      (other.children ++ other.subqueries ++
-        other.innerChildren.collect { case s: SparkPlan => s }).flatMap(scansOf)
+      (other.children ++ other.innerChildren.collect { case s: SparkPlan => s }).flatMap(scansOf)
   }
 
   /** Files each scan read (its `numFiles` metric, set when it executed). */
   def filesRead(scans: Seq[FileSourceScanExec]): Seq[Long] =
     scans.map(_.metrics("numFiles").value)
+
+  /** The scans of table `t` (its snapshot file index) among `scans`. */
+  def tableScans(t: GraftTable, scans: Seq[FileSourceScanExec]): Seq[FileSourceScanExec] =
+    scans.filter(_.relation.location match {
+      case i: SnapshotFileIndex => i.tableDir == t.tableDir
+      case _ => false
+    })
+
+  /** (files read, files in the snapshot) summed over the scans of table
+    * `t`: a file two scans read counts twice, in both numbers. */
+  def tableFiles(t: GraftTable, o: Observed): (Long, Long) = {
+    val own = tableScans(t, o.scans)
+    (filesRead(own).sum, own.map(_.relation.location.inputFiles.length.toLong).sum)
+  }
 }

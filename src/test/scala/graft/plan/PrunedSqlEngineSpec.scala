@@ -2,13 +2,13 @@ package graft.plan
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkProbe, SparkSpec}
 import graft.table.GraftTable
 
-/** SQL-path stats pruning (`SparkSqlEngine.registerGraftTable`): a range
-  * predicate in a plain SQL statement must shrink the scan's file list via
-  * `planBetween` without ever changing results, and every unrecognized shape
-  * must fall back to the full view.
+/** SQL reads prune at the scan (`SnapshotFileIndex`): a predicate in a plain
+  * SQL statement shrinks each scan's file list through the snapshot planner,
+  * whatever the statement's shape, without ever changing results; a
+  * predicate the planner cannot decide reads every file.
   */
 class PrunedSqlEngineSpec extends SparkSpec {
 
@@ -20,6 +20,14 @@ class PrunedSqlEngineSpec extends SparkSpec {
     (0 until 4).foreach(i =>
       t.append(base.filter(col("k") >= i * 10 && col("k") < (i + 1) * 10).coalesce(1)))
     t
+  }
+
+  /** `sql` through `eng`: its rows, and (files read, files in the snapshot)
+    * summed over its scans of `t`. */
+  private def probe(eng: SparkSqlEngine, t: GraftTable, sql: String)
+      : (Seq[Map[String, Any]], (Long, Long)) = {
+    val (res, o) = SparkProbe.observe(spark)(eng.execute(sql))
+    (res.rows, SparkProbe.tableFiles(t, o))
   }
 
   test("a SQL range predicate prunes files and returns exact rows") {
@@ -50,7 +58,7 @@ class PrunedSqlEngineSpec extends SparkSpec {
     eng.execute("SELECT k FROM kv_reset WHERE k >= 35")
     assert(eng.lastPrune("kv_reset") === ((1, 4)))
     val all = eng.execute("SELECT COUNT(*) AS n FROM kv_reset")
-    assert(all.rows.head("n") === 40L, "pruned registration leaked into an unfiltered read")
+    assert(all.rows.head("n") === 40L, "a filtered read narrowed a later unfiltered one")
   }
 
   test("equality predicates prune to the single containing file") {
@@ -62,17 +70,70 @@ class PrunedSqlEngineSpec extends SparkSpec {
     assert(eng.lastPrune("kv_eq") === ((1, 4)))
   }
 
-  test("joins and complex shapes fall back to the full view, results exact") {
+  test("a join prunes its filtered side; an expression predicate reads every file") {
     val t = kvTable("sqlprune-join-")
+    val dim = kvTable("sqlprune-join-dim-")
     val eng = new SparkSqlEngine(spark)
     eng.registerGraftTable("kv_a", t)
-    eng.registerGraftTable("kv_b", t)
-    val res = eng.execute(
-      "SELECT COUNT(*) AS n FROM kv_a a JOIN kv_b b ON a.k = b.k WHERE a.k >= 30")
-    assert(res.rows.head("n") === 10L)
-    // expression-over-column predicates are not recognized → full scan, exact rows
-    val expr = eng.execute("SELECT COUNT(*) AS n FROM kv_a WHERE k + 0 >= 38")
-    assert(expr.rows.head("n") === 2L)
+    eng.registerGraftTable("kv_b", dim)
+    val (rows, files) = probe(eng, t,
+      "SELECT a.k, b.v FROM kv_a a JOIN kv_b b ON a.k = b.k WHERE a.k >= 35 ORDER BY a.k")
+    assert(rows.map(r => (r("k"), r("v"))) === (35L to 39L).map(k => (k, s"v$k")))
+    assert(files === ((1L, 4L)))
+    assert(eng.lastPrune("kv_a") === ((1, 4)))
+    // expression-over-column predicates are not recognized → every file, exact rows
+    val (expr, all) = probe(eng, t, "SELECT COUNT(*) AS n FROM kv_a WHERE k + 1 >= 39")
+    assert(expr.head("n") === 2L)
+    assert(all === ((4L, 4L)))
+  }
+
+  test("a scalar subquery prunes its own scan and the outer one") {
+    val t = kvTable("sqlprune-scalar-")
+    val eng = new SparkSqlEngine(spark)
+    eng.registerGraftTable("kv_sc", t)
+    val (rows, files) = probe(eng, t, "SELECT k FROM kv_sc WHERE k >= 35 AND " +
+      "v > (SELECT MIN(v) FROM kv_sc WHERE k < 10) ORDER BY k")
+    assert(rows.map(_("k")) === (35L to 39L))
+    assert(files === ((2L, 8L)))
+  }
+
+  test("a VERSION AS OF read prunes the snapshot it travels to") {
+    import spark.implicits._
+    val t = kvTable("sqlprune-travel-")
+    val v = t.latest.snapshotId
+    t.append(Seq((100L, "v100")).toDF("k", "v").coalesce(1))
+    val eng = new SparkSqlEngine(spark)
+    eng.registerGraftTable("kv_tt", t)
+    val (rows, files) =
+      probe(eng, t, s"SELECT k FROM kv_tt VERSION AS OF $v WHERE k >= 35 ORDER BY k")
+    assert(rows.map(_("k")) === (35L to 39L))
+    assert(files === ((1L, 4L)))
+  }
+
+  test("an unregistered ns.t read prunes") {
+    import spark.implicits._
+    val cat = new graft.catalogsvc.CatalogService(spark, scratchDir("sqlprune-unreg-cat"))
+    cat.createNamespace("ns")
+    val t = cat.createTable("ns", "kv_unreg", Seq((0L, "")).toDF("k", "v").schema)
+    (0 until 4).foreach(i =>
+      t.append((i * 10L until (i + 1) * 10L).map(k => (k, s"v$k")).toDF("k", "v").coalesce(1)))
+    val eng = new SparkSqlEngine(spark)
+    eng.registerCatalog(cat)
+    val (rows, files) = probe(eng, t, "SELECT k FROM ns.kv_unreg WHERE k < 3 ORDER BY k")
+    assert(rows.map(_("k")) === Seq(0L, 1L, 2L))
+    assert(files === ((1L, 4L)))
+  }
+
+  test("a read over an unchanged table head registers no temp view") {
+    val t = kvTable("sqlprune-bound-")
+    val eng = new SparkSqlEngine(spark)
+    eng.registerGraftTable("kv_bound", t)
+    def view = spark.sessionState.catalog.getRawTempView("kv_bound").get
+    val bound = view
+    assert(eng.execute("SELECT k FROM kv_bound WHERE k >= 35").rows.size === 5)
+    assert(eng.lastPrune("kv_bound") === ((1, 4)))
+    assert(eng.execute("SELECT COUNT(*) AS n FROM kv_bound WHERE k < 5").rows.head("n") === 5L)
+    assert(view eq bound, "a read re-registered the view")
   }
 
   test("IN-list predicates prune per value, including bucket-transform pinning") {
@@ -98,37 +159,36 @@ class PrunedSqlEngineSpec extends SparkSpec {
 
   test("DML reads the full latest view, never a prior statement's pruned registration") {
     import spark.implicits._
-    // the advisor's stale-view case: a filtered read leaves a file-pruned
-    // registration; an INSERT INTO ... SELECT whose source is that view must
-    // still read EVERY file, or it silently commits a fraction of the rows
+    // a filtered read prunes at its own scan; an INSERT INTO ... SELECT
+    // whose source is the same view must still read EVERY file, or it
+    // silently commits a fraction of the rows
     val t = kvTable("sqlprune-dml-stale-")
     val dst = GraftTable.create(spark, scratchDir("sqlprune-dml-dst-"),
       Seq((0L, "x")).toDF("k", "v").schema)
     val eng = new SparkSqlEngine(spark)
     eng.registerGraftTable("kv_src", t)
     eng.registerGraftTable("kv_dst", dst)
-    eng.execute("SELECT k FROM kv_src WHERE k >= 35") // leaves 1-of-4 files registered
+    eng.execute("SELECT k FROM kv_src WHERE k >= 35") // reads 1 of 4 files
     assert(eng.lastPrune("kv_src") === ((1, 4)))
     eng.execute("INSERT INTO kv_dst SELECT * FROM kv_src")
     assert(dst.readLatest().count() === 40L,
-      "INSERT read a stale file-pruned registration of its source view")
+      "INSERT read a fraction of its source view")
   }
 
   test("CTAS reads the full latest view, never a prior statement's pruned registration") {
-    // the r9 advisor's high finding: tryDdl routes before any refresh, so a
-    // filtered read's file-pruned registration leaked into the CTAS source
-    // query and silently committed a fraction of the rows
+    // tryDdl routes before any refresh: a filtered read before the CTAS
+    // must not narrow what the CTAS source query reads
     val t = kvTable("sqlprune-ctas-stale-")
     val eng = new SparkSqlEngine(spark)
     val cat = new graft.catalogsvc.CatalogService(spark, scratchDir("sqlprune-ctas-cat"))
     eng.registerCatalog(cat)
     eng.execute("CREATE NAMESPACE ns")
     eng.registerGraftTable("kv_ctas_src", t)
-    eng.execute("SELECT k FROM kv_ctas_src WHERE k >= 35") // 1-of-4 files registered
+    eng.execute("SELECT k FROM kv_ctas_src WHERE k >= 35") // reads 1 of 4 files
     assert(eng.lastPrune("kv_ctas_src") === ((1, 4)))
     eng.execute("CREATE TABLE ns.big AS SELECT * FROM kv_ctas_src")
     assert(cat.loadTable("ns", "big").readLatest().count() === 40L,
-      "CTAS read a stale file-pruned registration of its source view")
+      "CTAS read a fraction of its source view")
   }
 
   test("a DML commit re-registers the view for out-of-band readers immediately") {
@@ -155,21 +215,28 @@ class PrunedSqlEngineSpec extends SparkSpec {
     assert(eng.lastPrune("kv_fresh") === ((1, 5)))
   }
 
-  test("a view read more than once in one statement is never narrowed") {
+  test("a view read more than once in one statement prunes each read on its own") {
     val t = kvTable("sqlprune-multi-")
     val eng = new SparkSqlEngine(spark)
     eng.registerGraftTable("kv_multi", t)
-    def n(sql: String): Any = eng.execute(sql).rows.head("n")
-    // each branch's Filter would narrow the one shared view for the other
-    assert(n("SELECT COUNT(*) AS n FROM (SELECT k FROM kv_multi WHERE k >= 35 " +
-      "UNION ALL SELECT k FROM kv_multi WHERE k < 5)") === 10L)
-    assert(n("WITH lo AS (SELECT k FROM kv_multi WHERE k < 5) SELECT COUNT(*) AS n " +
-      "FROM (SELECT k FROM kv_multi WHERE k >= 35 UNION ALL SELECT k FROM lo)") === 10L)
-    assert(n("SELECT COUNT(*) AS n FROM kv_multi WHERE k >= 35 AND " +
-      "(SELECT COUNT(*) FROM kv_multi) = 40") === 5L)
-    assert(!eng.lastPrune.contains("kv_multi"))
-    // a single read still prunes
-    assert(n("SELECT COUNT(*) AS n FROM kv_multi WHERE k >= 35") === 5L)
+    // (n, files each scan of the table read, files in the snapshot summed)
+    def run(sql: String): (Any, Seq[Long], Long) = {
+      val (res, o) = SparkProbe.observe(spark)(eng.execute(sql))
+      (res.rows.head("n"), SparkProbe.filesRead(SparkProbe.tableScans(t, o.scans)).sorted,
+        SparkProbe.tableFiles(t, o)._2)
+    }
+    // each branch filters the one shared view its own way
+    assert(run("SELECT COUNT(*) AS n FROM (SELECT k FROM kv_multi WHERE k >= 35 " +
+      "UNION ALL SELECT k FROM kv_multi WHERE k < 5)") === ((10L, Seq(1L, 1L), 8L)))
+    assert(eng.lastPrune("kv_multi") === ((2, 8)))
+    assert(run("WITH lo AS (SELECT k FROM kv_multi WHERE k < 5) SELECT COUNT(*) AS n " +
+      "FROM (SELECT k FROM kv_multi WHERE k >= 35 UNION ALL SELECT k FROM lo)") ===
+      ((10L, Seq(1L, 1L), 8L)))
+    // the unfiltered subquery reads every file, the filtered outer read one
+    assert(run("SELECT COUNT(*) AS n FROM kv_multi WHERE k >= 35 AND " +
+      "(SELECT COUNT(*) FROM kv_multi) = 40") === ((5L, Seq(1L, 4L), 8L)))
+    assert(eng.lastPrune("kv_multi") === ((5, 8)))
+    assert(run("SELECT COUNT(*) AS n FROM kv_multi WHERE k >= 35") === ((5L, Seq(1L), 4L)))
     assert(eng.lastPrune("kv_multi") === ((1, 4)))
   }
 

@@ -261,4 +261,22 @@ class TableCommandRoutesSpec extends SparkSpec {
     intercept[Exception](eng.execute("ALTER TABLE ns.dc DROP COLUMN nope"))
     intercept[Exception](spark.sql("ALTER TABLE opencatalog.ns.dc DROP COLUMN nope"))
   }
+
+  test("CTAS with PARTITIONED BY gives the same layout and rows on both routes") {
+    both(ns => s"CREATE TABLE $ns.ctas_src (k BIGINT, v STRING)")
+    both(ns => s"INSERT INTO $ns.ctas_src VALUES (1, 'a'), (2, 'b'), (3, 'a'), (4, 'c')")
+    Seq("ctas_ident" -> ("v", Seq("v"), None),
+        "ctas_bucket" -> ("bucket(4, k)", Seq("k_bucket"), Some("bucket(4,k)=k_bucket")))
+      .foreach { case (name, (by, partCols, transforms)) =>
+        both(ns => s"CREATE TABLE $ns.$name PARTITIONED BY ($by) AS SELECT * FROM $ns.ctas_src")
+        val layouts = warehouses.map { wh =>
+          val t = table(wh, name)
+          (t.latest.partitionCols, t.properties.get(GraftTable.PartitionTransformsProp),
+            t.readLatest().collect().map(_.toString).sorted.toSeq)
+        }
+        assert(layouts(0) == layouts(1), name)
+        assert(layouts(0)._1 == partCols && layouts(0)._2 == transforms, name)
+        assert(layouts(0)._3 == Seq("[1,a]", "[2,b]", "[3,a]", "[4,c]"), name)
+      }
+  }
 }

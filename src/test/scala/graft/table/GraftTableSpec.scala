@@ -443,4 +443,18 @@ class GraftTableSpec extends SparkSpec {
       .collect().head
     assert(snapRow.isNullAt(snapRow.fieldIndex("total_rows")))
   }
+
+  test("append and overwrite ignore nested nullability: array('a', 'b') into ARRAY<STRING>") {
+    val t = GraftTable.create(spark, scratchDir("nested-null-"),
+      StructType.fromDDL("k bigint, tags array<string>, attrs map<string, array<int>>"))
+    // literal arrays and maps carry containsNull = false / valueContainsNull = false
+    val df = spark.range(2).select(col("id").as("k"), array(lit("a"), lit("b")).as("tags"),
+      map(lit("x"), array(lit(1))).as("attrs"))
+    assert(!df.schema("tags").dataType.asInstanceOf[ArrayType].containsNull)
+    t.append(df)
+    t.overwrite(df.union(df))
+    assert(t.readLatest().collect().map(r => (r.getLong(0), r.getSeq[String](1))).toSeq
+      .sortBy(_._1) === Seq((0L, Seq("a", "b")), (0L, Seq("a", "b")), (1L, Seq("a", "b")),
+        (1L, Seq("a", "b"))))
+  }
 }

@@ -3,7 +3,7 @@ package graft.table
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.{SparkProbe, SparkSpec}
 
@@ -143,5 +143,47 @@ class SnapshotFileIndexSpec extends SparkSpec {
     assert(t.readLatest().union(t.readLatest()).count() === 40L)
     assert(t.readFiles(snap.files.take(1)).union(t.readFiles(snap.files.drop(1)))
       .select(sum("id")).head().getLong(0) === (0L until 20L).sum)
+  }
+
+  test("a table-API filter prunes at the scan, a renamed column by its current name") {
+    val t = GraftTable.create(spark, scratchDir("sfi-prune-") + "/t",
+      StructType.fromDDL("id bigint, v int"))
+    (0 until 4).foreach(i =>
+      t.append((i * 10 until i * 10 + 10).map(k => (k.toLong, k)).toDF("id", "v").coalesce(1)))
+    def read(df: => DataFrame): (Seq[String], (Long, Long)) = {
+      val (rows, o) = SparkProbe.observe(spark)(df.collect().map(_.toString).toSeq.sorted)
+      (rows, SparkProbe.tableFiles(t, o))
+    }
+    assert(read(t.readLatest().filter(col("v") >= 35)) ===
+      (((35 to 39).map(k => s"[$k,$k]"), (1L, 4L))))
+    // the old files store `v`; the filter names `v2`
+    t.renameColumn("v", "v2")
+    t.append(Seq((40L, 40)).toDF("id", "v2").coalesce(1))
+    assert(read(t.readLatest().filter(col("v2").between(12, 13))) ===
+      ((Seq("[12,12]", "[13,13]"), (1L, 5L))))
+    assert(read(t.readLatest().filter(col("v2") === 40)) === ((Seq("[40,40]"), (1L, 5L))))
+    // the table API's pruned reads are filters over the same scan
+    assert(read(t.readBetween("v2", 21, 22)) === ((Seq("[21,21]", "[22,22]"), (1L, 5L))))
+    assert(read(t.readIn("v2", Seq(1, 40))) === ((Seq("[1,1]", "[40,40]"), (2L, 5L))))
+  }
+
+  test("a SQL IN list of 12 keys (the optimizer's InSet) reads only those keys' buckets") {
+    val t = GraftTable.create(spark, scratchDir("sfi-inset-") + "/t",
+      StructType.fromDDL("k bigint, v string"), partitionCols = Seq("k_bucket"),
+      properties = Map(GraftTable.PartitionTransformsProp -> "bucket(8,k)=k_bucket"))
+    t.append((0L until 200L).map(k => (k, s"v$k")).toDF("k", "v"))
+    assert(t.latest.files.size === 8)
+    // 12 keys from two buckets
+    val buckets = (0L until 200L).groupBy(k => GraftTable.bucketOf(LongType, k, 8).get)
+    val keys = (buckets(1).take(6) ++ buckets(5).take(6)).sorted
+    val eng = new graft.plan.SparkSqlEngine(spark)
+    eng.registerGraftTable("sfi_inset", t)
+    val sql = s"SELECT k FROM sfi_inset WHERE k IN (${keys.mkString(", ")}) ORDER BY k"
+    assert(spark.sql(sql).queryExecution.optimizedPlan.exists(_.expressions.exists(
+      _.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.InSet]))))
+    val (res, o) = SparkProbe.observe(spark)(eng.execute(sql))
+    assert(res.rows.map(_("k")) === keys)
+    assert(SparkProbe.tableFiles(t, o) === ((2L, 8L)))
+    assert(eng.lastPrune("sfi_inset") === ((2, 8)))
   }
 }
