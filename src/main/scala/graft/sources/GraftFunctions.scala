@@ -27,7 +27,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * All are [[ScalarFunction]]s with static `invoke` magic methods, so calls
   * stay inside whole-stage codegen (Spark compiles a direct method call —
-  * no InternalRow boxing on the hot path).
+  * no InternalRow boxing on the hot path). The function classes are
+  * `private[sources]`, which compiles to public: a Scala `private` nested
+  * class is private in the bytecode, and generated Java cannot call into it.
   */
 private[sources] object GraftFunctions {
 
@@ -45,7 +47,7 @@ private[sources] object GraftFunctions {
     * agreement (`bucketOf` refuses cross-type lookalikes for the same
     * reason).
     */
-  private abstract class BucketBase(srcType: DataType)
+  private[sources] abstract class BucketBase(srcType: DataType)
       extends ScalarFunction[java.lang.Integer] {
     override def inputTypes(): Array[DataType] = Array(IntegerType, srcType)
     override def resultType(): DataType = IntegerType
@@ -57,26 +59,26 @@ private[sources] object GraftFunctions {
       Math.floorMod(hash32(v, srcType), n)
     }
   }
-  private case object BucketLong extends BucketBase(LongType) {
+  private[sources] case object BucketLong extends BucketBase(LongType) {
     def invoke(n: Int, v: Long): Int =
       Math.floorMod(hash32(v, LongType), n)
   }
-  private case object BucketInt extends BucketBase(IntegerType) {
+  private[sources] case object BucketInt extends BucketBase(IntegerType) {
     def invoke(n: Int, v: Int): Int =
       Math.floorMod(hash32(v, IntegerType), n)
   }
-  private case object BucketString extends BucketBase(StringType) {
+  private[sources] case object BucketString extends BucketBase(StringType) {
     def invoke(n: Int, v: UTF8String): Int =
       Math.floorMod(hash32(v, StringType), n)
   }
-  private case object BucketDate extends BucketBase(DateType) {
+  private[sources] case object BucketDate extends BucketBase(DateType) {
     def invoke(n: Int, v: Int): Int =
       Math.floorMod(hash32(v, DateType), n)
   }
 
   // ---- truncate ----
 
-  private case object TruncateLong extends ScalarFunction[java.lang.Long] {
+  private[sources] case object TruncateLong extends ScalarFunction[java.lang.Long] {
     override def inputTypes(): Array[DataType] = Array(IntegerType, LongType)
     override def resultType(): DataType = LongType
     override def name(): String = "truncate"
@@ -84,7 +86,7 @@ private[sources] object GraftFunctions {
     override def produceResult(input: InternalRow): java.lang.Long =
       invoke(input.getInt(0), input.getLong(1))
   }
-  private case object TruncateInt extends ScalarFunction[java.lang.Integer] {
+  private[sources] case object TruncateInt extends ScalarFunction[java.lang.Integer] {
     override def inputTypes(): Array[DataType] = Array(IntegerType, IntegerType)
     override def resultType(): DataType = IntegerType
     override def name(): String = "truncate"
@@ -92,7 +94,7 @@ private[sources] object GraftFunctions {
     override def produceResult(input: InternalRow): java.lang.Integer =
       invoke(input.getInt(0), input.getInt(1))
   }
-  private case object TruncateString extends ScalarFunction[UTF8String] {
+  private[sources] case object TruncateString extends ScalarFunction[UTF8String] {
     override def inputTypes(): Array[DataType] = Array(IntegerType, StringType)
     override def resultType(): DataType = StringType
     override def name(): String = "truncate"
@@ -109,7 +111,7 @@ private[sources] object GraftFunctions {
   private def utcEpochDay(micros: Long): Int =
     Math.floorDiv(micros, MicrosPerDay).toInt
 
-  private abstract class TimeGranularity(fnName: String, srcType: DataType,
+  private[sources] abstract class TimeGranularity(fnName: String, srcType: DataType,
       out: DataType) extends ScalarFunction[Any] {
     override def inputTypes(): Array[DataType] = Array(srcType)
     override def resultType(): DataType = out
@@ -126,31 +128,35 @@ private[sources] object GraftFunctions {
   // floor-division civil-day formula (NTZ micros are already wall-clock;
   // transformColumn's to_date(c) is the same division), so one bound class
   // per (fn, long-vs-date) pair suffices.
-  private class DaysTs(srcType: DataType) extends TimeGranularity("days", srcType, DateType) {
+  private[sources] class DaysTs(srcType: DataType)
+      extends TimeGranularity("days", srcType, DateType) {
     def invoke(micros: Long): Int = utcEpochDay(micros)
     override def produceResult(input: InternalRow): Any = invoke(input.getLong(0))
   }
-  private case object DaysDate extends TimeGranularity("days", DateType, DateType) {
+  private[sources] case object DaysDate extends TimeGranularity("days", DateType, DateType) {
     def invoke(d: Int): Int = d
     override def produceResult(input: InternalRow): Any = invoke(input.getInt(0))
   }
-  private class MonthsTs(srcType: DataType) extends TimeGranularity("months", srcType, DateType) {
+  private[sources] class MonthsTs(srcType: DataType)
+      extends TimeGranularity("months", srcType, DateType) {
     def invoke(micros: Long): Int = monthStart(utcEpochDay(micros))
     override def produceResult(input: InternalRow): Any = invoke(input.getLong(0))
   }
-  private case object MonthsDate extends TimeGranularity("months", DateType, DateType) {
+  private[sources] case object MonthsDate extends TimeGranularity("months", DateType, DateType) {
     def invoke(d: Int): Int = monthStart(d)
     override def produceResult(input: InternalRow): Any = invoke(input.getInt(0))
   }
-  private class YearsTs(srcType: DataType) extends TimeGranularity("years", srcType, DateType) {
+  private[sources] class YearsTs(srcType: DataType)
+      extends TimeGranularity("years", srcType, DateType) {
     def invoke(micros: Long): Int = yearStart(utcEpochDay(micros))
     override def produceResult(input: InternalRow): Any = invoke(input.getLong(0))
   }
-  private case object YearsDate extends TimeGranularity("years", DateType, DateType) {
+  private[sources] case object YearsDate extends TimeGranularity("years", DateType, DateType) {
     def invoke(d: Int): Int = yearStart(d)
     override def produceResult(input: InternalRow): Any = invoke(input.getInt(0))
   }
-  private class HoursTs(srcType: DataType) extends TimeGranularity("hours", srcType, LongType) {
+  private[sources] class HoursTs(srcType: DataType)
+      extends TimeGranularity("hours", srcType, LongType) {
     def invoke(micros: Long): Long = Math.floorDiv(micros, MicrosPerHour)
     override def produceResult(input: InternalRow): Any = invoke(input.getLong(0))
   }

@@ -2,19 +2,23 @@ package graft.sources
 
 import java.util.{Map => JMap}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.conf.Configuration
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, GenericInternalRow,
+  TimeZoneAwareExpression, UnsafeProjection}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, Count, CountStar, Max, Min}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics, SupportsRuntimeFiltering}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.graftbridge.SqlInternals
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider}
 import org.apache.spark.sql.sources.{Filter => SFilter}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
@@ -23,7 +27,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.table.{Added, DeleteSpec, Fact, FileEntry, GraftTable, RowDeletes, Snapshot, SnapshotLog, SnapshotPlanner, Stored}
+import graft.table.{DeleteSpec, Fact, FileEntry, GraftTable, RowDeletes, Snapshot, SnapshotFileIndex,
+  SnapshotLog, SnapshotPlanner}
 
 /** DataSource V2 STREAMING SOURCE over a snapshot table — the read half of
   * the streaming story (`StreamOps`' exactly-once sinks are the write half):
@@ -51,11 +56,9 @@ import graft.table.{Added, DeleteSpec, Fact, FileEntry, GraftTable, RowDeletes, 
   * silently reading renamed columns as null (consume up to the evolution
   * point, restart with the new schema — the Iceberg operating procedure).
   *
-  * The per-file reader decodes through Spark's VECTORIZED parquet reader
-  * (simple primitive schemas — exactly what this table format writes;
-  * complex types refuse at scan build), with parquet-hadoop record
-  * materialization as the fallback for empty projections and refused
-  * encodings — see [[GraftPartitionReader]].
+  * Files read through Spark's own parquet reader, the one the table scan
+  * runs, per epoch group with the table's evolution replay — see
+  * [[GraftReads]].
   */
 class GraftStreamSource extends TableProvider with DataSourceRegister
     with CreatableRelationProvider {
@@ -151,11 +154,6 @@ private[sources] class GraftStreamTable(dir: String, tableSchema: StructType)
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new GraftWriteBuilder(dir, info, viaCatalog = false)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    tableSchema.fields.foreach { f =>
-      require(GraftStreamSource.readableComplex(f.dataType),
-        s"graft source: column ${f.name} has unsupported type " +
-          s"${f.dataType.simpleString} (primitives plus array/struct over them)")
-    }
     val maxCommits = Option(options.get("max-commits-per-trigger")).map(_.toInt)
     val streamFrom = Option(options.get("stream-from"))
     // batch time travel (the Iceberg read-option analog): pin the scan to a
@@ -176,9 +174,8 @@ private[sources] class GraftStreamTable(dir: String, tableSchema: StructType)
         (asOfSnapshot.isEmpty && asOfTimestamp.isEmpty),
       "an incremental range and a time-travel target cannot combine")
     // Column pruning: Catalyst hands the projection down and the per-file
-    // readers project at the PARQUET level (the footer's filtered message
-    // type rides ReadSupport.PARQUET_READ_SCHEMA), so unprojected columns
-    // are never decoded — the same contract as the table's own scans.
+    // readers decode only the stored columns it replays from, so
+    // unprojected columns are never decoded — the table scan's contract.
     // Filter pushdown: comparison, IN and null predicates prune whole FILES
     // through the table's own metadata planner (footer bounds and null
     // counts under write-time names, partition values and transforms) at
@@ -262,15 +259,9 @@ private[sources] class GraftScan(dir: String, fullSchema: StructType,
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning {
   override def readSchema(): StructType = schema
 
-  /** `_file` support: when the read schema asks for the metadata column,
-    * each partition carries its absolute path as a constant value — the
-    * reader serves it like a hive partition column, no file bytes touched.
-    */
-  private def withFileCol(e: FileEntry,
-      filePath: String): Map[String, String] =
-    if (schema.fieldNames.contains(GraftStreamSource.FileMetaCol))
-      e.partitionValues + (GraftStreamSource.FileMetaCol -> filePath)
-    else e.partitionValues
+  // one scan reads one load of the log: statistics, partitioning, planning
+  // and the readers all see the same snapshots
+  private lazy val snaps = SnapshotLog.load(new Configuration(), dir)
 
   /** Storage-partitioned joins (`SupportsReportPartitioning` +
     * `HasPartitionKey`): when every identity-partition column is in the
@@ -283,7 +274,6 @@ private[sources] class GraftScan(dir: String, fullSchema: StructType,
     * keys and key-row order are both [[spjKeyCols]], so they always agree.
     */
   private lazy val spjKeyCols: List[String] = if (incrementalFrom.isDefined) Nil else {
-    val snaps = SnapshotLog.load(new Configuration(), dir)
     resolve(snaps).toList.flatMap { snap =>
       val cols = snap.partitionCols.filter(c => schema.exists(_.name == c))
       val ok = cols.nonEmpty && snap.files.nonEmpty &&
@@ -300,7 +290,6 @@ private[sources] class GraftScan(dir: String, fullSchema: StructType,
     if (spjKeyCols.isEmpty)
       new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(0)
     else {
-      val snaps = SnapshotLog.load(new Configuration(), dir)
       val groups = resolve(snaps).map(_.files
         .map(f => spjKeyCols.map(f.partitionValues)).distinct.size).getOrElse(0)
       new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
@@ -330,7 +319,6 @@ private[sources] class GraftScan(dir: String, fullSchema: StructType,
     // restricted to the PRUNED read schema, because Spark resolves these
     // names against the scan's output (a pruning join's key is always in
     // the output, so nothing is lost)
-    val snaps = SnapshotLog.load(new Configuration(), dir)
     val partCols = snaps.lastOption.toSeq.flatMap(_.files)
       .flatMap(_.partitionValues.keys).distinct
     val boundCols = fullSchema.fields.filter(_.dataType match {
@@ -353,7 +341,6 @@ private[sources] class GraftScan(dir: String, fullSchema: StructType,
     * MERGE planning). Metadata only: no file is opened.
     */
   override def estimateStatistics(): Statistics = {
-    val snaps = SnapshotLog.load(new Configuration(), dir)
     val files = resolve(snaps).map(s => GraftStreamSource.planner(dir, s).select(facts))
       .getOrElse(Nil)
     val bytes = files.map(_.sizeBytes).sum
@@ -375,20 +362,29 @@ private[sources] class GraftScan(dir: String, fullSchema: StructType,
       pushedFilters, streamFrom)
   }
 
-  /** Batch read of the LATEST snapshot through the same per-file readers.
-    * Merge-on-read deletes RECONCILE inside each reader (the Iceberg
+  /** The files this scan may read and how each is read, planned once per
+    * scan so every re-plan (runtime filtering) places a file in the same
+    * reader group. A batch read covers the resolved snapshot's files, and
+    * merge-on-read deletes RECONCILE inside each reader (the Iceberg
     * connector posture): every data file's partition carries exactly the
     * delete files the table's per-file rule keeps for it
     * (`SnapshotPlanner.applies`: committed after the file, key bounds
     * overlapping, renames followed), and the reader runs the table's own
     * row check (`RowDeletes`) over parse-once tuple sets — no extra Spark
     * stage, and files no delete can touch read with no check at all.
-    * Unreplayed schema evolution still refuses
-    * (that read needs `GraftTable.readLatest`'s evolution replay); the
-    * connector's batch face covers the append/import/compact/MOR-delete
-    * lifecycle, which is what an external engine pointed at the directory
-    * can safely consume.
+    * Evolution replays per epoch group, as in the table scan.
     */
+  private lazy val reads: GraftReads = {
+    require(snaps.nonEmpty, s"no graft table at $dir")
+    incrementalFrom match {
+      case Some(from) => incrementalReads(from)
+      case None =>
+        val head = resolve(snaps).get
+        new GraftReads(dir, GraftStreamSource.planner(dir, head),
+          head.files.map(e => e -> head.schemas(e.writtenAt.toString)), schema, reconcile = true)
+    }
+  }
+
   /** Incremental batch over (start, end]: the appends committed in the
     * range, mirroring the table API's `readIncremental` contract — unbroken
     * parent chain (expired intermediates refuse), content-changing commits
@@ -398,8 +394,7 @@ private[sources] class GraftScan(dir: String, fullSchema: StructType,
     * apply (in-range MOR commits refuse; earlier deletes only touch earlier
     * files). O(range) metadata planning — the CDC-batch shape at 100 TB.
     */
-  private def incrementalPartitions(from: Long,
-      snaps: Seq[Snapshot]): Array[InputPartition] = {
+  private def incrementalReads(from: Long): GraftReads = {
     val to = incrementalTo.getOrElse(snaps.last.snapshotId)
     require(from < to, s"need start-snapshot-id < end, got ($from, $to]")
     require(snaps.exists(_.snapshotId == to),
@@ -421,37 +416,17 @@ private[sources] class GraftScan(dir: String, fullSchema: StructType,
       s"incremental read over ($from, $to] crosses content-changing commit(s) " +
         bad.map(s => s"${s.snapshotId}:${s.operation}").mkString(", ") +
         s" in $dir — append-only incremental semantics cannot represent them")
-    val dataRoot = SnapshotLog.dataPath(dir).toString
-    val appended = range.filter(s => GraftStreamSource.RowAdding(s.operation))
-      .flatMap(s => s.files.filter(_.writtenAt == s.snapshotId).map(s -> _))
-    val plan = GraftStreamSource.appendOnlyPlanner(dir, snaps, fullSchema, appended,
+    GraftStreamSource.appendedReads(dir, snaps, range, fullSchema, schema,
       (_, e) => s"graft incremental read: ${e.path} in $dir was written under an " +
         "evolved schema — use the table API (readIncremental) for evolution replay")
-    plan.select(facts, appended.map(_._2)).map { e =>
-      GraftInputPartition(s"$dataRoot/${e.path}",
-        withFileCol(e, s"$dataRoot/${e.path}"),
-        schema.json, e.rowCount, e.writtenAt)
-    }.toArray[InputPartition]
   }
 
   override def toBatch(): Batch = new Batch {
     override def planInputPartitions(): Array[InputPartition] = {
-      val snaps = SnapshotLog.load(new Configuration(), dir)
-      require(snaps.nonEmpty, s"no graft table at $dir")
-      incrementalFrom match {
-        case Some(from) => return incrementalPartitions(from, snaps)
-        case None => ()
-      }
-      val head = resolve(snaps).get
-      val plan = GraftStreamSource.planner(dir, head)
-      val dataRoot = SnapshotLog.dataPath(dir).toString
+      val plan = reads.plan
+      if (incrementalFrom.isDefined)
+        return plan.select(facts, reads.files).map(reads.partition(_)).toArray
       val surviving = plan.select(facts)
-      // the deletes each file needs, by the table's per-file rule
-      val deletesOf: Map[String, List[DeleteSpec]] =
-        if (head.deletes.isEmpty) Map.empty
-        else surviving.map(e => e.path ->
-          plan.deletesFor(e).map(DeleteSpec.of(plan, _, dataRoot))).toMap
-      def specs(e: FileEntry) = deletesOf.getOrElse(e.path, Nil)
       // pushed LIMIT: read the smallest file prefix whose exact metadata
       // row counts already cover it — only when no delete can shrink a
       // prefix file's live count below its metadata count (Spark re-applies
@@ -461,31 +436,17 @@ private[sources] class GraftScan(dir: String, fullSchema: StructType,
           var acc = 0L
           val prefix =
             surviving.takeWhile { e => val need = acc < n; acc += e.rowCount; need }
-          if (prefix.forall(specs(_).isEmpty)) prefix else surviving
+          if (prefix.forall(reads.deletes(_).isEmpty)) prefix else surviving
         case _ => surviving
       }
       // COW row-level operations record exactly which files this scan chose
       // (post filter pruning) so the write side replaces those and ONLY
       // those; see GraftCowOperation in GraftCatalog.scala
-      onPlanned.foreach(_(head, chosen))
-      // files of one commit share one write schema and one column mapping
-      val evolutions = scala.collection.mutable.Map[(Long, Set[String]), List[GraftColMap]]()
-      chosen.map { e =>
-        // evolution replay: every file gets the per-file column mapping
-        // (rename → physical name, widen → cast, added → constant) the
-        // table's own planner derives from the snapshot's evolution chain
-        // — the same provenance `readSnapshot` replays, over the FULL
-        // logical schema (the pruned read schema is only a projection)
-        val evolution = evolutions.getOrElseUpdate((e.writtenAt, e.partitionValues.keySet),
-          GraftStreamSource.columnMap(plan, e, DataType.fromJson(
-            head.schemas(e.writtenAt.toString)).asInstanceOf[StructType], fullSchema, dir))
-        GraftInputPartition(s"$dataRoot/${e.path}",
-          withFileCol(e, s"$dataRoot/${e.path}"),
-          schema.json, e.rowCount, e.writtenAt, specs(e),
-          if (spjKeyCols.isEmpty) Array.empty else spjKeyFor(e), evolution)
-      }.toArray[InputPartition]
+      onPlanned.foreach(_(plan.snap, chosen))
+      chosen.map(e => reads.partition(e,
+        if (spjKeyCols.isEmpty) Array.empty else spjKeyFor(e))).toArray[InputPartition]
     }
-    override def createReaderFactory(): PartitionReaderFactory = new GraftReaderFactory
+    override def createReaderFactory(): PartitionReaderFactory = reads.factory
   }
 }
 
@@ -641,361 +602,207 @@ private[sources] class GraftMicroBatchStream(dir: String,
       s"graft streaming read over ($from, $to] crosses row-removing commit(s) " +
         bad.map(s => s"${s.snapshotId}:${s.operation}").mkString(", ") +
         s" in $dir — an append-only stream cannot represent a retraction")
-    val dataRoot = SnapshotLog.dataPath(dir).toString
     // refuse schema drift inside the unconsumed range: reading old files
     // under a renamed/evolved schema would silently null (or alias) columns
-    val appended = range.filter(s => GraftStreamSource.RowAdding(s.operation))
-      .flatMap(s => s.files.filter(_.writtenAt == s.snapshotId).map(s -> _))
-    val plan = GraftStreamSource.appendOnlyPlanner(dir, log, fullSchema, appended,
+    val batch = GraftStreamSource.appendedReads(dir, log, range, fullSchema, schema,
       (s, _) => s"graft streaming read: snapshot ${s.snapshotId} in $dir was written " +
         s"under a different schema than the stream's — consume up to the " +
         "evolution point with the old schema, then restart the query")
-    plan.select(Fact.of(pushedFilters.toSeq), appended.map(_._2)).map { e =>
-      val pv =
-        if (schema.fieldNames.contains(GraftStreamSource.FileMetaCol))
-          e.partitionValues +
-            (GraftStreamSource.FileMetaCol -> s"$dataRoot/${e.path}")
-        else e.partitionValues
-      GraftInputPartition(s"$dataRoot/${e.path}", pv, schema.json, e.rowCount)
-    }.toArray[InputPartition]
+    reads = batch
+    batch.plan.select(Fact.of(pushedFilters.toSeq), batch.files).map(batch.partition(_))
+      .toArray[InputPartition]
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory
+  // the readers of the batch planned last: Spark plans a micro-batch's
+  // partitions before it asks for their reader factory
+  @volatile private var reads: GraftReads = _
+
+  override def createReaderFactory(): PartitionReaderFactory = {
+    require(reads != null, s"graft streaming read of $dir: no micro-batch planned")
+    reads.factory
+  }
 }
 
-/** One current-schema column's resolution against an EVOLVED file:
-  * `phys = Some(name)` reads the file column it was written as (with
-  * `physTypeJson` its write-time type — a widen casts up to the current
-  * type); `phys = None` means the column post-dates the file (added later):
-  * the reader serves `default` (or NULL) as a constant.
+/** One data file as a read task: its path and size, its reader group in
+  * [[GraftReads]], its partition values (typed as the table scan types
+  * them) followed by its path for `_file`, and the deletes that apply to it.
   */
-private[sources] case class GraftColMap(
-    current: String,
-    phys: Option[String],
-    physTypeJson: String,
-    default: Option[String])
-
 private[sources] case class GraftInputPartition(
     filePath: String,
-    partitionValues: Map[String, String],
-    schemaJson: String,
+    sizeBytes: Long,
+    group: Int,
+    values: InternalRow,
     rowCount: Long,
-    writtenAt: Long = 0L,
-    deletes: List[DeleteSpec] = Nil,
-    spjKey: Array[Any] = Array.empty,
-    evolution: List[GraftColMap] = Nil) extends InputPartition
+    writtenAt: Long,
+    deletes: List[DeleteSpec],
+    spjKey: Array[Any]) extends InputPartition
     with org.apache.spark.sql.connector.read.HasPartitionKey {
   // only consulted when the scan reported KeyGroupedPartitioning, which
   // fills spjKey for every partition it plans (same column order)
   override def partitionKey(): InternalRow = new GenericInternalRow(spjKey)
 }
 
-private[sources] class GraftReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new GraftPartitionReader(partition.asInstanceOf[GraftInputPartition])
+/** One reader group: Spark's parquet reader function over the group's
+  * write-time schema, rows laid out as [decoded stored columns, parquet row
+  * index when a delete vector applies, partition values, file path];
+  * `output` projects such a row into the scan schema through the evolution
+  * replay, `keys` into the current delete-key columns `keyNames`.
+  */
+private[sources] case class GraftReadGroup(
+    read: PartitionedFile => Iterator[InternalRow],
+    decodes: Boolean,
+    output: Seq[Expression],
+    keys: Seq[Expression],
+    keyNames: IndexedSeq[String],
+    rowIndex: Int)
+
+/** The connector's reads of a set of data files, planned before any task runs.
+  * Files split into the table scan's groups — one evolution epoch and
+  * write-time schema each, files a delete marks apart — and each group reads
+  * with the function Spark's `ParquetFileFormat.buildReaderWithPartitionValues`
+  * builds, the reader behind every Spark parquet scan. Its rows go through
+  * the table's own evolution replay (`SnapshotPlanner.replay`) bound into a
+  * projection, so only the stored columns the scan schema replays from are
+  * decoded. Partition values come from `SnapshotFileIndex.partitionValues`,
+  * the table scan's typing.
+  *
+  * `entries` pairs each file with its write-time schema json; with
+  * `reconcile`, each file carries the deletes the per-file rule
+  * (`SnapshotPlanner.applies`) keeps for it.
+  */
+private[sources] final class GraftReads(dir: String, val plan: SnapshotPlanner,
+    entries: Seq[(FileEntry, String)], schema: StructType, reconcile: Boolean) {
+  private val spark = SparkSession.active
+  private val dataRoot = SnapshotLog.dataPath(dir).toString
+
+  def files: Seq[FileEntry] = entries.map(_._1)
+
+  private val deletesOf: Map[String, List[DeleteSpec]] =
+    if (!reconcile || plan.snap.deletes.isEmpty) Map.empty
+    else {
+      val specs = plan.snap.deletes.map(d => d -> DeleteSpec.of(plan, d, dataRoot)).toMap
+      files.map(e => e.path -> plan.deletesFor(e).map(specs)).filter(_._2.nonEmpty).toMap
+    }
+
+  def deletes(e: FileEntry): List[DeleteSpec] = deletesOf.getOrElse(e.path, Nil)
+
+  // per group: its reader, and per file of it, the file's partition row
+  private val built: IndexedSeq[(GraftReadGroup, Seq[(String, InternalRow)])] = {
+    val fs = SnapshotLog.fs(spark.sessionState.newHadoopConf(), dir)
+    val zone = spark.sessionState.conf.sessionLocalTimeZone
+    val byGroup = entries.groupBy { case (e, json) =>
+      (plan.epochOf(e.writtenAt), json, deletesOf.contains(e.path)) }.toIndexedSeq
+    byGroup.map { case ((epoch, json, _), members) =>
+      val stored = DataType.fromJson(json).asInstanceOf[StructType]
+      val (partSchema, partRows) = SnapshotFileIndex.partitionValues(spark, fs, dir,
+        members.map(_._1), stored, plan)
+      val specs = members.flatMap(m => deletes(m._1)).distinct
+      val keyFields = specs.filterNot(_.positional)
+        .flatMap(d => d.keyNames.zip(d.keyTypes)).distinct
+        .map { case (n, t) => StructField(n, t) }
+      val read = schema.filterNot(_.name == GraftStreamSource.FileMetaCol)
+      val out = plan.replay(epoch, stored, StructType(read))
+      val keys = plan.replay(epoch, stored, StructType(keyFields))
+      val referenced = (out ++ keys).flatMap(_.collect {
+        case a: UnresolvedAttribute => a.nameParts.head }).toSet
+      val dataSchema = SqlInternals.asNullable(
+        StructType(stored.filterNot(f => partSchema.fieldNames.contains(f.name))))
+      val vectors = specs.exists(_.positional)
+      val required = StructType(dataSchema.filter(f => referenced(f.name)) ++
+        (if (vectors) Seq(StructField(ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME,
+          LongType)) else Nil))
+      val withFile = partSchema.add(GraftStreamSource.FileMetaCol, StringType, nullable = false)
+      val layout = StructType(required ++ withFile)
+      def bind(e: Expression): Expression = e.transform {
+        case a: UnresolvedAttribute =>
+          val i = layout.fieldIndex(a.nameParts.head)
+          BoundReference(i, layout(i).dataType, nullable = true)
+        case z: TimeZoneAwareExpression if z.timeZoneId.isEmpty => z.withTimeZone(zone)
+      }
+      val fileCol = BoundReference(layout.length - 1, StringType, nullable = false)
+      val replayOf = read.map(_.name).zip(out).toMap
+      val output = schema.map(f =>
+        if (f.name == GraftStreamSource.FileMetaCol) fileCol else bind(replayOf(f.name)))
+      val readFn = new ParquetFileFormat().buildReaderWithPartitionValues(spark, dataSchema,
+        withFile, required, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        spark.sessionState.newHadoopConf())
+      val group = GraftReadGroup(readFn, required.nonEmpty, output, keys.map(bind),
+        keyFields.map(_.name).toIndexedSeq, if (vectors) required.length - 1 else -1)
+      val rows = members.zip(partRows).map { case ((e, _), values) =>
+        e.path -> (new GenericInternalRow(values.toSeq(partSchema).toArray :+
+          UTF8String.fromString(s"$dataRoot/${e.path}")): InternalRow)
+      }
+      (group, rows)
+    }
+  }
+  private val groups = built.map(_._1)
+  private val placed: Map[String, (Int, InternalRow)] = built.zipWithIndex.flatMap {
+    case ((_, rows), g) => rows.map { case (path, values) => path -> (g, values) }
+  }.toMap
+
+  def partition(e: FileEntry, spjKey: Array[Any] = Array.empty): GraftInputPartition = {
+    val (group, values) = placed(e.path)
+    GraftInputPartition(s"$dataRoot/${e.path}", e.sizeBytes, group, values, e.rowCount,
+      e.writtenAt, deletes(e), spjKey)
+  }
+
+  def factory: PartitionReaderFactory = new GraftReaderFactory(groups)
 }
 
-/** One-file record reader → InternalRow, PROJECTED at the parquet level —
-  * only the pruned scan schema's data fields decode, plus any merge-on-read
-  * delete key columns the projection dropped (read for the tuple check,
-  * never emitted). Hive partition columns (absent from the file bytes) fill
-  * from the partition's directory values. A projection with NO data fields
-  * (`count(*)`, partition-only selects) emits the file's metadata row count
-  * without opening the file at all — unless deletes apply, which force the
-  * row-level read.
-  *
-  * Decode is VECTORIZED: Spark's own `VectorizedParquetRecordReader`
-  * (batched column decode, the same engine behind every Spark parquet
-  * scan) reads the projected data columns, `initBatch` rides the hive
-  * partition values in as constant vectors, and a codegen'd
-  * `UnsafeProjection` re-orders batch positions into the scan schema
-  * (measured 2.2-2.4x faster end-to-end than record materialization on a
-  * 20M-row aggregate scan). The row-materialized `GroupReadSupport` path
-  * remains only as the fallback for empty-projection row reads and
-  * encodings the vectorized reader refuses at initialize.
-  *
-  * MOR reconciliation: the partition carries only the deletes the table's
-  * per-file rule keeps for this file, and each row goes through the table's
-  * own reconciler (`graft.table.RowDeletes`, the check the table scan runs
-  * as a filter) — a row is skipped iff an equality tuple with a bound after
-  * the file's commit, or a vector position, names it.
+/** Reads one [[GraftInputPartition]] with its group's reader. A file whose
+  * scan needs no stored column and no delete check emits its metadata row
+  * count of constant rows without being opened. A delete check runs the
+  * table's reconciler (`RowDeletes`) per row, positions from Spark's row
+  * index column, as the table scan's `LiveRows` takes `_metadata.row_index`.
   */
-private[sources] class GraftPartitionReader(p: GraftInputPartition)
-    extends PartitionReader[InternalRow] {
-
-  private val schema = DataType.fromJson(p.schemaJson).asInstanceOf[StructType]
-  // current key columns of the applicable equality deletes, in the order
-  // the reconciler receives their values
-  private val keyFields: IndexedSeq[StructField] = p.deletes.filterNot(_.positional)
-    .flatMap(d => d.keyNames.zip(d.keyTypes)).distinct
-    .map { case (n, t) => StructField(n, t) }.toIndexedSeq
-  // delete key columns ride the parquet projection even when the scan
-  // pruned them; `schema.length` stays the emitted width. Partition-valued
-  // key columns stay in too — both backends serve them as constants from
-  // partitionValues, and dropping them would leave the tuple check with no
-  // position to read (commitMorDelta allows any column, including partition
-  // columns, as a delete key).
-  private val extraKeyFields = keyFields.filterNot(f => schema.fieldNames.contains(f.name))
-  private val readFields: Array[StructField] = schema.fields ++ extraKeyFields
-
-  // Per-readField resolution, folding in the partition's evolution mapping
-  // (see [[GraftColMap]]): a field is either a CONSTANT (hive partition
-  // value, or a column this file predates → its declared default/NULL) or a
-  // FILE column under its write-time physical name and type (a widen casts
-  // up on emit).
-  private val evolByName: Map[String, GraftColMap] =
-    p.evolution.map(c => c.current -> c).toMap
-  private val constFlag = new Array[Boolean](readFields.length)
-  private val constValue = new Array[Any](readFields.length)
-  private val physName = new Array[String](readFields.length)
-  private val physType = new Array[DataType](readFields.length)
-  readFields.zipWithIndex.foreach { case (f, i) =>
-    p.partitionValues.get(f.name) match {
-      case Some(v) =>
-        constFlag(i) = true
-        // directory names are hive-escaped (`a%2Fb`); the table scan's file
-        // index decodes them with Spark's own rule, and so does this reader
-        constValue(i) = GraftStreamSource.castPartitionValue(
-          ExternalCatalogUtils.unescapePathName(v), f.dataType)
-      case None => evolByName.get(f.name) match {
-        case Some(c) if c.phys.isEmpty =>
-          constFlag(i) = true
-          constValue(i) = c.default
-            .map(d => GraftStreamSource.castPartitionValue(d, f.dataType)).orNull
-        case Some(c) =>
-          physName(i) = c.phys.get
-          physType(i) = DataType.fromJson(c.physTypeJson)
-        case None =>
-          physName(i) = f.name
-          physType(i) = f.dataType
-      }
-    }
-  }
-  private val dataFields: Array[String] = readFields.indices
-    .filterNot(i => constFlag(i)).map(i => physName(i)).toArray
-
-  // metadata-only path: no data field requested, count known, no deletes
-  private val metadataRows: Long =
-    if (dataFields.isEmpty && p.rowCount >= 0 && p.deletes.isEmpty) p.rowCount
-    else -1L
-  private var emitted = 0L
-
-  /** A positioned row cursor: `advance` to the next file row, `valueAt` a
-    * readFields position of the CURRENT row (for the delete-tuple check),
-    * `emit` the current row projected to the scan schema. */
-  private trait Backend {
-    def advance(): Boolean
-    def valueAt(pos: Int): Any
-    def emit(): InternalRow
-    def close(): Unit
-  }
-
-  /** Spark's vectorized parquet decode, row-cursored. Batch layout is
-    * [dataFields (physical names) in request order, constants in
-    * constFields order]; `batchPos` maps readFields positions onto it once.
-    * Constant columns (hive partition values AND evolved defaults) ride
-    * `initBatch`'s constant vectors; widened columns decode in their
-    * physical type and cast up inside the emit projection. */
-  private final class VectorizedBackend extends Backend {
-    private val constIdx: Array[Int] =
-      readFields.indices.filter(i => constFlag(i)).toArray
-    private val constFields: Array[StructField] = constIdx.map(i => readFields(i))
-    private val constRow = new GenericInternalRow(constFields.length)
-    constIdx.zipWithIndex.foreach { case (ri, i) => constRow.update(i, constValue(ri)) }
-    private val reader =
-      new org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader(
-        false, 4096)
-    try {
-      reader.initialize(p.filePath, java.util.Arrays.asList(dataFields: _*))
-      reader.initBatch(StructType(constFields), constRow)
-    } catch { case e: Throwable => reader.close(); throw e }
-    private val batchPos: Array[Int] = readFields.indices.map { i =>
-      if (constFlag(i)) dataFields.length + constIdx.indexOf(i)
-      else dataFields.indexOf(physName(i))
-    }.toArray
-    // the type AT the batch position: physical for file columns (a widen
-    // decodes narrow), current for constants
-    private def batchType(i: Int): DataType =
-      if (constFlag(i)) readFields(i).dataType else physType(i)
-    private val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-      .create(schema.fields.toIndexedSeq.zipWithIndex.map { case (f, i) =>
-        val ref = org.apache.spark.sql.catalyst.expressions.BoundReference(
-          batchPos(i), batchType(i), f.nullable)
-        if (batchType(i) == f.dataType) ref
-        else org.apache.spark.sql.catalyst.expressions.Cast(ref, f.dataType,
-          Some(java.util.TimeZone.getDefault.getID))
-      })
-    private var row: InternalRow = _
-    // The vectorized reader refuses unsupported encodings (e.g.
-    // DELTA_BYTE_ARRAY in imported parquet) LAZILY, in the first batch read —
-    // backend selection probes the first advance so such files fall back to
-    // the record-materialized path instead of failing the scan.
-    private var primed = false
-    private var primedResult = false
-    def primeFirst(): Unit = { primedResult = doAdvance(); primed = true }
-    private def doAdvance(): Boolean =
-      if (reader.nextKeyValue()) {
-        row = reader.getCurrentValue.asInstanceOf[InternalRow]; true
-      } else false
-    override def advance(): Boolean =
-      if (primed) { primed = false; primedResult } else doAdvance()
-    override def valueAt(pos: Int): Any = {
-      val i = batchPos(pos)
-      if (row.isNullAt(i)) null
-      else GraftStreamSource.widenValue(row.get(i, batchType(pos)),
-        batchType(pos), readFields(pos).dataType)
-    }
-    override def emit(): InternalRow = proj(row)
-    override def close(): Unit = reader.close()
-  }
-
-  /** parquet-hadoop group materialization — the fallback for projections
-    * with no data fields and for files whose schema/encoding the
-    * vectorized reader refuses at initialize. */
-  private final class GroupBackend extends Backend {
-    private val reader = {
-      val conf = new Configuration()
-      val path = new org.apache.hadoop.fs.Path(p.filePath)
-      if (dataFields.nonEmpty) {
-        // project: filter the FILE's own message type down to the requested
-        // data fields (names absent from the file — later-added columns —
-        // simply drop out and read back as null)
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf)
-        val fr = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        val fileType = try fr.getFooter.getFileMetaData.getSchema finally fr.close()
-        val wanted = dataFields.toSet
-        val kept = fileType.getFields.asScala.filter(f => wanted.contains(f.getName))
-        if (kept.nonEmpty && kept.size < fileType.getFieldCount) {
-          val projected = new org.apache.parquet.schema.MessageType(
-            fileType.getName, kept.toList.asJava)
-          conf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-            projected.toString)
+private[sources] class GraftReaderFactory(groups: IndexedSeq[GraftReadGroup])
+    extends PartitionReaderFactory {
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+    val p = partition.asInstanceOf[GraftInputPartition]
+    val g = groups(p.group)
+    val rows: Iterator[InternalRow] =
+      if (!g.decodes && p.deletes.isEmpty && p.rowCount >= 0)
+        Iterator.iterate(0L)(_ + 1).takeWhile(_ < p.rowCount).map(_ => p.values)
+      else g.read(PartitionedFile(p.values, SparkPath.fromPathString(p.filePath), 0L,
+        p.sizeBytes, Array.empty[String], 0L, p.sizeBytes))
+    val live = if (p.deletes.isEmpty) rows else {
+      val check = new RowDeletes(p.filePath.substring(p.filePath.lastIndexOf('/') + 1),
+        p.writtenAt, p.deletes, g.keyNames)
+      val keyRow = UnsafeProjection.create(g.keys)
+      val types = g.keys.map(_.dataType).toArray
+      val keys = new Array[Any](types.length)
+      rows.filter { r =>
+        val k = keyRow(r)
+        var i = 0
+        while (i < keys.length) {
+          keys(i) = if (k.isNullAt(i)) null else k.get(i, types(i))
+          i += 1
         }
+        val pos =
+          if (g.rowIndex < 0) -1L
+          else if (r.isNullAt(g.rowIndex)) throw new IllegalStateException(
+            s"the parquet reader gave no row index for ${p.filePath}")
+          else r.getLong(g.rowIndex)
+        !check.deleted(pos, keys)
       }
-      org.apache.parquet.hadoop.ParquetReader
-        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), path)
-        .withConf(conf)
-        .build()
     }
-    private var current: org.apache.parquet.example.data.Group = _
-    // readFields position → projected-file field index (-1 = absent); the
-    // projected message type is identical for every row of the file
-    private var fieldIdx: Array[Int] = _
-    override def advance(): Boolean = { current = reader.read(); current != null }
-    override def valueAt(pos: Int): Any = {
-      if (constFlag(pos)) return constValue(pos)
-      if (fieldIdx == null) {
-        val names = current.getType.getFields.asScala.map(_.getName).zipWithIndex.toMap
-        fieldIdx = readFields.indices
-          .map(i => if (constFlag(i)) -1 else names.getOrElse(physName(i), -1)).toArray
+    val out = UnsafeProjection.create(g.output)
+    new PartitionReader[InternalRow] {
+      private var row: InternalRow = _
+      override def next(): Boolean = live.hasNext && { row = out(live.next()); true }
+      override def get(): InternalRow = row
+      override def close(): Unit = rows match {
+        case c: java.io.Closeable => c.close()
+        case _ =>
       }
-      val idx = fieldIdx(pos)
-      if (idx < 0 || current.getFieldRepetitionCount(idx) == 0) null
-      else GraftStreamSource.widenValue(
-        GraftStreamSource.readValue(current, idx, physType(pos)),
-        physType(pos), readFields(pos).dataType)
     }
-    override def emit(): InternalRow = {
-      val row = new GenericInternalRow(schema.length)
-      var i = 0
-      while (i < schema.length) {
-        row.update(i, valueAt(i))
-        i += 1
-      }
-      row
-    }
-    override def close(): Unit = reader.close()
   }
-
-  private lazy val backend: Backend =
-    if (dataFields.isEmpty) new GroupBackend
-    else {
-      val vectorized =
-        try {
-          val vb = new VectorizedBackend
-          try { vb.primeFirst(); Some(vb) }
-          catch { case scala.util.control.NonFatal(_) => vb.close(); None }
-        } catch { case _: UnsupportedOperationException => None }
-      vectorized.getOrElse(new GroupBackend)
-    }
-
-  // The reader reads the whole file in physical order (no row-group
-  // skipping), so a running row counter reproduces parquet's row_index
-  // exactly — the position delete vectors record.
-  private lazy val rowDeletes = new RowDeletes(
-    p.filePath.substring(p.filePath.lastIndexOf('/') + 1), p.writtenAt, p.deletes,
-    keyFields.map(_.name))
-  private lazy val keyPos: Array[Int] =
-    keyFields.map(k => readFields.indexWhere(_.name == k.name)).toArray
-  private lazy val keyValues = new Array[Any](keyPos.length)
-  private var rowPos = -1L
-
-  private def deleted: Boolean = {
-    var i = 0
-    while (i < keyPos.length) { keyValues(i) = backend.valueAt(keyPos(i)); i += 1 }
-    rowDeletes.deleted(rowPos, keyValues)
-  }
-
-  private def advanceCounted(): Boolean = {
-    val more = backend.advance()
-    if (more) rowPos += 1
-    more
-  }
-
-  override def next(): Boolean =
-    if (metadataRows >= 0) { emitted += 1; emitted <= metadataRows }
-    else {
-      var more = advanceCounted()
-      while (more && p.deletes.nonEmpty && deleted)
-        more = advanceCounted()
-      more
-    }
-
-  // metadata-count rows never touch the backend (no file open at all): in
-  // this path every scan-schema field is a constant for the whole file
-  // (partition value or evolved default)
-  private lazy val metadataRow: InternalRow = {
-    val row = new GenericInternalRow(schema.length)
-    schema.indices.foreach(i => row.update(i, constValue(i)))
-    row
-  }
-  override def get(): InternalRow =
-    if (metadataRows >= 0) metadataRow else backend.emit()
-
-  override def close(): Unit = if (metadataRows < 0) backend.close()
 }
 
 object GraftStreamSource {
 
   /** Name of the `_file` metadata column (the Iceberg `_file` analog). */
   private[sources] val FileMetaCol = "_file"
-
-  /** Physical-to-current widenings the connector reader can replay in
-    * place: exactly the numeric up-casts the table's widenColumn writes and
-    * this format's physical types can represent.
-    */
-  private[sources] def widenOk(from: DataType, to: DataType): Boolean =
-    (from, to) match {
-      case (a, b) if a == b => true
-      case (IntegerType, LongType) => true
-      case (IntegerType, DoubleType) => true
-      case (LongType, DoubleType) => true
-      case (FloatType, DoubleType) => true
-      case _ => false
-    }
-
-  /** Widen a decoded physical value into the current column type. */
-  private[sources] def widenValue(v: Any, from: DataType, to: DataType): Any =
-    if (v == null || from == to) v
-    else (from, to) match {
-      case (IntegerType, LongType) => v.asInstanceOf[Int].toLong
-      case (IntegerType, DoubleType) => v.asInstanceOf[Int].toDouble
-      case (LongType, DoubleType) => v.asInstanceOf[Long].toDouble
-      case (FloatType, DoubleType) => v.asInstanceOf[Float].toDouble
-      case _ => throw new IllegalStateException(
-        s"graft read: cannot widen $from to $to")
-    }
 
   /** The table's metadata planner over `snap` — the one evolution replay,
     * pruning rule and metadata-aggregate rule the table API also uses.
@@ -1007,37 +814,6 @@ object GraftStreamSource {
   /** The filters the planner can turn into file-pruning facts. */
   private[sources] def plannable(filters: Array[SFilter]): Array[SFilter] =
     filters.filter(f => Fact.of(Seq(f)).nonEmpty)
-
-  /** The reader's column mapping for data file `e` (written under
-    * `writeSchema`) in `plan`'s snapshot: one [[GraftColMap]] per column of
-    * `fullSchema` that reads a differently named or typed stored column
-    * (rename, widen) or a constant (added after the file, dropped-and-re-
-    * added included); Nil when every column reads itself. Partition columns
-    * are served from directory values. A column this reader cannot replay
-    * (non-numeric widen, no provenance) refuses loudly — never silently
-    * null.
-    */
-  private[sources] def columnMap(plan: SnapshotPlanner, e: FileEntry,
-      writeSchema: StructType, fullSchema: StructType, dir: String): List[GraftColMap] = {
-    def noProvenance(c: String) = new IllegalStateException(
-      s"graft read: column $c of $dir has no provenance in ${e.path}'s " +
-        "evolution chain — use the table API (readLatest)")
-    fullSchema.fields.toList.filterNot(f => e.partitionValues.contains(f.name)).flatMap { f =>
-      plan.sourceOf(e, f.name) match {
-        case Some(Stored(pn, _)) =>
-          val pt = writeSchema.find(_.name == pn).map(_.dataType)
-            .getOrElse(throw noProvenance(f.name))
-          require(widenOk(pt, f.dataType),
-            s"graft read: ${e.path} in $dir stores ${f.name} as " +
-              s"${pt.simpleString} which cannot replay to " +
-              s"${f.dataType.simpleString} — use the table API (readLatest)")
-          if (pn == f.name && pt == f.dataType) None
-          else Some(GraftColMap(f.name, Some(pn), pt.json, None))
-        case Some(Added(d, _)) => Some(GraftColMap(f.name, None, "", d))
-        case None => throw noProvenance(f.name)
-      }
-    }
-  }
 
   /** Append-only reads (incremental batch, micro-batch) never replay
     * evolution: every appended file must store each column of the read
@@ -1055,15 +831,29 @@ object GraftStreamSource {
       shape(DataType.fromJson(s.schemaJson).asInstanceOf[StructType]) == shape(fullSchema))
       .map(planner(dir, _))
     // files of one commit share one verdict
-    val verdicts = scala.collection.mutable.Map[(Long, Set[String]), Boolean]()
+    val verdicts = scala.collection.mutable.Map[Long, Boolean]()
     appended.foreach { case (s, e) =>
-      require(verdicts.getOrElseUpdate((e.writtenAt, e.partitionValues.keySet),
+      require(verdicts.getOrElseUpdate(e.writtenAt,
         plan.exists(p => e.writtenAt <= p.snap.snapshotId && scala.util.Try(
-          columnMap(p, e, DataType.fromJson(s.schemas(e.writtenAt.toString))
-            .asInstanceOf[StructType], fullSchema, dir)).toOption.contains(Nil))),
+          SnapshotPlanner.identity(p.replay(p.epochOf(e.writtenAt), DataType.fromJson(
+            s.schemas(e.writtenAt.toString)).asInstanceOf[StructType], fullSchema)))
+          .getOrElse(false))),
         refusal(s, e))
     }
     plan.getOrElse(planner(dir, snaps.last))
+  }
+
+  /** Reads of the files `range`'s row-adding commits appended, each under
+    * its own commit's write-time schema; they must replay nothing
+    * ([[appendOnlyPlanner]]), and no delete applies to them. */
+  private[sources] def appendedReads(dir: String, snaps: Seq[Snapshot], range: Seq[Snapshot],
+      fullSchema: StructType, schema: StructType,
+      refusal: (Snapshot, FileEntry) => String): GraftReads = {
+    val appended = range.filter(s => RowAdding(s.operation))
+      .flatMap(s => s.files.filter(_.writtenAt == s.snapshotId).map(s -> _))
+    new GraftReads(dir, appendOnlyPlanner(dir, snaps, fullSchema, appended, refusal),
+      appended.map { case (s, e) => e -> s.schemas(e.writtenAt.toString) }, schema,
+      reconcile = false)
   }
 
   private[sources] def tableSchema(dir: String): StructType = {
@@ -1219,97 +1009,4 @@ object GraftStreamSource {
   private[sources] val Skippable = Set("create", "rewrite-data-files",
     "materialize-deletes", "zorder-rewrite", "sort-rewrite",
     "add-column", "rename-column", "widen-column", "evolve-partitioning")
-
-  private[sources] def readable(dt: DataType): Boolean = dt match {
-    case LongType | IntegerType | DoubleType | FloatType | StringType |
-         BooleanType | TimestampType | TimestampNTZType | DateType => true
-    case _ => false
-  }
-
-  /** Scan-side type support: primitives plus arbitrarily nested ARRAY /
-    * STRUCT over them (the table API writes these through Spark's standard
-    * 3-level parquet layout; both reader backends decode them — the
-    * vectorized reader natively, the group fallback via
-    * [[readComplexValue]]). Maps stay out of scope, as in the table's own
-    * physical format.
-    */
-  private[sources] def readableComplex(dt: DataType): Boolean = dt match {
-    case ArrayType(e, _) => readableComplex(e)
-    case st: StructType => st.fields.forall(f => readableComplex(f.dataType))
-    case other => readable(other)
-  }
-
-  private[sources] def readValue(g: org.apache.parquet.example.data.Group,
-      idx: Int, dt: DataType): Any = dt match {
-    case LongType => g.getLong(idx, 0)
-    case IntegerType => g.getInteger(idx, 0)
-    case DoubleType => g.getDouble(idx, 0)
-    case FloatType => g.getFloat(idx, 0)
-    case BooleanType => g.getBoolean(idx, 0)
-    case StringType => UTF8String.fromString(g.getString(idx, 0))
-    // table writes pin TIMESTAMP_MICROS (int64) — exactly InternalRow's form
-    case TimestampType | TimestampNTZType => g.getLong(idx, 0)
-    case DateType => g.getInteger(idx, 0)
-    case nested @ (_: ArrayType | _: StructType) =>
-      readComplexValue(g.getGroup(idx, 0), nested)
-    case other => throw new IllegalStateException(s"unreadable type $other")
-  }
-
-  /** Decode a nested parquet group into Catalyst internal form. Arrays use
-    * Spark's standard 3-level layout (`optional group c (LIST) { repeated
-    * group list { <element> } }`); structs are plain nested groups read by
-    * FIELD NAME, so old files missing a later-added struct member read it
-    * back as null.
-    */
-  private[sources] def readComplexValue(g: org.apache.parquet.example.data.Group,
-      dt: DataType): Any = dt match {
-    case ArrayType(elem, _) =>
-      // `g` is the LIST-annotated group; its single repeated field holds one
-      // wrapper group per element, each wrapping the element value (or
-      // nothing, for a null element)
-      val n = g.getFieldRepetitionCount(0)
-      val out = new Array[Any](n)
-      var i = 0
-      while (i < n) {
-        val wrapper = g.getGroup(0, i)
-        out(i) =
-          if (wrapper.getFieldRepetitionCount(0) == 0) null
-          else readValue(wrapper, 0, elem)
-        i += 1
-      }
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-    case st: StructType =>
-      val names = g.getType.getFields.asScala.map(_.getName).zipWithIndex.toMap
-      val row = new GenericInternalRow(st.length)
-      var i = 0
-      while (i < st.length) {
-        val idx = names.getOrElse(st(i).name, -1)
-        row.update(i,
-          if (idx < 0 || g.getFieldRepetitionCount(idx) == 0) null
-          else readValue(g, idx, st(i).dataType))
-        i += 1
-      }
-      row
-    case other => throw new IllegalStateException(s"unreadable nested type $other")
-  }
-
-  private[sources] def castPartitionValue(v: String, dt: DataType): Any = {
-    if (v == "__HIVE_DEFAULT_PARTITION__") return null
-    dt match {
-      case LongType => v.toLong
-      case IntegerType => v.toInt
-      case DoubleType => v.toDouble
-      case StringType => UTF8String.fromString(v)
-      case BooleanType => v.toBoolean
-      // unescaped renderings (`2025-05-06`, `2025-05-06 12:00:00`);
-      // InternalRow wants epoch days / epoch micros
-      case DateType => java.time.LocalDate.parse(v).toEpochDay.toInt
-      case TimestampType | TimestampNTZType =>
-        val ldt = java.time.LocalDateTime.parse(v.replace(' ', 'T'))
-        ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L +
-          ldt.getNano / 1000L
-      case other => throw new IllegalArgumentException(
-        s"graft streaming source: partition column type $other unsupported")
-    }
-  }
 }

@@ -313,29 +313,19 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
       else raw1
       val raw = if (reconcile) raw2.withColumn(WrittenAtCol, col("_metadata.file_name"))
         else raw2
-      // Replay evolution committed after this epoch — from the snapshot's own
-      // carried chain, never other (expirable) docs: each current column
-      // reads its write-time column (cast up when widened) or, when added
-      // later, its declared default. No chain step lies in (epoch, writtenAt]
-      // by the definition of epoch, so the replay is exact for every file in
-      // the group.
-      val replayed = sources.map {
-        case (f, Some(Stored(n, _))) if n == f.name && physSchema.exists(
-            p => p.name == n && p.dataType == f.dataType) => None
-        case (f, Some(Stored(n, _))) => Some(col(n).cast(f.dataType).as(f.name))
-        case (f, Some(Added(d, t))) =>
-          Some(d.fold(lit(null))(lit(_)).cast(t).cast(f.dataType).as(f.name))
-        case (f, None) => throw new IllegalStateException(
-          s"column ${f.name} of $tableDir has no provenance in epoch $epoch")
-      }
+      // Replay evolution committed after this epoch, from the snapshot's own
+      // carried chain (`SnapshotPlanner.replay`, the connector's replay too)
+      val replayed = plan.replay(epoch, physSchema, logical)
       // helper columns and discovered partition-only columns (transform
       // partitions) ride along, so every group unions with the same columns
       val carried = raw.columns.filterNot(c =>
         physSchema.fieldNames.contains(c) || logical.fieldNames.contains(c))
       val evolved =
-        if (replayed.forall(_.isEmpty) && physSchema.length == logical.length) raw
-        else raw.select((logical.fields.zip(replayed).map { case (f, r) =>
-          r.getOrElse(col(f.name)) } ++ carried.map(col)).toIndexedSeq: _*)
+        if (SnapshotPlanner.identity(replayed) && physSchema.length == logical.length) raw
+        else raw.select((logical.fields.zip(replayed).map {
+          case (f, _: UnresolvedAttribute) => col(f.name)
+          case (f, e) => SqlInternals.column(e).as(f.name)
+        } ++ carried.map(col)).toIndexedSeq: _*)
       if (!reconcile) evolved
       else {
         // the one reconciler, as a per-row filter over the current-schema

@@ -1,12 +1,12 @@
 package graft.table
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader
 import org.apache.spark.sql.types.{ArrayType, BinaryType, BooleanType, DataType, DoubleType,
-  FloatType, StringType, StructType}
+  FloatType, LongType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One live delete file as a reader applies it to a data file: absolute
@@ -177,27 +177,19 @@ private[graft] object GraftDeleteCache {
       : java.util.HashMap[String, java.util.HashSet[java.lang.Long]] = {
     parses.incrementAndGet()
     val m = new java.util.HashMap[String, java.util.HashSet[java.lang.Long]]()
-    val path = new org.apache.hadoop.fs.Path(d.path)
-    val r = org.apache.parquet.hadoop.ParquetReader
-      .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), path)
-      .withConf(new Configuration()).build()
+    val r = new VectorizedParquetRecordReader(false, 4096)
     try {
-      var g = r.read()
-      while (g != null) {
-        val fields = g.getType.getFields
-        var fileIdx = -1; var posIdx = -1; var i = 0
-        while (i < fields.size()) {
-          if (fields.get(i).getName == GraftTable.WrittenAtCol) fileIdx = i
-          if (fields.get(i).getName == GraftTable.PosCol) posIdx = i
-          i += 1
-        }
-        require(fileIdx >= 0 && posIdx >= 0,
-          s"delete vector ${d.path} lacks (${GraftTable.WrittenAtCol}, ${GraftTable.PosCol})")
-        val name = g.getString(fileIdx, 0)
+      r.initialize(d.path, java.util.Arrays.asList(GraftTable.WrittenAtCol, GraftTable.PosCol))
+      val batch = r.resultBatch()
+      require(batch.column(0).dataType() == StringType && batch.column(1).dataType() == LongType,
+        s"delete vector ${d.path} must store (${GraftTable.WrittenAtCol} STRING, " +
+          s"${GraftTable.PosCol} BIGINT)")
+      while (r.nextKeyValue()) {
+        val row = r.getCurrentValue.asInstanceOf[InternalRow]
+        val name = row.getUTF8String(0).toString
         var set = m.get(name)
         if (set == null) { set = new java.util.HashSet[java.lang.Long](); m.put(name, set) }
-        set.add(g.getLong(posIdx, 0))
-        g = r.read()
+        set.add(row.getLong(1))
       }
     } finally r.close()
     m
@@ -211,8 +203,7 @@ private[graft] object GraftDeleteCache {
     parses.incrementAndGet()
     val m = new java.util.HashMap[List[Any], java.lang.Long]()
     val cols = d.keyCols ++ (if (d.perRowAppliedAt) List(SnapshotPlanner.AppliedAtCol) else Nil)
-    val r = new org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader(
-      false, 4096)
+    val r = new VectorizedParquetRecordReader(false, 4096)
     try {
       r.initialize(d.path, java.util.Arrays.asList(cols: _*))
       val batch = r.resultBatch()

@@ -4,6 +4,7 @@ import scala.collection.mutable
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -108,17 +109,36 @@ private[graft] object SnapshotFileIndex {
     */
   def scan(spark: SparkSession, fs: FileSystem, tableDir: String, entries: Seq[FileEntry],
       schema: StructType, planner: SnapshotPlanner, current: Map[String, String]): DataFrame = {
-    def qualified(p: Path) = p.makeQualified(fs.getUri, fs.getWorkingDirectory)
-    val dataDir = SnapshotLog.dataPath(tableDir)
-    val statuses = entries.map(e => e -> new FileStatus(
-      e.sizeBytes, false, 1, 0L, 0L, qualified(new Path(s"$dataDir/${e.path}"))))
-    val index = new SnapshotFileIndex(spark, qualified(dataDir), tableDir, statuses, schema,
-      planner, current)
+    val index = build(spark, fs, tableDir, entries, schema, planner, current)
     val parts = index.partitionSchema
     val resolver = spark.sessionState.conf.resolver
     val data = StructType(schema.filterNot(f => parts.exists(p => resolver(p.name, f.name))))
     SqlInternals.ofRows(spark, LogicalRelation(HadoopFsRelation(index, parts,
       SqlInternals.asNullable(data), None, new ParquetFileFormat, Map.empty)(spark)))
+  }
+
+  /** The partition schema of `entries`' directories and each entry's
+    * partition values, typed as a [[scan]] of them types them: Spark's
+    * partition parsing against `schema`, timestamps in the session time
+    * zone. */
+  def partitionValues(spark: SparkSession, fs: FileSystem, tableDir: String,
+      entries: Seq[FileEntry], schema: StructType,
+      planner: SnapshotPlanner): (StructType, Seq[InternalRow]) = {
+    val index = build(spark, fs, tableDir, entries, schema, planner, Map.empty)
+    val byDir = index.partitionSpec().partitions.map(p => p.path -> p.values).toMap
+    (index.partitionSchema,
+      index.allFiles().map(f => byDir.getOrElse(f.getPath.getParent, InternalRow.empty)))
+  }
+
+  private def build(spark: SparkSession, fs: FileSystem, tableDir: String,
+      entries: Seq[FileEntry], schema: StructType, planner: SnapshotPlanner,
+      current: Map[String, String]): SnapshotFileIndex = {
+    def qualified(p: Path) = p.makeQualified(fs.getUri, fs.getWorkingDirectory)
+    val dataDir = SnapshotLog.dataPath(tableDir)
+    val statuses = entries.map(e => e -> new FileStatus(
+      e.sizeBytes, false, 1, 0L, 0L, qualified(new Path(s"$dataDir/${e.path}"))))
+    new SnapshotFileIndex(spark, qualified(dataDir), tableDir, statuses, schema,
+      planner, current)
   }
 
   /** Per table directory, (files read, files indexed) summed over the table

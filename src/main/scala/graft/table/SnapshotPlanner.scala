@@ -1,6 +1,7 @@
 package graft.table
 
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, Between, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, IsNotNull, IsNull, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, Between, Cast, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal}
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.types._
 
@@ -191,6 +192,29 @@ final class SnapshotPlanner(val snap: Snapshot,
 
   def sourceOf(f: FileEntry, name: String): Option[ColumnSource] =
     source(epochOf(f.writtenAt), name)
+
+  /** The evolution replay for files of `epoch` written under `stored`: per
+    * column of `logical`, the expression over the stored columns (unresolved
+    * attributes, by stored name) that reads it — the column itself when its
+    * name and type are unchanged, the stored column cast to the current type
+    * after a rename or widen, or the declared default (NULL without one) for
+    * a column added later. Every scan path replays through it: the table
+    * scan as DataFrame columns, the connector bound into a projection over
+    * each file's rows. Replay is exact for every file of the epoch: no chain
+    * step lies between the epoch and a file's write.
+    */
+  def replay(epoch: Long, stored: StructType, logical: StructType): Seq[Expression] =
+    logical.fields.toSeq.map { f =>
+      source(epoch, f.name) match {
+        case Some(Stored(n, _)) if n == f.name &&
+            stored.exists(p => p.name == n && p.dataType == f.dataType) =>
+          UnresolvedAttribute.quoted(n)
+        case Some(Stored(n, _)) => Cast(UnresolvedAttribute.quoted(n), f.dataType)
+        case Some(Added(d, t)) => Cast(Cast(Literal(d.orNull), DataType.fromDDL(t)), f.dataType)
+        case None => throw new IllegalStateException(
+          s"column ${f.name} of snapshot ${snap.snapshotId} has no provenance in epoch $epoch")
+      }
+    }
 
   private def typeOf(colName: String): DataType =
     schema.find(_.name == colName)
@@ -648,6 +672,10 @@ object SnapshotPlanner {
     }.toOption.flatten
     else (a, b) => scala.util.Try(
       new java.math.BigDecimal(a).compareTo(new java.math.BigDecimal(b))).toOption
+
+  /** True when a [[SnapshotPlanner.replay]] reads every column as itself. */
+  private[graft] def identity(replay: Seq[Expression]): Boolean =
+    replay.forall(_.isInstanceOf[UnresolvedAttribute])
 
   /** The evolution ops committed in (since, snap], in commit order. */
   private[graft] def opsAfter(snap: Snapshot, since: Long): Seq[EvolutionOp] =

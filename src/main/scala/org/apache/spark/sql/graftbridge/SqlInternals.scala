@@ -19,9 +19,9 @@ import org.apache.spark.sql.types.StructType
   *    public `Column` after qualifier rewriting (Spark 4 removed the public
   *    `Column(expr)` constructor);
   *  - `StructType.asNullable`: the data schema of a file relation the table
-  *    scan builds itself, nullable as `spark.read` makes it (a file may hold
-  *    nulls in a column the table declares NOT NULL), and the table's
-  *    nullability-blind schema shape;
+  *    scan builds itself, or of the connector's file reader, nullable as
+  *    `spark.read` makes it (a file may hold nulls in a column the table
+  *    declares NOT NULL), and the table's nullability-blind schema shape;
   *  - `RebalancePartitions`' advisory size: a table write's target split
   *    rides in its own rebalance, never in the session conf.
   *

@@ -6,8 +6,8 @@ import graft.SparkSpec
 import graft.table.GraftTable
 
 /** Connector-side evolution replay: `format("graft")` batch reads of files
-  * written under an OLDER schema resolve through the per-file column
-  * mapping (rename → physical name, widen → cast, add-with-default →
+  * written under an OLDER schema resolve through the table's evolution
+  * replay (rename → stored name, widen → cast, add-with-default →
   * constant, drop → gone) instead of refusing — value-identical to the
   * table API's own readLatest replay.
   */
@@ -44,6 +44,21 @@ class GraftConnectorEvolutionSpec extends SparkSpec {
     val df2 = spark.read.format("graft").load(dir)
     assert(df2.columns.toSeq == Seq("id", "label", "score", "grade"))
     assert(df2.count() == 3)
+  }
+
+  test("a column widened INT to STRING replays through format(graft)") {
+    import spark.implicits._
+    val dir = scratchDir("conn-widen-str") + "/t"
+    val v1 = Seq((1, 10), (2, 20)).toDF("id", "code")
+    val t = GraftTable.create(spark, dir, v1.schema)
+    t.append(v1)
+    t.widenColumn("code", "STRING")
+    t.append(Seq((3, "x30")).toDF("id", "code"))
+    def rows(d: org.apache.spark.sql.DataFrame) = d.orderBy("id").collect().toSeq
+    val conn = spark.read.format("graft").load(dir)
+    assert(rows(conn) == rows(t.readLatest()))
+    assert(rows(conn).map(_.getString(1)) == Seq("10", "20", "x30"))
+    assert(conn.filter(col("code") === "20").count() == 1)
   }
 
   test("evolved read keeps pruning + projection; aggregates stay correct") {

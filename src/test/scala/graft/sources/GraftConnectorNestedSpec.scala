@@ -6,9 +6,9 @@ import graft.SparkSpec
 import graft.dml.Dml
 import graft.table.GraftTable
 
-/** Connector reads of complex types: arrays and structs over primitives
-  * decode through `format("graft")` in both reader backends, with
-  * projection, null elements, and MOR delete reconciliation intact.
+/** Connector reads of complex types: arrays, structs and maps decode
+  * through `format("graft")` with projection, null elements, and MOR delete
+  * reconciliation intact.
   */
 class GraftConnectorNestedSpec extends SparkSpec {
 
@@ -59,5 +59,23 @@ class GraftConnectorNestedSpec extends SparkSpec {
     assert(after.agg(min(col("id"))).head.getLong(0) == 4L)
     assert(after.select(element_at(col("vec"), 4)).agg(max("element_at(vec, 4)"))
       .head.getFloat(0) == 103f)
+  }
+
+  test("map<string, array<int>> reads through format(graft)") {
+    val df = spark.sql("""
+      SELECT * FROM VALUES
+        (1L, map('a', array(1, 2), 'b', CAST(NULL AS ARRAY<INT>))),
+        (2L, CAST(NULL AS MAP<STRING, ARRAY<INT>>)),
+        (3L, map('c', array(3, CAST(NULL AS INT))))
+      AS t(id, m)""")
+    val dir = scratchDir("conn-nested-map") + "/t"
+    val t = GraftTable.create(spark, dir, df.schema)
+    t.append(df)
+    def rows(d: org.apache.spark.sql.DataFrame) = d.orderBy("id").collect().toSeq
+    val conn = spark.read.format("graft").load(dir)
+    assert(rows(conn) == rows(t.readLatest()))
+    assert(rows(conn) == rows(df))
+    assert(rows(conn.select(col("id"), element_at(col("m"), "a").as("a"))) ==
+      rows(t.readLatest().select(col("id"), element_at(col("m"), "a").as("a"))))
   }
 }

@@ -89,6 +89,37 @@ class GraftFunctionsSpec extends SparkSpec {
     }
   }
 
+  test("transform functions run in whole-stage codegen with no interpreted fallback") {
+    withCatalog("gf5") { _ =>
+      import spark.implicits._
+      spark.sql("CREATE NAMESPACE gf5.fn")
+      spark.sql("CREATE TABLE gf5.fn.t (l BIGINT, i INT, s STRING, d DATE, ts TIMESTAMP)")
+      Seq((1L, 7, "alpha", "2024-03-07", "2024-03-07 23:59:59"),
+        (-42L, -3, "beta", "1999-12-31", "2023-12-31 12:00:00"))
+        .toDF("l", "i", "s", "d", "ts")
+        .select($"l", $"i", $"s", $"d".cast("date"), $"ts".cast("timestamp"))
+        .writeTo("gf5.fn.t").append()
+      // a generated-code compile failure raises instead of falling back
+      val key = "spark.sql.codegen.fallback"
+      val prior = spark.conf.getOption(key)
+      spark.conf.set(key, "false")
+      try {
+        val rows = spark.sql(
+          """SELECT gf5.system.bucket(4, l) = pmod(hash(l), 4),
+                gf5.system.bucket(4, i) = pmod(hash(i), 4),
+                gf5.system.bucket(4, s) = pmod(hash(s), 4),
+                gf5.system.bucket(4, d) = pmod(hash(d), 4),
+                gf5.system.truncate(10, l) = l - pmod(l, 10),
+                gf5.system.days(ts) = CAST(ts AS DATE),
+                gf5.system.hours(ts) =
+                  CAST(floor(unix_micros(ts) / CAST(3600000000 AS DOUBLE)) AS BIGINT)
+             FROM gf5.fn.t""").collect()
+        assert(rows.length == 2)
+        rows.foreach(r => assert((0 until r.length).forall(r.getBoolean), r))
+      } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+  }
+
   test("unsupported argument types and unknown functions refuse loudly") {
     withCatalog("gf4") { _ =>
       val e1 = intercept[Exception](

@@ -331,6 +331,50 @@ class GraftStreamSourceSpec extends SparkSpec {
     assert(out.filter(col("ds") === java.sql.Date.valueOf("2024-06-01")).count() == 10)
   }
 
+  test("a TIMESTAMP identity partition reads in the session time zone") {
+    import spark.implicits._
+    val key = "spark.sql.session.timeZone"
+    val prior = spark.conf.get(key)
+    spark.conf.set(key, "America/Los_Angeles")
+    try {
+      val df = Seq((1L, "2024-03-01 10:30:00"), (2L, "2024-07-04 23:00:00"),
+        (3L, "2024-03-01 10:30:00")).toDF("id", "s")
+        .select($"id", $"s".cast("timestamp").as("ts"))
+      val dir = scratchDir("stream-src-ts-part") + "/t"
+      val t = GraftTable.create(spark, dir, df.schema, partitionCols = Seq("ts"))
+      t.append(df)
+      def rows(d: org.apache.spark.sql.DataFrame) = d.orderBy("id").collect().toSeq
+      val conn = spark.read.format("graft").load(dir)
+      assert(rows(conn) == rows(t.readLatest()))
+      assert(rows(conn) == rows(df))
+      // the partition values themselves, and a filter on one
+      def values(d: org.apache.spark.sql.DataFrame) =
+        d.select("ts").distinct().orderBy("ts").collect().toSeq
+      assert(values(conn) == values(t.readLatest()))
+      assert(conn.filter($"ts" === java.sql.Timestamp.valueOf("2024-03-01 10:30:00")).count() ==
+        t.readLatest().filter($"ts" === java.sql.Timestamp.valueOf("2024-03-01 10:30:00")).count())
+    } finally spark.conf.set(key, prior)
+  }
+
+  test("a parquet v2 (DELTA-encoded) file imported by addFiles reads, projected or not") {
+    import spark.implicits._
+    val df = (1 to 200).map(i => (i.toLong, s"name-$i", i * 0.5)).toDF("id", "name", "v")
+    val dir = scratchDir("stream-src-v2")
+    val t = GraftTable.create(spark, s"$dir/t", df.schema)
+    t.append(df.filter(col("id") <= 100))
+    df.filter(col("id") > 100).coalesce(1).write
+      .option("parquet.writer.version", "v2")
+      .option("parquet.enable.dictionary", "false")
+      .parquet(s"$dir/external")
+    t.addFiles(s"$dir/external")
+    def rows(d: org.apache.spark.sql.DataFrame) = d.orderBy("id").collect().toSeq
+    val conn = spark.read.format("graft").load(s"$dir/t")
+    assert(rows(conn) == rows(t.readLatest()))
+    assert(rows(conn) == rows(df))
+    assert(rows(conn.select("id", "name")) == rows(t.readLatest().select("id", "name")))
+    assert(conn.select("name").filter(col("name") === "name-150").count() == 1)
+  }
+
   test("batch write through the connector: append and overwrite modes") {
     import spark.implicits._
     val df = (1 to 40).map(i => (i.toLong, s"u${i % 5}", i * 1.5)).toDF("id", "user", "v")
