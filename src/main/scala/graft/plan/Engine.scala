@@ -1,6 +1,11 @@
 package graft.plan
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.execution.{CollectLimitExec, SQLExecution}
+import org.apache.spark.sql.graftbridge.SqlInternals
+import org.apache.spark.sql.types.StructType
 
 /** One executed statement's captured output (H4; the reference's
   * `StatementResult`, `framework/engines/base.py:16-20`): row-oriented maps,
@@ -97,14 +102,22 @@ class SparkSqlEngine(spark: SparkSession, maxResultRows: Int = 200) extends Engi
     // to Spark grammar BEFORE parsing — the reference's snowflake.sql
     // statements then run verbatim through the same routes as Spark SQL.
     val statement = SqlDml.rewriteSnowflakeDialect(rawStatement, clock)
+    // The statement's one parse: the routes below and the fallback all read
+    // this plan. Forced after the textual DDL routes have passed, so an
+    // Iceberg-extension statement Spark's grammar rejects never parses, and
+    // a statement no route takes that Spark cannot parse raises Spark's own
+    // parse error.
+    lazy val parsed = spark.sessionState.sqlParser.parsePlan(statement)
+    // one name resolution per statement, shared by every route
+    val names = new SqlDml.Names(graftViews.toMap, catalogOpt)
     // SQL DML over a registered snapshot table routes to the table layer's
     // copy-on-write DML (UPDATE/DELETE/MERGE are not executable over temp
     // views); whole-table COUNT(*) answers from snapshot metadata; VERSION /
     // TIMESTAMP AS OF rewrites to snapshot-pinned views.
-    def capture(df: org.apache.spark.sql.DataFrame): StatementResult = {
+    def capture(df: DataFrame): StatementResult = {
       val captures = Sql.capturesRows(statement)
       val run = if (captures) df.limit(maxResultRows) else df
-      val rows = run.collect()
+      val rows = if (captures) collectLimited(run) else run.collect()
       for ((dir, files) <- graft.table.SnapshotFileIndex.listed(run.queryExecution.executedPlan);
            (vn, t) <- graftViews if t.tableDir == dir)
         lastPrune(vn) = files
@@ -119,26 +132,67 @@ class SparkSqlEngine(spark: SparkSession, maxResultRows: Int = 200) extends Engi
     // routes (DDL, COUNT(*) pushdown) answer without touching any view and
     // skip the refresh — metadata must keep answering even when data files
     // are gone.
-    SqlDml.tryDdl(spark, statement, catalogOpt, registerGraftTable,
-        graftViews.toMap, vn => {
+    SqlDml.tryDdl(spark, statement, parsed, names, registerGraftTable,
+        vn => {
           graftViews.remove(vn)
           boundSnapshots.remove(vn)
           spark.catalog.dropTempView(vn)
         }, () => refreshGraftViews(),
         defaultNamespace = currentNamespace,
         setNamespace = ns => currentNamespace = Some(ns))
-      .orElse(SqlDml.tryMetaAgg(statement, spark, graftViews.toMap, catalogOpt))
+      .orElse(SqlDml.tryMetaAgg(statement, parsed, names))
       .orElse {
         refreshGraftViews()
-        SqlDml.tryExecute(spark, statement, graftViews.toMap, catalogOpt).map { r =>
+        SqlDml.tryExecute(spark, statement, parsed, names).map { r =>
           // the DML committed a new snapshot: re-register immediately so
           // even out-of-band spark.sql readers (not routed through execute)
           // see it
           refreshGraftViews(); r
         }
       }
-      .orElse(SqlDml.tryReadRewrites(spark, statement, graftViews.toMap, catalogOpt).map(capture))
-      .getOrElse(capture(spark.sql(statement)))
+      .orElse(SqlDml.tryReadRewrites(spark, parsed, names).map(capture))
+      .getOrElse(capture(SqlInternals.ofRows(spark, parsed)))
+  }
+
+  /** `df.collect()` of a captured read, in one Spark job. Spark collects a
+    * `CollectLimitExec` root with `executeTake`: it scans one partition and,
+    * when that comes back short, starts a second job over more of them — a
+    * selective read over several files pays for two jobs. Here the limit's
+    * child runs once over every partition, each task stopping at the limit
+    * (P partitions: P tasks of at most `limit` rows each), and the first
+    * `limit` rows in partition order are the rows `collect` returns. It
+    * runs as one SQL execution, as `collect` does, so listeners and SQL
+    * metrics see it. An adaptive root and an OFFSET keep Spark's collect.
+    */
+  private def collectLimited(df: DataFrame): Array[Row] = {
+    val qe = df.queryExecution
+    qe.executedPlan match {
+      case CollectLimitExec(limit, child, 0) if limit >= 0 =>
+        SQLExecution.withNewExecutionId(qe, Some("collect")) {
+          qe.executedPlan.resetMetrics()
+          val parts = spark.sparkContext.runJob(child.execute(),
+            (rows: Iterator[InternalRow]) => rows.take(limit).map(_.copy()).toArray)
+          val fromRow = rowEncoder(df.schema).createDeserializer()
+          parts.iterator.flatten.take(limit).map(fromRow).toArray
+        }
+      case _ => df.collect()
+    }
+  }
+
+  /** The resolved Row encoder of the last captured schema. Resolving one
+    * runs the analyzer over its deserializer (about 3 ms, a few percent of a
+    * point lookup), and consecutive captures of one result shape, such as a
+    * loop of lookups, share it. Each capture takes its own deserializer. */
+  @volatile private var lastEncoder: (StructType, ExpressionEncoder[Row]) = (null, null)
+
+  private def rowEncoder(schema: StructType): ExpressionEncoder[Row] = {
+    val (s, enc) = lastEncoder
+    if (schema == s) enc
+    else {
+      val resolved = ExpressionEncoder(schema).resolveAndBind()
+      lastEncoder = (schema, resolved)
+      resolved
+    }
   }
 
   /** Reset every registered view to its table's latest snapshot (no-op per

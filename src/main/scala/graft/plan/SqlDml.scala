@@ -29,20 +29,38 @@ import graft.table.GraftTable
   */
 object SqlDml {
 
-  /** Interpret `statement` as DML over one of `tables` (view name, lowercase
-    * → table). Some(result) when the statement is DML on a registered table;
-    * None when it is not DML at all (callers fall through to `spark.sql`).
+  /** The names one statement resolves: the registered views (lowercase view
+    * name → table) and the attached catalog's exact `ns.t`. A qualified name
+    * resolves once per statement — every route that asks for it shares one
+    * `tableExists` + `loadTable`, each of which copies the session's Hadoop
+    * conf and reads the table's log.
     */
-  def tryExecute(spark: SparkSession, statement: String,
-      tables: Map[String, GraftTable],
-      catalog: Option[graft.catalogsvc.CatalogService] = None): Option[StatementResult] = {
-    if (tables.isEmpty && catalog.isEmpty) return None
-    val parsed =
-      try spark.sessionState.sqlParser.parsePlan(statement)
-      catch { case _: Exception => return None }
+  final class Names(val views: Map[String, GraftTable],
+      val catalog: Option[graft.catalogsvc.CatalogService]) {
+    private val loaded = scala.collection.mutable.Map[(String, String), Option[GraftTable]]()
+    def table(ns: String, tn: String): Option[GraftTable] = loaded.getOrElseUpdate((ns, tn),
+      catalog.filter(_.tableExists(ns, tn)).map(_.loadTable(ns, tn)))
+    /** The exact-name rule every route shares: one part names a registered
+      * view, two name the catalog's `ns.t`; anything else is someone else's
+      * table (None: fall through, never hijack). */
+    def resolve(parts: Seq[String]): Option[GraftTable] = parts match {
+      case Seq(one) => views.get(one.toLowerCase)
+      case Seq(ns, tn) => table(ns, tn)
+      case _ => None
+    }
+    def isEmpty: Boolean = views.isEmpty && catalog.isEmpty
+  }
+
+  /** Interpret the parsed statement as DML over a registered view or an
+    * exact catalog `ns.t`. Some(result) when the statement is DML on such a
+    * table; None when it is not DML at all (callers fall through to Spark).
+    */
+  def tryExecute(spark: SparkSession, statement: String, parsed: LogicalPlan,
+      names: Names): Option[StatementResult] = {
+    if (names.isEmpty) return None
     parsed match {
       case u: UpdateTable =>
-        target(u.table, tables, catalog).map { case (alias, t) =>
+        target(u.table, names).map { case (alias, t) =>
           val strip = dequalify(alias) _
           val assigns = u.assignments.map { a =>
             val k = a.key match {
@@ -63,7 +81,7 @@ object SqlDml {
         }
 
       case d: DeleteFromTable =>
-        target(d.table, tables, catalog).map { case (alias, t) =>
+        target(d.table, names).map { case (alias, t) =>
           val pred = dequalify(alias)(d.condition)
           // Iceberg's write.delete.mode: merge-on-read commits an equality-
           // delete file or positional delete vector (read-only plan,
@@ -75,8 +93,8 @@ object SqlDml {
         }
 
       case m: MergeIntoTable =>
-        target(m.targetTable, tables, catalog).map { case (tgtAlias, t) =>
-          executeMerge(spark, statement, m, tgtAlias, t, tables, catalog)
+        target(m.targetTable, names).map { case (tgtAlias, t) =>
+          executeMerge(spark, statement, m, tgtAlias, t, names)
         }
 
       case ins: InsertIntoStatement =>
@@ -90,19 +108,19 @@ object SqlDml {
           case r: UnresolvedRelation
               if r.multipartIdentifier.size >= 2 &&
                 r.multipartIdentifier.last.toLowerCase.startsWith("branch_") &&
-                target(r, tables, catalog).isEmpty =>
+                target(r, names).isEmpty =>
             val branchName = r.multipartIdentifier.last.substring(7)
-            target(UnresolvedRelation(r.multipartIdentifier.init), tables, catalog)
+            target(UnresolvedRelation(r.multipartIdentifier.init), names)
               .map { case (_, t) => (t, branchName) }
           case _ => None
         }
         (branchSink.map(_._1).map(t => ("", t)) orElse
-            target(ins.table, tables, catalog)).map { case (_, t) =>
+            target(ins.table, names)).map { case (_, t) =>
           // the reference's bulk-insert shape (bulk_insert_sales_events.sql:
           // 1-9): INSERT INTO t VALUES/SELECT, positional column matching.
           if (ins.partitionSpec.nonEmpty) unsupported("INSERT with PARTITION spec")
           val src = SqlInternals.ofRows(spark,
-            resolveCatalogRelations(spark, ins.query, tables, catalog))
+            resolveCatalogRelations(ins.query, names))
           val fields = t.schema.fields
           // explicit column list reorders; otherwise positional
           val ordered: Seq[(String, org.apache.spark.sql.types.StructField)] =
@@ -135,9 +153,7 @@ object SqlDml {
   }
 
   private def executeMerge(spark: SparkSession, statement: String,
-      m: MergeIntoTable, tgtAlias: String, t: GraftTable,
-      tables: Map[String, GraftTable] = Map.empty,
-      catalog: Option[graft.catalogsvc.CatalogService] = None): StatementResult = {
+      m: MergeIntoTable, tgtAlias: String, t: GraftTable, names: Names): StatementResult = {
     if (m.notMatchedBySourceActions.nonEmpty)
       unsupported("MERGE ... WHEN NOT MATCHED BY SOURCE")
     val (srcAlias, srcPlan) = m.sourceTable match {
@@ -149,7 +165,7 @@ object SqlDml {
     // (VALUES lists, temp views, functions); catalog-qualified relations
     // swap to snapshot views first
     val srcDf = SqlInternals.ofRows(spark,
-      resolveCatalogRelations(spark, srcPlan, tables, catalog))
+      resolveCatalogRelations(srcPlan, names))
 
     // ON tgt.k = src.k (either side order) — the single-equi-key contract of
     // the table layer's merge
@@ -282,13 +298,9 @@ object SqlDml {
     * unanswerable column — returns None and the caller falls through to
     * spark.sql over the registered view.
     */
-  def tryMetaAgg(statement: String, spark: SparkSession,
-      tables: Map[String, GraftTable],
-      catalog: Option[graft.catalogsvc.CatalogService] = None): Option[StatementResult] = {
-    if (tables.isEmpty && catalog.isEmpty) return None
-    val parsed =
-      try spark.sessionState.sqlParser.parsePlan(statement)
-      catch { case _: Exception => return None }
+  def tryMetaAgg(statement: String, parsed: LogicalPlan,
+      names: Names): Option[StatementResult] = {
+    if (names.isEmpty) return None
     import org.apache.spark.sql.catalyst.analysis.{UnresolvedFunction, UnresolvedStar}
     import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
     // one aggregate call → its metadata evaluation, or None = not answerable
@@ -321,7 +333,7 @@ object SqlDml {
           case _ => None
         }
         if (items.exists(_.isEmpty)) return None
-        target(child, tables, catalog).flatMap { case (_, t) =>
+        target(child, names).flatMap { case (_, t) =>
           val values = items.flatten.map { case (out, f) => f(t).map(out -> _) }
           if (values.exists(_.isEmpty)) None // any unanswerable part: full scan
           else Some(StatementResult(statement,
@@ -438,17 +450,23 @@ object SqlDml {
     * loudly. After an evolution commit every view over the table re-registers
     * so subsequent statements see the new schema.
     *
+    * The textual routes (`USE` headers, branch and tag DDL, materialized
+    * views, Snowflake links, `WRITE ORDERED BY`) match the statement's
+    * text; every other route matches `parsed`, the statement's one parse,
+    * forced only once no textual route took the statement.
+    *
     * None when the statement is not DDL (or needs a catalog none is
     * registered for).
     */
-  def tryDdl(spark: SparkSession, statement: String,
-      catalog: Option[graft.catalogsvc.CatalogService],
+  def tryDdl(spark: SparkSession, statement: String, parsed: => LogicalPlan,
+      names: Names,
       register: (String, GraftTable) => Unit,
-      tables: Map[String, GraftTable] = Map.empty,
       unregister: String => Unit = _ => (),
       refreshViews: () => Unit = () => (),
       defaultNamespace: Option[String] = None,
       setNamespace: String => Unit = _ => ()): Option[StatementResult] = {
+    val tables = names.views
+    val catalog = names.catalog
     // Context-switch headers the reference scripts open with, in dialects
     // Spark's parser rejects (`USE CATALOG x` is Databricks grammar,
     // `USE DATABASE`/`USE SCHEMA [IDENTIFIER('x')]` Snowflake): the engine
@@ -474,11 +492,7 @@ object SqlDml {
     // Branch/tag DDL targets resolve like DML targets: one part → registered
     // view, ns.t → the catalog; anything else falls through (never hijack).
     def resolveDdlIdent(ident: String): Option[GraftTable] =
-      ident.replace("`", "").split("\\.").toSeq match {
-        case Seq(one) => tables.get(one.toLowerCase)
-        case Seq(ns, t) => catalog.filter(_.tableExists(ns, t)).map(_.loadTable(ns, t))
-        case _ => None
-      }
+      names.resolve(ident.replace("`", "").split("\\.").toSeq)
     statement match {
       case CreateBranchRe(ident, ifNot, name) =>
         resolveDdlIdent(ident).foreach { t =>
@@ -647,9 +661,6 @@ object SqlDml {
         case _ =>
       }
     }
-    val parsed =
-      try spark.sessionState.sqlParser.parsePlan(statement)
-      catch { case _: Exception => return None }
     import org.apache.spark.sql.catalyst.analysis.{FieldName, FieldPosition, ResolvedFieldName, ResolvedFieldPosition, UnresolvedFieldName, UnresolvedFieldPosition, UnresolvedIdentifier, UnresolvedNamespace, UnresolvedTable, UnresolvedTableOrView}
     import org.apache.spark.sql.types.{NullType, StructField}
 
@@ -662,12 +673,7 @@ object SqlDml {
       case ui: UnresolvedIdentifier => Some(ui.nameParts)
       case _ => None
     }
-    def resolve(p: LogicalPlan): Option[GraftTable] = nameParts(p).flatMap {
-      case Seq(one) => tables.get(one.toLowerCase)
-      case Seq(ns, t) =>
-        catalog.filter(_.tableExists(ns, t)).map(_.loadTable(ns, t))
-      case _ => None
-    }
+    def resolve(p: LogicalPlan): Option[GraftTable] = nameParts(p).flatMap(names.resolve)
     // After an evolution commit, re-register every view over the table so
     // the rest of the script reads the evolved schema.
     def evolved(t: GraftTable): StatementResult = {
@@ -936,7 +942,7 @@ object SqlDml {
         // are gone)
         refreshViews()
         val src = SqlInternals.ofRows(spark,
-          resolveCatalogRelations(spark, ctas.query, tables, catalog))
+          resolveCatalogRelations(ctas.query, names))
         val t = GraftCatalog.create(spark, cat, ns, tname, src.schema, ctas.partitioning,
           specOf(ctas.tableSpec))
         t.append(src)
@@ -1089,13 +1095,10 @@ object SqlDml {
     * same table can appear at several versions in one statement. None when
     * nothing was rewritten.
     */
-  def tryReadRewrites(spark: SparkSession, statement: String,
-      tables: Map[String, GraftTable],
-      catalog: Option[graft.catalogsvc.CatalogService] = None): Option[DataFrame] = {
-    if (tables.isEmpty && catalog.isEmpty) return None
-    val parsed =
-      try spark.sessionState.sqlParser.parsePlan(statement)
-      catch { case _: Exception => return None }
+  def tryReadRewrites(spark: SparkSession, parsed: LogicalPlan,
+      names: Names): Option[DataFrame] = {
+    if (names.isEmpty) return None
+    val tables = names.views
     import org.apache.spark.sql.catalyst.analysis.RelationTimeTravel
     var n = 0
     def registered(df: DataFrame, base: String, kind: String): UnresolvedRelation = {
@@ -1106,7 +1109,7 @@ object SqlDml {
     }
     // exact catalog-backed ns.t, mirroring target()'s qualified rule
     def catTable(parts: Seq[String]): Option[GraftTable] = parts match {
-      case Seq(ns, tn) => catalog.filter(_.tableExists(ns, tn)).map(_.loadTable(ns, tn))
+      case Seq(ns, tn) => names.table(ns, tn)
       case _ => None
     }
     // transformDownWithSubqueries, parents before children: a travel node
@@ -1121,13 +1124,8 @@ object SqlDml {
     // a registered `sales`.
     val rewritten = parsed.transformDownWithSubqueries {
       case RelationTimeTravel(r: UnresolvedRelation, ts, version)
-          if (r.multipartIdentifier.size == 1 &&
-            tables.contains(r.multipartIdentifier.last.toLowerCase)) ||
-            (r.multipartIdentifier.size == 2 && catTable(r.multipartIdentifier).nonEmpty) =>
-        val t =
-          if (r.multipartIdentifier.size == 1)
-            tables(r.multipartIdentifier.last.toLowerCase)
-          else catTable(r.multipartIdentifier).get
+          if names.resolve(r.multipartIdentifier).nonEmpty =>
+        val t = names.resolve(r.multipartIdentifier).get
         val df = (version, ts) match {
           // Iceberg's VERSION AS OF accepts a snapshot id OR a ref name:
           // numeric → snapshot travel; otherwise a tag, then a branch
@@ -1249,28 +1247,22 @@ object SqlDml {
       case _ => None
     }
 
-  /** Resolve a DML target plan to (alias-or-name, registered table).
-    * ONLY an exact bare single-part name routes: registered views are
-    * single-part, so a qualified relation (`otherdb.sales`) is a DIFFERENT
-    * table even when its last part collides with a registered view name —
+  /** Resolve a DML target plan to (alias-or-name, table) by the exact-name
+    * rule (`Names.resolve`): a bare name is a registered view, and the
+    * reference's rendered scripts qualify every statement with
+    * `{{ target_namespace }}.{{ table_name }}`, an exact catalog `ns.t`.
+    * Any other qualified relation (`otherdb.sales`) is a DIFFERENT table
+    * even when its last part collides with a registered view name —
     * matching by last part would hijack it (execute the DML against the
-    * registered table, silently). Qualified names fall through to spark.sql,
-    * which fails loudly for DML over an unknown relation.
+    * registered table, silently). It falls through to Spark, which fails
+    * loudly for DML over an unknown relation.
     */
-  private def target(plan: LogicalPlan, tables: Map[String, GraftTable],
-      catalog: Option[graft.catalogsvc.CatalogService] = None)
+  private def target(plan: LogicalPlan, names: Names)
       : Option[(String, GraftTable)] = plan match {
     case SubqueryAlias(id, child) =>
-      target(child, tables, catalog).map { case (_, t) => (id.name, t) }
-    case r: UnresolvedRelation if r.multipartIdentifier.size == 1 =>
-      val name = r.multipartIdentifier.head
-      tables.get(name.toLowerCase).map(t => (name, t))
-    case r: UnresolvedRelation if r.multipartIdentifier.size == 2 =>
-      // the reference's rendered scripts qualify every statement with
-      // `{{ target_namespace }}.{{ table_name }}` — an EXACT catalog match
-      // routes; any other qualified name still falls through loudly
-      val Seq(ns, tn) = r.multipartIdentifier.toSeq
-      catalog.filter(_.tableExists(ns, tn)).map(c => (tn, c.loadTable(ns, tn)))
+      target(child, names).map { case (_, t) => (id.name, t) }
+    case r: UnresolvedRelation =>
+      names.resolve(r.multipartIdentifier).map(t => (r.multipartIdentifier.last, t))
     case _ => None
   }
 
@@ -1281,25 +1273,20 @@ object SqlDml {
     * MERGE USING) resolve through the session analyzer, which cannot see
     * catalog names on its own.
     */
-  private def resolveCatalogRelations(spark: SparkSession, plan: LogicalPlan,
-      tables: Map[String, GraftTable],
-      catalog: Option[graft.catalogsvc.CatalogService]): LogicalPlan =
-    catalog match {
-      case None => plan
-      case Some(cat) => plan.transformUpWithSubqueries {
-        case r: UnresolvedRelation
-            if r.multipartIdentifier.size == 2 &&
-              cat.tableExists(r.multipartIdentifier.head, r.multipartIdentifier.last) =>
-          val Seq(ns, tn) = r.multipartIdentifier.toSeq
-          val t = cat.loadTable(ns, tn)
-          tables.collectFirst { case (vn, vt) if vt.tableDir == t.tableDir => vn } match {
-            case Some(vn) => UnresolvedRelation(Seq(vn))
-            case None =>
-              val vname = s"${tn}__cat_src"
-              t.readLatest().createOrReplaceTempView(vname)
-              UnresolvedRelation(Seq(vname))
-          }
-      }
+  private def resolveCatalogRelations(plan: LogicalPlan, names: Names): LogicalPlan =
+    if (names.catalog.isEmpty) plan
+    else plan.transformUpWithSubqueries {
+      case r: UnresolvedRelation if r.multipartIdentifier.size == 2 &&
+          names.table(r.multipartIdentifier.head, r.multipartIdentifier.last).nonEmpty =>
+        val Seq(ns, tn) = r.multipartIdentifier.toSeq
+        val t = names.table(ns, tn).get
+        names.views.collectFirst { case (vn, vt) if vt.tableDir == t.tableDir => vn } match {
+          case Some(vn) => UnresolvedRelation(Seq(vn))
+          case None =>
+            val vname = s"${tn}__cat_src"
+            t.readLatest().createOrReplaceTempView(vname)
+            UnresolvedRelation(Seq(vname))
+        }
     }
 
   private def qualifierOf(a: UnresolvedAttribute): Option[String] =

@@ -4,7 +4,6 @@ import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NamespaceAlreadyExistsException, NoSuchNamespaceException, NoSuchTableException, NonEmptyNamespaceException, TableAlreadyExistsException}
@@ -689,7 +688,7 @@ private[sources] case class GraftCatalogTable(dir: String, identName: String,
 private[sources] object GraftCatalogTable {
   private[sources] def schemaFor(dir: String, pinnedSnapshot: Option[Long],
       pinnedTimestamp: Option[Long]): StructType = {
-    val snaps = SnapshotLog.load(new Configuration(), dir)
+    val snaps = GraftStreamSource.loadLog(dir)
     require(snaps.nonEmpty, s"no graft table at $dir")
     val snap = GraftStreamSource.resolveSnapshot(snaps, dir,
       pinnedSnapshot, pinnedTimestamp).get

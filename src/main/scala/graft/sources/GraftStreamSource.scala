@@ -2,7 +2,6 @@ package graft.sources
 
 import java.util.{Map => JMap}
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
@@ -82,7 +81,7 @@ class GraftStreamSource extends TableProvider with DataSourceRegister
     val dir = parameters.getOrElse("path",
       throw new IllegalArgumentException(
         "graft batch write needs a path (the table directory)"))
-    val exists = SnapshotLog.load(new Configuration(), dir).nonEmpty
+    val exists = GraftStreamSource.loadLog(dir).nonEmpty
     require(exists, s"no graft table at $dir — create it first " +
       "(GraftTable.create or CREATE TABLE); the connector writes into " +
       "existing tables, it does not infer table layout from a DataFrame")
@@ -108,7 +107,7 @@ class GraftStreamSource extends TableProvider with DataSourceRegister
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val dir = dirOf(options)
-    val snaps = SnapshotLog.load(new Configuration(), dir)
+    val snaps = GraftStreamSource.loadLog(dir)
     require(snaps.nonEmpty, s"no graft table at $dir")
     // a time-travel read surfaces the TARGET snapshot's schema, so a scan
     // before a column rename/widen reads the shape that was live then
@@ -261,7 +260,7 @@ private[sources] class GraftScan(dir: String, fullSchema: StructType,
 
   // one scan reads one load of the log: statistics, partitioning, planning
   // and the readers all see the same snapshots
-  private lazy val snaps = SnapshotLog.load(new Configuration(), dir)
+  private lazy val snaps = GraftStreamSource.loadLog(dir)
 
   /** Storage-partitioned joins (`SupportsReportPartitioning` +
     * `HasPartitionKey`): when every identity-partition column is in the
@@ -496,7 +495,7 @@ private[sources] class GraftMicroBatchStream(dir: String,
     streamFrom: Option[String] = None) extends MicroBatchStream
     with SupportsTriggerAvailableNow {
 
-  private def snaps = SnapshotLog.load(new Configuration(), dir)
+  private def snaps = GraftStreamSource.loadLog(dir)
 
   // Trigger.AvailableNow contract: the run drains up to the head captured
   // HERE, then stops — commits landing mid-run wait for the next run.
@@ -804,6 +803,12 @@ object GraftStreamSource {
   /** Name of the `_file` metadata column (the Iceberg `_file` analog). */
   private[sources] val FileMetaCol = "_file"
 
+  /** The table's snapshot log, read through the session's Hadoop conf, so
+    * every `spark.hadoop.*` setting (a filesystem implementation, object-store
+    * credentials) applies as it does to the table API's own loads. */
+  private[sources] def loadLog(dir: String): Seq[Snapshot] =
+    SnapshotLog.load(SparkSession.active.sessionState.newHadoopConf(), dir)
+
   /** The table's metadata planner over `snap` — the one evolution replay,
     * pruning rule and metadata-aggregate rule the table API also uses.
     * Partition transforms load from the table properties only if a range or
@@ -857,7 +862,7 @@ object GraftStreamSource {
   }
 
   private[sources] def tableSchema(dir: String): StructType = {
-    val snaps = SnapshotLog.load(new Configuration(), dir)
+    val snaps = loadLog(dir)
     require(snaps.nonEmpty, s"no graft table at $dir")
     DataType.fromJson(snaps.last.schemaJson).asInstanceOf[StructType]
   }
@@ -913,7 +918,7 @@ object GraftStreamSource {
   private[sources] def planAggregation(dir: String, schema: StructType,
       agg: Aggregation, asOfSnapshot: Option[Long] = None,
       asOfTimestamp: Option[Long] = None): Option[(StructType, Array[Array[Any]], String)] = {
-    val head = resolveSnapshot(SnapshotLog.load(new Configuration(), dir),
+    val head = resolveSnapshot(loadLog(dir),
       dir, asOfSnapshot, asOfTimestamp).getOrElse(return None)
     val plan = planner(dir, head)
     val files = head.files

@@ -1,12 +1,10 @@
 package graft.table
 
-import java.io.{ObjectInputStream, ObjectOutputStream}
-
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -16,19 +14,12 @@ import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.SerializableConfiguration
 
 /** What one write task hands the driver: the files it wrote, each with its
   * final table-relative path, partition values, row count, size and footer
   * stats. `writtenAt` is filled in by the commit. */
 private[graft] final case class WrittenFiles(entries: Seq[FileEntry]) extends WriterCommitMessage
-
-/** A Hadoop `Configuration` that travels with the factory to the tasks. */
-private[table] final class ConfBox(@transient var value: Configuration) extends Serializable {
-  private def writeObject(out: ObjectOutputStream): Unit = { out.defaultWriteObject(); value.write(out) }
-  private def readObject(in: ObjectInputStream): Unit = {
-    in.defaultReadObject(); value = new Configuration(false); value.readFields(in)
-  }
-}
 
 /** The one table-file writer's factory: every route that turns rows into a
   * table's data or delete files — the table API's DataFrame writes and the
@@ -45,6 +36,9 @@ private[table] final class ConfBox(@transient var value: Configuration) extends 
   *                  its identity partition columns)
   * @param fileSchema the file's columns
   * @param name      leaf-name stem; a per-write token keeps names unique
+  * @param conf      the write's Hadoop conf, broadcast once per write as
+  *                  Spark's file scan broadcasts its read conf: the factory
+  *                  that travels with every task carries only the handle
   */
 private[graft] final case class DataFileWriterFactory(
     root: String,
@@ -55,7 +49,7 @@ private[graft] final case class DataFileWriterFactory(
     fileSchema: StructType,
     name: String,
     outputs: OutputWriterFactory,
-    conf: ConfBox) extends DataWriterFactory with StreamingDataWriterFactory {
+    conf: Broadcast[SerializableConfiguration]) extends DataWriterFactory with StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new DataFileWriter(this, partitionId, taskId)
@@ -74,7 +68,7 @@ private[graft] final case class DataFileWriterFactory(
 private[graft] final class DataFileWriter(f: DataFileWriterFactory, partitionId: Int,
     taskId: Long) extends DataWriter[InternalRow] {
 
-  private val conf = f.conf.value
+  private val conf = f.conf.value.value
   private val context = new TaskAttemptContextImpl(conf, new TaskAttemptID(
     new TaskID(new JobID(f.name, 0), TaskType.MAP, partitionId),
     Option(TaskContext.get()).map(_.attemptNumber()).getOrElse(0)))
@@ -185,7 +179,7 @@ private[graft] object DataFileWriter {
           Option(sc.statusTracker.getStageInfo(id).orNull).exists(_.numActiveTasks > 0)))
         Thread.sleep(20)
       val root = new Path(factory.root)
-      val fs = root.getFileSystem(factory.conf.value)
+      val fs = root.getFileSystem(factory.conf.value.value)
       scala.util.Try {
         val it = fs.listFiles(root, true)
         while (it.hasNext) {
@@ -200,7 +194,7 @@ private[graft] object DataFileWriter {
 
   /** Delete written files (a job or a commit that failed). */
   def delete(factory: DataFileWriterFactory, entries: Seq[FileEntry]): Unit = {
-    val conf = factory.conf.value
+    val conf = factory.conf.value.value
     entries.foreach { e =>
       val p = new Path(factory.root, e.path.stripPrefix(factory.relPrefix))
       scala.util.Try(p.getFileSystem(conf).delete(p, false))

@@ -2050,7 +2050,7 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
       if (deletes) new org.apache.hadoop.fs.Path(dataRoot, DeletesDir) else dataRoot)
     DataFileWriterFactory(root.toString, if (deletes) s"$DeletesDir/" else "", bound, keep,
       input.length, fileSchema, s"$stem-${java.util.UUID.randomUUID().toString.take(8)}",
-      outputs, new ConfBox(c))
+      outputs, spark.sparkContext.broadcast(new org.apache.spark.util.SerializableConfiguration(c)))
   }
 
   private def listParquetFiles(dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] = {
@@ -2072,8 +2072,7 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     */
   def bloomFilterColumns(relPath: String): Set[String] = {
     val p = new org.apache.hadoop.fs.Path(SnapshotLog.dataPath(tableDir), relPath)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+    val reader = GraftTable.openFooter(conf, p)
     try {
       import scala.jdk.CollectionConverters._
       val block = reader.getFooter.getBlocks.asScala.head
@@ -2426,6 +2425,16 @@ object GraftTable {
   private def writeOp(m: Map[String, String]): String =
     org.json4s.jackson.Serialization.write(m)(SnapshotLog.formats)
 
+  /** Open a parquet file for its footer with the caller's Hadoop conf.
+    * `ParquetFileReader.open(InputFile)` alone builds a fresh
+    * `Configuration`, which finds and parses `core-default.xml` again on
+    * every call and ignores the caller's settings. */
+  private def openFooter(conf: org.apache.hadoop.conf.Configuration,
+      p: org.apache.hadoop.fs.Path): org.apache.parquet.hadoop.ParquetFileReader =
+    org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf).build())
+
   /** Row count + per-column `[min, max, nullCount]` stats from the parquet
     * footer — one footer open serves all. Bounds are merged across row
     * groups; a column's BOUNDS drop out if any row group carries no
@@ -2448,8 +2457,7 @@ object GraftTable {
   private[table] def footerMeta(conf: org.apache.hadoop.conf.Configuration,
       p: org.apache.hadoop.fs.Path): (Long, Map[String, List[String]]) = {
     try {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      val reader = openFooter(conf, p)
       try {
         import scala.jdk.CollectionConverters._
         val mins = scala.collection.mutable.Map[String, Comparable[Any]]()

@@ -375,6 +375,29 @@ class GraftStreamSourceSpec extends SparkSpec {
     assert(conn.select("name").filter(col("name") === "name-150").count() == 1)
   }
 
+  test("connector log loads read through the session's Hadoop conf") {
+    import spark.implicits._
+    // a scheme known only to the context's Hadoop conf, where a
+    // `spark.hadoop.fs.gtest.impl` setting lands; uncached, so every
+    // filesystem lookup needs the setting
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.gtest.impl", classOf[GtestFileSystem].getName)
+    hc.setBoolean("fs.gtest.impl.disable.cache", true)
+    try {
+      val dir = "gtest://" + scratchDir("session-conf") + "/t"
+      val df = (1 to 20).map(i => (i.toLong, s"u${i % 3}")).toDF("id", "user")
+      GraftTable.create(spark, dir, df.schema)
+      df.write.format("graft").mode("append").save(dir)
+      val back = spark.read.format("graft").load(dir)
+      assert(back.count() == 20)
+      assert(back.orderBy("id").collect().toSeq == df.orderBy("id").collect().toSeq)
+      assert(back.filter(col("id") > 15).count() == 5)
+    } finally {
+      hc.unset("fs.gtest.impl")
+      hc.unset("fs.gtest.impl.disable.cache")
+    }
+  }
+
   test("batch write through the connector: append and overwrite modes") {
     import spark.implicits._
     val df = (1 to 40).map(i => (i.toLong, s"u${i % 5}", i * 1.5)).toDF("id", "user", "v")
@@ -485,4 +508,10 @@ class GraftStreamSourceSpec extends SparkSpec {
       .outputMode("complete").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
   }
+}
+
+/** The local filesystem under the `gtest` scheme. */
+class GtestFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "gtest"
+  override def getUri: java.net.URI = java.net.URI.create("gtest:///")
 }
