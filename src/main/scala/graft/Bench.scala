@@ -392,7 +392,7 @@ object Bench {
       val afterCow = t.latest.files.map(_.path).toSet
       val cowRewritten = (filesBefore -- afterCow).size
       val dv = timeOnce {
-        graft.dml.Dml.deleteMorPositional(t, col("user_id") % 1000 === 1) }
+        graft.dml.Dml.deleteMor(t, col("user_id") % 1000 === 1) }
       val dvRewritten = (afterCow -- t.latest.files.map(_.path).toSet).size
       val dvTuples = t.latest.deletes.filter(_.positional).map(_.rowCount).sum
       s"""{"delete_cow":$cow,"delete_dv":$dv,""" +

@@ -218,49 +218,22 @@ object Dml {
     t.commitRewrite(rewritten, untouched, "delete", basedOn = Some(planned))
   }
 
-  /** `write.delete.representation` routing for merge-on-read DML:
-    * `equality` (default) keys on identifier columns, `positional` writes
-    * delete vectors. Any other value is refused loudly — a typo silently
-    * falling back to equality would change DML semantics on a non-unique
-    * key.
-    */
-  def positionalRepresentation(t: GraftTable): Boolean =
-    t.properties.get(GraftTable.DeleteRepresentationProp)
-      .map(_.toLowerCase) match {
-      case Some("positional") => true
-      case Some("equality") | None => false
-      case Some(other) => throw new UnsupportedOperationException(
-        s"${GraftTable.DeleteRepresentationProp}='$other' (equality or positional)")
-    }
-
   private def morMode(t: GraftTable, prop: String): Boolean =
     t.properties.get(prop).map(_.toLowerCase).contains("merge-on-read")
 
-  private def identifierCols(t: GraftTable, modeProp: String): Seq[String] =
-    t.properties.get(GraftTable.IdentifierColumnsProp)
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .filter(_.nonEmpty)
-      .getOrElse(throw new IllegalArgumentException(
-        s"$modeProp=merge-on-read needs ${GraftTable.IdentifierColumnsProp} on " +
-          s"${t.tableDir} (or ${GraftTable.DeleteRepresentationProp}=positional)"))
-
-  /** DELETE routed by the table's `write.delete.mode` /
-    * `write.delete.representation` properties — the single entry point every
-    * SQL route (pre-router and Spark catalog alike) goes through, so a
-    * table declared merge-on-read gets its O(matched) read-only plan from
-    * any door, never a silent COW rewrite.
+  /** DELETE routed by the table's `write.delete.mode` — the single entry
+    * point every SQL route (pre-router and Spark catalog alike) goes
+    * through, so a table declared merge-on-read gets its O(matched)
+    * read-only plan from any door, never a silent COW rewrite.
     */
   def deleteAuto(t: GraftTable, pred: Column): Snapshot =
-    if (!morMode(t, GraftTable.DeleteModeProp)) delete(t, pred)
-    else if (positionalRepresentation(t)) deleteMorPositional(t, pred)
-    else deleteMor(t, pred, identifierCols(t, GraftTable.DeleteModeProp))
+    if (morMode(t, GraftTable.DeleteModeProp)) deleteMor(t, pred) else delete(t, pred)
 
   /** UPDATE routed by `write.update.mode` — see [[deleteAuto]]. */
   def updateAuto(t: GraftTable, pred: Column,
       assignments: Map[String, Column]): Snapshot =
-    if (!morMode(t, GraftTable.UpdateModeProp)) update(t, pred, assignments)
-    else if (positionalRepresentation(t)) updateMorPositional(t, pred, assignments)
-    else updateMor(t, pred, assignments, identifierCols(t, GraftTable.UpdateModeProp))
+    if (morMode(t, GraftTable.UpdateModeProp)) updateMor(t, pred, assignments)
+    else update(t, pred, assignments)
 
   /** Merge-on-read DELETE by explicit keys (the Iceberg v2 equality-delete
     * write, the Flink-CDC delete shape): `keys`' columns name table columns;
@@ -276,34 +249,16 @@ object Dml {
   def deleteMorKeys(t: GraftTable, keys: DataFrame): Snapshot =
     t.commitMorDelta(keys, "delete-mor")
 
-  /** Merge-on-read `DELETE FROM t WHERE pred`: enumerate the distinct
-    * `keyCols` tuples of matching rows (one pushed-down scan of the
-    * metadata-pruned candidate files — read-only, unlike COW's rewrite),
-    * then commit them as an equality-delete file.
-    * `keyCols` must functionally identify the rows to delete: every live row
-    * sharing a matching row's key tuple is deleted with it (choose a unique
-    * key, or exactly the predicate columns). Serializable like COW delete:
-    * aborts if a commit lands between planning and publish.
-    */
-  def deleteMor(t: GraftTable, pred: Column, keyCols: Seq[String]): Snapshot = {
-    val planned = t.latest
-    val (candidates, _) = planningCandidates(t, planned, pred)
-    val keys = t.readSnapshot(planned.copy(files = candidates.toList)).filter(pred)
-      .select(keyCols.map(col): _*).distinct()
-    t.commitMorDelta(keys, "delete-mor", basedOn = Some(planned))
-  }
-
-  /** Positional merge-on-read `DELETE FROM t WHERE pred` (the Iceberg v3
+  /** Merge-on-read `DELETE FROM t WHERE pred` (the Iceberg v3
     * deletion-vector shape, and what Iceberg-Spark itself writes for MOR
     * DML): ONE metadata-pruned, read-only scan of candidate files addresses
     * the matched rows as (part-file name, row position) tuples, committed as
     * a delete VECTOR — zero data files rewritten, no identifier columns
     * trusted, and a non-unique key can never over-delete: the vector names
     * exactly the rows the predicate matched. Reads reconcile with a per-row
-    * lookup of the row address on only the files the vector names (cheaper
-    * than equality: no key comparison, no key resolution).
+    * lookup of the row address on only the files the vector names.
     */
-  def deleteMorPositional(t: GraftTable, pred: Column): Snapshot = {
+  def deleteMor(t: GraftTable, pred: Column): Snapshot = {
     val planned = t.latest
     val (candidates, _) = planningCandidates(t, planned, pred)
     if (candidates.isEmpty) return planned
@@ -319,13 +274,14 @@ object Dml {
     element_at(split(col("_gf_uri"), "/"), -1).as(GraftTable.WrittenAtCol),
     col(GraftTable.PosCol))
 
-  /** Positional merge-on-read `UPDATE t SET ... WHERE pred`: ONE delete
-    * vector + append commit — the matched rows' addresses delete, their
-    * updated versions append, ZERO data files rewrite. Unlike [[updateMor]]
-    * this needs NO identifier-column declaration and cannot over-delete on a
-    * non-unique key: positions name exactly the matched rows.
+  /** Merge-on-read `UPDATE t SET ... WHERE pred` (Iceberg's
+    * `write.update.mode=merge-on-read`): ONE delete vector + append commit —
+    * the matched rows' addresses delete, their updated versions append,
+    * ZERO data files rewrite (at 100 TB a predicate UPDATE that rewrites
+    * files when a delete+append would do is the expensive plan). Positions
+    * name exactly the matched rows, so no identifier columns are needed.
     */
-  def updateMorPositional(t: GraftTable, pred: Column,
+  def updateMor(t: GraftTable, pred: Column,
       assignments: Map[String, Column]): Snapshot = {
     val planned = t.latest
     val (candidates, _) = planningCandidates(t, planned, pred)
@@ -344,11 +300,8 @@ object Dml {
     * MERGE semantics at O(batch) write cost, deferring reconciliation to
     * reads. A duplicated source key raises (the MERGE cardinality guard:
     * two versions of the same key in one batch have no defined winner).
-    * With `skipEmpty`, an empty source commits nothing.
     */
-  def upsertMor(t: GraftTable, source: DataFrame, keyCols: Seq[String],
-      operation: String = "upsert-mor",
-      basedOn: Option[Snapshot] = None, skipEmpty: Boolean = false): Snapshot = {
+  def upsertMor(t: GraftTable, source: DataFrame, keyCols: Seq[String]): Snapshot = {
     require(keyCols.nonEmpty, "upsert needs at least one key column")
     val w = org.apache.spark.sql.expressions.Window.partitionBy(keyCols.map(col): _*)
     val guarded = source.withColumn("_src_cnt", count(lit(1)).over(w))
@@ -361,81 +314,34 @@ object Dml {
             col(c).cast("string")))).as(c)
         else col(c)
       }.toSeq: _*)
-    t.commitUpsert(guarded, keyCols, operation, basedOn = basedOn, skipEmpty = skipEmpty)
-  }
-
-  /** Merge-on-read `UPDATE t SET ... WHERE pred` (Iceberg's
-    * `write.update.mode=merge-on-read`): ONE equality-delete + append commit
-    * replacing the matched rows with their updated versions — the matched
-    * scan is metadata-pruned and read-only, and ZERO data files rewrite (at
-    * 100 TB a predicate UPDATE that rewrites files when a delete+append
-    * would do is the expensive plan). `keyCols` are the table's declared
-    * identifier columns and are TRUSTED unique (the identifier-field
-    * contract, same trust as CDC upsert): a non-matched live row sharing a
-    * matched row's key tuple would be deleted without replacement.
-    * Duplicate tuples inside the matched set itself raise via the upsert
-    * cardinality guard.
-    */
-  def updateMor(t: GraftTable, pred: Column, assignments: Map[String, Column],
-      keyCols: Seq[String]): Snapshot = {
-    val planned = t.latest
-    val (candidates, _) = planningCandidates(t, planned, pred)
-    if (candidates.isEmpty) return planned
-    val updated = assign(t.readSnapshot(planned.copy(files = candidates.toList)).filter(pred),
-      planned, assignments)
-    upsertMor(t, updated, keyCols, "update-mor", basedOn = Some(planned), skipEmpty = true)
+    t.commitUpsert(guarded, keyCols, "upsert-mor")
   }
 
   /** Merge-on-read MERGE (Iceberg's `write.merge.mode=merge-on-read`): the
-    * same matched/not-matched semantics as [[merge]] committed as ONE
-    * equality-delete + append — matched keys delete, updated versions and
-    * not-matched inserts append, ZERO data files rewrite. Safe without an
-    * identifier-column declaration: the delete key IS the merge key, and
-    * every live row holding a matched key is by definition matched (joined),
-    * so delete-by-key is exactly "delete the matched rows". See
-    * [[mergeDelta]].
+    * same matched/not-matched semantics as [[merge]] committed as ONE delete
+    * VECTOR + append, from ONE join of the source against only the target
+    * files that can hold a source key ([[sourceKeyCandidates]]), read-only.
+    * Each source row left-joins its matched target rows: a matched row's
+    * (file, position) address deletes and, unless `deleteWhen` selects it,
+    * its updated version appends; an unmatched row appends as an insert
+    * when `insertNotMatched` and not delete-marked. ZERO data files
+    * rewrite. The COW cardinality guard carries over: a duplicated source
+    * key that matches raises — also when all duplicates are delete-marked —
+    * while the commit evaluates the change set, before any file is
+    * written. Not-matched duplicates insert once each.
     */
   def mergeMor(t: GraftTable, source: DataFrame, key: String,
       updateSet: Map[String, Column], insertNotMatched: Boolean,
-      deleteWhen: Option[Column] = None): Snapshot =
-    mergeDelta(t, source, key, updateSet, insertNotMatched, deleteWhen, positional = false)
-
-  /** Positional merge-on-read MERGE: [[mergeMor]]'s semantics committed as
-    * ONE delete VECTOR + append — every matched target row's (file,
-    * position) address deletes. Unlike the equality path this also composes
-    * with live rows that merely SHARE a matched key value in pathological
-    * data: the vector names the joined rows themselves.
-    */
-  def mergeMorPositional(t: GraftTable, source: DataFrame, key: String,
-      updateSet: Map[String, Column], insertNotMatched: Boolean,
-      deleteWhen: Option[Column] = None): Snapshot =
-    mergeDelta(t, source, key, updateSet, insertNotMatched, deleteWhen, positional = true)
-
-  /** Both merge-on-read MERGEs: ONE change set from ONE join of the source
-    * against only the target files that can hold a source key
-    * ([[sourceKeyCandidates]]), read-only. Each source row left-joins its
-    * matched target rows: a matched row deletes (its key, or its row
-    * address when `positional` — the only difference between the two) and,
-    * unless `deleteWhen` selects it, appends its updated version; an
-    * unmatched row appends as an insert when `insertNotMatched` and not
-    * delete-marked. The COW cardinality guard carries over: a duplicated
-    * source key that matches raises — also when all duplicates are
-    * delete-marked — while the commit evaluates the change set, before any
-    * file is written. Not-matched duplicates insert once each.
-    */
-  private def mergeDelta(t: GraftTable, source: DataFrame, key: String,
-      updateSet: Map[String, Column], insertNotMatched: Boolean,
-      deleteWhen: Option[Column], positional: Boolean): Snapshot = {
+      deleteWhen: Option[Column] = None): Snapshot = {
     val planned = t.latest
     val (candidates, distinctKeys) = sourceKeyCandidates(t, planned, source, key)
-    val scanned = planned.copy(files = candidates.toList)
     // per-key source count for the cardinality guard; keys already known
     // distinct need no count (and no shuffle of the source)
     val count1 = if (distinctKeys) lit(1L)
       else count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy(col(key)))
     val src = source.withColumn("_src_cnt", count1).alias("src")
-    val tgt = (if (positional) t.readSnapshotTagged(scanned, "_gf_uri", GraftTable.PosCol)
-      else t.readSnapshotTagged(scanned, "_gf_uri")).alias("tgt")
+    val tgt = t.readSnapshotTagged(planned.copy(files = candidates.toList),
+      "_gf_uri", GraftTable.PosCol).alias("tgt")
     val joined = src.join(tgt, col(s"src.$key") === col(s"tgt.$key"), "left")
     val matched = col("_gf_uri").isNotNull
     val cardErr = raise_error(concat(
@@ -450,15 +356,12 @@ object Dml {
       (if (!insertNotMatched) updated
         else when(matched, updated).otherwise(col(s"src.${f.name}").cast(f.dataType))).as(f.name)
     }
-    val payload =
-      if (positional) rowAddress else Seq(col(s"tgt.$key").as(GraftTable.deleteKeyCol(key)))
-    val change = joined.select(payload ++ values :+
+    val change = joined.select(rowAddress ++ values :+
         when(matched && col("src._src_cnt") > 1, cardErr.cast("boolean"))
           .otherwise(matched).as(GraftTable.DeleteFlag) :+
         ((matched || lit(insertNotMatched)) && !deleted).as(GraftTable.AppendFlag): _*)
       .filter(col(GraftTable.DeleteFlag) || col(GraftTable.AppendFlag))
-    t.commitDelta(change, if (positional) Nil else Seq(key),
-      if (positional) "merge-dv" else "merge-mor", basedOn = Some(planned))
+    t.commitDelta(change, Nil, "merge-dv", basedOn = Some(planned))
   }
 
   /** D3/J1/J2 — `MERGE INTO t USING source ON t.key = source.key`

@@ -71,9 +71,7 @@ object SqlDml {
           }.toMap
           val pred = u.condition.map(strip).getOrElse(lit(true))
           // Iceberg's write.update.mode: merge-on-read replaces the matched
-          // rows via ONE equality-delete + append on the declared identifier
-          // columns (or a positional delete vector under
-          // write.delete.representation=positional) — zero data files
+          // rows via ONE delete vector + append — zero data files
           // rewritten. Routing lives in Dml.updateAuto, shared with the
           // Spark-catalog SQL route.
           Dml.updateAuto(t, pred, assigns)
@@ -83,9 +81,9 @@ object SqlDml {
       case d: DeleteFromTable =>
         target(d.table, names).map { case (alias, t) =>
           val pred = dequalify(alias)(d.condition)
-          // Iceberg's write.delete.mode: merge-on-read commits an equality-
-          // delete file or positional delete vector (read-only plan,
-          // O(matched keys)) instead of rewriting matched data files.
+          // Iceberg's write.delete.mode: merge-on-read commits a delete
+          // vector (read-only plan, O(matched rows)) instead of rewriting
+          // matched data files.
           // Routing lives in Dml.deleteAuto, shared with the Spark-catalog
           // SQL route.
           Dml.deleteAuto(t, pred)
@@ -263,19 +261,14 @@ object SqlDml {
       case other => unsupported(s"MERGE action ${other.getClass.getSimpleName}")
     }
 
-    // Iceberg's write.merge.mode: merge-on-read commits matched-key
-    // equality-deletes + the updated/inserted rows instead of rewriting
-    // matched data files (no identifier columns needed — the delete key IS
-    // the merge key; see Dml.mergeMor)
+    // Iceberg's write.merge.mode: merge-on-read commits the matched rows'
+    // delete vector + the updated/inserted rows instead of rewriting
+    // matched data files (see Dml.mergeMor)
     if (t.properties.get(graft.table.GraftTable.MergeModeProp)
-        .map(_.toLowerCase).contains("merge-on-read")) {
-      if (positionalRepresentation(t))
-        Dml.mergeMorPositional(t, reshaped, tgtKey, updateSet,
-          insertNotMatched = insertMapping.isDefined, deleteWhen = deleteWhen)
-      else
-        Dml.mergeMor(t, reshaped, tgtKey, updateSet,
-          insertNotMatched = insertMapping.isDefined, deleteWhen = deleteWhen)
-    } else
+        .map(_.toLowerCase).contains("merge-on-read"))
+      Dml.mergeMor(t, reshaped, tgtKey, updateSet,
+        insertNotMatched = insertMapping.isDefined, deleteWhen = deleteWhen)
+    else
       Dml.merge(t, reshaped, tgtKey, updateSet,
         insertNotMatched = insertMapping.isDefined, deleteWhen = deleteWhen)
     StatementResult(statement, Nil, None)
@@ -1322,21 +1315,6 @@ object SqlDml {
   private def unsupported(what: String): Nothing =
     throw new UnsupportedOperationException(
       s"SQL DML shape not supported by the table layer: $what")
-
-  /** `write.delete.representation` routing for merge-on-read DML: `equality`
-    * (default) keys on identifier columns, `positional` writes delete
-    * vectors. Any other value is refused loudly — a typo silently falling
-    * back to equality would change DML semantics on a non-unique key.
-    */
-  private def positionalRepresentation(t: GraftTable): Boolean =
-    t.properties.get(graft.table.GraftTable.DeleteRepresentationProp)
-      .map(_.toLowerCase) match {
-      case Some("positional") => true
-      case Some("equality") | None => false
-      case Some(other) => unsupported(
-        s"${graft.table.GraftTable.DeleteRepresentationProp}='$other' " +
-          "(equality or positional)")
-    }
 
   // ---------------------------------------------------------------------
   // Snowflake-dialect pre-parse rewrites (the reference's snowflake.sql

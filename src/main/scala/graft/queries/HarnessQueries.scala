@@ -702,10 +702,10 @@ object HarnessQueries {
     }),
 
     // Merge-on-read DELETE as VERBATIM SQL (Iceberg's write.delete.mode):
-    // after ALTER TABLE sets merge-on-read + identifier columns, DELETE
-    // commits an equality-delete file and rewrites ZERO data files — proven
-    // in the oracle-checked output — while reads reconcile with a per-row
-    // check on the files the delete can touch.
+    // after ALTER TABLE sets merge-on-read, DELETE commits a delete vector
+    // and rewrites ZERO data files — proven in the oracle-checked output —
+    // while reads drop the addressed rows of the files the vector names.
+    // The declared identifier columns play no part in it.
     "h_sql_mor_delete" -> ((s, _) => {
       import s.implicits._
       val eng = new SparkSqlEngine(s)
@@ -729,9 +729,9 @@ object HarnessQueries {
     }),
 
     // Merge-on-read UPDATE via SQL (Iceberg's write.update.mode): the
-    // predicate UPDATE commits ONE equality-delete + append on the declared
-    // identifier columns — files_rewritten pins ZERO data files rewritten,
-    // the expensive plan a 100 TB predicate UPDATE must avoid.
+    // predicate UPDATE commits ONE delete vector + append — files_rewritten
+    // pins ZERO data files rewritten, the expensive plan a 100 TB predicate
+    // UPDATE must avoid.
     "h_sql_mor_update" -> ((s, _) => {
       import s.implicits._
       val eng = new SparkSqlEngine(s)
@@ -751,15 +751,14 @@ object HarnessQueries {
         "SELECT COUNT(*) AS n, CAST(SUM(qty) AS BIGINT) AS q FROM ev").rows.head
       Seq((agg("n").asInstanceOf[Long], agg("q").asInstanceOf[Long], rewritten,
         t.latest.deletes.size.toLong,
-        t.snapshotsList.exists(_.operation == "update-mor")))
+        t.snapshotsList.exists(_.operation == "update-dv")))
         .toDF("row_count", "total_qty", "files_rewritten", "n_delete_files",
           "op_update_mor")
     }),
 
     // Merge-on-read MERGE via SQL (Iceberg's write.merge.mode): matched
-    // update + conditional delete + not-matched insert land as ONE
-    // equality-delete + append commit — zero data files rewritten, and the
-    // delete key is the merge key (no identifier columns needed).
+    // update + conditional delete + not-matched insert land as ONE delete
+    // vector + append commit — zero data files rewritten.
     "h_sql_mor_merge" -> ((s, _) => {
       import s.implicits._
       val eng = new SparkSqlEngine(s)
@@ -786,17 +785,16 @@ object HarnessQueries {
         "SELECT COUNT(*) AS n, CAST(SUM(qty) AS BIGINT) AS q FROM ev").rows.head
       Seq((agg("n").asInstanceOf[Long], agg("q").asInstanceOf[Long], rewritten,
         t.latest.deletes.size.toLong,
-        t.snapshotsList.exists(_.operation == "merge-mor")))
+        t.snapshotsList.exists(_.operation == "merge-dv")))
         .toDF("row_count", "total_qty", "files_rewritten", "n_delete_files",
           "op_merge_mor")
     }),
 
-    // Positional merge-on-read DML via SQL (write.delete.representation =
-    // positional, the Iceberg v3 deletion-vector shape): DELETE and UPDATE
-    // each commit a delete VECTOR — zero data files rewritten, NO identifier
-    // columns declared, and a duplicated event_id cannot over-delete (the
-    // vector names exactly the matched row; an equality key on event_id
-    // would have killed both copies).
+    // Merge-on-read DML via SQL (the Iceberg v3 deletion-vector shape):
+    // DELETE, UPDATE and MERGE each commit a delete VECTOR — zero data files
+    // rewritten, NO identifier columns declared, and a duplicated event_id
+    // cannot over-delete (the vector names exactly the matched row; an
+    // equality key on event_id would have killed both copies).
     "h_sql_mor_dv" -> ((s, _) => {
       import s.implicits._
       val eng = new SparkSqlEngine(s)
@@ -808,8 +806,7 @@ object HarnessQueries {
       eng.execute("""ALTER TABLE ops.ev SET TBLPROPERTIES (
         'write.delete.mode' = 'merge-on-read',
         'write.update.mode' = 'merge-on-read',
-        'write.merge.mode' = 'merge-on-read',
-        'write.delete.representation' = 'positional')""")
+        'write.merge.mode' = 'merge-on-read')""")
       val t = cat.loadTable("ops", "ev")
       val filesBefore = t.latest.files.map(_.path).toSet
       eng.execute("DELETE FROM ev WHERE event_id = 2 AND qty = 5")

@@ -304,8 +304,10 @@ object TableQueries {
       t.append(base.filter(col("o_orderkey") < 100))
       t.append(base.filter(col("o_orderkey") >= 100 && col("o_orderkey") < 200))
       t.append(base.filter(col("o_orderkey") >= 200))
-      Dml.deleteMor(t, col("o_orderkey") % 9 === 0, Seq("o_orderkey"))
-      Dml.deleteMor(t, col("o_orderkey") % 11 === 0, Seq("o_orderkey"))
+      Dml.deleteMorKeys(t,
+        t.readLatest().filter(col("o_orderkey") % 9 === 0).select("o_orderkey"))
+      Dml.deleteMorKeys(t,
+        t.readLatest().filter(col("o_orderkey") % 11 === 0).select("o_orderkey"))
       val report = Maintenance.maintainTable(t, graft.maintenance.MaintenancePolicy(
         maxDeleteFiles = 1, maxSnapshotDocs = 3, retainLast = 2))
       t.readLatest().agg(count(lit(1)).as("row_count"),
@@ -358,7 +360,8 @@ object TableQueries {
       val t = GraftTable.create(s, scratch("changelog"), base.schema)
       val from = t.latest.snapshotId
       t.append(base.filter(col("o_orderkey") < 200))
-      Dml.deleteMor(t, col("o_orderkey") % 7 === 0, Seq("o_orderkey"))
+      Dml.deleteMorKeys(t,
+        t.readLatest().filter(col("o_orderkey") % 7 === 0).select("o_orderkey"))
       val source = base.filter(col("o_orderkey") >= 100 && col("o_orderkey") < 300)
         .withColumn("o_totalprice", col("o_totalprice") * 2)
       Dml.upsertMor(t, source, Seq("o_orderkey"))
@@ -626,7 +629,8 @@ object TableQueries {
       t.append(base.filter(col("o_orderkey") >= 70 && col("o_orderkey") < 140))
       t.append(base.filter(col("o_orderkey") >= 140))
       val filesBefore = t.latest.files.map(_.path).toSet
-      Dml.deleteMor(t, col("o_orderkey") % 7 === 0, Seq("o_orderkey"))
+      Dml.deleteMorKeys(t,
+        t.readLatest().filter(col("o_orderkey") % 7 === 0).select("o_orderkey"))
       val rewritten = (t.latest.files.map(_.path).toSet -- filesBefore).size.toLong
       t.readLatest().agg(count(lit(1)).as("row_count"),
           dbl(sum(dec(col("o_totalprice")))).as("sum_price"))
@@ -663,8 +667,8 @@ object TableQueries {
       t.append(base.filter(col("o_orderkey") >= 70 && col("o_orderkey") < 140))
       t.append(base.filter(col("o_orderkey") >= 140))
       val filesBefore = t.latest.files.map(_.path).toSet
-      Dml.deleteMorPositional(t, col("o_orderkey") % 7 === 0)
-      Dml.updateMorPositional(t, col("o_orderkey") % 5 === 0,
+      Dml.deleteMor(t, col("o_orderkey") % 7 === 0)
+      Dml.updateMor(t, col("o_orderkey") % 5 === 0,
         Map("o_totalprice" -> (col("o_totalprice") * 2)))
       val rewritten = (filesBefore -- t.latest.files.map(_.path).toSet).size.toLong
       t.readLatest().agg(count(lit(1)).as("row_count"),
@@ -682,7 +686,8 @@ object TableQueries {
       val t = GraftTable.create(s, scratch("mor_materialize"), base.schema)
       t.append(base.filter(col("o_orderkey") < 100))
       t.append(base.filter(col("o_orderkey") >= 100))
-      Dml.deleteMor(t, col("o_orderkey") % 5 === 0, Seq("o_orderkey"))
+      Dml.deleteMorKeys(t,
+        t.readLatest().filter(col("o_orderkey") % 5 === 0).select("o_orderkey"))
       Maintenance.materializeDeletes(t)
       t.readLatest().agg(count(lit(1)).as("row_count"),
           dbl(sum(dec(col("o_totalprice")))).as("sum_price"))

@@ -671,8 +671,8 @@ private[sources] case class GraftCatalogTable(dir: String, identName: String,
       throw new UnsupportedOperationException(
         s"graft DELETE: untranslatable filters ${filters.mkString(", ")}"))
     val t = GraftTable.load(SparkSession.active, dir)
-    // honors write.delete.mode=merge-on-read (equality or positional
-    // representation) exactly like the pre-router's DELETE route
+    // honors write.delete.mode=merge-on-read (a delete vector) exactly like
+    // the pre-router's DELETE route
     graft.dml.Dml.deleteAuto(t, pred)
   }
 

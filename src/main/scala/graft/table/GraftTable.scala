@@ -622,10 +622,7 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     */
   def readChangelog(fromId: Long, toId: Long): DataFrame = {
     val (to, range) = changeRange(fromId, toId)
-    // update-mor / merge-mor are structurally upsert-mor commits (one
-    // equality-delete + append), so changelog reconstruction is identical
-    val rowLevel = Set("delete-mor", "upsert-mor", "update-mor", "merge-mor",
-      "delete-dv", "update-dv", "merge-dv") ++
+    val rowLevel = Set("delete-mor", "upsert-mor", "delete-dv", "update-dv", "merge-dv") ++
       RowAddingOps
     val bad = range.filterNot(s => rowLevel(s.operation) || contentPreserving(s.operation))
     require(bad.isEmpty,
@@ -1491,14 +1488,12 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     * `Maintenance.materializeDeletes`. The delete applies to data files with
     * `writtenAt < appliedAt` (this commit's id). The Flink-CDC upsert shape
     * (delete keys + insert rows atomically) is [[commitUpsert]]; key types
-    * and `basedOn` are as in [[commitDelta]].
+    * are as in [[commitDelta]].
     */
-  def commitMorDelta(keys: DataFrame, operation: String,
-      basedOn: Option[Snapshot] = None,
-      extraSummary: Map[String, String] = Map.empty): Snapshot = {
+  def commitMorDelta(keys: DataFrame, operation: String): Snapshot = {
     require(keys.columns.nonEmpty, "merge-on-read delete needs at least one key column")
     commitDelta(keys.select(keys.columns.map(k => col(k).as(deleteKeyCol(k))) :+
-      lit(true).as(DeleteFlag): _*), keys.columns.toSeq, operation, basedOn, extraSummary)
+      lit(true).as(DeleteFlag): _*), keys.columns.toSeq, operation)
   }
 
   /** Positional merge-on-read commit primitive (the Iceberg v3
@@ -1512,24 +1507,23 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     * vector commits nothing.
     */
   def commitDvDelta(dv: DataFrame, operation: String,
-      basedOn: Option[Snapshot] = None, extraSummary: Map[String, String] = Map.empty,
-      skipEmpty: Boolean = false): Snapshot = {
+      basedOn: Option[Snapshot] = None, skipEmpty: Boolean = false): Snapshot = {
     val dvCols = dv.schema.fieldNames.toSeq
     require(dvCols == Seq(GraftTable.WrittenAtCol, GraftTable.PosCol),
       s"delete vector must have columns (${GraftTable.WrittenAtCol}, " +
         s"${GraftTable.PosCol}); got ${dvCols.mkString(", ")}")
-    commitDelta(dv.withColumn(DeleteFlag, lit(true)), Nil, operation, basedOn, extraSummary,
-      skipEmpty)
+    commitDelta(dv.withColumn(DeleteFlag, lit(true)), Nil, operation, basedOn,
+      skipEmpty = skipEmpty)
   }
 
   /** Upsert as one change set: every row of `rows` (table-shaped) deletes
     * its `keyCols` tuple; the rows where `keep` holds append. */
   def commitUpsert(rows: DataFrame, keyCols: Seq[String], operation: String,
       keep: Column = lit(true), basedOn: Option[Snapshot] = None,
-      extraSummary: Map[String, String] = Map.empty, skipEmpty: Boolean = false): Snapshot =
+      extraSummary: Map[String, String] = Map.empty): Snapshot =
     commitDelta(rows.select(keyCols.map(k => col(k).as(deleteKeyCol(k))) ++
       schema.fieldNames.map(col) :+ lit(true).as(DeleteFlag) :+ keep.as(AppendFlag): _*),
-      keyCols, operation, basedOn, extraSummary, skipEmpty)
+      keyCols, operation, basedOn, extraSummary)
 
   /** The one merge-on-read delta commit. `change` holds per row a delete
     * payload — the [[deleteKeyCol]] columns of `keyCols` (equality; each key
@@ -2191,29 +2185,13 @@ object GraftTable {
   val SortOrderProp = "write.sort-order"
 
   /** Iceberg's `write.delete.mode`: `copy-on-write` (default) rewrites
-    * matched files; `merge-on-read` commits an equality-delete file keyed by
-    * the table's declared identifier columns.
+    * matched files; `merge-on-read` commits a delete vector naming the
+    * matched rows. `write.update.mode` and `write.merge.mode` likewise.
     */
   val DeleteModeProp = "write.delete.mode"
   val UpdateModeProp = "write.update.mode"
   val MergeModeProp = "write.merge.mode"
 
-  /** Comma-separated identifier columns (the Iceberg identifier-field
-    * analog) — the equality-delete key tuple for merge-on-read DML.
-    */
-  val IdentifierColumnsProp = "write.identifier-columns"
-
-  /** How merge-on-read DML records its deletes: `equality` (default — key
-    * tuples on the identifier columns, the Flink-CDC shape) or `positional`
-    * (delete VECTORS of (part-file name, row position) tuples, the Iceberg
-    * v3 deletion-vector shape). Positional needs no identifier columns and
-    * never over-deletes on a non-unique key: it names exactly the matched
-    * rows, and a position can never match a later file (files are
-    * immutable, re-inserts land in new files), so reads need no key
-    * resolution — a per-row lookup of (file, pos), on only the files the
-    * vector names.
-    */
-  val DeleteRepresentationProp = "write.delete.representation"
 
   /** ANALYZE output (`analyzeColumns`): table-level row count / snapshot id
     * plus per-column `stats.col.<name>.{ndv,nulls,min,max}`.

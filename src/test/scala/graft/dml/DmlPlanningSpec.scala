@@ -49,7 +49,8 @@ class DmlPlanningSpec extends SparkSpec {
         .toDF("k", "v").coalesce(1))
     }
     val (_, seen) = graft.SparkProbe.observe(spark)(
-      Dml.deleteMor(t, col("k") >= 210 && col("k") < 260, Seq("k")))
+      Dml.deleteMorKeys(t,
+        t.readLatest().filter(col("k") >= 210 && col("k") < 260).select("k")))
     val tableScans = seen.scans.filter(
       _.relation.location.rootPaths.exists(_.toString.contains(t.tableDir)))
     assert(tableScans.nonEmpty)
@@ -298,7 +299,7 @@ class DmlPlanningSpec extends SparkSpec {
     val updateCandidates = Dml.planningCandidates(t, t.latest, col("k") === 2050L)._1
     assert(updateCandidates.size === 2)
     val (_, updated) = graft.SparkProbe.observe(spark)(
-      Dml.updateMor(t, col("k") === 2050L, Map("v" -> lit("u")), Seq("k")))
+      Dml.updateMor(t, col("k") === 2050L, Map("v" -> lit("u"))))
     assert(graft.SparkProbe.filesRead(tableScans(updated)).sum === updateCandidates.size)
     assert(updated.jobs <= 4, updated.jobs)
     assert(t.readLatest().filter(col("v") === "u").count() === 1)

@@ -88,16 +88,14 @@ class SqlDmlSpec extends SparkSpec {
 
   test("UPDATE honors write.update.mode=merge-on-read: zero files rewritten") {
     val (eng, t) = mkTable("sqldml-upd-mor")
-    t.setProperties(Map(
-      GraftTable.UpdateModeProp -> Some("merge-on-read"),
-      GraftTable.IdentifierColumnsProp -> Some("event_id")))
+    t.setProperties(Map(GraftTable.UpdateModeProp -> Some("merge-on-read")))
     val filesBefore = t.latest.files.map(_.path).toSet
     val fromId = t.latest.snapshotId
     eng.execute("UPDATE sales SET price = price * 2 WHERE channel = 'app'")
-    assert(t.latest.operation == "update-mor")
-    // zero data files rewritten, one equality-delete file committed
+    assert(t.latest.operation == "update-dv")
+    // zero data files rewritten, one delete vector committed
     assert(t.latest.files.map(_.path).toSet.intersect(filesBefore) == filesBefore)
-    assert(t.latest.deletes.nonEmpty)
+    assert(t.latest.deletes.nonEmpty && t.latest.deletes.forall(_.positional))
     val rows = t.readLatest().orderBy("event_id")
       .select("event_id", "price").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -109,7 +107,7 @@ class SqlDmlSpec extends SparkSpec {
     assert(ch == Map("insert" -> 2L, "delete" -> 2L))
     // a DECIMAL literal assigned to a DOUBLE column casts to the column type
     eng.execute("UPDATE sales SET price = 1.25 WHERE event_id = 8")
-    assert(t.latest.operation == "update-mor")
+    assert(t.latest.operation == "update-dv")
     assert(t.readLatest().filter(col("event_id") === 8L).select("price")
       .collect().map(_.getDouble(0)).toSeq == Seq(1.25))
     // a matched-nothing update commits nothing
@@ -118,14 +116,85 @@ class SqlDmlSpec extends SparkSpec {
     assert(t.snapshotsList.size == snaps)
   }
 
-  test("merge-on-read UPDATE without identifier columns refuses loudly") {
+  test("merge-on-read UPDATE without identifier columns writes a vector") {
     val (eng, t) = mkTable("sqldml-upd-mor-noid")
     t.setProperties(Map(GraftTable.UpdateModeProp -> Some("merge-on-read")))
-    val ex = intercept[IllegalArgumentException] {
-      eng.execute("UPDATE sales SET price = 0 WHERE event_id = 1")
+    val filesBefore = t.latest.files.map(_.path).toSet
+    eng.execute("UPDATE sales SET price = 0 WHERE event_id = 1")
+    assert(t.latest.operation == "update-dv")
+    assert(filesBefore.subsetOf(t.latest.files.map(_.path).toSet))
+    assert(t.latest.deletes.map(d => (d.positional, d.rowCount)) == Seq((true, 1L)))
+    assert(t.readLatest().orderBy("event_id").select("event_id", "price").collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSeq ==
+      Seq((1L, 0.0), (2L, 6.0), (4L, 7.0), (8L, 8.0)))
+  }
+
+  // event_id is declared the identifier column, yet two live rows share each
+  // of 1 and 2: a key-valued delete would take both copies
+  private def dupKeyRows = {
+    import spark.implicits._
+    Seq((1L, "a", 1.0), (1L, "b", 2.0), (2L, "c", 3.0), (2L, "d", 4.0), (3L, "e", 5.0))
+      .toDF("event_id", "tag", "price")
+  }
+
+  private def liveRows(t: GraftTable): Seq[(Long, String, Double)] = {
+    import spark.implicits._
+    t.readLatest().select("event_id", "tag", "price")
+      .as[(Long, String, Double)].collect().sortBy(_._2).toSeq
+  }
+
+  private def assertVectorCommit(t: GraftTable, op: String): Unit = {
+    assert(t.latest.operation == op)
+    val added = t.latest.deletes.filter(_.appliedAt == t.latest.snapshotId)
+    assert(added.nonEmpty && added.forall(d => d.positional && d.keyCols.isEmpty), added)
+  }
+
+  test("merge-on-read DML on a duplicated identifier key touches only the matched rows") {
+    val t = GraftTable.create(spark, scratchDir("sqldml-mor-dupkey"), dupKeyRows.schema)
+    t.append(dupKeyRows)
+    t.setProperties(Map(
+      GraftTable.DeleteModeProp -> Some("merge-on-read"),
+      GraftTable.UpdateModeProp -> Some("merge-on-read"),
+      GraftTable.MergeModeProp -> Some("merge-on-read"),
+      "write.identifier-columns" -> Some("event_id")))
+    val eng = new SparkSqlEngine(spark)
+    eng.registerGraftTable("dup", t)
+    eng.execute("DELETE FROM dup WHERE tag = 'a'")
+    assert(liveRows(t) == Seq((1L, "b", 2.0), (2L, "c", 3.0), (2L, "d", 4.0), (3L, "e", 5.0)))
+    assertVectorCommit(t, "delete-dv")
+    eng.execute("UPDATE dup SET price = price + 10 WHERE tag = 'c'")
+    assert(liveRows(t) == Seq((1L, "b", 2.0), (2L, "c", 13.0), (2L, "d", 4.0), (3L, "e", 5.0)))
+    assertVectorCommit(t, "update-dv")
+    eng.execute("""
+      MERGE INTO dup AS tgt
+      USING (SELECT * FROM VALUES (2, 'x', 50.0) AS s(event_id, tag, price)) AS src
+      ON tgt.event_id = src.event_id
+      WHEN MATCHED THEN UPDATE SET price = src.price""")
+    // both target rows of key 2 match the one source row
+    assert(liveRows(t) == Seq((1L, "b", 2.0), (2L, "c", 50.0), (2L, "d", 50.0), (3L, "e", 5.0)))
+    assertVectorCommit(t, "merge-dv")
+  }
+
+  test("stock Spark SQL DELETE on a duplicated identifier key removes only the matched row") {
+    // a GraftCatalog table: Spark's DELETE lands in deleteWhere → Dml.deleteAuto
+    val cat = "sqldmldup"
+    val wh = scratchDir("sqldml-mor-dupkey-cat")
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    try {
+      spark.sql(s"CREATE NAMESPACE $cat.ops")
+      spark.sql(s"""CREATE TABLE $cat.ops.dup (event_id BIGINT, tag STRING, price DOUBLE)
+        TBLPROPERTIES ('write.delete.mode' = 'merge-on-read',
+          'write.identifier-columns' = 'event_id')""")
+      dupKeyRows.writeTo(s"$cat.ops.dup").append()
+      spark.sql(s"DELETE FROM $cat.ops.dup WHERE tag = 'a'")
+      val t = GraftTable.load(spark, s"$wh/ops/dup")
+      assert(liveRows(t) == Seq((1L, "b", 2.0), (2L, "c", 3.0), (2L, "d", 4.0), (3L, "e", 5.0)))
+      assertVectorCommit(t, "delete-dv")
+    } finally {
+      spark.conf.unset(s"spark.sql.catalog.$cat")
+      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
     }
-    assert(ex.getMessage.contains(GraftTable.IdentifierColumnsProp))
-    assert(t.readLatest().filter(col("price") === 0).count() == 0) // untouched
   }
 
   test("MERGE honors write.merge.mode=merge-on-read: one delta commit") {
@@ -144,7 +213,7 @@ class SqlDmlSpec extends SparkSpec {
       WHEN MATCHED THEN UPDATE SET price = src.price, channel = src.channel
       WHEN NOT MATCHED THEN INSERT (event_id, tenant_id, price, channel)
         VALUES (src.event_id, src.tenant_id, src.price, src.channel)""")
-    assert(t.latest.operation == "merge-mor")
+    assert(t.latest.operation == "merge-dv")
     assert(t.latest.files.map(_.path).toSet.intersect(filesBefore) == filesBefore)
     assert(t.latest.deletes.nonEmpty)
     val rows = t.readLatest().orderBy("event_id")
@@ -176,14 +245,13 @@ class SqlDmlSpec extends SparkSpec {
     t.append(df)
     t.setProperties(Map(
       GraftTable.DeleteModeProp -> Some("merge-on-read"),
-      GraftTable.UpdateModeProp -> Some("merge-on-read"),
-      GraftTable.IdentifierColumnsProp -> Some("id")))
+      GraftTable.UpdateModeProp -> Some("merge-on-read")))
     val eng = new SparkSqlEngine(spark)
     eng.registerGraftTable("pev", t)
     eng.execute("DELETE FROM pev WHERE id <= 6")
-    assert(t.latest.operation == "delete-mor")
+    assert(t.latest.operation == "delete-dv")
     eng.execute("UPDATE pev SET v = v + 1000 WHERE id = 60")
-    assert(t.latest.operation == "update-mor")
+    assert(t.latest.operation == "update-dv")
     assert(t.readLatest().count() == 54)
     val res = eng.execute("SELECT CAST(SUM(id) AS BIGINT) AS s FROM pev").rows.head
     assert(res("s") == (7L to 60L).sum)
@@ -192,12 +260,10 @@ class SqlDmlSpec extends SparkSpec {
 
   test("merge-on-read UPDATE composes with rename evolution") {
     val (eng, t) = mkTable("sqldml-upd-mor-evo")
-    t.setProperties(Map(
-      GraftTable.UpdateModeProp -> Some("merge-on-read"),
-      GraftTable.IdentifierColumnsProp -> Some("event_id")))
+    t.setProperties(Map(GraftTable.UpdateModeProp -> Some("merge-on-read")))
     eng.execute("ALTER TABLE sales RENAME COLUMN price TO amount")
     eng.execute("UPDATE sales SET amount = amount + 1 WHERE event_id = 2")
-    assert(t.latest.operation == "update-mor")
+    assert(t.latest.operation == "update-dv")
     val rows = t.readLatest().orderBy("event_id")
       .select("event_id", "amount").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq

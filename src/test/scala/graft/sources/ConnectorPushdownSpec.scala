@@ -73,7 +73,7 @@ class ConnectorPushdownSpec extends SparkSpec {
 
   test("deletes disable the metadata aggregate; results stay correct") {
     val (dir, t) = mkPartitioned("agg-del")
-    graft.dml.Dml.deleteMor(t, col("id") === 7L, Seq("id"))
+    graft.dml.Dml.deleteMor(t, col("id") === 7L)
     val df = spark.read.format("graft").load(dir)
       .agg(count(lit(1)).as("n"), max("id").as("mx"))
     val p = plan(df)
@@ -193,7 +193,7 @@ class ConnectorPushdownSpec extends SparkSpec {
     // e2e: LIMIT over the connector still yields exactly n rows
     assert(spark.read.format("graft").load(dir).limit(30).count() == 30)
     // deletes disable prefix pruning but not correctness
-    graft.dml.Dml.deleteMor(t, col("id") === 5L, Seq("id"))
+    graft.dml.Dml.deleteMor(t, col("id") === 5L)
     assert(spark.read.format("graft").load(dir).limit(99).count() == 99)
     val sb2 = table.newScanBuilder(CaseInsensitiveStringMap.empty())
     sb2.asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownLimit]

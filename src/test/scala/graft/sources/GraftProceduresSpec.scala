@@ -94,8 +94,7 @@ class GraftProceduresSpec extends SparkSpec {
       // the delete commit (COW rewrites refuse — no row-level diff); the
       // catalog DELETE route honors the mode property via Dml.deleteAuto
       spark.sql("""CREATE TABLE gp3.ops.t (k BIGINT, v STRING)
-        TBLPROPERTIES ('write.delete.mode' = 'merge-on-read',
-          'write.delete.representation' = 'positional')""")
+        TBLPROPERTIES ('write.delete.mode' = 'merge-on-read')""")
       spark.sql("INSERT INTO gp3.ops.t VALUES (1, 'a'), (2, 'b')")
       spark.sql("DELETE FROM gp3.ops.t WHERE k = 2")
       assert(GraftTable.load(spark, s"$wh/ops/t").latest.operation == "delete-dv")

@@ -20,7 +20,7 @@ class DeleteShardSpec extends SparkSpec {
     t.append(df.repartition(4))
     sys.props("graft.test.delete-shard-bytes") = "1024" // force the sharded path
     try {
-      Dml.deleteMorPositional(t, col("id") % 2 === 0)
+      Dml.deleteMor(t, col("id") % 2 === 0)
       val delFiles = t.latest.deletes
       assert(delFiles.size > 1,
         s"expected a sharded multi-file DV commit, got ${delFiles.size} file(s)")

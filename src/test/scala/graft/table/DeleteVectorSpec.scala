@@ -27,7 +27,7 @@ class DeleteVectorSpec extends SparkSpec {
   test("positional delete removes matched rows without rewriting any data file") {
     val t = newSalesTable()
     val filesBefore = t.latest.files.map(_.path).toSet
-    Dml.deleteMorPositional(t, col("qty") >= 8) // qty 8 and 10 → ids 4, 6
+    Dml.deleteMor(t, col("qty") >= 8) // qty 8 and 10 → ids 4, 6
     assert(t.latest.files.map(_.path).toSet === filesBefore)
     assert(t.latest.operation === "delete-dv")
     assert(t.latest.deletes.size === 1)
@@ -45,7 +45,7 @@ class DeleteVectorSpec extends SparkSpec {
     // two rows share k=1; the predicate matches only one of them
     t.append(Seq((1L, "a", 10L), (1L, "b", 20L), (2L, "c", 30L))
       .toDF("k", "tag", "v"))
-    Dml.deleteMorPositional(t, col("tag") === "a")
+    Dml.deleteMor(t, col("tag") === "a")
     val rows = t.readLatest().select("k", "tag").as[(Long, String)].collect().sortBy(_._2)
     assert(rows === Array((1L, "b"), (2L, "c")),
       "the k=1 row NOT matched by the predicate must survive")
@@ -53,7 +53,7 @@ class DeleteVectorSpec extends SparkSpec {
 
   test("rows re-inserted after a positional delete survive (new files are unreachable)") {
     val t = newSalesTable()
-    Dml.deleteMorPositional(t, col("event_id") === 1)
+    Dml.deleteMor(t, col("event_id") === 1)
     assert(t.readLatest().filter(col("event_id") === 1).count() === 0)
     t.append(Synthesize.salesEvents8(spark).filter(col("event_id") === 1))
     assert(t.readLatest().filter(col("event_id") === 1).count() === 1)
@@ -63,7 +63,7 @@ class DeleteVectorSpec extends SparkSpec {
   test("positional update replaces matched rows with zero data-file rewrites") {
     val t = newSalesTable()
     val filesBefore = t.latest.files.map(_.path).toSet
-    Dml.updateMorPositional(t, col("event_id") === 3,
+    Dml.updateMor(t, col("event_id") === 3,
       Map("qty" -> (col("qty") + lit(100L))))
     assert(t.latest.operation === "update-dv")
     assert(filesBefore.subsetOf(t.latest.files.map(_.path).toSet),
@@ -77,12 +77,11 @@ class DeleteVectorSpec extends SparkSpec {
     assert(t.readLatest().count() === 8)
   }
 
-  test("SQL DELETE/UPDATE route positionally under write.delete.representation") {
+  test("SQL DELETE/UPDATE on a merge-on-read table write vectors") {
     val t = newSalesTable()
     t.setProperties(Map(
       GraftTable.DeleteModeProp -> Some("merge-on-read"),
-      GraftTable.UpdateModeProp -> Some("merge-on-read"),
-      GraftTable.DeleteRepresentationProp -> Some("positional")))
+      GraftTable.UpdateModeProp -> Some("merge-on-read")))
     val eng = new graft.plan.SparkSqlEngine(spark)
     eng.registerGraftTable("dv_sales", t)
     val filesBefore = t.latest.files.map(_.path).toSet
@@ -92,21 +91,8 @@ class DeleteVectorSpec extends SparkSpec {
     assert(t.latest.operation === "update-dv")
     assert(filesBefore.subsetOf(t.latest.files.map(_.path).toSet))
     assert(t.readLatest().count() === 7)
-    // no identifier columns declared anywhere — positional needs none
-    assert(!t.properties.contains(GraftTable.IdentifierColumnsProp))
-  }
-
-  test("an unknown representation value is refused, never silently equality") {
-    val t = newSalesTable()
-    t.setProperties(Map(
-      GraftTable.DeleteModeProp -> Some("merge-on-read"),
-      GraftTable.DeleteRepresentationProp -> Some("vectorised")))
-    val eng = new graft.plan.SparkSqlEngine(spark)
-    eng.registerGraftTable("dv_bad", t)
-    val ex = intercept[UnsupportedOperationException] {
-      eng.execute("DELETE FROM dv_bad WHERE event_id = 2")
-    }
-    assert(ex.getMessage.contains("write.delete.representation"))
+    // no identifier columns declared anywhere — vectors need none
+    assert(!t.properties.contains("write.identifier-columns"))
   }
 
   // the connector reads primitive columns only (its long-standing contract),
@@ -121,8 +107,8 @@ class DeleteVectorSpec extends SparkSpec {
 
   test("the DSv2 connector reconciles delete vectors (parity with the table API)") {
     val t = newPrimitiveTable("dv-conn-")
-    Dml.deleteMorPositional(t, col("v") >= 70L) // ids 7, 8
-    Dml.updateMorPositional(t, col("id") === 1, Map("v" -> lit(999L)))
+    Dml.deleteMor(t, col("v") >= 70L) // ids 7, 8
+    Dml.updateMor(t, col("id") === 1, Map("v" -> lit(999L)))
     val viaConnector = spark.read.format("graft").load(t.tableDir)
       .select("id", "v").as[(Long, Long)].collect().sortBy(_._1)
     val viaTable = t.readLatest()
@@ -135,7 +121,7 @@ class DeleteVectorSpec extends SparkSpec {
   test("positional and equality deletes compose on one table") {
     val t = newPrimitiveTable("dv-mixed-")
     Dml.deleteMorKeys(t, Seq(2L).toDF("id")) // equality
-    Dml.deleteMorPositional(t, col("id") === 5) // positional
+    Dml.deleteMor(t, col("id") === 5) // positional
     val ids = t.readLatest().select("id").as[Long].collect().sorted
     assert(ids === Array(1L, 3L, 4L, 6L, 7L, 8L))
     val viaConnector = spark.read.format("graft").load(t.tableDir)
@@ -145,8 +131,8 @@ class DeleteVectorSpec extends SparkSpec {
 
   test("compaction materializes vectors; consolidation merges them and prunes dead tuples") {
     val t = newSalesTable()
-    Dml.deleteMorPositional(t, col("event_id") === 1)
-    Dml.deleteMorPositional(t, col("event_id") === 2)
+    Dml.deleteMor(t, col("event_id") === 1)
+    Dml.deleteMor(t, col("event_id") === 2)
     assert(t.latest.deletes.count(_.positional) === 2)
     // consolidation: two live vectors collapse to one
     val consolidated = t.rewriteDeleteFiles()
@@ -161,7 +147,7 @@ class DeleteVectorSpec extends SparkSpec {
 
   test("the DV read plan has no join and no exchange on the data side") {
     val t = newSalesTable()
-    Dml.deleteMorPositional(t, col("event_id") <= 2)
+    Dml.deleteMor(t, col("event_id") <= 2)
     val plan = t.readLatest().queryExecution.executedPlan.toString
     assert(!plan.contains("Join") && !plan.contains("Exchange"),
       s"the data side must not join or shuffle for a delete vector:\n$plan")
@@ -170,7 +156,7 @@ class DeleteVectorSpec extends SparkSpec {
   test("time travel before the vector still sees the deleted rows; changelog records them") {
     val t = newSalesTable()
     val preDelete = t.latest.snapshotId
-    Dml.deleteMorPositional(t, col("event_id") <= 2)
+    Dml.deleteMor(t, col("event_id") <= 2)
     assert(t.readVersionAsOf(preDelete).count() === 8)
     val cl = t.readChangelog(preDelete, t.latest.snapshotId)
     val deleted = cl.filter(col("_change_type") === "delete")
@@ -196,7 +182,7 @@ class DeleteVectorSpec extends SparkSpec {
     // src: update id=2 (v→200), delete id=4, insert id=9
     val src = Seq((2L, 200L, "u2"), (4L, -1L, "d4"), (9L, 90L, "i9"))
       .toDF("id", "v", "s")
-    Dml.mergeMorPositional(t, src, "id",
+    Dml.mergeMor(t, src, "id",
       Map("v" -> col("src.v"), "s" -> col("src.s")),
       insertNotMatched = true,
       deleteWhen = Some(col("src.v") < 0L))
@@ -219,7 +205,7 @@ class DeleteVectorSpec extends SparkSpec {
     val snapsBefore = t.snapshotsList.size
     val src = Seq((2L, 200L, "a"), (2L, 201L, "b")).toDF("id", "v", "s")
     intercept[Exception] {
-      Dml.mergeMorPositional(t, src, "id",
+      Dml.mergeMor(t, src, "id",
         Map("v" -> col("src.v")), insertNotMatched = false)
     }
     assert(t.snapshotsList.size === snapsBefore, "nothing may commit")
@@ -231,7 +217,7 @@ class DeleteVectorSpec extends SparkSpec {
     val t = GraftTable.create(spark, dir, df.schema, partitionCols = Seq("cat"))
     t.append(df)
     val filesBefore = t.latest.files.map(_.path).toSet
-    Dml.deleteMorPositional(t, col("v") % 100L === 0L) // ids 10,20,30,40 across partitions
+    Dml.deleteMor(t, col("v") % 100L === 0L) // ids 10,20,30,40 across partitions
     assert(t.latest.files.map(_.path).toSet === filesBefore)
     assert(t.readLatest().count() === 36)
     assert(t.readLatest().filter(col("v") % 100L === 0L).count() === 0)
@@ -252,9 +238,10 @@ class DeleteVectorSpec extends SparkSpec {
       val t = newPrimitiveTable("merge-dup-clean-")
       val (before, head) = (dataListing(t), t.latest)
       val src = Seq((2L, 200L, "a"), (2L, 201L, "b"), (9L, 90L, "i")).toDF("id", "v", "s")
+      // the equality delta commit is the keyed upsert; SQL MERGE writes vectors
       val e = intercept[Exception] {
-        if (positional) Dml.mergeMorPositional(t, src, "id", Map("v" -> col("src.v")), true)
-        else Dml.mergeMor(t, src, "id", Map("v" -> col("src.v")), insertNotMatched = true)
+        if (positional) Dml.mergeMor(t, src, "id", Map("v" -> col("src.v")), true)
+        else Dml.upsertMor(t, src, Seq("id"))
       }
       assert(e.toString.contains("cardinality violation") ||
         Option(e.getCause).exists(_.toString.contains("cardinality violation")), e)
@@ -265,19 +252,17 @@ class DeleteVectorSpec extends SparkSpec {
 
   test("merge-on-read DML leaves no persisted RDD or cached relation, on success or raise") {
     val t = newPrimitiveTable("mor-release-")
-    t.setProperties(Map(GraftTable.IdentifierColumnsProp -> Some("id")))
     val dup = Seq((3L, 1L, "a"), (3L, 2L, "b")).toDF("id", "v", "s")
     val statements: Seq[() => Any] = Seq(
       () => Dml.mergeMor(t, Seq((2L, 5L, "m")).toDF("id", "v", "s"), "id",
         Map("v" -> col("src.v")), insertNotMatched = true),
       () => Dml.mergeMor(t, dup, "id", Map("v" -> col("src.v")), insertNotMatched = true),
-      () => Dml.mergeMorPositional(t, dup, "id", Map("v" -> col("src.v")), true),
-      () => Dml.mergeMorPositional(t, Seq((4L, 6L, "p")).toDF("id", "v", "s"), "id",
+      () => Dml.mergeMor(t, Seq((4L, 6L, "p")).toDF("id", "v", "s"), "id",
         Map("v" -> col("src.v")), insertNotMatched = false),
-      () => Dml.updateMor(t, col("id") === 5L, Map("v" -> lit(7L)), Seq("id")),
-      () => Dml.updateMorPositional(t, col("id") === 6L, Map("v" -> lit(8L))),
-      () => Dml.deleteMor(t, col("id") === 7L, Seq("id")),
-      () => Dml.deleteMorPositional(t, col("id") === 8L),
+      () => Dml.upsertMor(t, Seq((5L, 7L, "s5")).toDF("id", "v", "s"), Seq("id")),
+      () => Dml.updateMor(t, col("id") === 6L, Map("v" -> lit(8L))),
+      () => Dml.deleteMorKeys(t, Seq(7L).toDF("id")),
+      () => Dml.deleteMor(t, col("id") === 8L),
       () => Dml.upsertMor(t, dup, Seq("id")))
     val cache = spark.sharedState.cacheManager
     statements.zipWithIndex.foreach { case (run, i) =>

@@ -39,8 +39,9 @@ class MorDeleteSpec extends SparkSpec {
   test("deleteMor enumerates keys from a predicate (read-only planning)") {
     val t = newSalesTable()
     val filesBefore = t.latest.files.map(_.path).toSet
-    Dml.deleteMor(t, col("qty") >= 8, Seq("event_id")) // qty 8 and 10 → ids 4, 6
+    Dml.deleteMor(t, col("qty") >= 8) // qty 8 and 10 → ids 4, 6
     assert(t.latest.files.map(_.path).toSet === filesBefore)
+    assert(t.latest.deletes.map(d => (d.positional, d.rowCount)) === Seq((true, 2L)))
     assert(t.readLatest().count() === 6)
     assert(t.readLatest().filter(col("qty") >= 8).count() === 0)
   }

@@ -109,7 +109,7 @@ class MorReadDiffSpec extends SparkSpec {
     append(t, all.take(10).toDF("k", "v"))
     val fb = append(t, all.slice(10, 20).toDF("k", "v"))
     append(t, all.drop(20).toDF("k", "v"))
-    Dml.deleteMorPositional(t, col("k").isin(12L, 15L))
+    Dml.deleteMor(t, col("k").isin(12L, 15L))
     assert(t.latest.deletes.forall(_.positional))
     assert(marked(t) === Set(fb))
     agree(t, all.filterNot(r => r._1 == 12L || r._1 == 15L).toDF("k", "v"))
@@ -121,7 +121,7 @@ class MorReadDiffSpec extends SparkSpec {
     append(t, all.take(10).toDF("k", "v"))
     val fb = append(t, all.slice(10, 20).toDF("k", "v"))
     val fc = append(t, all.drop(20).toDF("k", "v"))
-    Dml.deleteMorPositional(t, col("k") === 12L)
+    Dml.deleteMor(t, col("k") === 12L)
     Dml.deleteMorKeys(t, Seq(25L).toDF("k"))
     assert(t.latest.deletes.count(_.positional) === 1 && t.latest.deletes.size === 2)
     assert(marked(t) === Set(fb, fc))
