@@ -103,9 +103,6 @@ object Bench {
     val runSweep = sys.env.getOrElse("SPARK_GRAFT_SWEEP", "1") != "0"
 
     val writeRows = sys.env.getOrElse("SPARK_GRAFT_WRITE_ROWS", "10000000").toLong
-    def rmDir(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rmDir); f.delete()
-    }
     def txData(rows: Long, parts: Int) =
       graft.gen.Synthesize.txEvents(spark, rows, partitions = parts)
         .withColumn("ds", org.apache.spark.sql.functions.to_date(
@@ -128,7 +125,7 @@ object Bench {
     // rows below 10 would truncate the 1/10 anchor to zero rows — treat the
     // section as disabled rather than emit a divide-by-zero Infinity token
     // that would corrupt the JSON line
-    val scaleDir = new java.io.File("/root/repo/target/graft-scratch/bench_txevents_scale")
+    val scaleDir = new java.io.File(Scratch.dir("bench_txevents_scale"))
     // One attempt of the whole scale section, bracketed by its own
     // calibration pair. Returns (body-json-without-closing-brace, calBefore,
     // calAfter) so the caller can adjudicate load and stamp the final pair.
@@ -139,7 +136,7 @@ object Bench {
     // every quiet run and double the most expensive section for nothing.
     def runScaleOnce(): (String, Double, Double) = {
       val dir = scaleDir // single name for the section body; finally uses scaleDir
-      if (dir.exists()) rmDir(dir)
+      if (dir.exists()) Scratch.rm(dir)
       val data = txData(scaleRows, 256)
       // the reference's own layout at this scale: days + bucket(16, user_id)
       // (blob-dfs_bench.py:31-32 PARTITION_BY_DAYS + BUCKETS=16) — the
@@ -160,20 +157,20 @@ object Bench {
       // path's C2 compilation to land ON the timed small anchor, which read
       // ~3x the big write's µs/row on code that scales linearly.
       val dirWarm = new java.io.File(dir.getPath + "_warm")
-      if (dirWarm.exists()) rmDir(dirWarm)
+      if (dirWarm.exists()) Scratch.rm(dirWarm)
       val tWarm = mkTable(dirWarm)
       tWarm.append(txData(math.max(scaleRows / 20, 10L), 32),
         sortWithinPartitionsCols = Seq("ts"))
-      rmDir(dirWarm)
+      Scratch.rm(dirWarm)
       // like-for-like µs/row anchor at 1/10 rows under the SAME layout (the
       // 10M ref_phases table is ds-only, so its µs/row is not comparable to
       // this section's 16-bucket layout)
       val dirSmall = new java.io.File(dir.getPath + "_small")
-      if (dirSmall.exists()) rmDir(dirSmall)
+      if (dirSmall.exists()) Scratch.rm(dirSmall)
       val tSmall = mkTable(dirSmall)
       val wSmall = timeOnce {
         tSmall.append(txData(scaleRows / 10, 64), sortWithinPartitionsCols = Seq("ts")) }
-      rmDir(dirSmall)
+      Scratch.rm(dirSmall)
       val calBefore = calibrate()
       val t = mkTable(dir)
       val w = timeOnce { t.append(data, sortWithinPartitionsCols = Seq("ts")) }
@@ -262,7 +259,7 @@ object Bench {
     } finally {
       // ~10 GB of scratch parquet — freed on success AND failure, else
       // failed rounds accumulate until the disk fills
-      try { rmDir(scaleDir); rmDir(new java.io.File(scaleDir.getPath + "_small")) }
+      try { Scratch.rm(scaleDir); Scratch.rm(new java.io.File(scaleDir.getPath + "_small")) }
       catch { case _: Throwable => }
     }
 
@@ -310,8 +307,8 @@ object Bench {
     // phases were setup-dominated; BASELINE.md carries a matching 10M-row
     // re-measure so the 2x gate compares like against like.
     def refPhaseRound(rows: Long): Seq[(String, Double)] = {
-      val dir = new java.io.File("/root/repo/target/graft-scratch/bench_txevents")
-      if (dir.exists()) rmDir(dir)
+      val dir = new java.io.File(Scratch.dir("bench_txevents"))
+      if (dir.exists()) Scratch.rm(dir)
       val data = txData(rows, 64)
       val t = graft.table.GraftTable.create(spark, dir.toString, data.schema,
         partitionCols = Seq("ds"))
@@ -354,8 +351,7 @@ object Bench {
     // call/direct delta is pure statement routing, machine-independent
     // evidence for whether the r9 "regression" was protocol, not plans.
     val overheadJson: String = if (only.isDefined) "null" else try {
-      val t = graft.table.GraftTable.load(spark,
-        "/root/repo/target/graft-scratch/bench_txevents")
+      val t = graft.table.GraftTable.load(spark, Scratch.dir("bench_txevents"))
       val eng = new graft.plan.SparkSqlEngine(spark)
       eng.registerGraftTable("tx_events_oh", t)
       val callM = median((1 to 5).map(_ => timeOnce {
@@ -384,8 +380,7 @@ object Bench {
     // structural, not machine noise.
     val dvProbeJson: String = if (only.isDefined) "null" else try {
       import org.apache.spark.sql.functions.col
-      val t = graft.table.GraftTable.load(spark,
-        "/root/repo/target/graft-scratch/bench_txevents")
+      val t = graft.table.GraftTable.load(spark, Scratch.dir("bench_txevents"))
       val filesBefore = t.latest.files.map(_.path).toSet
       val cow = timeOnce {
         graft.dml.Dml.delete(t, col("user_id") % 1000 === 0) }
@@ -433,7 +428,7 @@ object Bench {
     // also lands in a git-tracked file where per-entry timings survive.
     try {
       java.nio.file.Files.write(
-        java.nio.file.Paths.get("/root/repo/BENCH_FULL.json"),
+        java.nio.file.Paths.get(sys.props("user.dir"), "BENCH_FULL.json"),
         (line + "\n").getBytes("UTF-8"))
     } catch { case _: Throwable => }
     println(line)

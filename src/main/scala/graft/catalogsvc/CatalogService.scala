@@ -117,7 +117,7 @@ class CatalogService(spark: SparkSession, rootUri: String) {
       throw new IllegalStateException(
         s"register_table: $ns.$name is already a registration (its pointer " +
           "file exists); DROP TABLE it before registering a new location")
-    require(GraftTable.exists(spark, location),
+    require(GraftTable.exists(spark, location, hadoopConf),
       s"register_table: no table at $location")
     Files.createDirectories(tableDir(ns, name))
     Files.write(pointerFile(ns, name),
@@ -126,11 +126,15 @@ class CatalogService(spark: SparkSession, rootUri: String) {
     loadTable(ns, name)
   }
 
+  // the session's Hadoop conf, copied once per catalog: every existence
+  // check and table handle of the catalog reads it
+  private lazy val hadoopConf = Some(spark.sessionState.newHadoopConf())
+
   def loadTable(ns: String, name: String): GraftTable =
-    GraftTable.load(spark, resolvedDir(ns, name))
+    GraftTable.load(spark, resolvedDir(ns, name), hadoopConf)
 
   def tableExists(ns: String, name: String): Boolean =
-    GraftTable.exists(spark, resolvedDir(ns, name))
+    GraftTable.exists(spark, resolvedDir(ns, name), hadoopConf)
 
   def listTables(ns: String): Seq[String] = {
     val dir = nsDir(ns)

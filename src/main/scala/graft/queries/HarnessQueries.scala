@@ -18,17 +18,7 @@ import graft.table.GraftTable
 object HarnessQueries {
   type Q = (SparkSession, String) => DataFrame
 
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(rmTree)
-    f.delete()
-  }
-
-  private def scratch(name: String): String = {
-    val dir = new java.io.File(s"/root/repo/target/graft-scratch/$name")
-    if (dir.exists()) rmTree(dir)
-    dir.mkdirs()
-    dir.toString
-  }
+  private def scratch(name: String): String = graft.Scratch.fresh(name)
 
   val queries: Map[String, Q] = Map(
     // H10/H5-H8 — the reference's spark_open_crud plan shape end-to-end
@@ -384,11 +374,7 @@ object HarnessQueries {
       t.append(data)
       val engine = new SparkSqlEngine(s)
       engine.registerGraftTable("li_meta", t)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(new java.io.File(s"${t.tableDir}/data"))
+      graft.Scratch.rm(new java.io.File(s"${t.tableDir}/data"))
       val m = engine.execute(
         """SELECT COUNT(*) AS row_count, COUNT(l_quantity) AS nn_qty,
                   MIN(l_quantity) AS min_qty, MAX(l_quantity) AS max_qty,
@@ -1061,7 +1047,7 @@ object HarnessQueries {
       val tblDir = scratch("sql_mv")
       // the MV's backing table lives BESIDE the source dir, outside what
       // scratch() wipes — clear it so the entry reruns in one JVM
-      rmTree(new java.io.File(s"$tblDir-mv-prio_mv"))
+      graft.Scratch.rm(new java.io.File(s"$tblDir-mv-prio_mv"))
       val t = graft.table.GraftTable.create(s, tblDir, base.schema)
       t.append(base)
       eng.registerGraftTable("ord", t)

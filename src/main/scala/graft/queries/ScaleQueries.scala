@@ -100,10 +100,7 @@ object ScaleQueries {
       // a fresh JVM has an empty in-memory catalog but the warehouse files
       // survive on disk — clear them so saveAsTable never hits a stale path
       Seq("orders_bkt", "customer_bkt").foreach { t =>
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
-        }
-        rm(new java.io.File(s"/root/repo/target/spark-warehouse/$t"))
+        graft.Scratch.rm(new java.io.File(s"${graft.Scratch.target}/spark-warehouse/$t"))
       }
       Tables.orders(s, dir).write.mode("overwrite")
         .bucketBy(8, "o_custkey").sortBy("o_custkey")

@@ -18,19 +18,8 @@ import graft.table.GraftTable
 object TableQueries {
   type Q = (SparkSession, String) => DataFrame
 
-  private val ScratchRoot = "/root/repo/target/graft-scratch"
-
   /** Fresh scratch dir per query invocation (Verify and Bench both rebuild). */
-  private def scratch(name: String): String = {
-    val dir = new java.io.File(s"$ScratchRoot/$name")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    if (dir.exists()) rm(dir)
-    dir.mkdirs()
-    dir.toString
-  }
+  private def scratch(name: String): String = graft.Scratch.fresh(name)
 
   // Hash-stable guarded formatting shared across query files — see Fmt.
   private def dec(c: org.apache.spark.sql.Column) = Fmt.dec(c)

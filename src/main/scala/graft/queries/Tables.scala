@@ -144,7 +144,7 @@ object Tables {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
+      .config("spark.sql.warehouse.dir", s"${graft.Scratch.target}/spark-warehouse")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
 }

@@ -909,11 +909,13 @@ object GraftStreamSource {
     * and SQL front door answer with), so stats resolve under each file's
     * write-time column name and a dropped-then-re-added column never reads
     * the old column's bounds. Each `None` is a case where metadata could
-    * lie: a live delete that can touch a covered file, an unknown row
-    * count, a column some file cannot
+    * lie: a delete metadata cannot count (an equality delete, a vector
+    * without counts) that can touch a covered file, any live delete under
+    * COUNT(col) / MIN / MAX, an unknown row count, a column some file cannot
     * trace, a missing null count or bound, a type whose footer bounds are
     * not exact (strings), SUM/AVG/DISTINCT, or grouping by anything but
-    * identity-partition columns.
+    * identity-partition columns. A group whose rows counted vectors delete
+    * entirely yields no row, as Spark's GROUP BY would.
     */
   private[sources] def planAggregation(dir: String, schema: StructType,
       agg: Aggregation, asOfSnapshot: Option[Long] = None,
@@ -922,7 +924,6 @@ object GraftStreamSource {
       dir, asOfSnapshot, asOfTimestamp).getOrElse(return None)
     val plan = planner(dir, head)
     val files = head.files
-    if (plan.countRows().isEmpty) return None // a pending delete or unknown count
 
     def colOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
       e match {
@@ -967,6 +968,8 @@ object GraftStreamSource {
     val groups: Seq[(Array[Any], List[FileEntry])] =
       if (groupCols.isEmpty) Seq((Array.empty[Any], files))
       else files.groupBy(f => groupCols.map(f.partitionValues)).toSeq
+        // a partition whose rows vectors deleted entirely is no group
+        .filterNot { case (_, fs) => plan.countRows(fs).contains(0L) }
         .sortBy(_._1.mkString("\u0000")).map { case (raws, fs) =>
           (groupCols.zip(raws).map { case (c, raw) =>
             partitionKeyValue(typeOf(c), raw).getOrElse(return None)

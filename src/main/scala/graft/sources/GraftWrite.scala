@@ -83,7 +83,7 @@ private[sources] class GraftWrite(dir: String, schema: StructType, viaCatalog: B
   private def factory(stem: String) = table.writerFactory(schema, partCols, stem, props)
 
   private def entries(messages: Array[WriterCommitMessage]): Seq[FileEntry] =
-    messages.toSeq.collect { case WrittenFiles(es) => es }.flatten
+    messages.toSeq.collect { case w: WrittenFiles => w.entries }.flatten
 
   override def toBatch: BatchWrite = new BatchWrite {
     private val files = factory(s"c${table.latest.snapshotId + 1}")

@@ -298,7 +298,7 @@ object StreamOps {
     // The file-stream source wants a directory; expose the single events
     // parquet through a scratch dir (symlink, copy fallback) without touching
     // the read-only testdata.
-    val streamDir = java.nio.file.Paths.get(s"/root/repo/target/graft-scratch/stream-$queryName")
+    val streamDir = java.nio.file.Paths.get(graft.Scratch.dir(s"stream-$queryName"))
     val target = streamDir.resolve("events.parquet")
     java.nio.file.Files.createDirectories(streamDir)
     java.nio.file.Files.deleteIfExists(target) // sfDir may differ between runs
@@ -348,14 +348,7 @@ object StreamOps {
       val base = graft.queries.Tables.orders(s, dir)
         .filter(col("o_orderkey") < 500)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
-      val tdir = s"/root/repo/target/graft-scratch/stream_table_source/t"
-      val root = new java.io.File(tdir).getParentFile
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      if (root.exists()) rm(root)
-      root.mkdirs()
+      val tdir = graft.Scratch.fresh("stream_table_source") + "/t"
       val t = graft.table.GraftTable.create(s, tdir, base.schema)
       t.append(base.filter(col("o_orderkey") < 250))
       t.append(base.filter(col("o_orderkey") >= 250))
@@ -437,11 +430,7 @@ object StreamOps {
     // table carries exactly one stream commit per batch (DuckDB-checked).
     "stream_table_sink" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      val root = s"/root/repo/target/graft-scratch/stream_table_sink"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
-      }
-      rm(new java.io.File(root))
+      val root = graft.Scratch.fresh("stream_table_sink")
       // split events into 4 files so AvailableNow runs 4 real micro-batches
       val events = graft.queries.Tables.events(s, dir)
         .select("event_id", "user_id", "event_type", "value", "ts")
@@ -474,11 +463,7 @@ object StreamOps {
     // n_stream_commits stays 4 (DuckDB-checked).
     "stream_connector_sink" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      val root = s"/root/repo/target/graft-scratch/stream_connector_sink"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
-      }
-      rm(new java.io.File(root))
+      val root = graft.Scratch.fresh("stream_connector_sink")
       val events = graft.queries.Tables.events(s, dir)
         .select("event_id", "user_id", "event_type", "value", "ts")
       events.repartition(4).write.parquet(s"$root/src")
@@ -508,11 +493,7 @@ object StreamOps {
     // compaction commits carry no batch id).
     "stream_ingest_autocompact" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      val root = s"/root/repo/target/graft-scratch/stream_ingest_autocompact"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
-      }
-      rm(new java.io.File(root))
+      val root = graft.Scratch.fresh("stream_ingest_autocompact")
       val events = graft.queries.Tables.events(s, dir)
         .select("event_id", "user_id", "event_type", "value", "ts")
       events.repartition(4).write.parquet(s"$root/src")
@@ -545,11 +526,7 @@ object StreamOps {
     // publishes as ONE commit.
     "stream_wap_sink" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      val root = s"/root/repo/target/graft-scratch/stream_wap_sink"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
-      }
-      rm(new java.io.File(root))
+      val root = graft.Scratch.fresh("stream_wap_sink")
       val events = graft.queries.Tables.events(s, dir)
         .select("event_id", "user_id", "event_type", "value", "ts")
       events.repartition(4).write.parquet(s"$root/src")
@@ -588,11 +565,7 @@ object StreamOps {
     // batch and all are skipped (exactly-once), proven by n_upsert_commits.
     "stream_upsert_sink" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      val root = s"/root/repo/target/graft-scratch/stream_upsert_sink"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
-      }
-      rm(new java.io.File(root))
+      val root = graft.Scratch.fresh("stream_upsert_sink")
       val events = graft.queries.Tables.events(s, dir)
         .select("event_id", "user_id", "event_type", "value", "ts")
       // part-00000..3 cover ascending (ts, event_id) bands (range
@@ -644,11 +617,7 @@ object StreamOps {
     // output.
     "stream_incremental_ingest" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      val root = "/root/repo/target/graft-scratch/stream_incr_ingest"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
-      }
-      rm(new java.io.File(root))
+      val root = graft.Scratch.fresh("stream_incr_ingest")
       val docs = graft.queries.Tables.documents(s, dir)
         .select("doc_id", "text").filter(col("doc_id") < 320)
       val seed = docs.filter(col("doc_id") < 200)

@@ -14,12 +14,16 @@ import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 /** What one write task hands the driver: the files it wrote, each with its
   * final table-relative path, partition values, row count, size and footer
-  * stats. `writtenAt` is filled in by the commit. */
-private[graft] final case class WrittenFiles(entries: Seq[FileEntry]) extends WriterCommitMessage
+  * stats. `writtenAt` is filled in by the commit. A delete vector's write
+  * also hands, per file it wrote (by entry path), the rows it deletes in
+  * each data file it names. */
+private[graft] final case class WrittenFiles(entries: Seq[FileEntry],
+    deleted: Map[String, Map[String, Long]] = Map.empty) extends WriterCommitMessage
 
 /** The one table-file writer's factory: every route that turns rows into a
   * table's data or delete files — the table API's DataFrame writes and the
@@ -39,6 +43,11 @@ private[graft] final case class WrittenFiles(entries: Seq[FileEntry]) extends Wr
   * @param conf      the write's Hadoop conf, broadcast once per write as
   *                  Spark's file scan broadcasts its read conf: the factory
   *                  that travels with every task carries only the handle
+  * @param vector    the rows are a delete vector `(_gf_file, _gf_pos)`:
+  *                  [[DataFileWriter.run]] sorts them by both within each
+  *                  task (Iceberg's order for position deletes), and the
+  *                  writer refuses a repeated tuple and counts each data
+  *                  file's tuples
   */
 private[graft] final case class DataFileWriterFactory(
     root: String,
@@ -49,7 +58,8 @@ private[graft] final case class DataFileWriterFactory(
     fileSchema: StructType,
     name: String,
     outputs: OutputWriterFactory,
-    conf: Broadcast[SerializableConfiguration]) extends DataWriterFactory with StreamingDataWriterFactory {
+    conf: Broadcast[SerializableConfiguration],
+    vector: Boolean = false) extends DataWriterFactory with StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new DataFileWriter(this, partitionId, taskId)
@@ -85,6 +95,11 @@ private[graft] final class DataFileWriter(f: DataFileWriterFactory, partitionId:
   private var rows = 0L
   private val closed = scala.collection.mutable.ArrayBuffer[(String, Map[String, String], Long)]()
   private val opened = scala.collection.mutable.ArrayBuffer[String]()
+  // a vector's last tuple and its per-data-file counts (a vector is
+  // unpartitioned: its task writes one file)
+  private var lastFile: UTF8String = _
+  private var lastPos = 0L
+  private val counts = scala.collection.mutable.Map[UTF8String, Long]()
 
   private def open(key: InternalRow): Unit = {
     val values = f.partition.indices.map { i =>
@@ -107,12 +122,26 @@ private[graft] final class DataFileWriter(f: DataFileWriterFactory, partitionId:
     current = null
   }
 
+  /** Count a vector tuple. The tuples arrive sorted, so a repeat follows
+    * its twin. */
+  private def count(row: InternalRow): Unit = {
+    require(!row.isNullAt(0) && !row.isNullAt(1),
+      "a delete vector tuple has a null file or position")
+    val (file, pos) = (row.getUTF8String(0), row.getLong(1))
+    if (file != lastFile) lastFile = file.clone()
+    else if (pos == lastPos)
+      throw new IllegalStateException(s"delete vector names row $pos of $file twice")
+    lastPos = pos
+    counts(lastFile) = counts.getOrElse(lastFile, 0L) + 1
+  }
+
   override def write(row: InternalRow): Unit = {
     val key = if (partValues == null) null else partValues(row)
     if (current == null || (key != null && key != currentKey)) {
       closeCurrent()
       open(if (key == null) null else key.copy())
     }
+    if (f.vector) count(row)
     current.write(if (project == null) row else project(row))
     rows += 1
   }
@@ -123,12 +152,14 @@ private[graft] final class DataFileWriter(f: DataFileWriterFactory, partitionId:
   override def commit(): WriterCommitMessage = {
     closeCurrent()
     val fs = new Path(f.root).getFileSystem(conf)
-    WrittenFiles(closed.toSeq.map { case (rel, pv, n) =>
+    val entries = closed.toSeq.map { case (rel, pv, n) =>
       val p = new Path(f.root, rel)
       val (footerRows, stats) = GraftTable.footerMeta(conf, p)
       require(footerRows == n, s"written file $p holds $footerRows rows, the task wrote $n")
       FileEntry(f.relPrefix + rel, pv, n, fs.getFileStatus(p).getLen, 0L, stats)
-    })
+    }
+    WrittenFiles(entries, if (!f.vector) Map.empty
+      else entries.map(_.path -> counts.map { case (k, n) => k.toString -> n }.toMap).toMap)
   }
 
   override def abort(): Unit = {
@@ -145,14 +176,19 @@ private[graft] object DataFileWriter {
 
   /** Run `df` through the writer as one Spark job, the way Spark's own V2
     * write runs a task: write every row, then commit, or abort on failure.
+    * A vector's rows are first sorted within each task, so the writer sees
+    * a repeated tuple next to its twin. Returns every task's files (sorted
+    * by path) and vector counts.
     * A failed job leaves nothing behind: it deletes the files its committed
     * tasks named, and — once its stages have no running task left — any
     * file a task finished after the failure (its result never arrives, but
     * its leaf name carries this write's token). */
-  def run(df: DataFrame, factory: DataFileWriterFactory): Seq[FileEntry] = {
-    val qe = df.queryExecution
+  def run(df: DataFrame, factory: DataFileWriterFactory): WrittenFiles = {
+    val qe = (if (factory.vector) df.sortWithinPartitions(GraftTable.WrittenAtCol, GraftTable.PosCol)
+      else df).queryExecution
     val sc = df.sparkSession.sparkContext
     val done = scala.collection.mutable.ArrayBuffer[FileEntry]()
+    val deleted = scala.collection.mutable.Map[String, Map[String, Long]]()
     val task = (rows: Iterator[InternalRow]) => {
       val ctx = TaskContext.get()
       val w = factory.createWriter(ctx.partitionId(), ctx.taskAttemptId())
@@ -166,7 +202,8 @@ private[graft] object DataFileWriter {
     try SQLExecution.withNewExecutionId(qe, Some("graft table write")) {
       val rdd = qe.executedPlan.execute()
       val job = sc.submitJob(rdd, task, rdd.partitions.indices.toSeq,
-        (_: Int, m: WrittenFiles) => done.synchronized(done ++= m.entries), ())
+        (_: Int, m: WrittenFiles) => done.synchronized { done ++= m.entries; deleted ++= m.deleted },
+        ())
       jobIds = job.jobIds
       scala.concurrent.Await.ready(job, scala.concurrent.duration.Duration.Inf)
       job.value.get.get
@@ -189,7 +226,7 @@ private[graft] object DataFileWriter {
       }
       throw e
     }
-    done.toSeq.sortBy(_.path)
+    WrittenFiles(done.toSeq.sortBy(_.path), deleted.toMap)
   }
 
   /** Delete written files (a job or a commit that failed). */

@@ -2,6 +2,7 @@ package graft.table
 
 import java.util.concurrent.ThreadLocalRandom
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
@@ -40,10 +41,15 @@ import org.apache.spark.sql.types.{BinaryType, DataType, StringType, StructType}
   * snapshots read with their *own* schema and evolved reads see renamed /
   * added / widened columns without rewriting data.
   */
-class GraftTable(val spark: SparkSession, val tableDir: String) {
+class GraftTable(val spark: SparkSession, val tableDir: String,
+    hadoopConf: Option[Configuration] = None) {
   import GraftTable._
 
-  private def conf = spark.sessionState.newHadoopConf()
+  // the caller's Hadoop conf, or the session's copied once per handle: it
+  // serves the log, metadata and footer reads and commits, so a session
+  // setting changed later reaches them only through a new handle (writes
+  // copy the session's conf afresh, see writerFactory)
+  private lazy val conf = hadoopConf.getOrElse(spark.sessionState.newHadoopConf())
   private def hfs = SnapshotLog.fs(conf, tableDir)
 
   def snapshotsList: Seq[Snapshot] = SnapshotLog.load(conf, tableDir)
@@ -280,7 +286,7 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     if (marked.nonEmpty) {
       // the reconciler keys rows to their file by part-file NAME (globally
       // unique — published leaf names embed the commit id and a path hash)
-      val names = snap.files.map(_.path.split('/').last)
+      val names = snap.files.map(_.partName)
       require(names.distinct.size == names.size,
         s"snapshot ${snap.snapshotId} in $tableDir has colliding part-file names; " +
           "cannot resolve merge-on-read delete applicability")
@@ -333,7 +339,7 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
         val keyNames = specs.flatMap(_.keyNames).distinct
         val deleteIdx = deletes.zipWithIndex.toMap
         val setIdx = sets.zipWithIndex.toMap
-        val files = entries.map(e => e.path.split('/').last ->
+        val files = entries.map(e => e.partName ->
           (e.writtenAt, setIdx(marked(e.path)))).toMap
         val attr = UnresolvedAttribute.quoted _
         val pos = if (vectors) attr(posName) else Literal(-1L)
@@ -423,26 +429,27 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     new SnapshotPlanner(snap, parseTransforms(scala.util.Try(properties).getOrElse(Map.empty)))
 
   /** Metadata-only `COUNT(*)` (the Iceberg aggregate-pushdown analog): the
-    * snapshot's per-file row counts sum to the exact table count without
-    * opening any data file — at 100 TB the difference between a full scan
-    * and O(files) driver arithmetic. None when metadata cannot answer
-    * exactly: a live merge-on-read delete that can touch some file (the
-    * per-file rule, `SnapshotPlanner.applies`) removes rows no file entry
-    * accounts for, and an unknown per-file count (-1) leaves the sum
-    * undefined — callers fall back to a scan.
+    * snapshot's per-file row counts, less each delete vector's recorded
+    * per-file counts, sum to the exact table count without opening any
+    * data file — at 100 TB the difference between a full scan and O(files)
+    * metadata arithmetic. None when metadata cannot answer exactly: an
+    * equality delete (or a vector written without counts) that can touch
+    * some file (the per-file rule, `SnapshotPlanner.applies`) removes rows
+    * no entry accounts for, and an unknown per-file count (-1) leaves the
+    * sum undefined — callers fall back to a scan.
     */
   def countRowsFromMetadata(snap: Snapshot): Option[Long] = planner(snap).countRows()
 
   def countRowsFromMetadata(): Option[Long] = countRowsFromMetadata(latest)
 
-  /** `COUNT(*)` that opens only the files a live delete can touch: the
-    * metadata row counts of every other file plus a reconciled count over
-    * the marked ones. None when an unmarked file's count is unknown. */
+  /** `COUNT(*)` that opens only the files metadata cannot count (an
+    * equality delete or an uncounted vector marks them) and counts the rest
+    * from metadata. None when an unmarked file's count is unknown. */
   def countLive(snap: Snapshot): Option[Long] = {
     val plan = planner(snap)
-    val (marked, clean) = snap.files.partition(plan.marked)
-    plan.countRows(clean).map(_ +
-      (if (marked.isEmpty) 0L else readSnapshot(snap.copy(files = marked)).count()))
+    val (scan, counted) = snap.files.partition(f => plan.marked(f) && plan.liveRows(f).isEmpty)
+    plan.countRows(counted).map(_ +
+      (if (scan.isEmpty) 0L else readSnapshot(snap.copy(files = scan)).count()))
   }
 
   def countLive(): Option[Long] = countLive(latest)
@@ -1449,7 +1456,7 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
   private[graft] def commitReplace(written: Seq[FileEntry], keepFiles: Seq[FileEntry],
       operation: String, planned: Snapshot, clearDeletes: Boolean = false): Snapshot = {
     val fences = carriedFences()
-    onFailureDrop(written) { commitWithRetry { parent =>
+    onFailureDrop(written.map(_.path)) { commitWithRetry { parent =>
       val p = parent.getOrElse(throw new IllegalStateException("rewrite on empty table"))
       if (p.snapshotId != planned.snapshotId)
         throw new java.util.ConcurrentModificationException(
@@ -1469,13 +1476,13 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     } }
   }
 
-  /** Delete `written` when `commit` throws: a failed write leaves nothing
-    * behind. */
-  private def onFailureDrop[A](written: Seq[FileEntry])(commit: => A): A =
+  /** Delete the files at `written` (paths relative to `data/`) when
+    * `commit` throws: a failed write leaves nothing behind. */
+  private def onFailureDrop[A](written: Seq[String])(commit: => A): A =
     try commit catch { case e: Throwable =>
       val dataRoot = SnapshotLog.dataPath(tableDir)
-      written.foreach(f => scala.util.Try(
-        hfs.delete(new org.apache.hadoop.fs.Path(dataRoot, f.path), false)))
+      written.foreach(p => scala.util.Try(
+        hfs.delete(new org.apache.hadoop.fs.Path(dataRoot, p), false)))
       throw e
     }
 
@@ -1571,15 +1578,15 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
       }
     val planned = basedOn.getOrElse(latest)
     def publish(delWritten: Seq[DeleteEntry], dataWritten: Seq[FileEntry]): Snapshot =
-      commitWithRetry { parent =>
+      onFailureDrop(delWritten.map(_.path) ++ dataWritten.map(_.path)) { commitWithRetry { parent =>
         val p = parent.getOrElse(throw new IllegalStateException(s"$operation on empty table"))
         if ((positional || basedOn.isDefined) && p.snapshotId != planned.snapshotId)
           throw new java.util.ConcurrentModificationException(
             s"table advanced to ${p.snapshotId} since $operation planned at ${planned.snapshotId}")
+        if (positional) checkVectorCounts(p, delWritten)
         val id = p.snapshotId + 1
         val files = (p.files ++ dataWritten.map(_.copy(writtenAt = id))).toList
-        val delEntries = delWritten.map(_.copy(keyCols = keyCols.toList, appliedAt = id,
-          positional = positional))
+        val delEntries = delWritten.map(_.copy(keyCols = keyCols.toList, appliedAt = id))
         Snapshot(id, Some(p.snapshotId), clock(), operation, p.schemaJson,
           p.partitionCols, files,
           extraSummary ++ Map("added-delete-files" -> delEntries.size.toString,
@@ -1587,9 +1594,9 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
             (if (positional) Map("delete-representation" -> "positional") else Map.empty),
           Nil, schemasFor(files, p.schemas + (id.toString -> p.schemaJson)),
           p.chain, (p.deletes ++ delEntries).toList)
-      }
+      } }
     if (!change.columns.contains(AppendFlag)) {
-      val written = writeDeleteFile(change.filter(col(DeleteFlag)).select(payload: _*))
+      val written = writeDeleteFile(change.filter(col(DeleteFlag)).select(payload: _*), positional)
       return if (skipEmpty && written.isEmpty) planned else publish(written, Nil)
     }
     require(cur.fields.forall(f => change.schema.exists(c =>
@@ -1624,7 +1631,8 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
       if (skipEmpty && delBytes == 0) return planned
       val delWritten =
         if (delBytes == 0) Nil
-        else writeDeleteFile(cached.filter(deletes).select(payload: _*), Some(BigInt(delBytes)))
+        else writeDeleteFile(cached.filter(deletes).select(payload: _*), positional,
+          Some(BigInt(delBytes)))
       // one write task per advisory size, as a rebalance would split them
       val advisory = writeAdvisory(properties).getOrElse(spark.sessionState.conf.getConf(
         org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
@@ -1641,12 +1649,29 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     }
   }
 
+  /** Refuse vectors naming a file that is not live in their parent `p`, or
+    * deleting more rows of a file than it holds, with `p`'s vectors on it. */
+  private def checkVectorCounts(p: Snapshot, vectors: Seq[DeleteEntry]): Unit = {
+    val live = p.files.map(f => f.partName -> f).toMap
+    vectors.flatMap(_.deletedRows.getOrElse(Map.empty)).groupMapReduce(_._1)(_._2)(_ + _)
+      .foreach { case (name, n) =>
+        val f = live.getOrElse(name, throw new IllegalStateException(
+          s"delete vector names $name, which is not a live data file of snapshot ${p.snapshotId}"))
+        val total = n + p.deletes.flatMap(_.deletedRows.flatMap(_.get(name))).sum
+        if (f.rowCount >= 0 && total > f.rowCount)
+          throw new IllegalStateException(s"delete vectors delete $total rows of $name, " +
+            s"which holds ${f.rowCount}: a vector deletes a row an earlier one deleted")
+      }
+  }
+
   /** Write `keys` as parquet under `data/_deletes/` (the underscore keeps
     * data-scan partition discovery blind to it) and return entries with
     * placeholder keyCols/appliedAt (the commit loop fills them in) and the
-    * footer stats — the bounds the per-file delete rule reads.
+    * footer stats — the bounds the per-file delete rule reads. A `vector`
+    * (`(_gf_file, _gf_pos)` rows) gets its per-file counts from the writer
+    * instead of stats.
     */
-  private def writeDeleteFile(keys: DataFrame,
+  private def writeDeleteFile(keys: DataFrame, vector: Boolean,
       measuredBytes: Option[BigInt] = None): Seq[DeleteEntry] = {
     // ONE delete file per commit by default: a delete batch is keys, not
     // data — small relative to the table by construction — and a single
@@ -1656,11 +1681,11 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     // and funneling it through one task is the write-side ceiling at 100 TB
     // (Iceberg shards position deletes per partition for the same reason):
     // above a size threshold, shard the write by RANGE — positional
-    // vectors on their target file name (each shard's tuples stay
-    // file-coherent for the reader's per-file position sets), key batches
+    // vectors on their target file name (each shard holds every tuple of
+    // the files it names, which its per-file counts need), key batches
     // on their first key column — so shards have disjoint bounds and the
-    // per-file rule marks a data file only with the shards its keys can
-    // fall in. The read side already unions per-commit files, so
+    // per-file rule marks a data file only with the shards that name it
+    // or whose keys it can hold. The read side already unions per-commit files, so
     // a multi-file delete commit costs nothing extra to apply.
     // The size is the delta commit's measured payload; without one it is
     // Catalyst's sizeInBytes, a BigInt that join-heavy plans can estimate
@@ -1672,7 +1697,7 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     // toLong/toInt here once produced a 2-billion-partition shuffle).
     val estBytes = measuredBytes.getOrElse(keys.queryExecution.optimizedPlan.stats.sizeInBytes)
     val saneCeiling = BigInt("1000000000000000") // 1e15
-    val staged0 =
+    val staged =
       if (estBytes <= GraftTable.DeleteShardBytes || estBytes > saneCeiling)
         keys.coalesce(1)
       else {
@@ -1680,14 +1705,14 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
         // would otherwise coalesce a keyed repartition back to one task
         val shards =
           ((estBytes / GraftTable.DeleteShardBytes) + 1).min(BigInt(64)).toInt
-        val shardKey =
-          if (keys.columns.contains(GraftTable.WrittenAtCol)) GraftTable.WrittenAtCol
-          else keys.columns.head
-        keys.repartitionByRange(shards, col(shardKey))
+        keys.repartitionByRange(shards, col(keys.columns.head))
       }
     // a sharded write's empty range shards write no file
-    DataFileWriter.run(staged0, writerFactory(keys.schema, Nil, "del", deletes = true))
-      .map(e => DeleteEntry(e.path, Nil, e.rowCount, e.sizeBytes, 0L, stats = e.stats))
+    val out = DataFileWriter.run(staged,
+      writerFactory(keys.schema, Nil, "del", deletes = true, vector = vector))
+    // a vector's counts name its files: its footer bounds are never read
+    out.entries.map(e => DeleteEntry(e.path, Nil, e.rowCount, e.sizeBytes, 0L, positional = vector,
+      stats = if (vector) Map.empty else e.stats, deletedRows = out.deleted.get(e.path)))
   }
 
   /** M-step — the Iceberg `rewrite_position_delete_files` analog for
@@ -1715,10 +1740,9 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
   def rewriteDeleteFiles(consolidate: Boolean = true): Option[Snapshot] = {
     val planned = latest
     if (planned.deletes.isEmpty) return None
-    // the reads' own rule: a delete no live file needs is dangling. For
-    // vectors it is conservative (file-name bounds, not names) — exact
-    // per-tuple pruning happens in the consolidation merge below, which
-    // drops tuples naming dead files.
+    // the reads' own rule: a delete no live file needs is dangling (exact
+    // for counted vectors; the consolidation merge below drops the tuples
+    // that name dead files)
     val plan = planner(planned)
     val (live0, dangling) = planned.deletes.partition(d =>
       planned.files.exists(plan.applies(d, _)))
@@ -1734,19 +1758,18 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     val mergeDv = consolidate && dvLive.size > 1
     if (dangling.isEmpty && toMerge.isEmpty && !mergeDv) return None
     val dataRoot = SnapshotLog.dataPath(tableDir).toString
-    // all positional vectors collapse to ONE distinct-tuple vector, keeping
-    // only tuples that still name a live file
+    // all positional vectors collapse to ONE vector, keeping only tuples
+    // that still name a live file. Vectors on one file are disjoint, so the
+    // union needs no distinct: its writer's counts are the vectors' summed
+    // counts over live files, and a repeated tuple fails the write.
     val dvWritten: Seq[DeleteEntry] = if (!mergeDv) dvLive else {
-      val liveNames = planned.files.map(_.path.split('/').last)
       import spark.implicits._
-      val liveNamesDf = liveNames.toDF(GraftTable.WrittenAtCol)
+      val liveNamesDf = planned.files.map(_.partName).toDF(GraftTable.WrittenAtCol)
       val merged = dvLive.map(d => spark.read.parquet(s"$dataRoot/${d.path}"))
-        .reduce(_.unionByName(_)).distinct()
+        .reduce(_.unionByName(_))
         .join(broadcast(liveNamesDf), Seq(GraftTable.WrittenAtCol), "left_semi")
         .select(col(GraftTable.WrittenAtCol), col(GraftTable.PosCol))
-      val canon = dvLive.maxBy(_.appliedAt)
-      writeDeleteFile(merged).map(_.copy(
-        appliedAt = canon.appliedAt, positional = true))
+      writeDeleteFile(merged, vector = true).map(_.copy(appliedAt = dvLive.map(_.appliedAt).max))
     }
     val written = toMerge.toSeq.sortBy(_._1.mkString(",")).flatMap { case (curNames, entries) =>
       val canon = entries.maxBy(_.appliedAt)
@@ -1764,7 +1787,7 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
       }.reduce(_.unionByName(_))
       val collapsed = union.groupBy(canon.keyCols.map(col): _*)
         .agg(max(col(SnapshotPlanner.AppliedAtCol)).as(SnapshotPlanner.AppliedAtCol))
-      writeDeleteFile(collapsed).map(_.copy(
+      writeDeleteFile(collapsed, vector = false).map(_.copy(
         keyCols = canon.keyCols, appliedAt = canon.appliedAt, perRowAppliedAt = true))
     }
     val newDeletes =
@@ -1852,7 +1875,7 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
       preCommit: Option[Snapshot] => Unit = _ => ()): Snapshot = {
     val writeShape = shapeOf(writeSchema)
     val commitT0 = System.nanoTime()
-    try onFailureDrop(written) { commitWithRetry { parent =>
+    try onFailureDrop(written.map(_.path)) { commitWithRetry { parent =>
       preCommit(parent)
       basedOn.foreach { pinned =>
         if (parent.map(_.snapshotId).getOrElse(0L) != pinned.snapshotId)
@@ -1901,7 +1924,7 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     val planned = latest
     val written = writeDataFiles(readLatest(), planned.snapshotId + 1,
       partColsOverride = Some(newPartitionCols))
-    onFailureDrop(written) { commitWithRetry { parent =>
+    onFailureDrop(written.map(_.path)) { commitWithRetry { parent =>
       val p = parent.getOrElse(throw new IllegalStateException("evolve on empty table"))
       if (p.snapshotId != planned.snapshotId)
         throw new java.util.ConcurrentModificationException(
@@ -1974,7 +1997,7 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
         .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
     val order = parts ++ effectiveSort.map(col)
     val sorted = if (order.isEmpty) distributed else distributed.sortWithinPartitions(order: _*)
-    DataFileWriter.run(sorted, writerFactory(df.schema, partCols, f"c$snapshotId%08d", props))
+    DataFileWriter.run(sorted, writerFactory(df.schema, partCols, f"c$snapshotId%08d", props)).entries
       .map(_.copy(writtenAt = snapshotId))
   }
 
@@ -2000,7 +2023,9 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     * every partition value derived in the task ([[partitionValues]], cast to
     * its directory string as Spark's file writer renders it).
     *
-    * The Hadoop conf is this write's own: Spark's parquet `prepareWrite`
+    * The Hadoop conf is this write's own, copied from the session's current
+    * one (not the handle's: a `parquet.*` or `fs.*` setting made after the
+    * handle was built reaches the next write): Spark's parquet `prepareWrite`
     * fills it from the session, then table data files pin TIMESTAMP_MICROS
     * (INT96, Spark's session default, carries no parquet min/max statistics
     * and would silently exempt timestamp columns from stats pruning) and
@@ -2011,7 +2036,8 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     * pushed-down equality). The session conf is never set.
     */
   private[graft] def writerFactory(input: StructType, partCols: Seq[String], stem: String,
-      props: Map[String, String] = properties, deletes: Boolean = false): DataFileWriterFactory = {
+      props: Map[String, String] = properties, deletes: Boolean = false,
+      vector: Boolean = false): DataFileWriterFactory = {
     val probe = spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), input)
     val (bound, keep) = org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions(
         probe.select(partitionValues(input, partCols, props).map(_.cast(StringType)): _*)
@@ -2029,7 +2055,7 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
     // the plan proves non-null is written `required` and decodes without
     // definition levels
     val fileSchema = StructType(keep.map(input(_)))
-    val job = org.apache.hadoop.mapreduce.Job.getInstance(conf)
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(spark.sessionState.newHadoopConf())
     val outputs = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
       .prepareWrite(spark, job, Map.empty, fileSchema)
     val c = job.getConfiguration
@@ -2044,7 +2070,8 @@ class GraftTable(val spark: SparkSession, val tableDir: String) {
       if (deletes) new org.apache.hadoop.fs.Path(dataRoot, DeletesDir) else dataRoot)
     DataFileWriterFactory(root.toString, if (deletes) s"$DeletesDir/" else "", bound, keep,
       input.length, fileSchema, s"$stem-${java.util.UUID.randomUUID().toString.take(8)}",
-      outputs, spark.sparkContext.broadcast(new org.apache.spark.util.SerializableConfiguration(c)))
+      outputs, spark.sparkContext.broadcast(new org.apache.spark.util.SerializableConfiguration(c)),
+      vector)
   }
 
   private def listParquetFiles(dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] = {
@@ -2363,14 +2390,17 @@ object GraftTable {
     t
   }
 
-  def load(spark: SparkSession, dir: String): GraftTable = {
-    val t = new GraftTable(spark, dir)
+  /** A handle on the table at `dir`, reading through `conf` when given
+    * (else the session's Hadoop conf, copied once by the handle). */
+  def load(spark: SparkSession, dir: String,
+      conf: Option[Configuration] = None): GraftTable = {
+    val t = new GraftTable(spark, dir, conf)
     require(t.snapshotsList.nonEmpty, s"no table at $dir")
     t
   }
 
-  def exists(spark: SparkSession, dir: String): Boolean =
-    SnapshotLog.load(spark.sessionState.newHadoopConf(), dir).nonEmpty
+  def exists(spark: SparkSession, dir: String, conf: Option[Configuration] = None): Boolean =
+    SnapshotLog.load(conf.getOrElse(spark.sessionState.newHadoopConf()), dir).nonEmpty
 
   /** D7 — DESCRIBE TABLE as a DataFrame (ref schema_evolution_sales_events.sql:12). */
   def describe(spark: SparkSession, t: GraftTable): DataFrame = {

@@ -31,7 +31,10 @@ case class FileEntry(
     rowCount: Long,
     sizeBytes: Long,
     writtenAt: Long = 0L,
-    stats: Map[String, List[String]] = Map.empty)
+    stats: Map[String, List[String]] = Map.empty) {
+  /** The part-file name: unique in a table, a delete vector's key. */
+  def partName: String = path.substring(path.lastIndexOf('/') + 1)
+}
 
 /** One equality-delete file tracked by a snapshot (the Iceberg v2
   * equality-delete-file analog: a parquet file of key tuples; a data row is
@@ -57,11 +60,19 @@ case class FileEntry(
   * @param stats     footer bounds of the file, in `FileEntry.stats`' format
   *                  and under the file's own column names: each key column
   *                  (`[min, max, nullCount]`, stored in the column's type at
-  *                  the write), a consolidated file's `_gf_applied_at`, a
-  *                  vector's `_gf_file` and `_gf_pos`. They feed the
-  *                  per-file applicability rule (`SnapshotPlanner.applies`).
+  *                  the write) and a consolidated file's `_gf_applied_at`
+  *                  (none for a vector). They feed the per-file
+  *                  applicability rule (`SnapshotPlanner.applies`).
   *                  Absent (docs written before the field) = applies to
   *                  every file the commit bound allows.
+  * @param deletedRows a vector's deleted rows per data file it names (part
+  *                  name → count; the cardinality of an Iceberg v3 deletion
+  *                  vector). The writer refuses a repeated tuple, and the
+  *                  commit keeps each file's counts, summed over its vectors,
+  *                  within its `rowCount`. The vector applies to exactly the
+  *                  files it names. None for equality deletes and for vectors
+  *                  written before the field, which apply to every file the
+  *                  commit bound allows and make a count scan those files.
   */
 case class DeleteEntry(
     path: String,
@@ -71,7 +82,8 @@ case class DeleteEntry(
     appliedAt: Long,
     perRowAppliedAt: Boolean = false,
     positional: Boolean = false,
-    stats: Map[String, List[String]] = Map.empty)
+    stats: Map[String, List[String]] = Map.empty,
+    deletedRows: Option[Map[String, Long]] = None)
 
 /** One schema-evolution commit's ops, carried forward in every descendant
   * snapshot so evolution replay never needs another snapshot doc.

@@ -487,15 +487,15 @@ final class SnapshotPlanner(val snap: Snapshot,
     * delete entry `d` remove a row of data file `f`? Both must hold:
     *  - `d` was committed after `f` was written: `writtenAt < appliedAt`,
     *    or below a consolidated file's recorded `_gf_applied_at` max;
-    *  - for equality deletes, every key column's bounds overlap: the column
-    *    is resolved through renames (its current name, then `f`'s
-    *    write-time name), the bounds compare in the current type, and nulls
-    *    overlap nulls. For a vector, `f`'s part name lies inside the
-    *    recorded `_gf_file` bounds.
-    * Anything unknown (no stats on either side, a column added after the
-    * file, a type whose bounds do not order) means "applies". The table
-    * scan, the connector's per-partition delete lists, metadata aggregates,
-    * the COUNT(*) route and delete materialization all decide here. */
+    *  - for a vector, its per-file counts name `f` (exact); for equality
+    *    deletes, every key column's bounds overlap: the column is resolved
+    *    through renames (its current name, then `f`'s write-time name),
+    *    the bounds compare in the current type, and nulls overlap nulls.
+    * Anything unknown (a vector without counts, no stats on either side, a
+    * column added after the file, a type whose bounds do not order) means
+    * "applies". The table scan, the connector's per-partition delete
+    * lists, metadata aggregates, the COUNT(*) route and delete
+    * materialization all decide here. */
   def applies(d: DeleteEntry, f: FileEntry): Boolean = {
     val bound =
       if (!d.perRowAppliedAt) d.appliedAt
@@ -503,12 +503,7 @@ final class SnapshotPlanner(val snap: Snapshot,
         .flatMap(b => scala.util.Try(b._2.toLong).toOption)
         .fold(d.appliedAt)(math.min(_, d.appliedAt))
     f.writtenAt < bound && (
-      if (d.positional)
-        d.stats.get(GraftTable.WrittenAtCol).flatMap(StatEntry.bounds).forall {
-          case (lo, hi) =>
-            val name = f.path.substring(f.path.lastIndexOf('/') + 1)
-            lo.compareTo(name) <= 0 && name.compareTo(hi) <= 0
-        }
+      if (d.positional) d.deletedRows.forall(_.contains(f.partName))
       else d.keyCols.forall(k => keyMayMatch(d, k, f)))
   }
 
@@ -583,11 +578,17 @@ final class SnapshotPlanner(val snap: Snapshot,
       f.stats.get(n.get).orElse(partitionEntry(f, n.get)) })
   }
 
-  /** Exact row count, or None when a live delete can touch one of `files`
-    * or a count is unknown. */
+  /** Exact live rows of `f`: its row count less what each vector that
+    * applies deletes in it. None when the count is unknown, or when an
+    * equality delete or a vector without counts can touch `f`. */
+  def liveRows(f: FileEntry): Option[Long] =
+    if (f.rowCount < 0) None
+    else deletesFor(f).foldLeft(Option(f.rowCount))((live, d) =>
+      for (n <- live; counts <- d.deletedRows) yield n - counts(f.partName))
+
+  /** Exact row count, or None when some file's [[liveRows]] is unknown. */
   def countRows(files: Seq[FileEntry] = snap.files): Option[Long] =
-    if (files.exists(f => f.rowCount < 0 || marked(f))) None
-    else Some(files.map(_.rowCount).sum)
+    files.foldLeft(Option(0L))((sum, f) => for (s <- sum; n <- liveRows(f)) yield s + n)
 
   /** Exact COUNT(col) — see `GraftTable.countNonNullFromMetadata`. */
   def countNonNull(colName: String, files: Seq[FileEntry] = snap.files): Option[Long] =

@@ -18,7 +18,8 @@ object DataFileWriterSpec {
 
 /** The one table-file writer: a failed write leaves nothing behind, and a
   * write never sets the session conf — its timestamp type and advisory
-  * size are its own. */
+  * size are its own — while it reads the session's current Hadoop
+  * settings. */
 class DataFileWriterSpec extends SparkSpec {
   import DataFileWriterSpec._
 
@@ -90,6 +91,25 @@ class DataFileWriterSpec extends SparkSpec {
     assert(keys.map(spark.conf.getOption) === before)
     // the table's own settings reached its files: timestamps carry stats
     assert(t.latest.files.forall(_.stats.get("ts").exists(_.size == 3)))
+  }
+
+  test("a Hadoop setting made after a handle is built reaches the handle's next write") {
+    val t = GraftTable.create(spark, scratchDir("dfw-late-conf"), kv(1, 1).schema)
+    t.append(kv(2000, 1))
+    def rowGroups: Int = {
+      val f = t.latest.files.maxBy(_.writtenAt)
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(s"${t.tableDir}/data/${f.path}"),
+        spark.sessionState.newHadoopConf())
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try r.getRowGroups.size finally r.close()
+    }
+    assert(rowGroups === 1)
+    // a row group closes once its buffered bytes pass parquet.block.size
+    spark.conf.set("parquet.block.size", "1024")
+    try t.append(kv(2000, 1)) finally spark.conf.unset("parquet.block.size")
+    assert(rowGroups > 1)
+    assert(t.readLatest().count() === 4000L)
   }
 
   test("concurrent appends with different target file sizes each produce their serial file count") {

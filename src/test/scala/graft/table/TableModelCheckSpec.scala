@@ -59,7 +59,9 @@ class TableModelCheckSpec extends SparkSpec {
         // and MOR DML, compaction, expiry, and evolution. (None = declared
         // scan-fallback, always legal.)
         t.countRowsFromMetadata().foreach(n =>
-          assert(n === model.size.toLong, s"metadata COUNT(*) after $opName (round $round)"))
+          assert(n === actual.size.toLong, s"metadata COUNT(*) after $opName (round $round)"))
+        assert(t.countLive() === Some(actual.size.toLong),
+          s"COUNT(*) route after $opName (round $round)")
         t.minMaxFromMetadata("id").foreach { case (mn, mx) =>
           assert(model.nonEmpty && mn == model.map(_._1).min && mx == model.map(_._1).max,
             s"metadata MIN/MAX(id) after $opName (round $round): ($mn,$mx) vs model")
@@ -158,17 +160,23 @@ class TableModelCheckSpec extends SparkSpec {
             Maintenance.rewriteManifests(t)
             sync("rewrite-manifests")
           case 7 =>
-            // merge-on-read keyed delete: some live ids, some misses — and
-            // occasionally materialize the accumulated deletes away
+            // merge-on-read delete of some live ids and some misses, by key
+            // (an equality delete) or by predicate (a counted vector) — and
+            // occasionally materialize or consolidate the accumulated deletes
             if (model.nonEmpty && rnd.nextBoolean()) {
               val ids = rnd.shuffle(model.map(_._1)).take(1 + rnd.nextInt(4)) :+ (nextId + 100)
-              Dml.deleteMorKeys(t, ids.toDF("id"))
+              val byKey = rnd.nextBoolean()
+              if (byKey) Dml.deleteMorKeys(t, ids.toDF("id"))
+              else Dml.deleteMor(t, col("id").isin(ids: _*))
               val gone = ids.toSet
               model = model.filterNot(x => gone.contains(x._1))
-              sync(s"delete-mor(${ids.size})")
-            } else {
+              sync(s"delete-mor(${ids.size}, byKey=$byKey)")
+            } else if (rnd.nextBoolean()) {
               Maintenance.materializeDeletes(t)
               sync("materialize-deletes")
+            } else {
+              t.rewriteDeleteFiles()
+              sync("rewrite-delete-files")
             }
           case 8 =>
             // merge-on-read upsert over a window around the newest ids —
