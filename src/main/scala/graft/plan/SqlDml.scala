@@ -17,9 +17,11 @@ import graft.table.GraftTable
   * `update_sales_events.sql:1-3`, `delete_sales_events.sql:1-2`,
   * `merge_sales_events.sql:4-21`): `UPDATE`/`DELETE`/`MERGE` statements over
   * a registered snapshot table parse through Spark's own SQL parser and
-  * route to the table layer's copy-on-write DML, so a harness script mixing
-  * DML and reads runs verbatim against a `GraftTable` the way it would
-  * against an Iceberg catalog table.
+  * route to the table layer's row-level DML (`Dml.updateAuto`,
+  * `deleteAuto`, `mergeAuto`), which commits copy-on-write or merge-on-read
+  * as the table's `write.{update,delete,merge}.mode` says, so a harness
+  * script mixing DML and reads runs verbatim against a `GraftTable` the way
+  * it would against an Iceberg catalog table.
   *
   * The translation is deliberately STRICT: a statement shape the table
   * layer's semantics don't cover one-for-one (per-action UPDATE conditions,
@@ -70,10 +72,7 @@ object SqlDml {
             k -> strip(a.value)
           }.toMap
           val pred = u.condition.map(strip).getOrElse(lit(true))
-          // Iceberg's write.update.mode: merge-on-read replaces the matched
-          // rows via ONE delete vector + append — zero data files
-          // rewritten. Routing lives in Dml.updateAuto, shared with the
-          // Spark-catalog SQL route.
+          // Iceberg's write.update.mode picks the commit form (Dml.updateAuto)
           Dml.updateAuto(t, pred, assigns)
           StatementResult(statement, Nil, None)
         }
@@ -81,11 +80,8 @@ object SqlDml {
       case d: DeleteFromTable =>
         target(d.table, names).map { case (alias, t) =>
           val pred = dequalify(alias)(d.condition)
-          // Iceberg's write.delete.mode: merge-on-read commits a delete
-          // vector (read-only plan, O(matched rows)) instead of rewriting
-          // matched data files.
-          // Routing lives in Dml.deleteAuto, shared with the Spark-catalog
-          // SQL route.
+          // Iceberg's write.delete.mode picks the commit form (Dml.deleteAuto,
+          // shared with the Spark-catalog DELETE route)
           Dml.deleteAuto(t, pred)
           StatementResult(statement, Nil, None)
         }
@@ -209,7 +205,7 @@ object SqlDml {
       if (missing.nonEmpty)
         unsupported(s"INSERT list missing target column(s) ${missing.mkString(", ")}")
       // the join key must survive the reshape as the TARGET key name, or the
-      // semi-join below would match on a different column than the ON clause
+      // change-set join would match on a different column than the ON clause
       if (!mapping.get(srcKey).contains(tgtKey))
         unsupported(s"INSERT list maps merge key $srcKey to " +
           s"${mapping.getOrElse(srcKey, "<nothing>")}, not the ON clause's $tgtKey")
@@ -261,16 +257,9 @@ object SqlDml {
       case other => unsupported(s"MERGE action ${other.getClass.getSimpleName}")
     }
 
-    // Iceberg's write.merge.mode: merge-on-read commits the matched rows'
-    // delete vector + the updated/inserted rows instead of rewriting
-    // matched data files (see Dml.mergeMor)
-    if (t.properties.get(graft.table.GraftTable.MergeModeProp)
-        .map(_.toLowerCase).contains("merge-on-read"))
-      Dml.mergeMor(t, reshaped, tgtKey, updateSet,
-        insertNotMatched = insertMapping.isDefined, deleteWhen = deleteWhen)
-    else
-      Dml.merge(t, reshaped, tgtKey, updateSet,
-        insertNotMatched = insertMapping.isDefined, deleteWhen = deleteWhen)
+    // Iceberg's write.merge.mode picks the commit form (Dml.mergeAuto)
+    Dml.mergeAuto(t, reshaped, tgtKey, updateSet,
+      insertNotMatched = insertMapping.isDefined, deleteWhen = deleteWhen)
     StatementResult(statement, Nil, None)
   }
 

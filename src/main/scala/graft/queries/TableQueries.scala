@@ -916,9 +916,9 @@ object TableQueries {
 
     // J1 at the spec's large-source scale (ICEBERG-Interoperability-Test-
     // Spec.md:72 — 75% inserts implies a source comparable to the target):
-    // the whole orders table merges into a half-sized target with the
-    // key-planning broadcast gated OFF, so file planning runs as a shuffled
-    // left-semi join — the 100 TB shape where broadcasting every distinct
+    // the whole orders table merges into a half-sized target, so half the
+    // source matches and half inserts in one change set. The change-set
+    // join carries no broadcast hint — at 100 TB broadcasting every distinct
     // source key would OOM the driver (DmlPlanningSpec asserts the plan).
     "t_merge_large_source" -> ((s, dir) => {
       val base = Tables.orders(s, dir)
@@ -926,8 +926,7 @@ object TableQueries {
       t.append(base.filter(col("o_orderkey") % 2 === 0))
       val source = base.withColumn("o_totalprice", col("o_totalprice") * 2)
       Dml.merge(t, source, "o_orderkey",
-        Map("o_totalprice" -> col("src.o_totalprice")), insertNotMatched = true,
-        broadcastKeyThresholdBytes = Some(0L))
+        Map("o_totalprice" -> col("src.o_totalprice")), insertNotMatched = true)
       t.readLatest().agg(count(lit(1)).as("row_count"),
         dbl(sum(dec(col("o_totalprice")))).as("sum_price"))
     }),

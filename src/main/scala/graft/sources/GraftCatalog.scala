@@ -56,7 +56,10 @@ import graft.table.{FileEntry, GraftTable, Snapshot, SnapshotLog}
   * planned files for the staged output (`commitRewrite` with the planned
   * snapshot as the serializable base — a concurrent commit aborts the DML
   * rather than losing it). Translatable DELETEs take Spark's
-  * metadata-delete fast path into [[graft.dml.Dml.delete]] instead.
+  * metadata-delete fast path into [[graft.dml.Dml.deleteAuto]] instead, and
+  * a filter overwrite (`writeTo(...).overwrite(cond)`) commits as the
+  * copy-on-write DELETE of `cond` plus the written rows
+  * ([[graft.dml.Dml.overwriteWhere]]).
   *
   * Table commands have one implementation for both SQL routes: CALL runs
   * [[GraftProcedures]], and CREATE TABLE / ALTER TABLE run the companion's

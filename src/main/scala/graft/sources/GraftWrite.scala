@@ -98,12 +98,8 @@ private[sources] class GraftWrite(dir: String, schema: StructType, viaCatalog: B
         case GraftWrite.Overwrite =>
           table.commitWritten(written, "overwrite", parentFiles = false, tableSchema)
         case GraftWrite.OverwriteWhere(cond) =>
-          // rewrite matched files minus matching rows, add the written rows,
-          // keep everything untouched — ONE commit
-          val (matched, untouched, planned) = graft.dml.Dml.planFiles(table, cond)
-          val survivors = table.writeDataFiles(
-            table.readFiles(matched, planned).filter(!cond), planned.snapshotId + 1)
-          table.commitReplace(survivors ++ written, untouched, "overwrite", planned)
+          // the copy-on-write DELETE of cond plus the written rows, ONE commit
+          graft.dml.Dml.overwriteWhere(table, cond, written)
         case GraftWrite.Replace(plannedRef, operation) =>
           val (plannedSnap, scanned) = plannedRef().getOrElse((table.latest, Nil))
           val scannedPaths = scanned.map(_.path).toSet

@@ -238,19 +238,12 @@ class GraftTable(val spark: SparkSession, val tableDir: String,
     */
   def readSnapshot(snap: Snapshot): DataFrame = readSnapshotImpl(snap, None)
 
-  /** Read with each row's originating file path attached as `fileCol`,
-    * evaluated AT THE SCAN, where each row's file is known — DML planning
-    * addresses files through it.
-    */
-  private[graft] def readSnapshotTagged(snap: Snapshot, fileCol: String): DataFrame =
-    readSnapshotImpl(snap, Some(fileCol), None)
-
-  /** Tagged read that ALSO attaches each row's position within its part file
-    * (parquet `_metadata.row_index`, captured at the scan) — the planning
-    * read for positional merge-on-read DML: `fileCol` names the file,
-    * `posCol` the row inside it, together a stable row address (files are
-    * immutable). Existing deletes are reconciled first, so already-deleted
-    * rows can never be re-addressed.
+  /** Read with each row's originating file path attached as `fileCol` and
+    * its position within its part file (parquet `_metadata.row_index`) as
+    * `posCol`, both captured AT THE SCAN, where each row's file is known —
+    * the read every DML change set is built from. Together they are a
+    * stable row address (files are immutable). Existing deletes are
+    * reconciled first, so already-deleted rows can never be re-addressed.
     */
   private[graft] def readSnapshotTagged(snap: Snapshot, fileCol: String,
       posCol: String): DataFrame =
@@ -356,7 +349,7 @@ class GraftTable(val spark: SparkSession, val tableDir: String,
   }
 
   /** Evolution-aware read of a subset of the latest snapshot's files
-    * (copy-on-write DML reads only the files it will rewrite).
+    * (maintenance reads only the files it will rewrite).
     */
   def readFiles(entries: Seq[FileEntry]): DataFrame = readFiles(entries, latest)
 
@@ -1408,13 +1401,6 @@ class GraftTable(val spark: SparkSession, val tableDir: String,
     throw new IllegalStateException(s"could not commit after $attempts retries in $tableDir")
   }
 
-  /** Commit a snapshot that keeps `keepFiles` from the snapshot the rewrite
-    * was planned against and adds the files produced by writing `df`
-    * (copy-on-write DML's primitive). Conflict rule (Iceberg's serializable
-    * validation): any commit that landed after `basedOn` aborts the rewrite —
-    * a concurrent append could hold rows matching the DML predicate, and a
-    * concurrent rewrite may have replaced files this plan kept.
-    */
   /** Durable idempotence fences (stream batch ids, CDC follow offsets,
     * staged-stream ids) live in snapshot summaries — aggressive snapshot
     * expiry after maintenance commits would otherwise GC the fence and
@@ -1442,6 +1428,14 @@ class GraftTable(val spark: SparkSession, val tableDir: String,
     }.toMap
   }
 
+  /** Commit a snapshot that keeps `keepFiles` from the snapshot the rewrite
+    * was planned against and adds the files produced by writing `df`
+    * (maintenance's rewrite primitive). Conflict rule (Iceberg's
+    * serializable validation): any commit that landed after `basedOn`
+    * aborts the rewrite — a concurrent append could hold rows the rewrite
+    * should have seen, and a concurrent rewrite may have replaced files
+    * this plan kept.
+    */
   def commitRewrite(df: DataFrame, keepFiles: Seq[FileEntry], operation: String,
       basedOn: Option[Snapshot] = None, clearDeletes: Boolean = false,
       advisoryBytesOverride: Option[Long] = None): Snapshot = {
@@ -1450,9 +1444,9 @@ class GraftTable(val spark: SparkSession, val tableDir: String,
       advisoryOverride = advisoryBytesOverride), keepFiles, operation, planned, clearDeletes)
   }
 
-  /** [[commitRewrite]]'s commit, for files already written (the connector's
-    * copy-on-write and filter-overwrite writes). A commit that fails deletes
-    * them. */
+  /** [[commitRewrite]]'s commit, for files already written (copy-on-write
+    * DML, the connector's row-level and filter-overwrite writes). A commit
+    * that fails deletes them. */
   private[graft] def commitReplace(written: Seq[FileEntry], keepFiles: Seq[FileEntry],
       operation: String, planned: Snapshot, clearDeletes: Boolean = false): Snapshot = {
     val fences = carriedFences()
@@ -1541,16 +1535,13 @@ class GraftTable(val spark: SparkSession, val tableDir: String,
     * [[AppendFlag]] column only deletes: its one consumer, the delete write,
     * evaluates it once, and sizes it by Catalyst's estimate.
     *
-    * Otherwise `change` is evaluated ONCE: locally checkpointed (keeping the
-    * partitions adaptive execution settled on; a persisted plan would keep
-    * every shuffle partition) and measured by the one job that computes it
-    * (bytes to delete, bytes to append); both writes then read the
-    * checkpoint. A change set that only projects and filters an already
-    * materialized frame is read as it is. An error raised while evaluating
-    * it (a MERGE cardinality violation) surfaces before any file is
-    * written. Delete shards and append write tasks are sized by the
-    * measured bytes. The checkpoint is released in a `finally`. With
-    * `skipEmpty`, deleting nothing commits nothing.
+    * Otherwise `change` is evaluated ONCE ([[GraftTable.evaluatedOnce]])
+    * and measured by the one job that computes it (bytes to delete, bytes
+    * to append); both writes then read the checkpoint. An error raised
+    * while evaluating it (a MERGE cardinality violation) surfaces before
+    * any file is written. Delete shards and append write tasks are sized
+    * by the measured bytes. With `skipEmpty`, deleting nothing commits
+    * nothing.
     *
     * A vector addresses the PLANNED file set, which a commit landing in
     * between (compaction, COW DML) could move rows out of, so it always
@@ -1613,39 +1604,30 @@ class GraftTable(val spark: SparkSession, val tableDir: String,
     // bounds span one of the two key sets, not both
     val groups = Seq(appends && deletes, appends && !deletes)
     val sizes = (deletes -> payloadCols) +: groups.map(_ -> cur.fieldNames.toSeq)
-    val materialized = change.queryExecution.optimizedPlan.find {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.getStorageLevel == org.apache.spark.storage.StorageLevel.NONE
-      case _: org.apache.spark.sql.catalyst.plans.logical.Project |
-          _: org.apache.spark.sql.catalyst.plans.logical.Filter => false
-      case _ => true
-    }.isEmpty
-    val cached = if (materialized) change else change.localCheckpoint(eager = false)
-    try {
+    GraftTable.evaluatedOnce(change) { cached =>
       // one job, no shuffle: computes the checkpoint and measures it
       val n = sizes.size
       val Seq(delBytes, groupBytes @ _*) = cached.select(sizes.map { case (p, cs) =>
           when(p, bytesOf(cs)).otherwise(lit(0)).cast("long") }: _*)
         .queryExecution.toRdd.map(r => Seq.tabulate(n)(r.getLong))
         .fold(Seq.fill(n)(0L))((a, b) => a.zip(b).map { case (x, y) => x + y })
-      if (skipEmpty && delBytes == 0) return planned
-      val delWritten =
-        if (delBytes == 0) Nil
-        else writeDeleteFile(cached.filter(deletes).select(payload: _*), positional,
-          Some(BigInt(delBytes)))
-      // one write task per advisory size, as a rebalance would split them
-      val advisory = writeAdvisory(properties).getOrElse(spark.sessionState.conf.getConf(
-        org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
-      val parts = groups.zip(groupBytes).collect { case (g, b) if b > 0 =>
-        cached.filter(g).select(cur.fieldNames.map(col): _*)
-          .coalesce(math.min((b + advisory - 1) / advisory, Int.MaxValue).toInt)
+      if (skipEmpty && delBytes == 0) planned
+      else {
+        val delWritten =
+          if (delBytes == 0) Nil
+          else writeDeleteFile(cached.filter(deletes).select(payload: _*), positional,
+            Some(BigInt(delBytes)))
+        // one write task per advisory size, as a rebalance would split them
+        val advisory = writeAdvisory(properties).getOrElse(spark.sessionState.conf.getConf(
+          org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+        val parts = groups.zip(groupBytes).collect { case (g, b) if b > 0 =>
+          cached.filter(g).select(cur.fieldNames.map(col): _*)
+            .coalesce(math.min((b + advisory - 1) / advisory, Int.MaxValue).toInt)
+        }
+        val dataWritten =
+          if (parts.isEmpty) Nil else writeDataFiles(parts.reduce(_ union _), planned.snapshotId + 1)
+        publish(delWritten, dataWritten)
       }
-      val dataWritten =
-        if (parts.isEmpty) Nil else writeDataFiles(parts.reduce(_ union _), planned.snapshotId + 1)
-      publish(delWritten, dataWritten)
-    } finally if (!materialized) cached.queryExecution.logical.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
-      case _ =>
     }
   }
 
@@ -2182,6 +2164,27 @@ object GraftTable {
   private[graft] val DeleteFlag = "_gf_delete"
   private[graft] val AppendFlag = "_gf_append"
   private[graft] def deleteKeyCol(k: String): String = s"_gf_key_$k"
+
+  /** Run `body` over `df` evaluated at most once: locally checkpointed
+    * (keeping the partitions adaptive execution settled on; a persisted
+    * plan would keep every shuffle partition), so the first job computes
+    * it and every later read reuses it. A frame that only projects and
+    * filters an already materialized one is passed as it is. The
+    * checkpoint is released when `body` returns or throws. */
+  private[graft] def evaluatedOnce[A](df: DataFrame)(body: DataFrame => A): A = {
+    val materialized = df.queryExecution.optimizedPlan.find {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.getStorageLevel == org.apache.spark.storage.StorageLevel.NONE
+      case _: org.apache.spark.sql.catalyst.plans.logical.Project |
+          _: org.apache.spark.sql.catalyst.plans.logical.Filter => false
+      case _ => true
+    }.isEmpty
+    val cached = if (materialized) df else df.localCheckpoint(eager = false)
+    try body(cached) finally if (!materialized) cached.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
+  }
 
   /** Directory under `data/` holding equality-delete files. */
   private[table] val DeletesDir = "_deletes"

@@ -13,20 +13,24 @@ import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.table.{GraftTable, SnapshotFileIndex}
 
-/** What Spark did while a block ran: the jobs it started, the bytes its
-  * tasks read from storage and the file scans of the queries it executed. Listener events arrive asynchronously, so a
+/** What Spark did while a block ran: the jobs it started (and how many of
+  * them were table-file writes, [[graft.table.DataFileWriter]] jobs), the
+  * bytes its tasks read from storage and the file scans of the queries it
+  * executed. Listener events arrive asynchronously, so a
   * marker job runs before and after the block; both listeners sit on the
   * shared listener queue, which delivers in order, so once the closing
   * marker is seen every event of the block has been seen too.
   */
 object SparkProbe {
-  final case class Observed(jobs: Int, scans: Seq[FileSourceScanExec], inputBytes: Long = 0L)
+  final case class Observed(jobs: Int, scans: Seq[FileSourceScanExec], inputBytes: Long = 0L,
+      writeJobs: Int = 0)
 
   private val MarkerProp = "graft.probe.marker"
 
   def observe[T](spark: SparkSession)(body: => T): (T, Observed) = {
     val sc = spark.sparkContext
     val started = new AtomicInteger()
+    val writes = new AtomicInteger()
     val read = new AtomicLong()
     val plans = new ConcurrentLinkedQueue[SparkPlan]()
     val closed = new CountDownLatch(1)
@@ -34,9 +38,13 @@ object SparkProbe {
     val jobs = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         Option(j.properties).flatMap(p => Option(p.getProperty(MarkerProp))) match {
-          case Some("open") => started.set(0); read.set(0); plans.clear(); opened.countDown()
+          case Some("open") =>
+            started.set(0); writes.set(0); read.set(0); plans.clear(); opened.countDown()
           case Some("close") => closed.countDown()
-          case _ => started.incrementAndGet()
+          case _ =>
+            started.incrementAndGet()
+            // a stage is named for its job's call site: the writer's submitJob
+            if (j.stageInfos.exists(_.name.contains("DataFileWriter"))) writes.incrementAndGet()
         }
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
         Option(t.taskMetrics).foreach(m => read.addAndGet(m.inputMetrics.bytesRead))
@@ -59,7 +67,7 @@ object SparkProbe {
       marker("open", opened)
       val out = body
       marker("close", closed)
-      (out, Observed(started.get, plans.asScala.toSeq.flatMap(scansOf), read.get))
+      (out, Observed(started.get, plans.asScala.toSeq.flatMap(scansOf), read.get, writes.get))
     } finally {
       spark.listenerManager.unregister(queries)
       sc.removeSparkListener(jobs)

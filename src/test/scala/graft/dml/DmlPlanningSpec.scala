@@ -1,43 +1,46 @@
 package graft.dml
 
-import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** MERGE file-planning shape at scale: the source-key semi-join must
-  * broadcast only under the size gate (VERDICT r5 "what's wrong" #1 — an
-  * unconditional broadcast of all distinct source keys OOMs the driver at
-  * the spec's 100 TB merge mix).
+/** DML planning shape at scale: which files a statement reads, and that
+  * MERGE's change-set join never forces a broadcast (VERDICT r5 "what's
+  * wrong" #1 — an unconditional broadcast of all distinct source keys OOMs
+  * the driver at the spec's 100 TB merge mix).
   */
 class DmlPlanningSpec extends SparkSpec {
 
-  private def joinPlan(keys: org.apache.spark.sql.DataFrame) =
-    spark.range(1000).withColumnRenamed("id", "k")
-      .join(keys, Seq("k"), "left_semi").queryExecution.sparkPlan
+  /** Does the plan carry a broadcast hint anywhere? */
+  private def hinted(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.analyzed.exists {
+      case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint =>
+        h.hints.strategy.nonEmpty
+      case _ => false
+    }
 
-  test("small MERGE source broadcasts its keys under the default gate") {
-    val keys = Dml.planKeys(spark.range(8).withColumnRenamed("id", "k"), "k")
-    assert(joinPlan(keys).collect { case b: BroadcastHashJoinExec => b }.nonEmpty)
+  test("small MERGE source: candidates by its collected keys, no broadcast hint") {
+    import spark.implicits._
+    val t = keyOrdered("merge-small-src-")
+    // under autoBroadcastJoinThreshold the keys collect and prune per value:
+    // two files, and the collected keys are known distinct
+    val src = Seq(5L, 1705L).map(k => (k, s"s$k")).toDF("k", "v")
+    val (candidates, distinct) = Dml.sourceKeyCandidates(t, t.latest, src, "k")
+    assert(candidates.size === 2 && distinct)
+    assert(!hinted(Dml.mergeChange(t, t.latest, src, "k", Map("v" -> col("src.v")),
+      insertNotMatched = true, deleteWhen = None)))
   }
 
-  test("large MERGE source plans a shuffled left-semi join, never a broadcast") {
-    // 20M distinct keys estimate at ~160 MB — past autoBroadcastJoinThreshold,
-    // so the gate must NOT hint broadcast and the static plan must shuffle.
-    val keys = Dml.planKeys(spark.range(20000000L).withColumnRenamed("id", "k"), "k")
-    val plan = joinPlan(keys)
-    assert(plan.collect { case b: BroadcastHashJoinExec => b }.isEmpty)
-    assert(plan.collect { case s: SortMergeJoinExec => s }.nonEmpty)
-  }
-
-  test("gate forced to zero disables the hint even for a tiny source") {
-    // the t_merge_large_source query pins the gate to 0 to exercise the
-    // shuffled path at test scale — the hint must be absent from the plan
-    val keys = Dml.planKeys(spark.range(8).withColumnRenamed("id", "k"), "k",
-      thresholdBytes = Some(0L))
-    assert(keys.queryExecution.logical.collect {
-      case h: org.apache.spark.sql.catalyst.plans.logical.UnresolvedHint => h
-    }.isEmpty)
+  test("large MERGE source: candidates by its key range, no broadcast hint") {
+    // 20M keys estimate at ~160 MB — past autoBroadcastJoinThreshold, so the
+    // keys are never collected: the candidates are the files whose bounds
+    // meet [1000, 2e7), and nothing hints the change-set join to broadcast
+    val src = spark.range(1000L, 20000000L).select(col("id").as("k"), lit("s").as("v"))
+    val t = keyOrdered("merge-large-src-")
+    val (candidates, distinct) = Dml.sourceKeyCandidates(t, t.latest, src, "k")
+    assert(candidates.size === 30 && !distinct)
+    assert(!hinted(Dml.mergeChange(t, t.latest, src, "k", Map("v" -> col("src.v")),
+      insertNotMatched = true, deleteWhen = None)))
   }
 
   test("equality merge-on-read DELETE scans only its candidate files for keys") {

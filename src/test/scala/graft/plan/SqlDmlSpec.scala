@@ -42,10 +42,45 @@ class SqlDmlSpec extends SparkSpec {
   }
 
   test("DELETE FROM ... WHERE routes to copy-on-write delete") {
+    import spark.implicits._
     val (eng, t) = mkTable("sqldml-del")
     eng.execute("DELETE FROM sales WHERE event_id = 8")
     assert(t.readLatest().count() == 3L)
     assert(t.latest.operation == "delete")
+    // a row whose predicate is NULL is not matched: it survives a
+    // copy-on-write DELETE on every route (one file, so the rewrite reads it)
+    val rows = Seq((1L, Option(1L)), (2L, None), (3L, Option(10L))).toDF("k", "v").coalesce(1)
+    def live(t: GraftTable) =
+      t.readLatest().as[(Long, Option[Long])].collect().sortBy(_._1).toSeq
+    val survivors = Seq((1L, Some(1L)), (2L, None))
+    val n = GraftTable.create(spark, scratchDir("sqldml-del-null"), rows.schema)
+    n.append(rows)
+    eng.registerGraftTable("nullable", n)
+    eng.execute("DELETE FROM nullable WHERE v > 5")
+    assert(live(n) == survivors)
+    assert(n.latest.operation == "delete")
+    val cat = "sqldmlnull"
+    val wh = scratchDir("sqldml-del-null-cat")
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    try {
+      spark.sql(s"CREATE NAMESPACE $cat.ns")
+      Seq("d", "o").foreach(tn => spark.sql(s"CREATE TABLE $cat.ns.$tn (k BIGINT, v BIGINT)"))
+      rows.writeTo(s"$cat.ns.d").append()
+      // Spark's DELETE lands in deleteWhere → Dml.deleteAuto
+      spark.sql(s"DELETE FROM $cat.ns.d WHERE v > 5")
+      val d = GraftTable.load(spark, s"$wh/ns/d")
+      assert(live(d) == survivors)
+      assert(d.latest.operation == "delete")
+      rows.writeTo(s"$cat.ns.o").append()
+      Seq((4L, Option(4L))).toDF("k", "v").writeTo(s"$cat.ns.o").overwrite(col("v") > 5)
+      val o = GraftTable.load(spark, s"$wh/ns/o")
+      assert(live(o) == survivors :+ ((4L, Some(4L))))
+      assert(o.latest.operation == "overwrite")
+    } finally {
+      spark.conf.unset(s"spark.sql.catalog.$cat")
+      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
+    }
   }
 
   test("MERGE with VALUES source: matched update + not matched insert") {

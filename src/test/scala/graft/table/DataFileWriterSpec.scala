@@ -52,18 +52,35 @@ class DataFileWriterSpec extends SparkSpec {
     assert(t.readLatest().count() === 40L)
   }
 
-  test("a copy-on-write MERGE that raises its duplicate-key guard leaves data/ and the snapshot unchanged") {
+  /** A MERGE whose duplicate source key matches raises while its change
+    * set is evaluated: no write job starts, so data/ and the log stay as
+    * they were. */
+  private def raisingMerge(name: String, merge: (GraftTable, org.apache.spark.sql.DataFrame) => Any)
+      : Unit = {
     import spark.implicits._
-    val t = GraftTable.create(spark, scratchDir("dfw-merge-fail"), kv(1, 1).schema)
+    val t = GraftTable.create(spark, scratchDir(name), kv(1, 1).schema)
     t.append(kv(100, 4))
     val (files, snaps) = (listing(t), t.snapshotsList.map(_.snapshotId))
     val src = Seq((5L, "x"), (5L, "y"), (500L, "z")).toDF("k", "v")
-    val e = intercept[Exception](Dml.merge(t, src, "k", Map("v" -> col("src.v")),
-      insertNotMatched = true))
+    val (out, seen) = graft.SparkProbe.observe(spark)(scala.util.Try(merge(t, src)))
+    val e = intercept[Exception](out.get)
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(c => String.valueOf(c.getMessage).contains("cardinality violation")), e)
+    assert(seen.writeJobs === 0)
     assert(listing(t) === files)
     assert(t.snapshotsList.map(_.snapshotId) === snaps)
+    // the probe sees a write when there is one
+    assert(graft.SparkProbe.observe(spark)(t.append(kv(1, 1)))._2.writeJobs === 1)
+  }
+
+  test("a copy-on-write MERGE that raises its duplicate-key guard leaves data/ and the snapshot unchanged") {
+    raisingMerge("dfw-merge-fail", (t, src) =>
+      Dml.merge(t, src, "k", Map("v" -> col("src.v")), insertNotMatched = true))
+  }
+
+  test("a merge-on-read MERGE that raises its duplicate-key guard leaves data/ unchanged") {
+    raisingMerge("dfw-merge-mor-fail", (t, src) =>
+      Dml.mergeMor(t, src, "k", Map("v" -> col("src.v")), insertNotMatched = true))
   }
 
   test("a table write never sets the session conf") {

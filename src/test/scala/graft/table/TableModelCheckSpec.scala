@@ -7,7 +7,8 @@ import graft.dml.Dml
 import graft.maintenance.Maintenance
 
 /** Model-based randomized check of the table layer: a seeded random sequence
-  * of appends, COW deletes/updates/merges, merge-on-read keyed
+  * of appends, deletes/updates/merges (each drawing its commit form,
+  * copy-on-write or merge-on-read), merge-on-read keyed
   * deletes/upserts, delete materialization, compactions, and snapshot expiry
   * runs against both a GraftTable and a trivial in-memory model; after every
   * op the table must read back exactly the model, and every retained
@@ -117,16 +118,19 @@ class TableModelCheckSpec extends SparkSpec {
             sync(s"append(${rows.size})")
           case 2 =>
             val m = 2 + rnd.nextInt(3); val r = rnd.nextInt(m)
-            Dml.delete(t, col("qty") % m === r)
+            val mor = rnd.nextBoolean()
+            (if (mor) Dml.deleteMor _ else Dml.delete _)(t, col("qty") % m === r)
             model = model.filterNot(x => x._2 % m == r)
-            ivmCowInRange = true
-            sync(s"delete(qty%$m==$r)")
+            ivmCowInRange ||= !mor
+            sync(s"delete(qty%$m==$r, mor=$mor)")
           case 3 =>
             val tg = tags(rnd.nextInt(3))
-            Dml.update(t, col("tag") === tg, Map("qty" -> (col("qty") + 10)))
+            val mor = rnd.nextBoolean()
+            (if (mor) Dml.updateMor _ else Dml.update _)(t, col("tag") === tg,
+              Map("qty" -> (col("qty") + 10)))
             model = model.map(x => if (x._3 == tg) (x._1, x._2 + 10, x._3) else x)
-            ivmCowInRange = true
-            sync(s"update(tag=$tg)")
+            ivmCowInRange ||= !mor
+            sync(s"update(tag=$tg, mor=$mor)")
           case 4 =>
             // upsert a window around the newest ids: touches existing rows,
             // re-inserts previously-deleted ids, and appends two fresh ones
@@ -134,15 +138,15 @@ class TableModelCheckSpec extends SparkSpec {
             val srcRows = (lo to nextId + 2).map(i =>
               (i, 500 + rnd.nextInt(10), "m")).toVector
             nextId += 2
-            Dml.merge(t, srcRows.toDF("id", "qty", "tag"), "id",
-              Map("qty" -> col("src.qty"), "tag" -> col("src.tag")),
-              insertNotMatched = true)
+            val mor = rnd.nextBoolean()
+            (if (mor) Dml.mergeMor _ else Dml.merge _)(t, srcRows.toDF("id", "qty", "tag"), "id",
+              Map("qty" -> col("src.qty"), "tag" -> col("src.tag")), true, None)
             val byId = srcRows.map(r => r._1 -> r).toMap
             model = model.map(x => byId.getOrElse(x._1, x))
             val present = model.map(_._1).toSet
             model ++= srcRows.filterNot(r => present.contains(r._1))
-            ivmCowInRange = true
-            sync(s"merge(${srcRows.size})")
+            ivmCowInRange ||= !mor
+            sync(s"merge(${srcRows.size}, mor=$mor)")
           case 5 =>
             if (rnd.nextBoolean()) {
               Maintenance.rewriteDataFiles(t, targetFileSizeBytes = 1L << 30)
