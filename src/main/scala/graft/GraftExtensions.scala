@@ -8,7 +8,8 @@ import graft.functions.{CosineSim, DotProduct, MinHashSig, NGramHash, NgramStrin
 
 /** Session extensions: registers the engine's native functions so they are
   * usable from SQL and `expr(...)` in any session configured with
-  * `spark.sql.extensions=graft.GraftExtensions` (see Tables.configure).
+  * `spark.sql.extensions=graft.GraftExtensions` (see Tables.configure), and
+  * the optimizer rule [[InListToInSet]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -25,6 +26,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectOptimizerRule(_ => InListToInSet)
     ext.injectFunction((
       new FunctionIdentifier("ngram_hash"),
       new ExpressionInfo(classOf[NGramHash].getName, "ngram_hash"),

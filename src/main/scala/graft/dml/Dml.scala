@@ -124,15 +124,14 @@ object Dml {
   private def schemaOf(s: Snapshot): StructType =
     DataType.fromJson(s.schemaJson).asInstanceOf[StructType]
 
-  /** `files` of `planned`, each row tagged with its address columns: the
-    * scan-time file URI and [[GraftTable.PosCol]]. */
+  /** `files` of `planned`, each row tagged with its address columns, both
+    * captured at the scan: the part-file name as [[GraftTable.WrittenAtCol]]
+    * and [[GraftTable.PosCol]]. */
   private def tagged(t: GraftTable, planned: Snapshot, files: Seq[FileEntry]): DataFrame =
-    t.readSnapshotTagged(planned.copy(files = files.toList), "_gf_uri", PosCol)
+    t.readSnapshotTagged(planned.copy(files = files.toList), WrittenAtCol, PosCol)
 
   /** A tagged row's address: the change set's delete payload. */
-  private val rowAddress = Seq(
-    element_at(split(col("_gf_uri"), "/"), -1).as(WrittenAtCol),
-    col(PosCol))
+  private val rowAddress = Seq(col(WrittenAtCol), col(PosCol))
 
   /** The tagged rows `pred` matches, read from its candidate files only;
     * None when metadata rules every file out. */
@@ -197,7 +196,7 @@ object Dml {
     val src = source.withColumn("_src_cnt", count1).alias("src")
     val tgt = tagged(t, planned, candidates).alias("tgt")
     val joined = src.join(tgt, col(s"src.$key") === col(s"tgt.$key"), "left")
-    val matched = col("_gf_uri").isNotNull
+    val matched = col(s"tgt.$WrittenAtCol").isNotNull
     val cardErr = raise_error(concat(
       lit("MERGE cardinality violation: source has multiple rows for key "),
       col(s"src.$key").cast("string")))

@@ -238,12 +238,14 @@ class GraftTable(val spark: SparkSession, val tableDir: String,
     */
   def readSnapshot(snap: Snapshot): DataFrame = readSnapshotImpl(snap, None)
 
-  /** Read with each row's originating file path attached as `fileCol` and
-    * its position within its part file (parquet `_metadata.row_index`) as
-    * `posCol`, both captured AT THE SCAN, where each row's file is known —
-    * the read every DML change set is built from. Together they are a
-    * stable row address (files are immutable). Existing deletes are
-    * reconciled first, so already-deleted rows can never be re-addressed.
+  /** Read with each row's originating part-file name (parquet
+    * `_metadata.file_name`, the name delete vectors and [[LiveRows]] key
+    * rows by) attached as `fileCol` and its position within that file
+    * (`_metadata.row_index`) as `posCol`, both captured AT THE SCAN, where
+    * each row's file is known — the read every DML change set is built
+    * from. Together they are a stable row address (files are immutable).
+    * Existing deletes are reconciled first, so already-deleted rows can
+    * never be re-addressed.
     */
   private[graft] def readSnapshotTagged(snap: Snapshot, fileCol: String,
       posCol: String): DataFrame =
@@ -296,7 +298,12 @@ class GraftTable(val spark: SparkSession, val tableDir: String,
       // names the current column it replays as
       val current = sources.collect { case (f, Some(Stored(n, _))) => n -> f.name }.toMap
       val raw0 = SnapshotFileIndex.scan(spark, fs, tableDir, entries, physSchema, plan, current)
-      val raw1 = fileCol.fold(raw0)(c => raw0.withColumn(c, input_file_name()))
+      // the part-file name, captured once: the reconciler's key and the
+      // tagged read's address column
+      val nameCol = fileCol.getOrElse(WrittenAtCol)
+      val raw1 = if (fileCol.isDefined || reconcile)
+        raw0.withColumn(nameCol, col("_metadata.file_name"))
+      else raw0
       // the group's delete files once, and the distinct sets of them that
       // its files need
       val sets = if (!reconcile) IndexedSeq.empty[List[DeleteEntry]]
@@ -307,11 +314,9 @@ class GraftTable(val spark: SparkSession, val tableDir: String,
       // captured AT the scan: after a union/evolution the metadata columns
       // are no longer addressable, and the index is only meaningful per file
       val posName = posCol.getOrElse(PosCol)
-      val raw2 = if (posCol.isDefined || vectors)
+      val raw = if (posCol.isDefined || vectors)
         raw1.withColumn(posName, col("_metadata.row_index"))
       else raw1
-      val raw = if (reconcile) raw2.withColumn(WrittenAtCol, col("_metadata.file_name"))
-        else raw2
       // Replay evolution committed after this epoch, from the snapshot's own
       // carried chain (`SnapshotPlanner.replay`, the connector's replay too)
       val replayed = plan.replay(epoch, physSchema, logical)
@@ -337,9 +342,10 @@ class GraftTable(val spark: SparkSession, val tableDir: String,
         val attr = UnresolvedAttribute.quoted _
         val pos = if (vectors) attr(posName) else Literal(-1L)
         val live = SqlInternals.column(LiveRows(
-          Seq(attr(WrittenAtCol), pos) ++ keyNames.map(attr), specs,
+          Seq(attr(nameCol), pos) ++ keyNames.map(attr), specs,
           sets.map(_.map(deleteIdx).toIndexedSeq), files, keyNames))
-        val helpers = WrittenAtCol +: (if (vectors && posCol.isEmpty) Seq(PosCol) else Nil)
+        val helpers = (if (fileCol.isEmpty) Seq(WrittenAtCol) else Nil) ++
+          (if (vectors && posCol.isEmpty) Seq(PosCol) else Nil)
         evolved.filter(live).drop(helpers: _*)
       }
     }
@@ -673,16 +679,14 @@ class GraftTable(val spark: SparkSession, val tableDir: String,
           val dvMatched = if (dvAdded.isEmpty) Nil else {
             val preTagged = readSnapshotTagged(
               to.copy(files = parent.files, schemas = parent.schemas,
-                deletes = parent.deletes), "_gf_cl_uri", "_gf_cl_pos")
-              .withColumn("_gf_cl_name",
-                element_at(split(col("_gf_cl_uri"), "/"), -1))
+                deletes = parent.deletes), "_gf_cl_name", "_gf_cl_pos")
             val dv = dvAdded.map(d =>
               spark.read.parquet(s"$dataRoot/${d.path}")).reduce(_.unionByName(_))
             Seq(preTagged.alias("_gf_pre").join(dv.alias("_gf_del"),
               col("_gf_pre._gf_cl_name") === col(s"_gf_del.$WrittenAtCol") &&
                 col("_gf_pre._gf_cl_pos") === col(s"_gf_del.$PosCol"),
               "left_semi")
-              .drop("_gf_cl_uri", "_gf_cl_pos", "_gf_cl_name"))
+              .drop("_gf_cl_pos", "_gf_cl_name"))
           }
           val matched = (eqMatched ++ dvMatched).reduce(_.unionByName(_)).distinct()
           Some(matched

@@ -68,9 +68,9 @@ class SnapshotFileIndexSpec extends SparkSpec {
     // the DML addressing read: file and row position captured at the scan
     val tagged = t.readSnapshotTagged(snap, "_f", "_pos").select("id", "_f", "_pos")
     val base = plain(t, snap.files, t.schema)
-      .select(col("id"), input_file_name(), col("_metadata.row_index"))
+      .select(col("id"), col("_metadata.file_name"), col("_metadata.row_index"))
     assert(rows(tagged) === rows(base))
-    assert(tagged.collect().forall(_.getString(1).startsWith("file:")))
+    assert(tagged.collect().map(_.getString(1)).toSet === snap.files.map(_.partName).toSet)
   }
 
   test("a transform-partitioned table reads as plain parquet does") {
@@ -109,7 +109,8 @@ class SnapshotFileIndexSpec extends SparkSpec {
     val base = Seq((before, StructType.fromDDL("id bigint, v int")),
         (after, StructType.fromDDL("id bigint, v2 bigint, w string")))
       .map { case (fs, s) =>
-        plain(t, fs, s).select(col("id"), input_file_name(), col("_metadata.row_index")) }
+        plain(t, fs, s).select(col("id"), col("_metadata.file_name"),
+          col("_metadata.row_index")) }
       .reduce(_.union(_))
     assert(rows(tagged) === rows(base))
   }
